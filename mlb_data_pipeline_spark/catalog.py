@@ -60,7 +60,9 @@ def table_row_count(sf_dir: str, name: str) -> int:
 
     path = table_path(sf_dir, name)
     if os.path.isdir(path):
-        entries = sorted(os.listdir(path))
+        # hidden entries (``_SUCCESS``, ``_temporary/``, ``.crc``
+        # checksums) are skipped, as spark.read.parquet skips them
+        entries = sorted(e for e in os.listdir(path) if not e.startswith(("_", ".")))
         # fail LOUDLY on layouts this flat walk cannot count (ADVICE
         # r14): spark.read.parquet recurses into partition
         # subdirectories, so silently skipping them (or an empty match)
@@ -74,14 +76,13 @@ def table_row_count(sf_dir: str, name: str) -> int:
                 "(partitioned/nested layout); use the lake layer's metadata "
                 "count or a Spark count for non-flat tables"
             )
-        files = [e for e in entries if e.endswith(".parquet")]
-        if not files:
+        if not entries:
             raise ValueError(
-                f"table_row_count({name!r}): no .parquet files under {path}"
+                f"table_row_count({name!r}): no parquet files under {path}"
             )
         return sum(
             int(pq.ParquetFile(os.path.join(path, f)).metadata.num_rows)
-            for f in files
+            for f in entries
         )
     return int(pq.ParquetFile(path).metadata.num_rows)
 

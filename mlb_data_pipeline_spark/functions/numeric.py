@@ -54,10 +54,6 @@ def davg(col: Column | str, scale: int = 2) -> Column:
     return F.round(F.sum(dec(col)) / F.count(F.col(col) if isinstance(col, str) else col), scale).cast("double")
 
 
-def round2(col: Column, scale: int = 2) -> Column:
-    return F.round(col, scale).cast("double")
-
-
 # ---------------------------------------------------------------------------
 # Word-split exact sums — the integer fast path for money aggregation.
 #

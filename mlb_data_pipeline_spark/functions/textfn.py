@@ -178,10 +178,6 @@ def url_domain(col: Column | str) -> Column:
     return F.regexp_replace(F.regexp_extract(c, r"^([^/]+)", 1), r":\d+$", "")
 
 
-def url_domain_sql(expr: str) -> str:
-    return f"regexp_replace(regexp_extract({expr}, '^([^/]+)', 1), ':\\d+$', '')"
-
-
 # ---------------------------------------------------------------------------
 # Unicode hygiene (round 7): NFC normalization + mojibake repair. Spark
 # has no built-in Unicode normalizer, so this is one of the few

@@ -35,8 +35,3 @@ def norm(a: Column | str) -> Column:
 
 def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    diff = F.zip_with(_arr(a), _arr(b), lambda x, y: x - y)
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x))

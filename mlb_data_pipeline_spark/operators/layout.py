@@ -377,10 +377,6 @@ def pruning_report(path: str, box: dict[str, tuple[float, float]]) -> dict:
     }
 
 
-def read_parquet_dir(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # Scan manifest + pruned read — the read-path half of the layout story
 # (round 9). write_zordered makes every file a small hyper-rectangle;

@@ -20,8 +20,14 @@ Scale notes (the 100 TB story):
   postings parquet scan) followed by broadcast joins of the query
   pairs, the derived per-term document frequencies, and the one-row
   corpus stats — the corpus side never shuffles at query time.
-* Scoring emits one row per (query, matching doc, term) — bounded by
+  Scoring emits one row per (query, matching doc, term) — bounded by
   the posting lists of the query terms, not the corpus.
+* Without an index, ``bm25_scores`` never builds one: it projects each
+  doc once to (id, dl, tf of each query term), collects n, sumdl and
+  the per-term df in one global aggregate, and scores the projection
+  with those as literals — two narrow passes, no join, no token
+  explode, no shuffle. It scans the whole corpus per request, so
+  repeated callers should persist an index.
 * ``append_text_index`` is the daily-cadence shape: tokenize only the
   delta, append postings, update the stats row; document frequencies
   are derived at probe time so appends can't stale them.
@@ -37,9 +43,10 @@ Determinism contract (bit-exact vs the DuckDB oracle):
   carry the identical double forward;
 * the ONLY multi-value float reduction — the per-(query, doc) sum over
   matched terms — is a sequential left fold over the term-sorted list
-  (``aggregate(array_sort(collect_list(...)))`` in Spark,
-  ``list_reduce(list(... ORDER BY term))`` in DuckDB), so both engines
-  add in the same order. Float constants are passed through ``repr``
+  (``aggregate(array_sort(collect_list(...)))`` in Spark — unrolled
+  over the sorted query terms, +0.0 for an unmatched one, when there
+  is no index — and ``list_reduce(list(... ORDER BY term))`` in
+  DuckDB), so both engines add in the same order. Float constants are passed through ``repr``
   (shortest round-trip decimal) so both engines parse the identical
   double.
 """
@@ -80,21 +87,14 @@ def build_text_index(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    share_tokenization: bool = False,
 ) -> TextIndex:
     """Tokenize into the postings table (doc, dl, term, tf) — one
     shuffle keyed on (doc, term) with map-side partial counts; dl rides
     the explode as a functionally-dependent key. The doc registry
     (id, dl) counts ALL docs (empty docs count toward N, the standard
     BM25 convention); stats aggregate the registry, never a second
-    corpus pass of their own. ``share_tokenization=True`` lazily
-    local-checkpoints the token arrays so the postings and registry
-    branches materialize ONE corpus scan (the one-shot ``bm25_scores``
-    path); persisted builds leave it off — the write actions run once
-    each anyway and a checkpoint would pin the corpus on local disk."""
+    corpus pass of their own."""
     base = docs.select(F.col(id_col), _tokens(F.col(text_col)).alias("__toks"))
-    if share_tokenization:
-        base = base.localCheckpoint(eager=False)
     registry = base.select(id_col, F.size("__toks").alias("dl"))
     postings = base.select(
         id_col,
@@ -270,6 +270,28 @@ def refresh_text_index(
     )
 
 
+def _bm25_term(tf, dl, df, n, sumdl, k1: float, b: float):
+    """One query term's BM25 contribution — the single copy of the
+    formula both ``bm25_scores`` branches call (column or literal
+    arguments alike).
+
+    idf is the ONE transcendental in the score, and the JVM's Math.log
+    differs from libm (DuckDB, CPython) by 1 ulp on some inputs
+    (measured: df=380, N=500). Quantize with an exact floor to 1e-6 —
+    floor/multiply/divide are correctly rounded per IEEE, so both
+    engines produce the identical double unless the 1-ulp disagreement
+    straddles a quantum boundary (~1e-10 per value, and deterministic
+    per corpus — the oracled test would catch it loudly, not flake).
+    1e-6 absolute on idf values O(0.1..10) is far below ranking
+    relevance."""
+    idf = F.floor(
+        F.log(F.lit(1.0) + (n - df + F.lit(0.5)) / (df + F.lit(0.5)))
+        * F.lit(1000000.0)
+    ) / F.lit(1000000.0)
+    denom = tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / (sumdl / n))
+    return (idf * (tf * F.lit(k1 + 1.0))) / denom
+
+
 def bm25_scores(
     docs: DataFrame | None,
     query_terms: list[tuple[int, str]],
@@ -291,9 +313,10 @@ def bm25_scores(
     Pass ``index`` (from ``build_text_index``/``load_text_index``) to
     probe a prebuilt inverted index — the deployment shape: zero corpus
     scans, the term filter pushes into the postings parquet. Without an
-    index the corpus is tokenized inline with the token arrays lazily
-    local-checkpointed, so the postings and stats branches share ONE
-    corpus scan; repeated callers should still persist.
+    index the docs are scanned in two narrow passes — one driver
+    collect of the corpus stats and query-term dfs, then scoring — with
+    no join and no shuffle; repeated callers should still persist an
+    index.
 
     Returns (query_id, ``id_col``, score, n_terms) — un-ranked; compose
     with ``top_k_per_group`` (or see ``bm25_topk``) for retrieval.
@@ -301,9 +324,7 @@ def bm25_scores(
     if index is None:
         if docs is None:
             raise ValueError("pass docs or index")
-        index = build_text_index(
-            docs, id_col=id_col, text_col=text_col, share_tokenization=True
-        )
+        return _bm25_scan_scores(docs, query_terms, id_col, text_col, k1, b)
     spark = index.postings.sparkSession
     id_col = index.id_col
     qt = spark.createDataFrame(
@@ -326,28 +347,9 @@ def bm25_scores(
         .join(F.broadcast(dfreq), "term")
         .join(F.broadcast(index.stats))
     )
-    avgdl = F.col("sumdl") / F.col("n")
-    # idf is the ONE transcendental in the score, and the JVM's Math.log
-    # differs from libm (DuckDB, CPython) by 1 ulp on some inputs
-    # (measured: df=380, N=500). Quantize with an exact floor to 1e-6 —
-    # floor/multiply/divide are correctly rounded per IEEE, so both
-    # engines produce the identical double unless the 1-ulp disagreement
-    # straddles a quantum boundary (~1e-10 per value, and deterministic
-    # per corpus — the oracled test would catch it loudly, not flake).
-    # 1e-6 absolute on idf values O(0.1..10) is far below ranking
-    # relevance.
-    idf = F.floor(
-        F.log(
-            F.lit(1.0)
-            + (F.col("n") - F.col("__df") + F.lit(0.5))
-            / (F.col("__df") + F.lit(0.5))
-        )
-        * F.lit(1000000.0)
-    ) / F.lit(1000000.0)
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl
+    per_term = _bm25_term(
+        F.col("tf"), F.col("dl"), F.col("__df"), F.col("n"), F.col("sumdl"), k1, b
     )
-    per_term = (idf * (F.col("tf") * F.lit(k1 + 1.0))) / denom
     scored = matched.select(
         "query_id", id_col, F.col("term"), per_term.alias("__sc")
     )
@@ -361,6 +363,78 @@ def bm25_scores(
         ).alias("score"),
         F.count("*").alias("n_terms"),
     )
+
+
+def _bm25_scan_scores(
+    docs: DataFrame,
+    query_terms: list[tuple[int, str]],
+    id_col: str,
+    text_col: str,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """The index-less branch of ``bm25_scores``: narrow passes only,
+    bit-identical to the indexed probe of ``build_text_index(docs)``."""
+    queries: dict[int, list[str]] = {}
+    for qid, t in sorted(set(query_terms)):
+        queries.setdefault(qid, []).append(t)
+    if not queries:
+        return docs.select(
+            F.lit(None).cast("int").alias("query_id"),
+            F.col(id_col),
+            F.lit(None).cast("double").alias("score"),
+            F.lit(None).cast("long").alias("n_terms"),
+        ).limit(0)
+    tf = {t: f"__tf{i}" for i, t in enumerate(sorted({t for _, t in query_terms}))}
+
+    # Step 1: project each doc once to (id, dl, tf of each query term)
+    # and lazily checkpoint that narrow projection, never the token
+    # arrays; the tokens get their own select so the regex runs once
+    # per doc. One global aggregate over it collects n, sumdl and every
+    # term's df as ONE driver row, sized by the query terms.
+    toks = docs.select(F.col(id_col), _tokens(F.col(text_col)).alias("__toks"))
+    narrow = toks.select(
+        id_col,
+        F.size("__toks").alias("dl"),
+        *[
+            (F.size("__toks") - F.size(F.array_remove("__toks", t))).alias(c)
+            for t, c in tf.items()
+        ],
+    ).localCheckpoint(eager=False)
+    stats = narrow.agg(
+        F.count("*").alias("n"),
+        F.sum("dl").alias("sumdl"),
+        *[F.count_if(F.col(c) > 0).alias(c) for c in tf.values()],
+    ).collect()[0]
+
+    # Step 2: score every doc from the checkpoint, the stats as long
+    # literals. Each query folds its terms in term-sorted order from
+    # 0.0; an unmatched term adds +0.0, which leaves the non-negative
+    # running sum unchanged, so the double equals the indexed fold over
+    # the matched terms alone.
+    def lit_long(v):
+        return F.lit(v).cast("long")
+
+    rows = []
+    for qid, ts in queries.items():
+        score, n_terms = F.lit(0.0), lit_long(0)
+        for t in ts:
+            hit = F.col(tf[t]) > 0
+            sc = _bm25_term(
+                F.col(tf[t]), F.col("dl"), lit_long(stats[tf[t]]),
+                lit_long(stats.n), lit_long(stats.sumdl), k1, b,
+            )
+            score = score + F.when(hit, sc).otherwise(F.lit(0.0))
+            n_terms = n_terms + hit.cast("long")
+        rows.append(
+            F.struct(
+                F.lit(qid).cast("int").alias("query_id"),
+                F.col(id_col),
+                score.alias("score"),
+                n_terms.alias("n_terms"),
+            )
+        )
+    return narrow.select(F.inline(F.array(*rows))).filter(F.col("n_terms") > 0)
 
 
 def bm25_topk(
@@ -534,8 +608,8 @@ def tfidf_keywords(
     call.
 
     Runs off the SAME inverted-index postings as BM25 (pass ``index``
-    to reuse a persisted one; else the corpus is tokenized once with
-    the shared-tokenization checkpoint). Unlike the BM25 probe, df is
+    to reuse a persisted one; else the postings are built from
+    ``docs``). Unlike the BM25 probe, df is
     corpus-wide — keyword extraction needs every term's df, so this is
     one extra (term)-keyed aggregation + join, combiner-friendly.
     ``max_doc_frac`` drops terms appearing in more than that fraction
@@ -554,9 +628,7 @@ def tfidf_keywords(
     if index is None:
         if docs is None:
             raise ValueError("pass docs or index")
-        index = build_text_index(
-            docs, id_col=id_col, text_col=text_col, share_tokenization=True
-        )
+        index = build_text_index(docs, id_col=id_col, text_col=text_col)
     id_col = index.id_col
     dfreq = index.postings.groupBy("term").agg(F.count("*").alias("__df"))
     dfreq = dfreq.join(F.broadcast(index.stats)).filter(
@@ -604,9 +676,7 @@ def unigram_logprob(
     if index is None:
         if docs is None:
             raise ValueError("pass docs or index")
-        index = build_text_index(
-            docs, id_col=id_col, text_col=text_col, share_tokenization=True
-        )
+        index = build_text_index(docs, id_col=id_col, text_col=text_col)
     id_col = index.id_col
     lm = index.postings.groupBy("term").agg(F.sum("tf").alias("__ctf"))
     totals = lm.agg(

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector_math import cosine, dot, norm
+from ..functions.vector_math import cosine, norm
 
 
 def _prefix(df: DataFrame, prefix: str) -> DataFrame:
@@ -349,13 +349,6 @@ def lsh_params(
             f"max_candidate_factor={max_candidate_factor}; use ivf_knn_join"
         )
     return best[1]
-
-
-def simhash_signature(vec_col, planes: list[list[float]]):
-    """Sign-bit signature of a vector against fixed hyperplanes, packed
-    into a long per 8-plane group is unnecessary — an array<int> of 0/1
-    keeps the expression fully in codegen."""
-    return F.array(*[(dot(F.lit(p).cast("array<double>"), vec_col) >= 0).cast("int") for p in planes])
 
 
 def cosine_pairs_lsh(

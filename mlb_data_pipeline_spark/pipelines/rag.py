@@ -87,10 +87,11 @@ def hybrid_retrieve(
     """Hybrid retrieval over an embedded store (id, text, embedding):
     the BM25 lexical channel and the cosine semantic channel each rank
     their top ``channel_k``, reciprocal-rank fusion merges them, top
-    ``k`` come back with both channel ranks attached. Same physical
-    story as the single channels — posting-list-bounded keyword scoring,
-    narrow scan + TakeOrdered for the vectors, and a tiny ranked-list
-    fusion join."""
+    ``k`` come back with both channel ranks attached. The keyword
+    channel has no index here, so it scans the store: two narrow passes
+    (one stats collect, then scoring) and one rank exchange. The vector
+    channel is a narrow scan + TakeOrdered, and the fusion a tiny
+    ranked-list join."""
     from ..operators.search import bm25_topk, rrf_fuse, tokenize_query
 
     bm = (

@@ -5,8 +5,11 @@ Engine parity for q73/q74 is covered by test_oracle_parity."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mlb_data_pipeline_spark.operators.search import (
@@ -196,11 +199,28 @@ def test_indexed_probe_pushes_term_filter(spark, tmp_path):
 def test_bm25_posting_probe_is_broadcast(spark):
     """The query-term probe of the inverted index must be a broadcast
     join — the corpus-side tf table never shuffles for the probe."""
+    from mlb_data_pipeline_spark.operators.search import build_text_index
+
     docs = _docs(spark, [(1, "alpha beta"), (2, "beta gamma")])
-    plan = bm25_scores(docs, [(0, "alpha")])._jdf.queryExecution().executedPlan().toString()
+    idx = build_text_index(docs)
+    plan = bm25_scores(None, [(0, "alpha")], index=idx)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     # no sort-merge join anywhere in the probe pipeline
     assert "SortMergeJoin" not in plan
+
+
+def test_bm25_without_index_is_narrow(spark):
+    """Index-less scoring is two narrow passes over the docs: the
+    scored plan holds no exchange and no join, and top-k adds exactly
+    one exchange (the per-query rank) under WindowGroupLimit."""
+    docs = _docs(spark, [(1, "alpha beta"), (2, "beta gamma"), (3, "")])
+    terms = [(0, "alpha"), (0, "beta"), (1, "gamma")]
+    plan = bm25_scores(docs, terms)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
+    plan = bm25_topk(docs, terms, k=2)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "WindowGroupLimit" in plan, plan
 
 
 def test_text_index_append_empty_delta_is_noop(spark, tmp_path):
@@ -440,3 +460,41 @@ def test_perplexity_tiers_orders_planted_docs_and_is_partition_stable(spark):
         perplexity_tiers(docs, calib_fraction=0.0)
     with pytest.raises(ValueError):
         perplexity_tiers(docs, cuts=(0.7, 0.3))
+
+
+# -- index-less vs indexed BM25: one formula, two plans, equal rows ----------
+
+_VOCAB = ["alpha", "beta", "gamma", "delta", "omega"]
+_ABSENT = ["zzz", "nowhere"]
+# 40 queries x 5 terms, every query sharing terms with its neighbours
+_BATCH = [(q, _VOCAB[(q + j) % 5] if j < 4 else _ABSENT[q % 2]) for q in range(40) for j in range(5)]
+
+_doc_text = st.one_of(
+    st.lists(st.sampled_from(_VOCAB + ["x1", "Beta", "!?"]), max_size=8).map(" ".join),
+    st.just(""),  # token-less and null docs still count toward n
+    st.none(),
+    st.just("-- ..."),
+)
+_query_terms = st.lists(
+    st.tuples(st.integers(min_value=0, max_value=3), st.sampled_from(_VOCAB + _ABSENT)),
+    max_size=10,  # duplicates and shared terms across queries come for free
+)
+
+
+@given(texts=st.lists(_doc_text, min_size=1, max_size=12), query_terms=_query_terms)
+@example(texts=["alpha beta", "", "beta beta gamma"], query_terms=[])
+@example(texts=["", "!!"], query_terms=[(0, "alpha"), (1, "zzz")])
+@example(texts=["alpha beta gamma", "delta omega alpha", "", "beta"], query_terms=_BATCH)
+@settings(
+    max_examples=40 if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1" else 4,
+    deadline=None,
+    suppress_health_check=list(HealthCheck),
+)
+def test_bm25_scores_without_index_equal_indexed(spark, texts, query_terms):
+    from mlb_data_pipeline_spark.operators.search import build_text_index
+
+    docs = _docs(spark, list(enumerate(texts)))
+    direct = bm25_scores(docs, query_terms)
+    probed = bm25_scores(None, query_terms, index=build_text_index(docs))
+    assert direct.dtypes == probed.dtypes
+    assert sorted(map(tuple, direct.collect())) == sorted(map(tuple, probed.collect()))

@@ -1068,3 +1068,30 @@ def test_table_row_count_matches_scan_count(spark, sf_dir):
 
     for name in ("embeddings", "documents", "nation"):
         assert table_row_count(sf_dir, name) == load_table(spark, sf_dir, name).count()
+
+
+def test_table_row_count_skips_hidden_entries(spark, tmp_path):
+    # a committed Spark output dir: part files beside a _SUCCESS marker,
+    # .crc checksums and a leftover _temporary/ attempt dir — counted
+    # the way spark.read.parquet reads it, hidden entries skipped
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mlb_data_pipeline_spark.catalog import table_path, table_row_count
+
+    path = table_path(str(tmp_path), "documents")
+    os.makedirs(os.path.join(path, "_temporary", "0"))
+    pq.write_table(pa.table({"x": list(range(7))}), os.path.join(path, "part-00000.snappy.parquet"))
+    pq.write_table(pa.table({"x": list(range(5))}), os.path.join(path, "part-00001.snappy.parquet"))
+    pq.write_table(pa.table({"x": list(range(99))}), os.path.join(path, "_temporary", "0", "part-00002.parquet"))
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+    open(os.path.join(path, ".part-00000.snappy.parquet.crc"), "w").close()
+    assert table_row_count(str(tmp_path), "documents") == 12
+    assert spark.read.parquet(path).count() == 12
+
+    # a visible subdirectory is a partitioned layout: still refused
+    os.makedirs(os.path.join(path, "year=2020"))
+    with pytest.raises(ValueError, match="subdirectories"):
+        table_row_count(str(tmp_path), "documents")
