@@ -296,9 +296,9 @@ def file_stats(path: str, cols: list[str], names: list[str] | None = None) -> li
     normalize to epoch numbers (``_stat_num``). A column absent from a
     file's ``min``/``max`` dict means "no usable stats" — callers must
     treat that file as unprunable on that column. ``names`` restricts
-    the stat pass to an explicit LIVE subset (snapshot-lake leaf dirs,
-    where the transaction log lives at the lake root and the local
-    listing would include dead files)."""
+    the stat pass to an explicit subset of RELATIVE names (e.g. a
+    snapshot's live list, which the on-disk listing cannot tell from
+    dead files)."""
     import pyarrow.parquet as pq
 
     out = []
@@ -993,19 +993,23 @@ def write_hilbert(
 
 
 def cluster_report(
-    path: str,
-    specs: list[tuple[str, int, int]],
-    max_span_frac: float = 0.5,
-    names: list[str] | None = None,
+    path: str, specs: list[tuple[str, int, int]], max_span_frac: float = 0.5
 ) -> dict:
     """Metadata-only clustering health: per clustered column, each
     file's footer span as a fraction of the declared [lo, hi] range. A
     file is DIRTY when any span fraction exceeds ``max_span_frac`` or
     stats are missing (unsorted append, stats-less writer). Returns
     files_total / files_dirty / dirty_files / avg_span_frac."""
+    return _cluster_fold(file_stats(path, [c for c, _, _ in specs]), specs, max_span_frac)
+
+
+def _cluster_fold(
+    stats: list[dict], specs: list[tuple[str, int, int]], max_span_frac: float
+) -> dict:
+    """``cluster_report`` over footer stats already read — the one
+    stats pass ``optimize_clustered`` also takes its row counts from."""
     cols = [c for c, _, _ in specs]
     rng = {c: max(1, hi - lo) for c, lo, hi in specs}
-    stats = file_stats(path, cols, names)
     dirty, fracs = [], []
     for fs in stats:
         worst = 0.0
@@ -1068,9 +1072,16 @@ def _compact_recover_tree(path: str) -> None:
     old-file delete leaves BOTH old and new copies of the rewritten
     rows on disk until the NEXT optimize call — every read in between
     would silently return duplicated rows. One extra listing walk per
-    read, metadata-scale (the same budget as ``_data_files``)."""
+    read, metadata-scale (the same budget as ``_data_files``).
+
+    Snapshot lakes never swap by marker: a ``__compact_tmp`` there is
+    an in-flight OPTIMIZE's staging, and deleting it would make that
+    OPTIMIZE commit the removal of its dirty files with nothing in
+    their place — so they are left alone."""
+    from .snapshots import has_snapshots
+
     base = os.path.abspath(path)
-    if not os.path.isdir(base):
+    if not os.path.isdir(base) or has_snapshots(base):
         return
     for root, dirs, names in os.walk(base):
         # don't descend into staging dirs — _compact_recover owns them
@@ -1111,31 +1122,46 @@ def optimize_clustered(
     curve: str = "zorder",
     manifest_path: str | None = None,
     stat_cols: list[str] | None = None,
-    _live_names: list[str] | None = None,
-    _defer: bool = False,
 ) -> dict:
     """Rewrite ONLY the badly-clustered (or undersized) files of a
-    clustered lake back into tight key ranges. PARTITIONED lakes
-    (``dt=...``, ``ingest_batch=...`` directories — the
-    ``lake_append_stream`` layout) compact per leaf partition
-    directory (round 11): partition-column values live in directory
-    names, so each leaf is optimized as its own flat lake and the
-    reports merge. Rows never move across partitions (they couldn't —
-    the partition value IS the directory).
+    clustered lake back into tight key ranges.
 
-    Selection: footer box spans > ``max_span_frac`` of the declared
-    range on any clustered column, missing stats, or fewer than
-    ``min_rows`` rows (small-file compaction). The dirty rows re-sort
-    on the z-key and land one file per QUAD-ALIGNED z-prefix cell
-    (``partitionBy`` into the hidden staging dir, files then lifted to
-    the lake root): every output file's bounding box is contained in
-    one aligned cell whose per-dim span is <= max_span_frac/2 by
-    construction, so a rewrite is IDEMPOTENT — the second call finds
-    nothing dirty — rather than hoping sampled range boundaries line
-    up with curve seams. Committed by marker + per-file move, old
-    files deleted last; any crash heals via ``_compact_recover``.
-    ``n_files`` is accepted for API symmetry but the cell grid decides
-    the real file count (occupied cells only).
+    Selection: ONE footer-stats pass over the live files picks those
+    whose box spans > ``max_span_frac`` of the declared range on any
+    clustered column, that lack stats, or that hold fewer than
+    ``min_rows`` rows (small-file compaction). PARTITIONED lakes
+    (``dt=...``, ``ingest_batch=...`` directories — the
+    ``lake_append_stream`` layout) are selected across every leaf
+    partition directory at once and ``dirty_files`` names are
+    leaf-prefixed; files directly under the root of a partitioned
+    lake are a writer error and stay untouched.
+
+    Rewrite: the dirty rows re-sort on the z-key and land one file per
+    (leaf, QUAD-ALIGNED z-prefix cell) — ``partitionBy`` into the
+    hidden staging dir, files then lifted into their leaf. Rows never
+    move across partitions (the partition value IS the directory).
+    Every output file's bounding box is contained in one aligned cell
+    whose per-dim span is <= max_span_frac/2 by construction, so a
+    rewrite is IDEMPOTENT — the second call finds nothing dirty —
+    rather than hoping sampled range boundaries line up with curve
+    seams. ``n_files`` is accepted for API symmetry but the cell grid
+    decides the real file count (occupied cells only).
+
+    Commit:
+
+    * SNAPSHOT lakes (operators/snapshots.py): the dirty files of ALL
+      leaves rewrite in one pass — one read under the head's commit
+      record (explicit schema, so no footer-inference job; deletion
+      vectors and column mapping resolve as in every reader), one
+      shuffle on (partition columns, cell), one write through the
+      record's physical column names — and ONE optimize commit swaps
+      them. Old bytes stay for time travel. Compact files are named
+      ``compact-<digest>-<seq>.parquet`` with one digest per call and
+      one lake-wide sequence, so no basename repeats across leaves. A
+      partitioned snapshot lake with live deletion vectors is refused.
+    * plain parquet lakes: each leaf directory rewrites on its own,
+      committed by marker + per-file move, old files deleted last;
+      any crash heals via ``_compact_recover``.
 
     ``curve``: "zorder" (default) or "hilbert" — Hilbert lakes
     (``write_hilbert``) re-cluster on the same curve their files were
@@ -1150,157 +1176,79 @@ def optimize_clustered(
     ``stat_cols`` or the spec columns). Without it, correctness still
     holds through pruned_read's staleness rules; pruning on rewritten
     files just degrades to must-read until the next manifest append."""
-    import hashlib as _hashlib
-    import json as _json
-    import math as _math
-    import shutil
-
     if curve not in ("zorder", "hilbert"):
         raise ValueError(f"curve must be 'zorder' or 'hilbert', got {curve!r}")
     base = path.rstrip("/")
-    # snapshot lakes (operators/snapshots.py) swap files through the
-    # transaction log, not the marker protocol: old bytes stay on disk
-    # for time travel, visibility flips at the json commit. _live_names
-    # marks a leaf call under a partitioned snapshot lake whose log
-    # lives at the root (the local listing would include dead files).
-    snap = _live_names is not None or _snapshot_live_set(base) is not None
-    planned_head = None
-    if _live_names is not None:
-        names = sorted(_live_names)
+    info = None
+    if _snapshot_live_set(base) is not None:
+        # snapshot lakes swap files through the transaction log, not
+        # the marker protocol. The head read here is the one the swap
+        # commit asserts (round 12): a concurrent commit between plan
+        # and commit rebases or raises instead of silently resurrecting
+        # its files
+        from .snapshots import snapshot_info
+
+        info = snapshot_info(base)
     else:
-        if not snap:
-            _compact_recover(base)
-        if snap:
-            # capture the head THIS plan reads its live set from: the
-            # swap commit asserts it (round 12) — a concurrent commit
-            # between plan and commit rebases or raises instead of
-            # silently resurrecting its files
-            from .snapshots import current_version
-
-            planned_head = current_version(base)
-        names = _data_files(base)
+        _compact_recover_tree(base)
+    names = _data_files(base)
     if any("/" in n for n in names):
-        if snap and planned_head is not None:
-            from .snapshots import snapshot_info as _sinfo
-
-            if _sinfo(base, planned_head).get("dvs"):
-                # leaves compact against the root's log; deletion-
-                # vector masks can't be resolved per-leaf yet — rewrite
-                # the masks away first (lake_update/merge or a non-DV
-                # delete materializes them)
-                raise ValueError(
-                    "optimize_clustered on a PARTITIONED lake with live "
-                    "deletion vectors is not supported — materialize the "
-                    "masks first (any rewrite of the DV'd files does)"
-                )
-        # partitioned lake: optimize each leaf directory as a flat lake
-        # and merge the reports. Leaves with only root-level siblings
-        # ("" key) are handled by the same grouping.
-        by_leaf: dict[str, list[str]] = {}
-        for n in names:
-            by_leaf.setdefault(os.path.dirname(n), []).append(os.path.basename(n))
-        merged = {
-            "files_total": 0,
-            "files_dirty": 0,
-            "dirty_files": [],
-            "files_rewritten": 0,
-            "files_written": 0,
-            "rows_rewritten": 0,
-            "_span_sum": 0.0,
-        }
-        old_all: list[str] = []
-        new_all: list[str] = []
-        for leaf in sorted(by_leaf):
-            sub = os.path.join(base, leaf) if leaf else base
-            if leaf == "":
-                # mixed flat+partitioned layout is writer error, not a
-                # compaction case — skip root stragglers untouched
-                continue
-            rep = optimize_clustered(
-                spark,
-                sub,
-                specs,
-                bits,
-                max_span_frac=max_span_frac,
-                min_rows=min_rows,
-                n_files=n_files,
-                curve=curve,
-                # manifest maintenance runs ONCE at the lake root below;
-                # under a snapshot lake the leaf defers its swap commit
-                # to the single root-level snapshot below
-                _live_names=by_leaf[leaf] if snap else None,
-                _defer=snap,
+        if info is not None and info.get("dvs"):
+            # masks are keyed by file basename, and basenames repeat
+            # across leaf directories — rewrite the masks away first
+            # (lake_update/merge or a non-DV delete materializes them)
+            raise ValueError(
+                "optimize_clustered on a PARTITIONED lake with live "
+                "deletion vectors is not supported — materialize the "
+                "masks first (any rewrite of the DV'd files does)"
             )
-            old_all.extend(os.path.join(leaf, f) for f in rep.pop("old_names", []))
-            new_all.extend(os.path.join(leaf, f) for f in rep.pop("new_names", []))
-            merged["files_total"] += rep["files_total"]
-            merged["files_dirty"] += rep["files_dirty"]
-            merged["dirty_files"].extend(os.path.join(leaf, f) for f in rep["dirty_files"])
-            merged["files_rewritten"] += rep["files_rewritten"]
-            merged["files_written"] += rep["files_written"]
-            merged["rows_rewritten"] += rep["rows_rewritten"]
-            merged["_span_sum"] += rep["avg_span_frac"] * rep["files_total"]
-        total = merged.pop("_span_sum")
-        merged["avg_span_frac"] = (
-            round(total / merged["files_total"], 4) if merged["files_total"] else 0.0
-        )
-        merged["dirty_files"] = sorted(merged["dirty_files"])
-        if snap and merged["files_rewritten"] > 0:
-            from .snapshots import _commit_filechange
-
-            _commit_filechange(
-                base,
-                planned_head,
-                removed=set(old_all),
-                added=set(new_all),
-                op="optimize",
-                summary={
-                    "files_rewritten": merged["files_rewritten"],
-                    "files_written": merged["files_written"],
-                },
-            )
-        _maintain_manifest_after_optimize(
-            spark, base, manifest_path, specs, stat_cols, merged["files_rewritten"] > 0
-        )
-        return merged
-    cols = [c for c, _, _ in specs]
-    stats = file_stats(base, cols, names)
-    rep = cluster_report(base, specs, max_span_frac, names)
-    dirty = set(rep["dirty_files"])
+        names = [n for n in names if "/" in n]
+    stats = file_stats(base, [c for c, _, _ in specs], names)
+    rep = _cluster_fold(stats, specs, max_span_frac)
     rows_by_file = {fs["file"]: fs["rows"] for fs in stats}
+    dirty = set(rep["dirty_files"])
     if min_rows is not None:
         dirty |= {f for f, r in rows_by_file.items() if r < min_rows}
     if not dirty:
         return {**rep, "files_rewritten": 0, "files_written": 0, "rows_rewritten": 0}
-    dirty_rows = sum(rows_by_file.get(f, 0) for f in dirty)
+    olds = sorted(dirty)
+    if info is not None:
+        from .snapshots import _read_files, _to_physical
+
+        df = _read_files(spark, base, olds, info)
+        # keyed on LOGICAL names, written under the record's PHYSICAL
+        # ones: a renamed column keeps its original parquet name
+        keyed = _to_physical(_with_cell_key(df, specs, bits, curve, max_span_frac), info)
+        written = _swap_snapshot(base, info, olds, keyed)
+    else:
+        by_leaf: dict[str, list[str]] = {}
+        for n in olds:
+            by_leaf.setdefault(os.path.dirname(n), []).append(os.path.basename(n))
+        written = 0
+        for leaf, files in sorted(by_leaf.items()):
+            d = os.path.join(base, leaf)
+            df = spark.read.parquet(*[os.path.join(d, n) for n in files])
+            written += _swap_leaf(d, files, _with_cell_key(df, specs, bits, curve, max_span_frac))
+    _maintain_manifest_after_optimize(spark, base, manifest_path, specs, stat_cols, True)
+    return {
+        **rep,
+        "files_rewritten": len(dirty),
+        "files_written": written,
+        "rows_rewritten": int(sum(rows_by_file[f] for f in dirty)),
+    }
+
+
+def _with_cell_key(
+    df: DataFrame, specs: list[tuple[str, int, int]], bits: int, curve: str, max_span_frac: float
+) -> DataFrame:
+    """``df`` plus its curve key ``__zkey`` and the key's aligned cell
+    prefix ``__zb`` — the unit one compact file covers."""
+    import math
+
     n_dims = len(specs)
     # aligned cells: per-dim prefix depth so a cell's span is at most
     # HALF the dirty threshold — output files can never re-qualify
-    per_dim = max(1, _math.ceil(_math.log2(2.0 / max_span_frac)))
-    per_dim = min(per_dim, bits)
-    prefix_bits = per_dim * n_dims
-    tmp = os.path.join(base, "__compact_tmp")
-    digest_src = "\n".join(sorted(dirty))
-    if snap:
-        # snapshot lakes keep old bytes for time travel: a rollback +
-        # re-optimize re-selects the SAME dirty set, so the digest-only
-        # name would overwrite compact files a retained snapshot still
-        # references — salt per run (recovery never needs these names;
-        # orphans from a crash are vacuum_lake's job)
-        import uuid as _uuid
-
-        digest_src += "|" + _uuid.uuid4().hex
-    digest = _hashlib.sha256(digest_src.encode()).hexdigest()[:12]
-    if snap and planned_head is not None:
-        # read through the commit record's authority (round 12):
-        # deletion-vector masks apply, so compaction MATERIALIZES the
-        # deletes into the rewritten files; schema evolution resolves
-        # the same way every reader does
-        from .snapshots import _read_files, snapshot_info
-
-        df = _read_files(spark, base, sorted(dirty), snapshot_info(base, planned_head))
-    else:
-        df = spark.read.parquet(*[os.path.join(base, n) for n in sorted(dirty)])
+    per_dim = min(max(1, math.ceil(math.log2(2.0 / max_span_frac))), bits)
     if n_dims == 1:
         # 1-D clustering is a plain range sort — both curves degenerate
         # to the scaled cell itself (common for single-key streaming
@@ -1317,15 +1265,19 @@ def optimize_clustered(
     else:
         cells = [scale_to_bits_int(c, lo, hi, bits) for c, lo, hi in specs]
         keyed = df.withColumn("__zkey", zorder_key(cells, bits))
-    keyed = keyed.withColumn(
-        "__zb", F.shiftright(F.col("__zkey"), bits * n_dims - prefix_bits)
-    )
+    return keyed.withColumn("__zb", F.shiftright(F.col("__zkey"), (bits - per_dim) * n_dims))
+
+
+def _stage_cells(keyed: DataFrame, tmp: str, partition_cols: list[str]) -> list[str]:
+    """Write ``keyed`` (``_with_cell_key``) under ``tmp`` as one file
+    per (partition leaf, cell), each sorted on the curve key; return
+    the staged file paths, sorted."""
     (
-        keyed.repartition(F.col("__zb"))
-        .sortWithinPartitions("__zb", "__zkey")
+        keyed.repartition(*partition_cols, "__zb")
+        .sortWithinPartitions(*partition_cols, "__zb", "__zkey")
         .drop("__zkey")
         .write.mode("overwrite")
-        .partitionBy("__zb")
+        .partitionBy(*partition_cols, "__zb")
         .parquet(tmp)
     )
     staged = []
@@ -1333,62 +1285,77 @@ def optimize_clustered(
         for n in fnames:
             if n.endswith(".parquet") and not n.startswith(("_", ".")):
                 staged.append(os.path.join(root, n))
-    staged.sort()
+    return sorted(staged)
+
+
+def _swap_snapshot(base: str, info: dict, dirty: list[str], keyed: DataFrame) -> int:
+    """Stage ``keyed`` (the rows of the RELATIVE ``dirty`` files, every
+    leaf at once, under physical names), lift each file into its leaf
+    and commit the swap against the head ``info`` was read from.
+    Returns the number of files written."""
+    import hashlib
+    import shutil
+    import uuid
+
+    from .snapshots import _commit_filechange, _partition_cols
+
+    tmp = os.path.join(base, "__compact_tmp")
+    staged = _stage_cells(keyed, tmp, _partition_cols(dirty))
+    # old bytes stay on disk for time travel, so a rollback +
+    # re-optimize re-selects the SAME dirty set: the digest is salted
+    # per run, or the new names would overwrite compact files a
+    # retained snapshot still references
+    digest = hashlib.sha256(("\n".join(dirty) + "|" + uuid.uuid4().hex).encode()).hexdigest()[:12]
+    new_names = []
+    for i, src in enumerate(staged):
+        # staged as tmp/<leaf>/__zb=<cell>/part-*.parquet ("." leaf: flat)
+        leaf = os.path.relpath(os.path.dirname(os.path.dirname(src)), tmp)
+        new_names.append(os.path.normpath(os.path.join(leaf, f"compact-{digest}-{i:05d}.parquet")))
+    # the new files are invisible until the commit references them; a
+    # crash before it leaves only vacuum-able orphans
+    for src, rel in zip(staged, new_names):
+        os.replace(src, os.path.join(base, rel))
+    shutil.rmtree(tmp, ignore_errors=True)
+    _commit_filechange(
+        base,
+        info["version"],
+        removed=set(dirty),
+        added=set(new_names),
+        op="optimize",
+        summary={"files_rewritten": len(dirty), "files_written": len(new_names)},
+    )
+    return len(new_names)
+
+
+def _swap_leaf(d: str, dirty: list[str], keyed: DataFrame) -> int:
+    """Stage ``keyed`` (the rows of the ``dirty`` files of plain parquet
+    directory ``d``) and swap it in under the marker protocol. Returns
+    the number of files written."""
+    import hashlib
+    import json
+    import shutil
+
+    tmp = os.path.join(d, "__compact_tmp")
+    staged = _stage_cells(keyed, tmp, [])
+    digest = hashlib.sha256("\n".join(dirty).encode()).hexdigest()[:12]
     new_names = [f"compact-{digest}-{i:05d}.parquet" for i in range(len(staged))]
     for src, dst in zip(staged, new_names):
         os.replace(src, os.path.join(tmp, dst))
-    if snap:
-        # snapshot lake: visibility flips at the json commit, so no
-        # marker is needed — move the new files in (invisible until the
-        # commit references them), leave the old bytes for time travel
-        # (vacuum_lake reclaims), and commit the swapped list. A crash
-        # before the commit leaves only vacuum-able orphans.
-        for name in new_names:
-            os.replace(os.path.join(tmp, name), os.path.join(base, name))
-        shutil.rmtree(tmp, ignore_errors=True)
-        out = {
-            **rep,
-            "files_rewritten": len(dirty),
-            "files_written": len(new_names),
-            "rows_rewritten": int(dirty_rows),
-        }
-        if _defer:
-            # leaf of a partitioned snapshot lake: the root commits ONE
-            # snapshot covering every leaf's swap
-            return {**out, "old_names": sorted(dirty), "new_names": new_names}
-        from .snapshots import _commit_filechange
-
-        _commit_filechange(
-            base,
-            planned_head,
-            removed=set(dirty),
-            added=set(new_names),
-            op="optimize",
-            summary={"files_rewritten": len(dirty), "files_written": len(new_names)},
-        )
-        _maintain_manifest_after_optimize(spark, base, manifest_path, specs, stat_cols, True)
-        return out
     # atomic marker write: a torn marker would brick recovery (json
     # parse error on every subsequent call), so stage + rename
-    marker_tmp = _compact_marker(base) + ".tmp"
+    marker_tmp = _compact_marker(d) + ".tmp"
     with open(marker_tmp, "w") as fh:
-        _json.dump({"new": new_names, "old": sorted(dirty)}, fh)
-    os.replace(marker_tmp, _compact_marker(base))
+        json.dump({"new": new_names, "old": dirty}, fh)
+    os.replace(marker_tmp, _compact_marker(d))
     for name in new_names:
-        os.replace(os.path.join(tmp, name), os.path.join(base, name))
-    for name in sorted(dirty):
-        p = os.path.join(base, name)
+        os.replace(os.path.join(tmp, name), os.path.join(d, name))
+    for name in dirty:
+        p = os.path.join(d, name)
         if os.path.exists(p):
             os.remove(p)
-    os.remove(_compact_marker(base))
+    os.remove(_compact_marker(d))
     shutil.rmtree(tmp, ignore_errors=True)
-    _maintain_manifest_after_optimize(spark, base, manifest_path, specs, stat_cols, True)
-    return {
-        **rep,
-        "files_rewritten": len(dirty),
-        "files_written": len(new_names),
-        "rows_rewritten": int(dirty_rows),
-    }
+    return len(new_names)
 
 
 def append_scan_manifest(spark: SparkSession, path: str, cols: list[str], manifest_path: str) -> None:

@@ -844,6 +844,22 @@ def _partition_cols(files: list[str]) -> list[str]:
     return cols
 
 
+def _to_physical(df: DataFrame, info: dict | None) -> DataFrame:
+    """``df``'s LOGICAL column names renamed to the PHYSICAL parquet
+    names of the record's ``phys`` map (round 14 — column mapping);
+    identity without a map. Every writer of a snapshot lake goes
+    through this, so mapped columns always store under their
+    allocated physical name and the one shared reader resolves them
+    back."""
+    phys: dict[str, str] = (info or {}).get("phys") or {}
+    if not phys:
+        return df
+    # ONE select-alias pass — sequential renames would collide when a
+    # column's physical name equals another column's logical name
+    # (e.g. phys {y: x, x: x__g2} with both present)
+    return df.select([F.col(c).alias(phys.get(c, c)) for c in df.columns])
+
+
 def _write_new_files(
     df: DataFrame, path: str, partition_cols: list[str], info: dict | None = None
 ) -> list[str]:
@@ -852,20 +868,12 @@ def _write_new_files(
     created (on-disk listing diff — the new files are invisible to
     readers until the caller commits a snapshot referencing them).
 
-    ``info`` (round 14 — column mapping): the commit record the write
-    lands under. When it carries a ``phys`` map, ``df``'s LOGICAL
-    column names are renamed to their PHYSICAL parquet names before
-    writing, so every data file a mapped table ever gains — appends,
-    DML rewrites, OPTIMIZE, branch staging, streaming batches —
-    stores mapped columns under their allocated physical name and the
-    one shared reader resolves them back."""
+    ``info``: the commit record the write lands under; its ``phys``
+    map renames ``df`` and ``partition_cols`` to physical names
+    (``_to_physical``)."""
     phys: dict[str, str] = (info or {}).get("phys") or {}
-    if phys:
-        # ONE select-alias pass — sequential renames would collide
-        # when a column's physical name equals another column's
-        # logical name (e.g. phys {y: x, x: x__g2} with both present)
-        df = df.select([F.col(c).alias(phys.get(c, c)) for c in df.columns])
-        partition_cols = [phys.get(c, c) for c in partition_cols]
+    df = _to_physical(df, info)
+    partition_cols = [phys.get(c, c) for c in partition_cols]
     before = set(_all_data_files(path))
     writer = df.write.mode("append")
     if partition_cols:

@@ -596,10 +596,12 @@ def lake_append_stream(
     design (a per-batch re-sort would serialize the stream on a range
     shuffle). Round 11 AUTOMATES the documented operator cadence:
     pass ``optimize_every=N`` and every N committed batches the call
-    runs ``optimize_clustered`` per leaf partition directory —
-    footer-selected wide-span batch files re-sort into tight cells,
-    the scan manifest is GC'd + re-statted in the same call, and the
-    Bloom manifest (if any) appends rows for the compact files.
+    runs ``optimize_clustered`` over the lake — wide-span batch files
+    are selected across every ``ingest_batch=`` leaf from one
+    footer-stats pass and re-sort into tight cells inside their own
+    leaf (each leaf swaps under its own crash marker), the scan
+    manifest is GC'd + re-statted in the same call, and the Bloom
+    manifest (if any) appends rows for the compact files.
     ``optimize_specs`` gives the (col, lo, hi) clustering ranges; when
     omitted they derive from the manifest's global min/max per
     ``stat_cols`` (one metadata aggregate, no data scan). Replay-safe:

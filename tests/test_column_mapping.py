@@ -154,6 +154,38 @@ def test_rename_is_pure_metadata_and_appends_stay_physical(spark, tmp_path):
     assert got == {(1, 10), (2, 20)}
 
 
+def test_optimize_writes_through_the_mapping(spark, tmp_path):
+    """OPTIMIZE after a rename, flat and hive-partitioned: the compact
+    files physically carry the ORIGINAL name ``a`` and every value
+    reads back unchanged (storing them under the logical ``b`` read
+    back NULL)."""
+    import pyarrow.parquet as pq
+
+    from mlb_data_pipeline_spark.operators.layout import optimize_clustered
+
+    # k is a permutation of 0..1999, so every file of a 4-way random
+    # split spans the whole key range and is dirty
+    df = spark.range(2000).select(
+        (F.col("id") * 7919 % 2000).alias("k"),
+        (F.col("id") * 3).alias("a"),
+        (F.col("id") % 2).alias("p"),
+    )
+    for partition_by in ([], ["p"]):
+        lake = str(tmp_path / f"lake{len(partition_by)}")
+        lake_write(spark, df.repartition(4), lake, partition_by=partition_by)
+        lake_rename_column(lake, "a", "b")
+        before = sorted(map(tuple, read_snapshot(spark, lake).select("k", "b", "p").collect()))
+        rep = optimize_clustered(spark, lake, [("k", 0, 2000)], bits=8)
+        assert rep["files_rewritten"] == rep["files_total"] > 0
+        after = sorted(map(tuple, read_snapshot(spark, lake).select("k", "b", "p").collect()))
+        assert after == before
+        compact = [n for n in snapshot_files(lake) if "compact-" in n]
+        assert len(compact) == rep["files_written"] > 0
+        for n in compact:
+            cols = pq.read_schema(os.path.join(lake, n)).names
+            assert "a" in cols and "b" not in cols, (n, cols)
+
+
 def test_branch_ddl_rename_publishes_the_mapping(spark, tmp_path):
     """Rename on a WAP branch: main stays blind until publish, then
     the schema AND the phys mapping carry over — post-publish appends

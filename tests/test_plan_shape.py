@@ -172,9 +172,10 @@ def test_bm25_topk_plans_window_group_limit(spark, sf_dir):
     )
     assert "WindowGroupLimit" in plan
     assert "SortMergeJoin" not in plan  # probes stay broadcast
-    # one-shot path: postings + stats share ONE tokenization (the token
-    # arrays are lazily local-checkpointed), so the executed plan holds
-    # no second parquet scan of the corpus
+    # index-less path: each doc is projected once to (id, dl, tf of each
+    # query term) and that narrow projection is lazily local-checkpointed
+    # (never the token arrays), so the executed plan scores the
+    # checkpoint and holds no parquet scan of the corpus
     assert plan.count("documents.parquet") == 0, "corpus scanned outside the shared token pass"
 
 

@@ -317,6 +317,90 @@ def test_optimize_partitioned_snapshot_lake(spark, tmp_path):
         )
 
 
+def test_partitioned_optimize_jobs_do_not_grow_with_leaves(spark, tmp_path):
+    """Every dirty leaf of a partitioned snapshot lake rewrites in ONE
+    read/shuffle/write: the Spark job count is the same for 2 dirty
+    leaves as for 6. Compact basenames never repeat across leaves
+    (deletion vectors key masks by basename), the report names dirty
+    files leaf-prefixed, and a second call rewrites nothing."""
+    sc = spark.sparkContext
+
+    def run(n_dirty: int) -> int:
+        lake = str(tmp_path / f"lake{n_dirty}")
+        # 6 leaves, each one tight file: leaf p holds k in [1000p, 1000p+999]
+        tight = spark.range(6000).select(
+            F.col("id").alias("k"), (F.col("id") / 1000).cast("long").alias("p")
+        )
+        lake_write(spark, tight.coalesce(1), lake, partition_by=["p"])
+        # one full-range (dirty) file in each of the first n_dirty leaves
+        wide = spark.range(600).select(
+            (F.col("id") * 10).alias("k"), (F.col("id") % n_dirty).alias("p")
+        )
+        lake_write(spark, wide.coalesce(1), lake)
+        n_before = read_snapshot(spark, lake).count()
+        group = f"optimize-{n_dirty}-leaves"
+        sc.setJobGroup(group, group)
+        try:
+            rep = optimize_clustered(spark, lake, [("k", 0, 5999)], bits=8)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rep["files_rewritten"] == n_dirty
+        assert len(rep["dirty_files"]) == n_dirty
+        assert all(f.startswith("p=") for f in rep["dirty_files"])
+        live = snapshot_files(lake)
+        compact = [os.path.basename(n) for n in live if "compact-" in n]
+        assert len(compact) == rep["files_written"] == len(set(compact))
+        assert all("/" in n for n in live)
+        assert read_snapshot(spark, lake).count() == n_before
+        v = current_version(lake)
+        assert optimize_clustered(spark, lake, [("k", 0, 5999)], bits=8)["files_rewritten"] == 0
+        assert current_version(lake) == v
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs_2, jobs_6 = run(2), run(6)
+    assert jobs_2 == jobs_6 <= 4, (jobs_2, jobs_6)
+
+
+def test_optimize_refuses_partitioned_lake_with_deletion_vectors(spark, tmp_path):
+    """Masks are keyed by file basename, which repeats across leaf
+    directories, so OPTIMIZE on a partitioned lake with live deletion
+    vectors raises instead of guessing which file a mask meant."""
+    lake = str(tmp_path / "lake")
+    df = _kv(spark, 0, 400).withColumn("p", (F.col("k") % 2).cast("long"))
+    lake_write(spark, df, lake, partition_by=["p"])
+    lake_delete(
+        spark, lake, "k BETWEEN 100 AND 149", col_types={"k": "bigint"}, use_dv=True
+    )
+    v = current_version(lake)
+    with pytest.raises(ValueError, match="deletion vectors"):
+        optimize_clustered(spark, lake, [("k", 0, 400)], bits=8)
+    assert current_version(lake) == v
+
+
+def test_read_path_keeps_snapshot_optimize_staging(spark, tmp_path, monkeypatch):
+    """A read beside OPTIMIZE on a snapshot lake: the read-path guard
+    that heals torn marker swaps must not take the in-flight rewrite's
+    staging dir for one, or OPTIMIZE commits the removal of its dirty
+    files with nothing in their place."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mlb_data_pipeline_spark.operators.layout import _compact_recover_tree
+
+    lake = str(tmp_path / "lake")
+    lake_write(spark, _kv(spark, 0, 2000).repartition(4), lake)
+    write = DataFrameWriter.parquet
+
+    def staged_then_read(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        if path.endswith("__compact_tmp"):
+            _compact_recover_tree(lake)  # what lake_scan runs first
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", staged_then_read)
+    rep = optimize_clustered(spark, lake, [("k", 0, 2000)], bits=8)
+    assert rep["files_written"] > 0
+    assert read_snapshot(spark, lake).count() == 2000
+
+
 def test_plain_dir_adopts_on_first_dml(spark, tmp_path):
     """First DML on a plain parquet directory commits an 'adopt'
     snapshot of the as-is listing, then applies — existing lakes join
