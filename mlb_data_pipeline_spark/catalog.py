@@ -615,9 +615,9 @@ def lake_scan(
     if branch is not None:
         if version is not None or as_of_ts is not None:
             raise ValueError("pass branch= or version=/as_of_ts=, not both")
-        from .operators.snapshots import _branch_info, read_branch
+        from .operators.snapshots import _ref_info, read_branch
 
-        read_info = _branch_info(path, branch)
+        read_info = _ref_info(path, branch=branch)
         if not predicate:
             return read_branch(spark, path, branch)
         inventory = sorted(read_info["files"])
@@ -787,9 +787,9 @@ def lake_explain(
         # head's file list is the inventory, same rules
         if version is not None:
             raise ValueError("pass branch= or version=, not both")
-        from .operators.snapshots import _branch_info
+        from .operators.snapshots import _ref_info
 
-        live = sorted(_branch_info(path, branch)["files"])
+        live = sorted(_ref_info(path, branch=branch)["files"])
     elif version is not None:
         from .operators.snapshots import snapshot_files
 
@@ -817,12 +817,12 @@ def lake_explain(
     # column mapping (round 14): the explainer consults the same
     # physically-keyed stats as the planner — translate identically so
     # the kept-set pin can never drift on a mapped lake
-    from .operators.snapshots import _branch_info as _binfo, _phys_keyed
+    from .operators.snapshots import _phys_keyed, _ref_info
 
     eph = _lake_phys(
         path,
         version,
-        binfo=_binfo(path, branch) if branch is not None else None,
+        binfo=_ref_info(path, branch=branch) if branch is not None else None,
     )
     if eph:
         branches = _phys_keyed(branches, eph)
@@ -1169,21 +1169,17 @@ def lake_count(
         # mask-applying reader
         if version is not None:
             raise ValueError("pass branch= or version=, not both")
-        from .operators.snapshots import _branch_info, _read_files, read_branch
+        from .operators.snapshots import (
+            _read_files,
+            _record_row_count,
+            _ref_info,
+            read_branch,
+        )
 
-        binfo = _branch_info(ent["path"], branch)
+        binfo = _ref_info(ent["path"], branch=branch)
         if not predicate:
-            rows = binfo.get("file_rows")
-            dvr = binfo.get("dv_rows") or {}
-            if rows is not None:
-                try:
-                    return sum(
-                        int(rows[n]) - int(dvr.get(n, dvr.get(os.path.basename(n), 0)))
-                        for n in binfo["files"]
-                    )
-                except KeyError:
-                    pass
-            return read_branch(spark, ent["path"], branch).count()
+            n = _record_row_count(binfo)
+            return n if n is not None else read_branch(spark, ent["path"], branch).count()
         if ent["scan_manifest"] is not None:
             col_types = _lake_col_types(spark, ent)
             clauses = _extract_exact_clauses(predicate, col_types)
@@ -1409,15 +1405,15 @@ def lake_explain_delete(
     drift from what the delete actually does."""
     ent = _lake_entry(spark, name)
     from .operators.snapshots import (
-        _branch_info,
         _classify_for_delete,
+        _ref_info,
         has_snapshots,
         snapshot_files,
     )
 
     phys = None
     if branch is not None:
-        binfo = _branch_info(ent["path"], branch)
+        binfo = _ref_info(ent["path"], branch=branch)
         files = sorted(binfo["files"])
         phys = binfo.get("phys")
     elif has_snapshots(ent["path"]):

@@ -68,28 +68,6 @@ def _all_data_files(path: str) -> list[str]:
     return sorted(out)
 
 
-def _snapshot_live_set(path: str) -> set[str] | None:
-    """The CURRENT snapshot's file set when ``path`` carries a snapshot
-    log (``_snapshots/v*.json``, operators/snapshots.py), else None.
-    Inlined here (tiny json read, no Spark) so the one shared listing
-    primitive can honor the log without a circular import."""
-    import json as _json
-    import re as _re
-
-    d = os.path.join(os.path.abspath(path), "_snapshots")
-    if not os.path.isdir(d):
-        return None
-    best, best_v = None, -1
-    for n in os.listdir(d):
-        m = _re.fullmatch(r"v(\d{12})\.json", n)
-        if m and int(m.group(1)) > best_v:
-            best_v, best = int(m.group(1)), n
-    if best is None:
-        return None
-    with open(os.path.join(d, best)) as fh:
-        return set(_json.load(fh)["files"])
-
-
 def _data_files(path: str) -> list[str]:
     """Sorted RELATIVE paths of the LIVE parquet data files under
     ``path`` — the one listing primitive the manifest/pruning/optimize
@@ -97,14 +75,17 @@ def _data_files(path: str) -> list[str]:
     On a snapshot lake (round 11, operators/snapshots.py) "live" means
     the current snapshot's file list: files a delete/merge/optimize
     commit removed stay on disk for time travel until vacuum, but no
-    reader or maintenance op may see them."""
+    reader or maintenance op may see them. The head record comes from
+    the snapshot layer's own reader, so sharded records resolve too."""
+    from .snapshots import current_version, snapshot_files
+
     files = _all_data_files(path)
-    live = _snapshot_live_set(path)
-    if live is not None:
+    head = current_version(path)
+    if head is not None:
         # intersect, don't trust: a referenced file may have been
         # vacuumed out from under a stale log copy — absent files are
         # simply not read (same rule as the manifest's vanished rows)
-        return sorted(set(files) & live)
+        return sorted(set(files) & set(snapshot_files(path, head)))
     return files
 
 
@@ -1178,16 +1159,16 @@ def optimize_clustered(
     files just degrades to must-read until the next manifest append."""
     if curve not in ("zorder", "hilbert"):
         raise ValueError(f"curve must be 'zorder' or 'hilbert', got {curve!r}")
+    from .snapshots import has_snapshots, snapshot_info
+
     base = path.rstrip("/")
     info = None
-    if _snapshot_live_set(base) is not None:
+    if has_snapshots(base):
         # snapshot lakes swap files through the transaction log, not
         # the marker protocol. The head read here is the one the swap
         # commit asserts (round 12): a concurrent commit between plan
         # and commit rebases or raises instead of silently resurrecting
         # its files
-        from .snapshots import snapshot_info
-
         info = snapshot_info(base)
     else:
         _compact_recover_tree(base)

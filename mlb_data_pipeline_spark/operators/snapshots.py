@@ -79,18 +79,25 @@ Iceberg/Delta-shaped transaction log on top of the same directory:
   weight piles up; ``snapshot_info`` resolves either representation,
   so every reader is representation-blind.
 
-Concurrency model: optimistic, serializable at the file level
-(round 12 — every commit path now asserts the head it planned
-against). A commit carries ``parent=`` the version its plan read;
-``commit_snapshot`` raises ``SnapshotConflictError`` when the head
-moved, BEFORE the exclusive hard-link (which still guarantees one
-winner per version number as the last line of defense). Losers
-resolve by commit shape:
+Concurrency model: optimistic, serializable at the file level, and
+ONE protocol for every REF. A ref is a chain of immutable records in
+its own log dir — main (``_snapshots/``, ``branch=None``) or a WAP
+branch (``_snapshots/branches/<name>/``) — with a version lister
+(``_versions``), a record reader that resolves sharded records
+(``_ref_info``) and an exclusive put (``_put_record``: one winner per
+version number, the last line of defense). ``commit_snapshot`` is the
+only record builder: a commit carries ``parent=`` the version its plan
+read, raises ``SnapshotConflictError`` when the ref's head moved, and
+inherits every record key it is not given. The refs differ only in
+data: only main has a head 0 (no commits yet — the plain parquet on
+disk, adopted by the first DML), and a branch's records carry the
+``fork_version`` of their v1 fork record. Losers resolve by commit
+shape, identically on every ref:
 
-* append-shaped commits (``lake_write`` append, the streaming sink)
-  re-read the new head's live set and re-union — a blind append never
-  logically conflicts (``_commit_append``);
-* DML/OPTIMIZE commits rebase through ``_commit_filechange``: if
+* append-shaped commits (``lake_write`` append, ``lake_branch_append``,
+  the streaming sink) re-read the new head's live set and re-union — a
+  blind append never logically conflicts (``_commit_append``);
+* DML/OPTIMIZE/publish commits rebase through ``_commit_filechange``: if
   every file the plan removed is still live in the new head and none
   of its new files collide, the commit replays as (new head − removed)
   ∪ added — equivalent to the serial order "this op first, the
@@ -169,15 +176,20 @@ def _snap_dir(path: str) -> str:
     return os.path.join(os.path.abspath(path), SNAP_DIRNAME)
 
 
+def _ref_dir(path: str, branch: str | None = None) -> str:
+    """The log dir of a ref: main's ``_snapshots/`` or a branch's."""
+    return _snap_dir(path) if branch is None else _branch_dir(path, branch)
+
+
 def has_snapshots(path: str) -> bool:
     return any(
         re.fullmatch(r"v\d{12}\.json", n) for n in _store().list(_snap_dir(path))
     )
 
 
-def _versions(path: str) -> list[int]:
+def _versions(path: str, branch: str | None = None) -> list[int]:
     out = []
-    for n in _store().list(_snap_dir(path)):
+    for n in _store().list(_ref_dir(path, branch)):
         m = re.fullmatch(r"v(\d{12})\.json", n)
         if m:
             out.append(int(m.group(1)))
@@ -189,6 +201,14 @@ def current_version(path: str) -> int | None:
     return vs[-1] if vs else None
 
 
+def _head_version(path: str, branch: str | None = None) -> int | None:
+    """A ref's head version (None: no commits yet)."""
+    if branch is None:
+        return current_version(path)
+    vs = _versions(path, branch)
+    return vs[-1] if vs else None
+
+
 def snapshot_info(path: str, version: int | str | None = None) -> dict:
     """The committed snapshot record (version, parent, op, ts, files,
     summary). ``version=None`` resolves the current head; a string
@@ -196,17 +216,42 @@ def snapshot_info(path: str, version: int | str | None = None) -> dict:
     (snapshot_files, read_snapshot, lake_scan) inherits both forms."""
     if isinstance(version, str):
         version = resolve_version(path, version)
+    return _ref_info(path, version)
+
+
+def _ref_info(path: str, version: int | None = None, branch: str | None = None) -> dict:
+    """The record at ``version`` of a ref (its head when None), sharded
+    records resolved — the one record reader of both chains."""
+    where = f"under {path!r}" if branch is None else f"on branch {branch!r}"
     if version is None:
-        version = current_version(path)
+        version = _head_version(path, branch)
         if version is None:
-            raise ValueError(f"no snapshots under {path!r}")
-    fn = os.path.join(_snap_dir(path), f"v{version:012d}.json")
+            raise ValueError(
+                f"no snapshots under {path!r}" if branch is None
+                else f"no branch {branch!r} under {path!r}"
+            )
+    fn = os.path.join(_ref_dir(path, branch), f"v{version:012d}.json")
     if not _store().exists(fn):
         raise ValueError(
-            f"snapshot v{version} does not exist under {path!r} "
+            f"snapshot v{version} does not exist {where} "
             "(expired by vacuum_lake, or never committed)"
         )
     return _resolve_record(path, json.loads(_store().read(fn)))
+
+
+def _put_record(path: str, record: dict, branch: str | None = None) -> int:
+    """Exclusive create of a ref's record through the log-store seam:
+    exactly one winner per version on any backend (POSIX hard-link
+    here, conditional put on object storage — operators/logstore.py)."""
+    fn = os.path.join(_ref_dir(path, branch), f"v{record['version']:012d}.json")
+    try:
+        _store().put_exclusive(fn, json.dumps(record).encode())
+    except FileExistsError as exc:
+        on = "" if branch is None else f"branch {branch!r} "
+        raise SnapshotConflictError(
+            f"{on}v{record['version']} was committed concurrently — re-plan and retry"
+        ) from exc
+    return record["version"]
 
 
 # ---------------------------------------------------------------------------
@@ -339,7 +384,7 @@ def last_stream_batch_id(path: str, branch: str | None = None) -> int | None:
     stream instead of O(history), and it never resolves sharded
     manifests (only the summary is needed). None when no retained
     record carries a batch id."""
-    d = _branch_dir(path, branch) if branch is not None else _snap_dir(path)
+    d = _ref_dir(path, branch)
     names = sorted(
         (n for n in _store().list(d) if re.fullmatch(r"v\d{12}\.json", n)),
         reverse=True,
@@ -450,12 +495,15 @@ def commit_snapshot(
     dv_files: dict[str, list[str]] | None = None,
     spark: SparkSession | None = None,
     phys: dict[str, str] | None = None,
+    branch: str | None = None,
+    _new_rows: dict[str, int] | None = None,
 ) -> int:
-    """Commit ``files`` as the table's next version. Atomic and
-    single-winner: the record is staged then HARD-LINKED to its final
-    name — link fails with EEXIST if another writer got there first
-    (``SnapshotConflictError``). ``parent`` asserts the version the
-    writer planned against; a mismatch with the current head is the
+    """Commit ``files`` as the next version of a ref — main, or the
+    WAP branch ``branch``. The one record builder of both chains.
+    Atomic and single-winner: the record lands through the ref's
+    exclusive put (``_put_record``) — if another writer got there
+    first, ``SnapshotConflictError``. ``parent`` asserts the version
+    the writer planned against; a mismatch with the ref's head is the
     same conflict, detected before any filesystem write. Every public
     commit path passes ``parent`` (round 12) — a stale plan can never
     silently build over a concurrent commit.
@@ -463,112 +511,90 @@ def commit_snapshot(
     Every commit also carries ``file_rows`` — per-file row counts,
     inherited from the parent for carried-over files and read from the
     parquet FOOTER for files new to this commit (O(delta) metadata
-    reads). ``COUNT(*)`` on a snapshot lake is therefore a pure
-    metadata sum at any version, Iceberg-style.
+    reads; ``_new_rows`` passes counts a retrying caller already read).
+    ``COUNT(*)`` on a snapshot lake is therefore a pure metadata sum at
+    any version, Iceberg-style.
 
-    ``schema_json`` (round 12): the table schema as a Spark
-    ``StructType.json()`` string; inherited from the parent when None,
-    so an empty table (delete-all, truncating overwrite) stays
-    readable with its true schema even after vacuum removed every
-    dead data file."""
-    head = current_version(path)
-    if parent is not None and parent != (head if head is not None else 0):
+    Every other record key is INHERITED from the head unless the
+    commit passes it; an empty value blocks inheritance (a truncating
+    overwrite resets state that way):
+
+    * ``schema_json`` (round 12) — the table schema as a Spark
+      ``StructType.json()`` string, so an empty table (delete-all,
+      truncating overwrite) stays readable with its true schema even
+      after vacuum removed every dead data file;
+    * ``renames`` — rename lineage {current column -> [prior names,
+      newest first]}, so later commits keep resolving pre-rename files;
+    * ``dvs`` / ``dv_rows`` — deletion-vector sidecars under
+      ``_snapshots/dv/`` and {file basename -> deleted rows}; entries
+      for files that left the live set are harmless (their anti-join
+      matches nothing; row counting sums live files only);
+    * ``dv_files`` (round 14) — {sidecar -> [masked basenames]}, pure
+      pruning metadata: a rewrite removing every file a sidecar masks
+      drops the sidecar, so vacuum reclaims it once the old versions
+      expire. An entry lives exactly as long as its sidecar is in the
+      record's ``dvs``; sidecars without one are retained
+      conservatively;
+    * ``dropped_names`` (round 13) — tombstones of dropped columns and
+      their lineage aliases (old files still hold those bytes);
+    * ``phys`` (round 14, column mapping) — {logical column ->
+      PHYSICAL parquet name}, sparse (absent = identity), so a dropped
+      or renamed-away name can be reused under a fresh physical name;
+    * ``fork_version`` — a branch record's fork point on main."""
+    head = _head_version(path, branch)
+    if parent is not None and parent != (head or 0):
         raise SnapshotConflictError(
             f"planned against v{parent} but head is v{head} — re-plan and retry"
         )
-    version = (head or 0) + 1
-    prev: dict = {}
-    if head is not None:
-        prev = snapshot_info(path, head)
-    prev_rows: dict[str, int] = prev.get("file_rows", {})
-    file_rows: dict[str, int] = {n: prev_rows[n] for n in files if n in prev_rows}
-    fresh = [n for n in files if n not in prev_rows]
+    prev = _ref_info(path, head, branch) if head is not None else {}
+    known = {**(_new_rows or {}), **prev.get("file_rows", {})}
+    file_rows = {n: known[n] for n in files if n in known}
+    fresh = [n for n in files if n not in known]
     if fresh:
         file_rows.update(_file_row_counts(path, fresh, spark))
-    d = _snap_dir(path)
-    os.makedirs(d, exist_ok=True)
     record = {
-        "version": version,
+        "version": (head or 0) + 1,
         "parent": head,
         "op": op,
         "ts": time.time(),
         "summary": summary or {},
     }
     record.update(_files_repr(path, prev, files, file_rows))
-    schema_json = schema_json if schema_json is not None else prev.get("schema")
-    if schema_json is not None:
-        record["schema"] = schema_json
-    # rename lineage (round 12 full schema evolution): {current column
-    # -> [prior names, newest first]} — inherited like the schema so
-    # every later commit keeps resolving pre-rename files
-    renames = renames if renames is not None else prev.get("renames")
-    if renames:
-        record["renames"] = renames
-    # deletion vectors (round 12): "dvs" = relative names of position
-    # sidecars under _snapshots/dv/, "dv_rows" = {file: deleted rows}
-    # — inherited so every later commit keeps masking DV'd positions;
-    # entries for files that left the live set are harmless (their
-    # anti-join matches nothing; row counting sums live files only)
-    dvs = dvs if dvs is not None else prev.get("dvs")
-    if dvs:
-        record["dvs"] = dvs
-    dv_rows = dv_rows if dv_rows is not None else prev.get("dv_rows")
-    if dv_rows:
-        record["dv_rows"] = dv_rows
-    # "dv_files" (round 14): {sidecar name -> [masked file basenames]},
-    # written by the DV commit that created the sidecar. Pure pruning
-    # metadata: a rewrite that removes every file a sidecar masks can
-    # drop the sidecar reference (instead of carrying it forever), so
-    # vacuum reclaims the sidecar once the old versions expire.
-    # Inherited like dvs; sidecars without an entry (pre-round-14
-    # records) are simply retained conservatively.
-    dv_files = dv_files if dv_files is not None else prev.get("dv_files")
-    if dv_files:
-        record["dv_files"] = dv_files
-    # dropped-name tombstones (round 13): column names retired by
-    # lake_drop_column (plus their rename-lineage aliases). Old files
-    # still carry the bytes under these names, so REUSING one would
-    # resurface dropped data — the evolution paths reject any new
-    # column name found here. Inherited like the schema; an overwrite
-    # clears them (all files are the commit's own).
-    dropped_names = (
-        dropped_names if dropped_names is not None else prev.get("dropped_names")
-    )
-    if dropped_names:
-        record["dropped_names"] = sorted(set(dropped_names))
-    # column mapping (round 14 — the Delta column-mapping / Iceberg
-    # column-ID shape): "phys" = {logical column -> PHYSICAL parquet
-    # column name}, sparse (absent = identity). Lets a dropped or
-    # renamed-away name be legitimately REUSED: the new column stores
-    # under a fresh physical name, so old files' dead bytes can never
-    # resurface through it. Inherited like the schema; a truncating
-    # overwrite resets it (every live file is the commit's own).
-    phys = phys if phys is not None else prev.get("phys")
-    if phys:
-        record["phys"] = phys
-    final = os.path.join(d, f"v{version:012d}.json")
-    try:
-        # exclusive create through the log-store seam: exactly one
-        # winner per version on any backend (POSIX hard-link here,
-        # conditional put on object storage — operators/logstore.py)
-        _store().put_exclusive(final, json.dumps(record).encode())
-    except FileExistsError as exc:
-        raise SnapshotConflictError(
-            f"v{version} was committed concurrently — re-plan and retry"
-        ) from exc
-    return version
+    given = {
+        "schema": schema_json,
+        "renames": renames,
+        "dvs": dvs,
+        "dv_rows": dv_rows,
+        "dv_files": dv_files,
+        "dropped_names": dropped_names,
+        "phys": phys,
+        "fork_version": None,
+    }
+    for k, v in given.items():
+        v = v if v is not None else prev.get(k)
+        if v:
+            record[k] = v
+    if "dropped_names" in record:
+        record["dropped_names"] = sorted(set(record["dropped_names"]))
+    kept = {
+        s: bs for s, bs in record.pop("dv_files", {}).items() if s in record.get("dvs", ())
+    }
+    if kept:
+        record["dv_files"] = kept
+    return _put_record(path, record, branch)
 
 
-def _head_and_live(path: str) -> tuple[int, list[str]]:
-    """(head version, its live file list) read consistently: the file
-    list comes from the SAME version the head read resolved, so a
-    commit landing between the two calls cannot tear the pair. Head 0
-    = no snapshots yet (live = whatever plain parquet is on disk,
-    the adoption inventory)."""
-    head = current_version(path)
-    if head is None:
-        return 0, _data_files(path)
-    return head, snapshot_files(path, head)
+def _head(path: str, branch: str | None = None) -> tuple[int, dict]:
+    """(head version, its record) of a ref, read consistently: the
+    record is the one the version listing resolved, so a commit
+    landing in between cannot tear the pair. Only main has a head 0 —
+    no snapshots yet, live = whatever plain parquet is on disk (the
+    adoption inventory)."""
+    head = _head_version(path, branch)
+    if head is None and branch is None:
+        return 0, {"files": _data_files(path)}
+    info = _ref_info(path, head, branch)
+    return info["version"], info
 
 
 # bounded optimistic retries for the conflict-resolving commit paths —
@@ -586,13 +612,15 @@ def _commit_append(
     spark: SparkSession | None = None,
     phys: dict[str, str] | None = None,
     require_meta: dict | None = None,
+    branch: str | None = None,
 ) -> int:
-    """Commit an APPEND: files = head's live set ∪ ``new_files``. A
-    blind append never logically conflicts with a concurrent commit
-    (it reads no existing file), so a ``SnapshotConflictError`` here
-    just means the head moved — re-read it and re-union (Delta treats
-    appends the same way). Bounded retries; the final conflict
-    propagates.
+    """Commit an APPEND on a ref: files = head's live set ∪
+    ``new_files``. A blind append never logically conflicts with a
+    concurrent commit (it reads no existing file), so a
+    ``SnapshotConflictError`` here just means the head moved — re-read
+    it and re-union (Delta treats appends the same way). Bounded
+    retries; the final conflict propagates. The new files' footers are
+    read once, before the loop.
 
     ``require_meta`` (round 14): an EVOLVING append computed its
     ``schema_json``/``phys`` against a specific head's evolution state
@@ -602,10 +630,10 @@ def _commit_append(
     this raises instead of retrying (a real schema-evolution conflict
     — the caller re-plans, same contract as the DDL paths' parent
     assertion)."""
+    new_rows = _file_row_counts(path, list(new_files), spark)
     for attempt in range(_COMMIT_RETRIES + 1):
-        head, live = _head_and_live(path)
+        head, cur = _head(path, branch)
         if require_meta is not None and head:
-            cur = snapshot_info(path, head)
             stale = {
                 k
                 for k, v in require_meta.items()
@@ -620,13 +648,15 @@ def _commit_append(
         try:
             return commit_snapshot(
                 path,
-                sorted(set(live) | set(new_files)),
+                sorted(set(cur["files"]) | set(new_files)),
                 op,
                 summary=summary,
                 parent=head,
                 schema_json=schema_json,
                 spark=spark,
                 phys=phys,
+                branch=branch,
+                _new_rows=new_rows,
             )
         except SnapshotConflictError:
             if attempt == _COMMIT_RETRIES:
@@ -652,8 +682,9 @@ def _commit_filechange(
     dropped_names: list[str] | None = None,
     require_schema: str | None = None,
     phys: dict[str, str] | None = None,
+    branch: str | None = None,
 ) -> int:
-    """Commit a DML/OPTIMIZE-shaped change planned against
+    """Commit a DML/OPTIMIZE-shaped change on a ref, planned against
     ``planned_head``: drop ``removed`` from the live set, add
     ``added``. On a head-moved conflict, REBASE file-level (the Delta
     conflict-resolution shape): if every removed file is still live in
@@ -662,7 +693,8 @@ def _commit_filechange(
     new head's live set — equivalent to the serial order "this op
     first, the concurrent commit after". A removed file missing from
     the new head is a REAL write-write conflict (both ops touched the
-    same rows): raise, the caller must re-plan.
+    same rows): raise, the caller must re-plan. The added files'
+    footers are read once, before the loop.
 
     Deletion-vector commits (round 13 — ADVICE r12 #1) pass their mask
     as a DELTA, never an absolute list: ``dv_add`` names the new
@@ -682,10 +714,12 @@ def _commit_filechange(
     over a concurrent DV commit that masked a file this plan is
     removing is equally non-serializable — the plan read the file
     UNMASKED, so replaying the rewrite would resurrect the
-    concurrently DV-deleted rows. Every rebase therefore also checks
-    that the landed-on head's dv_rows entry for each ``removed`` file
-    equals the planned head's (``planned_dv_rows``, read lazily from
-    the planned head's record when the caller didn't pass it).
+    concurrently DV-deleted rows (and a branch would publish the
+    corruption to main). Every rebase therefore also checks that the
+    landed-on head's dv_rows entry for each ``removed`` file equals
+    the planned head's (``planned_dv_rows``, read lazily from the
+    planned head's record when the caller didn't pass it; an
+    unreadable planned-head record raises).
 
     Mask-metadata PRUNING (round 14 — ADVICE r13 #4): when this commit
     removes files, dv_rows entries for basenames no longer live are
@@ -694,23 +728,23 @@ def _commit_filechange(
     materializes masks stops referencing them, so vacuum can reclaim
     the sidecars once older versions expire, instead of the metadata
     bloating monotonically."""
+    new_rows = _file_row_counts(path, sorted(added), spark)
     expect = planned_head
     plan_dvr_lazy = planned_dv_rows
     for attempt in range(_COMMIT_RETRIES + 1):
-        head, live = _head_and_live(path)
-        head_info = snapshot_info(path, head) if head else {}
+        head, head_info = _head(path, branch)
         if require_schema is not None and head_info.get("schema") != require_schema:
             # the caller is COMMITTING schema metadata computed against
             # a specific base schema (an evolved branch publishing):
-            # a concurrent main-side ALTER is a real conflict — merging
-            # two schema evolutions is the caller's decision, never a
+            # a concurrent ALTER is a real conflict — merging two
+            # schema evolutions is the caller's decision, never a
             # silent rebase (round 13)
             raise SnapshotConflictError(
-                f"main's schema changed since the plan's base (head v{head}) "
+                f"the schema changed since the plan's base (head v{head}) "
                 "— concurrent schema evolution; re-plan and retry"
             )
         if head != expect:
-            live_set = set(live)
+            live_set = set(head_info["files"])
             gone = removed - live_set
             if gone:
                 raise SnapshotConflictError(
@@ -724,16 +758,16 @@ def _commit_filechange(
                     f"new file name(s) already live at v{head} "
                     f"(e.g. {sorted(collide)[0]!r}) — re-plan and retry"
                 )
+            head_dvr = head_info.get("dv_rows") or {}
             if removed:
                 # symmetric DV guard (round 14): this plan READ the
                 # removed files under the planned head's masks; if the
                 # landed-on head masks any of them differently, the
                 # rewrite would resurrect concurrently DV-deleted rows
-                head_dvr = head_info.get("dv_rows") or {}
                 if plan_dvr_lazy is None:
                     try:
                         plan_dvr_lazy = (
-                            snapshot_info(path, planned_head).get("dv_rows") or {}
+                            _ref_info(path, planned_head, branch).get("dv_rows") or {}
                             if planned_head
                             else {}
                         )
@@ -758,7 +792,6 @@ def _commit_filechange(
                             "deleted rows; re-plan and retry"
                         )
             if dv_add is not None or dv_rows_add:
-                head_dvr = head_info.get("dv_rows") or {}
                 plan_dvr = planned_dv_rows or {}
                 for rel in sorted(masked_files or ()):
                     if rel in added:
@@ -778,8 +811,8 @@ def _commit_filechange(
                             "positions may overlap; re-plan and retry"
                         )
             expect = head
-        files = sorted((set(live) - removed) | added)
-        dvs = dv_rows = dv_files = None
+        files = sorted((set(head_info["files"]) - removed) | added)
+        dvs = dv_rows = None
         if dv_add is not None or dv_rows_add:
             # merge the DV delta into the head ACTUALLY committed on
             head_dvs = list(head_info.get("dvs") or [])
@@ -787,28 +820,23 @@ def _commit_filechange(
             dv_rows = dict(head_info.get("dv_rows") or {})
             for b, n in (dv_rows_add or {}).items():
                 dv_rows[b] = int(dv_rows.get(b, 0)) + int(n)
-            dv_files = {**(head_info.get("dv_files") or {}), **(dv_files_add or {})}
         elif removed and (head_info.get("dvs") or head_info.get("dv_rows")):
             dvs = list(head_info.get("dvs") or [])
             dv_rows = dict(head_info.get("dv_rows") or {})
-            dv_files = dict(head_info.get("dv_files") or {})
+        dv_files = {**(head_info.get("dv_files") or {}), **(dv_files_add or {})}
         if removed and dv_rows is not None:
             # prune mask metadata for rewritten-away files (round 14):
             # the rewrite read through those masks, so nothing live
             # references them — dead entries are harmless to reads but
             # bloat every later commit and pin sidecars in vacuum
+            # (commit_snapshot drops the dv_files of dropped sidecars)
             live_base = {os.path.basename(n) for n in files}
             dv_rows = {b: n for b, n in dv_rows.items() if b in live_base}
-            if not dv_rows:
-                dvs, dv_files = [], {}
-            else:
-                dvs = [
-                    s
-                    for s in (dvs or [])
-                    if s not in (dv_files or {})
-                    or any(b in live_base for b in dv_files[s])
-                ]
-                dv_files = {s: bs for s, bs in (dv_files or {}).items() if s in dvs}
+            dvs = [
+                s
+                for s in dvs or []
+                if s not in dv_files or any(b in live_base for b in dv_files[s])
+            ] if dv_rows else []
         try:
             return commit_snapshot(
                 path,
@@ -824,6 +852,8 @@ def _commit_filechange(
                 renames=renames,
                 dropped_names=dropped_names,
                 phys=phys,
+                branch=branch,
+                _new_rows=new_rows,
             )
         except SnapshotConflictError:
             if attempt == _COMMIT_RETRIES:
@@ -906,8 +936,8 @@ def lake_write(
     physical column — rejected)."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
-    head, live = _head_and_live(path)
-    head_info = snapshot_info(path, head) if head else {}
+    head, head_info = _head(path)
+    live = head_info["files"]
     evolved_schema_json: str | None = None
     evolved_phys: dict[str, str] | None = None
     if live and mode == "append":
@@ -1020,12 +1050,11 @@ def lake_write(
         # becomes legal again (round 13).
         version = None
         for attempt in range(_COMMIT_RETRIES + 1):
-            h, _ = _head_and_live(path)
             try:
                 version = commit_snapshot(
                     path, new, "overwrite",
                     summary={"files_added": len(new)},
-                    parent=h, schema_json=schema_json,
+                    parent=current_version(path) or 0, schema_json=schema_json,
                     renames={}, dvs=[], dv_rows={}, dropped_names=[],
                     phys={}, spark=spark,
                 )
@@ -1059,7 +1088,14 @@ def read_snapshot(
     """The table AS OF ``version`` (current head when None) — reads
     exactly the committed file list, so the result is stable no matter
     how many commits happened since."""
-    info = snapshot_info(path, version)
+    return _read_record(spark, path, snapshot_info(path, version))
+
+
+def _read_record(
+    spark: SparkSession, path: str, info: dict, branch: str | None = None
+) -> DataFrame:
+    """The rows of one record of a ref (``read_snapshot`` /
+    ``read_branch``)."""
     files = sorted(info["files"])
     if not files:
         # empty table: the commit record carries the authoritative
@@ -1075,10 +1111,10 @@ def read_snapshot(
         return spark.read.parquet(path).limit(0)
     missing = [n for n in files if not os.path.exists(os.path.join(path, n))]
     if missing:
+        on = "" if branch is None else f"branch {branch!r} "
         raise ValueError(
-            f"snapshot v{version if version is not None else current_version(path)} "
-            f"references {len(missing)} vacuumed file(s) (e.g. {missing[0]!r}) — "
-            "expired versions cannot be read"
+            f"{on}snapshot v{info['version']} references {len(missing)} vacuumed "
+            f"file(s) (e.g. {missing[0]!r}) — expired versions cannot be read"
         )
     return _read_files(spark, path, files, info)
 
@@ -1229,6 +1265,7 @@ def lake_rollback(path: str, version: int) -> int:
         renames=info.get("renames") or {},
         dvs=info.get("dvs") or [],
         dv_rows=info.get("dv_rows") or {},
+        dv_files=info.get("dv_files") or {},
         dropped_names=info.get("dropped_names") or [],
         phys=info.get("phys") or {},
     )
@@ -1267,14 +1304,9 @@ def _schema_commit(
     main's own schema never moved (and raises when both evolved)."""
     from pyspark.sql.types import StructType
 
-    if branch is not None:
-        info = _branch_info(path, branch)
-        head = info["version"]
-    else:
-        head = current_version(path)
-        if head is None:
-            raise ValueError(f"{path!r} is not a snapshot lake (no commits)")
-        info = snapshot_info(path, head)
+    head, info = _head(path, branch)
+    if not head:
+        raise ValueError(f"{path!r} is not a snapshot lake (no commits)")
     sj = info.get("schema")
     if not sj:
         raise ValueError(
@@ -1286,37 +1318,17 @@ def _schema_commit(
     dropped = list(info.get("dropped_names") or [])
     phys = dict(info.get("phys") or {})
     schema, renames, dropped, phys = mutate(schema, renames, dropped, phys)
-    if branch is not None:
-        record = {
-            **{k: info[k] for k in ("fork_version",) if k in info},
-            "version": head + 1,
-            "parent": head,
-            "op": op,
-            "ts": time.time(),
-            **_files_repr(path, info, info["files"], info.get("file_rows", {})),
-            "summary": {"branch": branch, **summary},
-            "schema": schema.json(),
-        }
-        if renames:
-            record["renames"] = renames
-        if dropped:
-            record["dropped_names"] = sorted(set(dropped))
-        if phys:
-            record["phys"] = phys
-        for k in ("dvs", "dv_rows"):
-            if info.get(k):
-                record[k] = info[k]
-        return _branch_commit(path, branch, record)
     return commit_snapshot(
         path,
         info["files"],
         op,
-        summary=summary,
+        summary={"branch": branch, **summary} if branch is not None else summary,
         parent=head,
         schema_json=schema.json(),
         renames=renames,
         dropped_names=dropped,
         phys=phys,
+        branch=branch,
     )
 
 
@@ -1529,21 +1541,31 @@ def vacuum_lake(
             set(retained)
             | {v for v in vs if snapshot_info(path, v)["ts"] >= cutoff_ts}
         )
+    # ONE pass over the records: every main version (files ever
+    # referenced), and — retained alongside — the retained versions
+    # and every branch version, since live branches are retention
+    # promises like tags (round 12): their data files, deletion-vector
+    # sidecars and sharded manifests stay until the branch is dropped
+    # or published
     referenced: set[str] = set()
     ever_referenced: set[str] = set()
+    dv_referenced: set[str] = set()
+    man_referenced: set[str] = set()
+    kept_infos = []
     for v in vs:
-        fset = set(snapshot_files(path, v))
-        ever_referenced |= fset
+        info = snapshot_info(path, v)
+        ever_referenced.update(info["files"])
         if v in retained:
-            referenced |= fset
-    # live branches are retention promises like tags: every file any
-    # branch version references stays until the branch is dropped or
-    # published (round 12)
-    for name in lake_branches(path):
-        for bv in _branch_versions(path, name):
-            bset = set(_branch_info(path, name, bv)["files"])
-            referenced |= bset
-            ever_referenced |= bset
+            kept_infos.append(info)
+    for name in _branch_names(path):
+        for bv in _versions(path, name):
+            info = _ref_info(path, bv, name)
+            ever_referenced.update(info["files"])
+            kept_infos.append(info)
+    for info in kept_infos:
+        referenced.update(info["files"])
+        dv_referenced.update(info.get("dvs") or [])
+        man_referenced.update(info.get("manifest_refs") or [])
     removed = 0
     kept_orphans = 0
     cutoff = time.time() - orphan_grace_s
@@ -1568,12 +1590,6 @@ def vacuum_lake(
     dv_dir = os.path.join(_snap_dir(path), "dv")
     dv_removed = 0
     if os.path.isdir(dv_dir):
-        dv_referenced: set[str] = set()
-        for v in retained:
-            dv_referenced |= set(snapshot_info(path, v).get("dvs") or [])
-        for name in lake_branches(path):
-            for bv in _branch_versions(path, name):
-                dv_referenced |= set(_branch_info(path, name, bv).get("dvs") or [])
         for n in _store().list(dv_dir):
             if n not in dv_referenced:
                 try:
@@ -1588,14 +1604,6 @@ def vacuum_lake(
     man_dir = _manifest_dir(path)
     man_removed = 0
     if os.path.isdir(man_dir):
-        man_referenced: set[str] = set()
-        for v in retained:
-            man_referenced |= set(snapshot_info(path, v).get("manifest_refs") or [])
-        for name in lake_branches(path):
-            for bv in _branch_versions(path, name):
-                man_referenced |= set(
-                    _branch_info(path, name, bv).get("manifest_refs") or []
-                )
         for n in _store().list(man_dir):
             if n in man_referenced:
                 continue
@@ -1813,6 +1821,14 @@ def _classify_for_delete(
     return drop, keep, rewrite
 
 
+def _dml_head(path: str, branch: str | None = None) -> tuple[int, dict]:
+    """``_head`` for a DML op: the first DML on a plain parquet dir
+    (main's head 0) first ADOPTS it — commits v1 = the files as-is."""
+    if branch is None and not has_snapshots(path):
+        commit_snapshot(path, _data_files(path), "adopt", parent=0)
+    return _head(path, branch)
+
+
 def lake_delete(
     spark: SparkSession,
     path: str,
@@ -1853,31 +1869,12 @@ def lake_delete(
     and audited BEFORE publish, instead of published-then-fixed. Main
     never sees the intermediate states; publish carries the branch's
     file changes (and DV deltas) through the usual protocol."""
-    if branch is None:
-        if not has_snapshots(path):
-            # adopt: first DML on a plain parquet dir commits v1 = as-is
-            commit_snapshot(path, _data_files(path), "adopt", parent=0)
-        head = current_version(path)
-        head_info = snapshot_info(path, head)
-    else:
-        head_info = _branch_info(path, branch)
-        head = head_info["version"]
+    head, head_info = _dml_head(path, branch)
     live = sorted(head_info["files"])
     drop, keep, rewrite = _classify_for_delete(
         path, predicate, col_types, spark, scan_manifest, files=live,
         phys=head_info.get("phys"),
     )
-
-    def _commit(removed, added, op, summary, **dvkw):
-        if branch is None:
-            return _commit_filechange(
-                path, head, removed=removed, added=added, op=op,
-                summary=summary, spark=spark, **dvkw
-            )
-        return _branch_commit_filechange(
-            path, branch, head, removed=removed, added=added, op=op,
-            summary=summary, spark=spark, **dvkw
-        )
     prev_rows = head_info.get("file_rows", {})
     prev_dv_rows = head_info.get("dv_rows", {})
     # dropped files count their LIVE rows (physical minus already-DV'd)
@@ -1917,11 +1914,13 @@ def lake_delete(
             n for n in rewrite if os.path.basename(n) in dv_per_file
         }
         n_kept = len(keep) + len(rewrite) - len(dv_per_file)
-        version = _commit(
-            set(drop),
-            set(),
-            "delete",
-            {
+        version = _commit_filechange(
+            path,
+            head,
+            removed=set(drop),
+            added=set(),
+            op="delete",
+            summary={
                 "predicate": predicate,
                 "files_dropped": len(drop),
                 "files_kept": n_kept,
@@ -1933,6 +1932,8 @@ def lake_delete(
             masked_files=masked,
             planned_dv_rows=prev_dv_rows,
             dv_files_add={s: sorted(dv_per_file) for s in new_sidecars},
+            spark=spark,
+            branch=branch,
         )
         if branch is None:
             _maintain_manifest(spark, path, scan_manifest)
@@ -1967,17 +1968,21 @@ def lake_delete(
         rows_deleted += before - (after_df.count() if after_df is not None else 0)
     # rows_dropped was computed above from the parent commit's metadata
     # (never the files' bytes — they were classified unopened)
-    version = _commit(
-        set(drop) | set(rewrite),
-        set(new_files),
-        "delete",
-        {
+    version = _commit_filechange(
+        path,
+        head,
+        removed=set(drop) | set(rewrite),
+        added=set(new_files),
+        op="delete",
+        summary={
             "predicate": predicate,
             "files_dropped": len(drop),
             "files_kept": len(keep),
             "files_rewritten": len(rewrite),
             "rows_deleted": rows_deleted + rows_dropped,
         },
+        spark=spark,
+        branch=branch,
     )
     if branch is None:
         _maintain_manifest(spark, path, scan_manifest)
@@ -2019,24 +2024,12 @@ def lake_merge(
     guess)."""
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be 'update' or 'delete', got {when_matched!r}")
-    if branch is None:
-        if not has_snapshots(path):
-            commit_snapshot(path, _data_files(path), "adopt", parent=0)
-        head, live = _head_and_live(path)
-        head_info = snapshot_info(path, head)
-    else:
-        head_info = _branch_info(path, branch)
-        head, live = head_info["version"], sorted(head_info["files"])
+    head, head_info = _dml_head(path, branch)
+    live = sorted(head_info["files"])
     # the CURRENT snapshot's merged schema — a whole-dir read could
     # adopt a dead pre-evolution footer's column set and false-flag
     # schema drift after an evolution commit
-    lake_schema = set(
-        _read_files(spark, path, live, head_info).columns
-        if live
-        else read_snapshot(spark, path).columns
-        if branch is None
-        else read_branch(spark, path, branch).columns
-    )
+    lake_schema = set(_read_record(spark, path, head_info, branch).columns)
     if when_matched == "update" and set(source.columns) != lake_schema:
         raise ValueError(
             f"merge source columns {sorted(source.columns)} != lake columns "
@@ -2113,17 +2106,12 @@ def lake_merge(
         "files_candidates": len(candidates),
         "files_untouched": len(untouched),
     }
+    version = _commit_filechange(
+        path, head, removed=set(candidates), added=set(new_files),
+        op="merge", summary=summary, spark=spark, branch=branch,
+    )
     if branch is None:
-        version = _commit_filechange(
-            path, head, removed=set(candidates), added=set(new_files),
-            op="merge", summary=summary, spark=spark,
-        )
         _maintain_manifest(spark, path, scan_manifest)
-    else:
-        version = _branch_commit_filechange(
-            path, branch, head, removed=set(candidates),
-            added=set(new_files), op="merge", summary=summary, spark=spark,
-        )
     return {
         "version": version,
         "files_candidates": len(candidates),
@@ -2162,11 +2150,11 @@ def read_changes(
     in-branch deletes (rewrite or DV form) as deletes — computable
     without touching main and at churn cost."""
     if branch is not None:
-        bvs = _branch_versions(path, branch)
+        bvs = _versions(path, branch)
         if not bvs:
             raise ValueError(f"no branch {branch!r} under {path!r}")
-        info_from = _branch_info(path, branch, v_from if v_from is not None else bvs[0])
-        info_to = _branch_info(path, branch, v_to if v_to is not None else bvs[-1])
+        info_from = _ref_info(path, v_from if v_from is not None else bvs[0], branch)
+        info_to = _ref_info(path, v_to, branch)
         return _read_changes_infos(spark, path, info_from, info_to)
     if v_from is None:
         raise ValueError("v_from is required for main-chain read_changes")
@@ -2307,7 +2295,11 @@ def snapshot_row_count(path: str, version: int | str | None = None) -> int | Non
     zero data reads. None when the commit predates the row-count leg
     or a referenced file is missing from the map (degrade to a read,
     never guess)."""
-    info = snapshot_info(path, version)
+    return _record_row_count(snapshot_info(path, version))
+
+
+def _record_row_count(info: dict) -> int | None:
+    """``snapshot_row_count`` of one record of any ref."""
     rows = info.get("file_rows")
     if rows is None:
         return None
@@ -2334,9 +2326,9 @@ def lake_stats(path: str) -> dict:
     for v in _versions(path):
         referenced |= set(snapshot_info(path, v)["files"])
     # branch-staged files are referenced debt, not vacuum debt
-    for name in lake_branches(path):
-        for bv in _branch_versions(path, name):
-            referenced |= set(_branch_info(path, name, bv)["files"])
+    for name in _branch_names(path):
+        for bv in _versions(path, name):
+            referenced |= set(_ref_info(path, bv, name)["files"])
     on_disk = set(_all_data_files(path))
     dead = on_disk - live
 
@@ -2401,14 +2393,7 @@ def lake_update(
 
     ``branch`` (round 13): apply the update on a WAP branch's head —
     same pruning, committed on the branch chain (see lake_delete)."""
-    if branch is None:
-        if not has_snapshots(path):
-            commit_snapshot(path, _data_files(path), "adopt", parent=0)
-        head = current_version(path)
-        head_info = snapshot_info(path, head)
-    else:
-        head_info = _branch_info(path, branch)
-        head = head_info["version"]
+    head, head_info = _dml_head(path, branch)
     allmatch, keep, boundary = _classify_for_delete(
         path, predicate, col_types, spark, scan_manifest,
         files=sorted(head_info["files"]),
@@ -2436,17 +2421,12 @@ def lake_update(
         "files_untouched": len(keep),
         "files_rewritten": len(to_rewrite),
     }
+    version = _commit_filechange(
+        path, head, removed=set(to_rewrite), added=set(new_files),
+        op="update", summary=summary, spark=spark, branch=branch,
+    )
     if branch is None:
-        version = _commit_filechange(
-            path, head, removed=set(to_rewrite), added=set(new_files),
-            op="update", summary=summary, spark=spark,
-        )
         _maintain_manifest(spark, path, scan_manifest)
-    else:
-        version = _branch_commit_filechange(
-            path, branch, head, removed=set(to_rewrite),
-            added=set(new_files), op="update", summary=summary, spark=spark,
-        )
     return {
         "version": version,
         "files_untouched": len(keep),
@@ -2498,10 +2478,11 @@ def lake_untag(path: str, name: str) -> None:
 # fast-forwards main to the branch head in ONE parent-asserted commit
 # — the Iceberg/Nessie WAP pattern, which is exactly how a training-
 # data lake takes a new crawl drop: stage on a branch, run the quality
-# gates, publish atomically or drop the branch. Branch commits share
-# the main chain's record shape (files, file_rows, schema, renames),
-# so ``_read_files`` reads branch heads with the same authority rules.
-# ``vacuum_lake`` treats every branch-referenced file as retained.
+# gates, publish atomically or drop the branch. A branch is one more
+# ref (module docstring): its commits take the same commit paths and
+# record builder as main's, so ``_read_files`` reads branch heads with
+# the same authority rules. ``vacuum_lake`` treats every
+# branch-referenced file as retained.
 # ---------------------------------------------------------------------------
 
 
@@ -2511,15 +2492,18 @@ def _branch_dir(path: str, name: str) -> str:
     return os.path.join(_snap_dir(path), "branches", name)
 
 
+def _branch_names(path: str) -> list[str]:
+    return sorted(_store().list(os.path.join(_snap_dir(path), "branches")))
+
+
 def lake_branches(path: str) -> dict[str, dict]:
     """name -> {head (branch-local version), fork_version, n_files}."""
-    d = os.path.join(_snap_dir(path), "branches")
     out: dict[str, dict] = {}
-    for name in sorted(_store().list(d)):
-        vs = _branch_versions(path, name)
+    for name in _branch_names(path):
+        vs = _versions(path, name)
         if not vs:
             continue
-        info = _branch_info(path, name, vs[-1])
+        info = _ref_info(path, vs[-1], name)
         out[name] = {
             "head": vs[-1],
             "fork_version": info.get("fork_version"),
@@ -2528,197 +2512,11 @@ def lake_branches(path: str) -> dict[str, dict]:
     return out
 
 
-def _branch_versions(path: str, name: str) -> list[int]:
-    out = []
-    for n in _store().list(_branch_dir(path, name)):
-        m = re.fullmatch(r"v(\d{12})\.json", n)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _branch_info(path: str, name: str, bv: int | None = None) -> dict:
-    vs = _branch_versions(path, name)
-    if not vs:
-        raise ValueError(f"no branch {name!r} under {path!r}")
-    bv = vs[-1] if bv is None else bv
-    fn = os.path.join(_branch_dir(path, name), f"v{bv:012d}.json")
-    if not _store().exists(fn):
-        raise ValueError(f"branch {name!r} has no version {bv}")
-    # branch records shard exactly like main's (X47): forking a
-    # million-file table copies manifest REFS, not a file list
-    return _resolve_record(path, json.loads(_store().read(fn)))
-
-
-def _branch_commit(path: str, name: str, record: dict) -> int:
-    """Exclusive-link a branch record — same single-winner rule as the
-    main chain, scoped to the branch's own version numbers."""
-    final = os.path.join(_branch_dir(path, name), f"v{record['version']:012d}.json")
-    try:
-        _store().put_exclusive(final, json.dumps(record).encode())
-    except FileExistsError as exc:
-        raise SnapshotConflictError(
-            f"branch {name!r} v{record['version']} was committed concurrently"
-        ) from exc
-    return record["version"]
-
-
-def _branch_commit_filechange(
-    path: str,
-    name: str,
-    planned_bv: int,
-    removed: set[str],
-    added: set[str],
-    op: str,
-    summary: dict | None = None,
-    dv_add: list[str] | None = None,
-    dv_rows_add: dict[str, int] | None = None,
-    masked_files: set[str] | None = None,
-    planned_dv_rows: dict[str, int] | None = None,
-    dv_files_add: dict[str, list[str]] | None = None,
-    spark: SparkSession | None = None,
-) -> int:
-    """``_commit_filechange`` scoped to a BRANCH chain (round 13 —
-    DML on branches): drop ``removed`` from the branch head's live
-    set, add ``added``, with the same optimistic rebase rules — a
-    concurrent branch commit that touched a file this plan read is a
-    real conflict; a disjoint one replays. DV deltas merge into the
-    branch head actually committed on, identically to the main-chain
-    protocol. Branch records keep carrying fork_version / schema /
-    lineage / tombstones so publish and audit reads stay authoritative.
-    Round 14: the main chain's symmetric removed-files DV guard and
-    mask-metadata pruning apply identically (see _commit_filechange) —
-    a branch rewrite rebasing over a concurrent branch DV commit that
-    masked one of its removed files would otherwise resurrect the
-    masked rows in staging and publish the corruption to main."""
-    new_rows = _file_row_counts(path, sorted(added), spark)
-    has_dv = dv_add is not None or bool(dv_rows_add)
-    expect = planned_bv
-    plan_dvr_lazy = planned_dv_rows
-    for attempt in range(_COMMIT_RETRIES + 1):
-        head_info = _branch_info(path, name)
-        bv = head_info["version"]
-        live = head_info["files"]
-        live_set = set(live)
-        if bv != expect:
-            gone = removed - live_set
-            if gone:
-                raise SnapshotConflictError(
-                    f"planned against branch {name!r} v{expect} but head is "
-                    f"v{bv}, and a concurrent commit touched {len(gone)} "
-                    f"file(s) this plan read (e.g. {sorted(gone)[0]!r})"
-                )
-            collide = added & live_set
-            if collide:
-                raise SnapshotConflictError(
-                    f"new file name(s) already live on branch {name!r} "
-                    f"(e.g. {sorted(collide)[0]!r})"
-                )
-            if removed:
-                # symmetric DV guard (round 14, mirrors the main
-                # chain): a concurrent branch DV commit masking a file
-                # this rewrite read unmasked would resurrect the
-                # masked rows in staging
-                head_dvr = head_info.get("dv_rows") or {}
-                if plan_dvr_lazy is None:
-                    plan_dvr_lazy = (
-                        _branch_info(path, name, planned_bv).get("dv_rows") or {}
-                    )
-                for rel in sorted(removed):
-                    b = os.path.basename(rel)
-                    if int(head_dvr.get(b, 0)) != int(plan_dvr_lazy.get(b, 0)):
-                        raise SnapshotConflictError(
-                            f"a concurrent deletion vector on branch {name!r} "
-                            f"masks {rel!r}, which this plan read unmasked and "
-                            "is rewriting — the rewrite would resurrect the "
-                            "concurrently deleted rows; re-plan and retry"
-                        )
-            if has_dv:
-                head_dvr = head_info.get("dv_rows") or {}
-                plan_dvr = planned_dv_rows or {}
-                for rel in sorted(masked_files or ()):
-                    if rel in added:
-                        continue
-                    if rel not in live_set:
-                        raise SnapshotConflictError(
-                            f"a concurrent branch commit rewrote or dropped "
-                            f"masked file {rel!r} — re-plan and retry"
-                        )
-                    b = os.path.basename(rel)
-                    if int(head_dvr.get(b, 0)) != int(plan_dvr.get(b, 0)):
-                        raise SnapshotConflictError(
-                            f"a concurrent deletion vector masks {rel!r} too "
-                            "— positions may overlap; re-plan and retry"
-                        )
-            expect = bv
-        files = sorted((live_set - removed) | added)
-        prev_rows = head_info.get("file_rows", {})
-        stale = [n for n in files if n not in prev_rows and n not in new_rows]
-        if stale:
-            new_rows.update(_file_row_counts(path, stale, spark))
-        record = {
-            **{k: head_info[k] for k in ("fork_version",) if k in head_info},
-            "version": bv + 1,
-            "parent": bv,
-            "op": op,
-            "ts": time.time(),
-            **_files_repr(
-                path,
-                head_info,
-                files,
-                {n: prev_rows.get(n, new_rows.get(n)) for n in files},
-            ),
-            "summary": summary or {},
-        }
-        for k in ("schema", "renames", "dropped_names", "phys"):
-            if head_info.get(k):
-                record[k] = head_info[k]
-        if has_dv:
-            head_dvs = list(head_info.get("dvs") or [])
-            dvs = head_dvs + [s for s in (dv_add or []) if s not in head_dvs]
-            dv_rows = dict(head_info.get("dv_rows") or {})
-            for b, n in (dv_rows_add or {}).items():
-                dv_rows[b] = int(dv_rows.get(b, 0)) + int(n)
-            dv_files = {**(head_info.get("dv_files") or {}), **(dv_files_add or {})}
-        else:
-            dvs = list(head_info.get("dvs") or [])
-            dv_rows = dict(head_info.get("dv_rows") or {})
-            dv_files = dict(head_info.get("dv_files") or {})
-        if removed and dv_rows:
-            # prune mask metadata for rewritten-away files (round 14,
-            # mirrors _commit_filechange) — without this a branch
-            # compaction's phantom deltas would publish into main's
-            # dv_rows and pin dead sidecars in vacuum forever
-            live_base = {os.path.basename(n) for n in files}
-            dv_rows = {b: n for b, n in dv_rows.items() if b in live_base}
-            if not dv_rows:
-                dvs, dv_files = [], {}
-            else:
-                dvs = [
-                    s
-                    for s in dvs
-                    if s not in dv_files or any(b in live_base for b in dv_files[s])
-                ]
-                dv_files = {s: bs for s, bs in dv_files.items() if s in dvs}
-        if dvs:
-            record["dvs"] = dvs
-        if dv_rows:
-            record["dv_rows"] = dv_rows
-        if dv_files:
-            record["dv_files"] = dv_files
-        try:
-            return _branch_commit(path, name, record)
-        except SnapshotConflictError:
-            if attempt == _COMMIT_RETRIES:
-                raise
-    raise AssertionError("unreachable")
-
-
 def lake_branch_create(path: str, name: str, from_version: int | str | None = None) -> int:
     """Fork a branch at a main version (head when None): one metadata
     record copying the fork's file list / schema / lineage. Staged
     work lands on the branch; main never sees it until publish."""
-    if _branch_versions(path, name):
+    if _versions(path, name):
         raise ValueError(f"branch {name!r} already exists")
     info = snapshot_info(path, from_version)
     record = {
@@ -2737,7 +2535,7 @@ def lake_branch_create(path: str, name: str, from_version: int | str | None = No
     for k in ("schema", "renames", "dvs", "dv_rows", "dv_files", "dropped_names", "phys"):
         if info.get(k):
             record[k] = info[k]
-    _branch_commit(path, name, record)
+    _put_record(path, record, name)
     return info["version"]
 
 
@@ -2747,7 +2545,7 @@ def lake_branch_append(spark: SparkSession, path: str, name: str, df: DataFrame)
     them), then one branch commit flips them live on this branch only.
     Schema must match the branch head's (staging is not the place for
     silent drift)."""
-    head_info = _branch_info(path, name)
+    head_info = _ref_info(path, branch=name)
     # read one committed branch file set's schema authority
     cur_cols = None
     if head_info.get("schema"):
@@ -2764,46 +2562,10 @@ def lake_branch_append(spark: SparkSession, path: str, name: str, df: DataFrame)
             f"extra / {sorted(cur_cols - set(df.columns)) or '-'} missing"
         )
     new = _write_new_files(df, path, _partition_cols(head_info["files"]), info=head_info)
-    return _branch_commit_append(path, name, new, spark=spark)
-
-
-def _branch_commit_append(
-    path: str,
-    name: str,
-    new: list[str],
-    summary: dict | None = None,
-    op: str = "branch_append",
-    spark: SparkSession | None = None,
-) -> int:
-    """Commit already-staged files as a branch APPEND: files = branch
-    head's live set ∪ ``new``, with the blind-append re-union retry
-    the main chain uses (a branch append reads no existing file, so a
-    moved branch head is never a logical conflict). Shared by
-    ``lake_branch_append`` and the branch leg of the streaming
-    snapshot sink (round 13)."""
-    file_rows_new = _file_row_counts(path, new, spark)
-    for attempt in range(_COMMIT_RETRIES + 1):
-        head_info = _branch_info(path, name)
-        files = sorted(set(head_info["files"]) | set(new))
-        rows = {**file_rows_new, **head_info.get("file_rows", {})}
-        record = {
-            **{k: head_info[k] for k in ("fork_version",) if k in head_info},
-            "version": head_info["version"] + 1,
-            "parent": head_info["version"],
-            "op": op,
-            "ts": time.time(),
-            **_files_repr(path, head_info, files, rows),
-            "summary": {"branch": name, "files_added": len(new), **(summary or {})},
-        }
-        for k in ("schema", "renames", "dvs", "dv_rows", "dv_files", "dropped_names", "phys"):
-            if head_info.get(k):
-                record[k] = head_info[k]
-        try:
-            return _branch_commit(path, name, record)
-        except SnapshotConflictError:
-            if attempt == _COMMIT_RETRIES:
-                raise
-    raise AssertionError("unreachable")
+    return _commit_append(
+        path, new, "branch_append",
+        summary={"branch": name, "files_added": len(new)}, spark=spark, branch=name,
+    )
 
 
 def read_branch(
@@ -2813,21 +2575,7 @@ def read_branch(
     commits NOT (the audit read of write-audit-publish). ``version``
     (round 13): a branch-local version for time travel WITHIN the
     staging history (v1 = the fork state)."""
-    info = _branch_info(path, name, version)
-    files = sorted(info["files"])
-    if not files:
-        if info.get("schema"):
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame([], StructType.fromJson(json.loads(info["schema"])))
-        return spark.read.parquet(path).limit(0)
-    missing = [n for n in files if not os.path.exists(os.path.join(path, n))]
-    if missing:
-        raise ValueError(
-            f"branch {name!r} references {len(missing)} missing file(s) "
-            f"(e.g. {missing[0]!r})"
-        )
-    return _read_files(spark, path, files, info)
+    return _read_record(spark, path, _ref_info(path, version, name), name)
 
 
 def lake_publish_branch(
@@ -2875,8 +2623,7 @@ def lake_publish_branch(
     guard survives the branch being dropped and re-forked)."""
     # pin the branch head FIRST: everything below — gate, diff, DV
     # delta, schema carry, drop — derives from this one record
-    info = _branch_info(path, name)
-    head_bv = info["version"]
+    head_bv, info = _head(path, name)
     if expect_zero:
         if spark is None:
             raise ValueError("expect_zero requires spark=")
@@ -2906,8 +2653,7 @@ def lake_publish_branch(
     # chain's record for that version may have been vacuum-expired
     # (round 13, ADVICE r12 #2), and a routine vacuum must never make
     # a live, auditable branch unpublishable
-    bvs = _branch_versions(path, name)
-    fork_info = _branch_info(path, name, bvs[0]) if bvs else {}
+    fork_info = _ref_info(path, 1, name)
     fork_files = set(fork_info.get("files") or [])
     branch_files = set(info["files"])
     removed = fork_files - branch_files
@@ -2990,14 +2736,13 @@ def lake_branch_compact(
     Selection is METADATA-ONLY (the branch record's own file_rows);
     the rewrite reads through ``_read_files`` with the branch record,
     so deletion-vector masks MATERIALIZE and schema lineage resolves —
-    exactly like main-chain DML rewrites. Commits through the branch
-    file-change protocol (a concurrent branch commit that touched a
+    exactly like main-chain DML rewrites. Commits through the file-change
+    protocol on the branch (a concurrent branch commit that touched a
     selected file raises). Fork-shared files are compacted like any
     other: the rewrite drops them from the branch's live set, and
     publish removes them from main through the usual removed/added
     diff."""
-    head_info = _branch_info(path, name)
-    bv = head_info["version"]
+    bv, head_info = _head(path, name)
     rows = head_info.get("file_rows", {})
     small = sorted(
         n for n in head_info["files"] if int(rows.get(n, min_rows)) < min_rows
@@ -3008,15 +2753,15 @@ def lake_branch_compact(
     k = n_files if n_files is not None else max(1, total // max(min_rows, 1))
     src = _read_files(spark, path, small, head_info)
     new = _write_new_files(src.coalesce(k), path, _partition_cols(small), info=head_info)
-    version = _branch_commit_filechange(
+    version = _commit_filechange(
         path,
-        name,
         bv,
         removed=set(small),
         added=set(new),
         op="branch_compact",
         summary={"files_compacted": len(small), "files_written": len(new)},
         spark=spark,
+        branch=name,
     )
     return {
         "files_compacted": len(small),
@@ -3046,7 +2791,7 @@ def lake_branch_drop(
     if not _store().list(d):
         raise ValueError(f"no branch {name!r} under {path!r}")
     if expect_version is not None:
-        vs = _branch_versions(path, name)
+        vs = _versions(path, name)
         if vs and vs[-1] > expect_version:
             raise SnapshotConflictError(
                 f"branch {name!r} received commit(s) after the audited head "

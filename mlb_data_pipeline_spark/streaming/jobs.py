@@ -736,10 +736,9 @@ def lake_snapshot_stream(
     main (at 100 TB, a small-files problem on the PUBLISHED table)."""
     from ..operators.layout import append_scan_manifest
     from ..operators.snapshots import (
-        _branch_commit_append,
-        _branch_info,
-        _branch_versions,
         _commit_append,
+        _ref_info,
+        _versions,
         _write_new_files,
         commit_snapshot,
         has_snapshots,
@@ -778,7 +777,7 @@ def lake_snapshot_stream(
             # cadence the branch re-forks here when the previous
             # cycle's drop landed (or after a crash between drop and
             # re-create).
-            if publish_every is not None and not _branch_versions(lake_path, branch):
+            if publish_every is not None and not _versions(lake_path, branch):
                 lake_branch_create(lake_path, branch)
             elif publish_every is not None:
                 # crash recovery BEFORE touching the branch: if every
@@ -786,9 +785,8 @@ def lake_snapshot_stream(
                 # cycle's publish landed but the drop didn't — re-fork
                 # now, never publish twice (and never let the stale
                 # staged names collide with main's live set later)
-                info = _branch_info(lake_path, branch)
-                bvs = _branch_versions(lake_path, branch)
-                fork_files = set(_branch_info(lake_path, branch, bvs[0])["files"])
+                info = _ref_info(lake_path, branch=branch)
+                fork_files = set(_ref_info(lake_path, 1, branch)["files"])
                 stale = set(info["files"]) - fork_files
                 if stale and stale <= set(snapshot_files(lake_path)):
                     lake_branch_drop(lake_path, branch)
@@ -806,16 +804,16 @@ def lake_snapshot_stream(
             # column mapping (round 14): a mapped table's batches must
             # store mapped columns under their physical names too
             new = _write_new_files(
-                batch_df, lake_path, [], info=_branch_info(lake_path, branch)
+                batch_df, lake_path, [], info=_ref_info(lake_path, branch=branch)
             )
-            _branch_commit_append(
-                lake_path, branch, new,
-                summary={"batch_id": batch_id}, op="stream_append", spark=spark,
+            _commit_append(
+                lake_path, new, "stream_append",
+                summary={"branch": branch, "files_added": len(new), "batch_id": batch_id},
+                spark=spark, branch=branch,
             )
             if publish_every is not None and (batch_id + 1) % publish_every == 0:
-                info = _branch_info(lake_path, branch)
-                bvs = _branch_versions(lake_path, branch)
-                fork_info = _branch_info(lake_path, branch, bvs[0])
+                info = _ref_info(lake_path, branch=branch)
+                fork_info = _ref_info(lake_path, 1, branch)
                 added = set(info["files"]) - set(fork_info["files"])
                 if added:
                     if compact_min_rows is not None:

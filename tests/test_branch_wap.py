@@ -235,26 +235,26 @@ def test_branch_dv_delete_publishes_mask_delta(spark, tmp_path):
     assert len(info.get("dvs") or []) == 2  # both sidecars live
 
 
-def test_branch_dml_conflict_on_concurrent_branch_commit(spark, tmp_path):
+def test_branch_dml_conflict_on_concurrent_branch_write(spark, tmp_path):
     """Two writers on the SAME branch: a delete planned against a
     stale branch head whose file a concurrent branch commit rewrote
     must raise, not silently drop the concurrent change."""
     from mlb_data_pipeline_spark.operators.snapshots import (
-        _branch_commit_filechange,
-        _branch_info,
+        _commit_filechange,
+        _ref_info,
     )
 
     lake = str(tmp_path / "lake")
     lake_write(spark, _kv(spark, 0, 200, "base").repartitionByRange(2, "k"), lake)
     lake_branch_create(lake, "wap")
-    planned = _branch_info(lake, "wap")
+    planned = _ref_info(lake, branch="wap")
     victim = planned["files"][0]
     # concurrent branch delete rewrites/drops that same file
     lake_delete(spark, lake, "k BETWEEN 0 AND 99", col_types=_CT, branch="wap")
     with pytest.raises(SnapshotConflictError, match="touched"):
-        _branch_commit_filechange(
-            lake, "wap", planned["version"], removed={victim}, added=set(),
-            op="delete",
+        _commit_filechange(
+            lake, planned["version"], removed={victim}, added=set(),
+            op="delete", branch="wap",
         )
 
 
@@ -380,7 +380,7 @@ def test_branch_compact_small_files(spark, tmp_path):
     batches coalesce in staging (metadata-selected, masks
     materialized), so publish ships compact files, not fragmentation."""
     from mlb_data_pipeline_spark.operators.snapshots import (
-        _branch_info,
+        _ref_info,
         lake_branch_compact,
     )
 
@@ -394,10 +394,10 @@ def test_branch_compact_small_files(spark, tmp_path):
         spark, lake, "k BETWEEN 10000 AND 10049",
         col_types={"k": "bigint", "v": "bigint"}, use_dv=True, branch="feed",
     )
-    n_before = len(_branch_info(lake, "feed")["files"])
+    n_before = len(_ref_info(lake, branch="feed")["files"])
     rep = lake_branch_compact(spark, lake, "feed", min_rows=1000, n_files=1)
     assert rep["files_compacted"] == 5 and rep["files_written"] == 1
-    info = _branch_info(lake, "feed")
+    info = _ref_info(lake, branch="feed")
     assert len(info["files"]) == n_before - 4  # 5 -> 1
     br = read_branch(spark, lake, "feed")
     assert br.count() == 10450  # masks materialized, not double-applied
@@ -412,6 +412,46 @@ def test_branch_compact_small_files(spark, tmp_path):
     lake_branch_create(lake, "b2")
     rep2 = lake_branch_compact(spark, lake, "b2", min_rows=1000)
     assert rep2["files_compacted"] == 0
+
+
+def test_branch_alter_keeps_dv_files_so_compaction_drops_the_sidecar(spark, tmp_path):
+    """A branch ALTER commits through the one record builder, so it
+    keeps the head's ``dv_files``; a branch compaction that later
+    rewrites every file a sidecar masks then DROPS that sidecar instead
+    of pinning it in vacuum forever. The sidecar masking a file the
+    compaction keeps stays, with its entry."""
+    from mlb_data_pipeline_spark.operators.snapshots import (
+        _ref_info,
+        lake_branch_compact,
+        lake_rename_column,
+    )
+
+    lake = str(tmp_path / "lake")
+    lake_write(spark, _kv(spark, 0, 1000, "base").coalesce(1), lake)  # one big file
+    lake_branch_create(lake, "wap")
+    for lo in (1000, 1100, 1200):
+        lake_branch_append(spark, lake, "wap", _kv(spark, lo, lo + 100, "s").coalesce(1))
+    lake_delete(
+        spark, lake, "k BETWEEN 1000 AND 1009", col_types=_CT, use_dv=True, branch="wap"
+    )
+    staged_side = _ref_info(lake, branch="wap")["dvs"][-1]
+    lake_delete(spark, lake, "k BETWEEN 10 AND 12", col_types=_CT, use_dv=True, branch="wap")
+    base_side = _ref_info(lake, branch="wap")["dvs"][-1]
+    lake_rename_column(lake, "v", "w", branch="wap")
+    renamed = _ref_info(lake, branch="wap")
+    assert renamed["dv_files"] == {
+        staged_side: renamed["dv_files"][staged_side],
+        base_side: renamed["dv_files"][base_side],
+    }
+    rep = lake_branch_compact(spark, lake, "wap", min_rows=500, n_files=1)
+    assert rep["files_compacted"] == 3
+    head = _ref_info(lake, branch="wap")
+    assert head["dvs"] == [base_side]
+    assert set(head["dv_files"]) == {base_side}
+    br = read_branch(spark, lake, "wap")
+    assert "w" in br.columns and "v" not in br.columns
+    assert br.count() == 1300 - 10 - 3
+    assert br.filter("k BETWEEN 1000 AND 1009 OR k BETWEEN 10 AND 12").count() == 0
 
 
 def test_publish_audit_gates(spark, tmp_path):

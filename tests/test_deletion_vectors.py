@@ -166,6 +166,7 @@ def test_dv_vacuum_reclaims_unreferenced_sidecars(spark, tmp_path):
     assert rep["removed_dvs"] == 0  # head still references it
     assert read_snapshot(spark, lake).count() == 180
     lake_rollback(lake, 1)  # v3: mask abandoned
+    assert not snapshot_info(lake).get("dv_files")  # no entry outlives its sidecar
     rep = vacuum_lake(lake, keep_last=1, orphan_grace_s=0)
     assert rep["removed_dvs"] == 1
     assert os.listdir(dv_dir) == []

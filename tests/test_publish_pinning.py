@@ -41,10 +41,10 @@ from mlb_data_pipeline_spark.operators.snapshots import (
     lake_write,
     read_branch,
     read_snapshot,
-    snapshot_files,
     snapshot_info,
     vacuum_lake,
 )
+from tests.test_snapshot_concurrency import CHAINS, _chain_read
 
 
 def _kv(spark, lo, hi, tag="x"):
@@ -53,7 +53,7 @@ def _kv(spark, lo, hi, tag="x"):
     )
 
 
-def _race_branch_commit(monkeypatch, spark, lake, branch, df):
+def _race_branch_append(monkeypatch, spark, lake, branch, df):
     """Arm a one-shot hook: the NEXT publish's own commit is preceded
     by a concurrent branch append — the deterministic interleave of
     the judge's probes (a commit landing between the audit/diff reads
@@ -84,7 +84,7 @@ def test_publish_gate_cannot_be_bypassed_by_late_commit(spark, tmp_path, monkeyp
         F.lit(None).cast("long").alias("v"),  # violates the gate below
         F.lit("late").alias("src"),
     )
-    _race_branch_commit(monkeypatch, spark, lake, "wap", violating.coalesce(1))
+    _race_branch_append(monkeypatch, spark, lake, "wap", violating.coalesce(1))
     with pytest.raises(SnapshotConflictError, match="commit\\(s\\) after the audited head"):
         lake_publish_branch(lake, "wap", expect_zero=["v IS NULL"], spark=spark)
     monkeypatch.undo()
@@ -107,7 +107,7 @@ def test_publish_drop_false_succeeds_under_late_commit(spark, tmp_path, monkeypa
     lake_write(spark, _kv(spark, 0, 50, "base").coalesce(1), lake)
     lake_branch_create(lake, "wap")
     lake_branch_append(spark, lake, "wap", _kv(spark, 50, 80, "staged").coalesce(1))
-    _race_branch_commit(
+    _race_branch_append(
         monkeypatch, spark, lake, "wap", _kv(spark, 900, 905, "late").coalesce(1)
     )
     v = lake_publish_branch(lake, "wap", drop=False)
@@ -133,39 +133,57 @@ def test_rewrite_rebase_over_concurrent_dv_delete_conflicts(spark, tmp_path):
     """ADVICE r13 #1 (main chain): plan a rewrite against v1, let a
     concurrent DV delete mask one of its files (v2) — the rebase must
     RAISE, because replaying the rewrite (planned from an unmasked
-    read) would resurrect the concurrently deleted rows."""
-    lake = str(tmp_path / "lake")
-    lake_write(spark, _kv(spark, 0, 100, "base").repartitionByRange(2, "k"), lake)
-    files_v1 = set(snapshot_files(lake, 1))
-    # concurrent writer: DV-delete a row (v2 masks one file)
-    lake_delete(spark, lake, "k = 5", col_types={"k": "bigint"}, use_dv=True)
-    assert snapshot_info(lake).get("dv_rows")
-    with pytest.raises(SnapshotConflictError, match="resurrect"):
-        S._commit_filechange(
-            lake, 1, removed=files_v1, added=set(), op="update", spark=spark
+    read) would resurrect the concurrently deleted rows. The branch
+    chain (a branch forked at main v1) runs the identical race."""
+    for branch in CHAINS:
+        lake = str(tmp_path / f"lake-{branch}")
+        lake_write(spark, _kv(spark, 0, 100, "base").repartitionByRange(2, "k"), lake)
+        if branch is not None:
+            lake_branch_create(lake, branch)
+        files_v1 = set(S._ref_info(lake, 1, branch)["files"])
+        # concurrent writer: DV-delete a row (v2 masks one file)
+        lake_delete(
+            spark, lake, "k = 5", col_types={"k": "bigint"}, use_dv=True, branch=branch
         )
-    # same plan against the CURRENT head (which saw the mask): fine
-    S._commit_filechange(
-        lake, 2, removed=files_v1, added=set(), op="delete", spark=spark
-    )
-    assert read_snapshot(spark, lake).count() == 0
+        assert S._ref_info(lake, branch=branch).get("dv_rows")
+        with pytest.raises(SnapshotConflictError, match="resurrect"):
+            S._commit_filechange(
+                lake, 1, removed=files_v1, added=set(), op="update", spark=spark,
+                branch=branch,
+            )
+        # same plan against the CURRENT head (which saw the mask): fine
+        S._commit_filechange(
+            lake, 2, removed=files_v1, added=set(), op="delete", spark=spark,
+            branch=branch,
+        )
+        assert _chain_read(spark, lake, branch).count() == 0
 
 
 def test_rewrite_rebase_with_unchanged_masks_still_replays(spark, tmp_path):
     """The guard fires only on a CHANGED mask: a rewrite planned when
     the mask already existed rebases over a disjoint concurrent append
-    exactly as before."""
-    lake = str(tmp_path / "lake")
-    lake_write(spark, _kv(spark, 0, 100, "base").repartitionByRange(2, "k"), lake)
-    lake_delete(spark, lake, "k = 5", col_types={"k": "bigint"}, use_dv=True)  # v2
-    files_v2 = set(snapshot_files(lake, 2))
-    lake_write(spark, _kv(spark, 500, 510, "other").coalesce(1), lake)  # v3 append
-    v = S._commit_filechange(
-        lake, 2, removed=files_v2, added=set(), op="delete", spark=spark
-    )
-    assert v == 4
-    cur = read_snapshot(spark, lake)
-    assert cur.count() == 10 and cur.filter("src = 'other'").count() == 10
+    exactly as before. Both chains."""
+    for branch in CHAINS:
+        lake = str(tmp_path / f"lake-{branch}")
+        lake_write(spark, _kv(spark, 0, 100, "base").repartitionByRange(2, "k"), lake)
+        if branch is not None:
+            lake_branch_create(lake, branch)
+        lake_delete(
+            spark, lake, "k = 5", col_types={"k": "bigint"}, use_dv=True, branch=branch
+        )  # v2
+        files_v2 = set(S._ref_info(lake, 2, branch)["files"])
+        other = _kv(spark, 500, 510, "other").coalesce(1)
+        if branch is None:
+            lake_write(spark, other, lake)  # v3 append
+        else:
+            lake_branch_append(spark, lake, branch, other)
+        v = S._commit_filechange(
+            lake, 2, removed=files_v2, added=set(), op="delete", spark=spark,
+            branch=branch,
+        )
+        assert v == 4
+        cur = _chain_read(spark, lake, branch)
+        assert cur.count() == 10 and cur.filter("src = 'other'").count() == 10
 
 
 def test_branch_rewrite_rebase_over_concurrent_branch_dv_conflicts(spark, tmp_path):
@@ -179,15 +197,15 @@ def test_branch_rewrite_rebase_over_concurrent_branch_dv_conflicts(spark, tmp_pa
     lake_branch_append(
         spark, lake, "wap", _kv(spark, 100, 200, "staged").coalesce(1)
     )  # bv2
-    binfo = S._branch_info(lake, "wap")
-    staged = set(binfo["files"]) - set(S._branch_info(lake, "wap", 1)["files"])
+    binfo = S._ref_info(lake, branch="wap")
+    staged = set(binfo["files"]) - set(S._ref_info(lake, 1, "wap")["files"])
     # concurrent branch writer: DV delete masking the staged file (bv3)
     lake_delete(
         spark, lake, "k = 150", col_types={"k": "bigint"}, use_dv=True, branch="wap"
     )
     with pytest.raises(SnapshotConflictError, match="resurrect"):
-        S._branch_commit_filechange(
-            lake, "wap", 2, removed=staged, added=set(), op="update", spark=spark
+        S._commit_filechange(
+            lake, 2, removed=staged, added=set(), op="update", spark=spark, branch="wap"
         )
     # branch state intact: mask still applies
     assert read_branch(spark, lake, "wap").count() == 109
@@ -257,7 +275,7 @@ def test_branch_compact_publish_carries_no_phantom_masks(spark, tmp_path):
         col_types={"k": "bigint"}, use_dv=True, branch="feed",
     )
     lake_branch_compact(spark, lake, "feed", min_rows=500, n_files=1)
-    binfo = S._branch_info(lake, "feed")
+    binfo = S._ref_info(lake, branch="feed")
     assert not binfo.get("dv_rows") and not binfo.get("dvs")  # pruned in staging
     lake_publish_branch(lake, "feed")
     head = snapshot_info(lake)

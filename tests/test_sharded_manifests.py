@@ -112,6 +112,37 @@ def test_sharded_compaction_and_vacuum(spark, tmp_path, sharded):
     assert read_snapshot(spark, lake).count() == 700  # still readable
 
 
+def test_layout_reads_resolve_sharded_records(spark, tmp_path, sharded):
+    """The layout family's live-file listing resolves a SHARDED head
+    (``manifest_refs``, no ``files`` key) through the snapshot reader:
+    lake_count, lake_scan and optimize_clustered see exactly the rows
+    read_snapshot sees."""
+    from mlb_data_pipeline_spark.catalog import (
+        lake_count,
+        lake_scan,
+        register_lake_table,
+    )
+    from mlb_data_pipeline_spark.operators.layout import optimize_clustered
+
+    lake = str(tmp_path / "lake")
+    lake_write(spark, _kv(spark, 0, 1200).repartitionByRange(12, "k"), lake)  # v1
+    # a file spanning the whole key range, so OPTIMIZE has dirty work
+    lake_write(spark, _kv(spark, 0, 2600).filter("k % 10 = 5").coalesce(1), lake)  # v2
+    assert "manifest_refs" in _raw(lake, 2) and "files" not in _raw(lake, 2)
+    register_lake_table(spark, "t_sharded_layout", lake)
+    pred = "k BETWEEN 100 AND 299 OR k >= 2500"
+    want = sorted(read_snapshot(spark, lake).collect())
+    want_hit = sorted(read_snapshot(spark, lake).filter(pred).collect())
+    assert lake_count(spark, "t_sharded_layout") == len(want)
+    assert lake_count(spark, "t_sharded_layout", pred) == len(want_hit)
+    assert sorted(lake_scan(spark, "t_sharded_layout", pred).collect()) == want_hit
+    rep = optimize_clustered(spark, lake, [("k", 0, 2600)], bits=8)
+    assert rep["files_rewritten"] > 0
+    assert sorted(read_snapshot(spark, lake).collect()) == want
+    assert lake_count(spark, "t_sharded_layout", pred) == len(want_hit)
+    assert sorted(lake_scan(spark, "t_sharded_layout", pred).collect()) == want_hit
+
+
 def test_sharded_rollback_and_mixed_representations(spark, tmp_path, sharded):
     lake = str(tmp_path / "lake")
     # v1 PLAIN (below threshold), v2 sharded (append crosses it)

@@ -49,6 +49,32 @@ def _kv(spark, lo: int, hi: int):
     )
 
 
+# the two refs every commit path serves — main, and a WAP branch forked
+# from main's v1 — so both chains start at head 1
+CHAINS = (None, "wap")
+
+
+def _chain_lake(spark, path: str, df, branch):
+    lake_write(spark, df, path)
+    if branch is not None:
+        S.lake_branch_create(path, branch)
+    return path
+
+
+def _chain_files(lake, version, branch):
+    return sorted(S._ref_info(lake, version, branch)["files"])
+
+
+def _chain_append(spark, lake, df, branch):
+    if branch is None:
+        return lake_write(spark, df, lake)
+    return S.lake_branch_append(spark, lake, branch, df)
+
+
+def _chain_read(spark, lake, branch):
+    return read_snapshot(spark, lake) if branch is None else S.read_branch(spark, lake, branch)
+
+
 def test_stale_append_raises_not_resurrects(spark, tmp_path):
     """The judge's probe verbatim: v1={f...}; writer A deletes (v2);
     writer B, planned against v1, appends — the stale commit must
@@ -80,40 +106,70 @@ def test_filechange_rebases_over_disjoint_commit(spark, tmp_path):
     """A DML-shaped commit planned against v1 lands AFTER a concurrent
     append (v2): no file the plan read was touched, so it rebases —
     the result carries BOTH the concurrent append's file and the
-    change (serial order: change first, append after)."""
-    lake = str(tmp_path / "lake")
-    lake_write(spark, _kv(spark, 0, 200).repartitionByRange(2, "k"), lake)  # v1
-    head = current_version(lake)
-    live_v1 = snapshot_files(lake, head)
-    victim = live_v1[0]
-    repl = _write_new_files(_kv(spark, 5000, 5005).coalesce(1), lake, [])
-    # concurrent append commits v2
-    lake_write(spark, _kv(spark, 300, 310).coalesce(1), lake)
-    assert current_version(lake) == 2
-    v = _commit_filechange(
-        lake, head, removed={victim}, added=set(repl), op="delete"
-    )
-    assert v == 3
-    files = set(snapshot_files(lake, 3))
-    assert victim not in files
-    assert set(repl) <= files
-    # the concurrent append's rows are still there
-    assert read_snapshot(spark, lake).filter("k BETWEEN 300 AND 309").count() == 10
+    change (serial order: change first, append after). Both chains."""
+    for branch in CHAINS:
+        lake = _chain_lake(
+            spark, str(tmp_path / f"lake-{branch}"),
+            _kv(spark, 0, 200).repartitionByRange(2, "k"), branch,
+        )  # v1
+        head = S._head_version(lake, branch)
+        live_v1 = _chain_files(lake, head, branch)
+        victim = live_v1[0]
+        repl = _write_new_files(_kv(spark, 5000, 5005).coalesce(1), lake, [])
+        # concurrent append commits v2
+        _chain_append(spark, lake, _kv(spark, 300, 310).coalesce(1), branch)
+        assert S._head_version(lake, branch) == 2
+        v = _commit_filechange(
+            lake, head, removed={victim}, added=set(repl), op="delete", branch=branch
+        )
+        assert v == 3
+        files = set(_chain_files(lake, 3, branch))
+        assert victim not in files
+        assert set(repl) <= files
+        # the concurrent append's rows are still there
+        assert _chain_read(spark, lake, branch).filter("k BETWEEN 300 AND 309").count() == 10
 
 
 def test_filechange_conflicts_when_read_file_touched(spark, tmp_path):
     """If the concurrent commit REMOVED a file this plan read, the
-    rebase is unsound (both ops touched the same rows) — raise."""
-    lake = str(tmp_path / "lake")
-    lake_write(spark, _kv(spark, 0, 200).repartitionByRange(2, "k"), lake)  # v1
-    head = current_version(lake)
-    victim = snapshot_files(lake, head)[0]
-    # a concurrent delete drops the SAME file (k<100 lives in file 0
-    # of the range partitioning)
-    lake_delete(spark, lake, "k BETWEEN 0 AND 99", col_types={"k": "bigint", "v": "bigint"})
-    assert victim not in snapshot_files(lake)
-    with pytest.raises(SnapshotConflictError, match="touched"):
-        _commit_filechange(lake, head, removed={victim}, added=set(), op="delete")
+    rebase is unsound (both ops touched the same rows) — raise. Both
+    chains."""
+    for branch in CHAINS:
+        lake = _chain_lake(
+            spark, str(tmp_path / f"lake-{branch}"),
+            _kv(spark, 0, 200).repartitionByRange(2, "k"), branch,
+        )  # v1
+        head = S._head_version(lake, branch)
+        victim = _chain_files(lake, head, branch)[0]
+        # a concurrent delete drops the SAME file (k<100 lives in file 0
+        # of the range partitioning)
+        lake_delete(
+            spark, lake, "k BETWEEN 0 AND 99",
+            col_types={"k": "bigint", "v": "bigint"}, branch=branch,
+        )
+        assert victim not in _chain_files(lake, None, branch)
+        with pytest.raises(SnapshotConflictError, match="touched"):
+            _commit_filechange(
+                lake, head, removed={victim}, added=set(), op="delete", branch=branch
+            )
+
+
+@pytest.mark.parametrize("branch", CHAINS)
+def test_unreadable_planned_head_conflicts(spark, tmp_path, branch):
+    """A rewrite rebasing over a moved head re-reads the PLANNED head's
+    masks; when that record is gone (expired mid-flight) the masks the
+    plan read cannot be verified — a conflict on either chain, never a
+    bare ValueError and never a silent rebase."""
+    lake = _chain_lake(
+        spark, str(tmp_path / "lake"), _kv(spark, 0, 200).repartitionByRange(2, "k"), branch
+    )  # v1
+    victim = _chain_files(lake, 1, branch)[0]
+    _chain_append(spark, lake, _kv(spark, 300, 310).coalesce(1), branch)  # v2
+    os.remove(os.path.join(S._ref_dir(lake, branch), f"v{1:012d}.json"))
+    with pytest.raises(SnapshotConflictError, match="no longer readable"):
+        _commit_filechange(
+            lake, 1, removed={victim}, added=set(), op="delete", branch=branch
+        )
 
 
 def test_optimize_commit_asserts_parent(spark, tmp_path, monkeypatch):
@@ -400,47 +456,58 @@ def test_concurrent_dv_deletes_merge_not_overwrite(spark, tmp_path):
     """The ADVICE probe: DV delete A wins v2 masking file0; DV delete
     B, planned against v1 and masking a DIFFERENT file, rebases — the
     merged head must carry BOTH sidecars (A's deleted rows must not
-    resurrect) and the metadata row count must subtract both masks."""
-    lake = str(tmp_path / "lake")
-    lake_write(spark, _kv(spark, 0, 400).repartitionByRange(4, "k"), lake)  # v1
-    ct = {"k": "bigint", "v": "bigint"}
-    files_v1 = snapshot_files(lake, 1)
-    # B plans against v1: stage a 3-position mask on the LAST file
-    victim_b = files_v1[-1]
-    side_b = _stage_dv(spark, lake, os.path.basename(victim_b), [0, 1, 2])
-    # A's DV delete commits v2 first (masks the k<100 file)
-    rep_a = S.lake_delete(spark, lake, "k BETWEEN 5 AND 7", col_types=ct, use_dv=True)
-    assert rep_a["files_dv"] == 1 and rep_a["rows_deleted"] == 3
-    # B's stale-planned DV commit rebases and MERGES
-    v = S._commit_filechange(
-        lake, 1, removed=set(), added=set(), op="delete",
-        dv_add=[side_b], dv_rows_add={os.path.basename(victim_b): 3},
-        masked_files={victim_b}, planned_dv_rows={},
-    )
-    assert v == 3
-    info = S.snapshot_info(lake, 3)
-    assert side_b in info["dvs"] and len(info["dvs"]) == 2  # A's survived
-    assert S.snapshot_row_count(lake, 3) == 400 - 3 - 3
-    cur = read_snapshot(spark, lake)
-    assert cur.count() == 394
-    assert cur.filter("k BETWEEN 5 AND 7").count() == 0  # A's delete held
+    resurrect) and the metadata row count must subtract both masks.
+    Both chains."""
+    for branch in CHAINS:
+        lake = _chain_lake(
+            spark, str(tmp_path / f"lake-{branch}"),
+            _kv(spark, 0, 400).repartitionByRange(4, "k"), branch,
+        )  # v1
+        ct = {"k": "bigint", "v": "bigint"}
+        files_v1 = _chain_files(lake, 1, branch)
+        # B plans against v1: stage a 3-position mask on the LAST file
+        victim_b = files_v1[-1]
+        side_b = _stage_dv(spark, lake, os.path.basename(victim_b), [0, 1, 2])
+        # A's DV delete commits v2 first (masks the k<100 file)
+        rep_a = S.lake_delete(
+            spark, lake, "k BETWEEN 5 AND 7", col_types=ct, use_dv=True, branch=branch
+        )
+        assert rep_a["files_dv"] == 1 and rep_a["rows_deleted"] == 3
+        # B's stale-planned DV commit rebases and MERGES
+        v = S._commit_filechange(
+            lake, 1, removed=set(), added=set(), op="delete",
+            dv_add=[side_b], dv_rows_add={os.path.basename(victim_b): 3},
+            masked_files={victim_b}, planned_dv_rows={}, branch=branch,
+        )
+        assert v == 3
+        info = S._ref_info(lake, 3, branch)
+        assert side_b in info["dvs"] and len(info["dvs"]) == 2  # A's survived
+        assert S._record_row_count(info) == 400 - 3 - 3
+        cur = _chain_read(spark, lake, branch)
+        assert cur.count() == 394
+        assert cur.filter("k BETWEEN 5 AND 7").count() == 0  # A's delete held
 
 
 def test_concurrent_dv_same_file_conflicts(spark, tmp_path):
     """Two DV deletes masking the SAME file may overlap positions —
-    the loser must raise, never merge blindly."""
-    lake = str(tmp_path / "lake")
-    lake_write(spark, _kv(spark, 0, 400).repartitionByRange(4, "k"), lake)  # v1
-    ct = {"k": "bigint", "v": "bigint"}
-    victim = snapshot_files(lake, 1)[0]  # the k<100 file
-    side_b = _stage_dv(spark, lake, os.path.basename(victim), [10, 11])
-    S.lake_delete(spark, lake, "k BETWEEN 5 AND 7", col_types=ct, use_dv=True)  # v2
-    with pytest.raises(SnapshotConflictError, match="deletion vector"):
-        S._commit_filechange(
-            lake, 1, removed=set(), added=set(), op="delete",
-            dv_add=[side_b], dv_rows_add={os.path.basename(victim): 2},
-            masked_files={victim}, planned_dv_rows={},
-        )
+    the loser must raise, never merge blindly. Both chains."""
+    for branch in CHAINS:
+        lake = _chain_lake(
+            spark, str(tmp_path / f"lake-{branch}"),
+            _kv(spark, 0, 400).repartitionByRange(4, "k"), branch,
+        )  # v1
+        ct = {"k": "bigint", "v": "bigint"}
+        victim = _chain_files(lake, 1, branch)[0]  # the k<100 file
+        side_b = _stage_dv(spark, lake, os.path.basename(victim), [10, 11])
+        S.lake_delete(
+            spark, lake, "k BETWEEN 5 AND 7", col_types=ct, use_dv=True, branch=branch
+        )  # v2
+        with pytest.raises(SnapshotConflictError, match="deletion vector"):
+            S._commit_filechange(
+                lake, 1, removed=set(), added=set(), op="delete",
+                dv_add=[side_b], dv_rows_add={os.path.basename(victim): 2},
+                masked_files={victim}, planned_dv_rows={}, branch=branch,
+            )
 
 
 def test_dv_on_concurrently_dropped_file_conflicts(spark, tmp_path):

@@ -284,9 +284,9 @@ def test_optimize_snapshot_lake_preserves_time_travel(spark, tmp_path):
 
 
 def test_optimize_partitioned_snapshot_lake(spark, tmp_path):
-    """Partitioned snapshot lake: per-leaf compaction commits ONE
-    root-level snapshot; dead files in leaf dirs are never resurrected
-    into the rewrite."""
+    """Partitioned snapshot lake: OPTIMIZE rewrites the dirty files of
+    every leaf in one pass and commits ONE root-level snapshot; dead
+    files in leaf dirs are never resurrected into the rewrite."""
     lake = str(tmp_path / "lake")
     df = _kv(spark, 0, 1000).withColumn("p", (F.col("k") % 2).cast("long"))
     before = lake_write(spark, df.repartitionByRange(4, "k"), lake, partition_by=["p"])

@@ -12,8 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from mlb_data_pipeline_spark.operators.snapshots import (
-    _branch_info,
-    _branch_versions,
+    _ref_info,
+    _versions,
     lake_branch_create,
     lake_branches,
     lake_history,
@@ -60,7 +60,7 @@ def test_publish_cadence_stages_and_publishes_twice(spark, tmp_path):
     assert [p["summary"]["batch_id"] for p in pubs] == [1, 3]
     # the branch was re-forked after the last cycle: staging is empty
     assert "feed" in lake_branches(lake)
-    binfo = _branch_info(lake, "feed")
+    binfo = _ref_info(lake, branch="feed")
     assert binfo["version"] == 1 and binfo["op"] == "branch_fork"
     assert read_branch(spark, lake, "feed").count() == 500
 
@@ -86,7 +86,7 @@ def test_publish_cadence_redelivery_is_exactly_once(spark, tmp_path):
         branch="feed", publish_every=2,
     )
     assert read_snapshot(spark, lake).count() == 70
-    assert _branch_info(lake, "feed")["version"] == 1
+    assert _ref_info(lake, branch="feed")["version"] == 1
 
 
 def test_publish_cadence_recovers_from_crash_before_drop(spark, tmp_path):
@@ -111,7 +111,7 @@ def test_publish_cadence_recovers_from_crash_before_drop(spark, tmp_path):
     lake_branch_append(spark, lake, "feed", _kv(spark, 200, 210, "s2").coalesce(1))
     lake_publish_branch(lake, "feed", drop=False, summary={"batch_id": 0})
     assert read_snapshot(spark, lake).count() == 70
-    assert _branch_versions(lake, "feed")[-1] == 2  # stale staged state
+    assert _versions(lake, "feed")[-1] == 2  # stale staged state
     # next batch arrives: entry detection re-forks; the new batch
     # ingests exactly once; no double publish of the stale files
     _kv(spark, 300, 310, "s3").coalesce(1).write.mode("append").parquet(src)
@@ -123,7 +123,7 @@ def test_publish_cadence_recovers_from_crash_before_drop(spark, tmp_path):
     assert cur.count() == 80
     assert cur.filter("src = 's2'").count() == 10  # once, not twice
     assert cur.filter("src = 's3'").count() == 10
-    assert _branch_info(lake, "feed")["version"] == 1
+    assert _ref_info(lake, branch="feed")["version"] == 1
 
 
 def test_publish_cadence_gate_fails_stream_loudly(spark, tmp_path):
