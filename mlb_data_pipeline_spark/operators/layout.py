@@ -89,17 +89,72 @@ def _data_files(path: str) -> list[str]:
     return files
 
 
-def _relpath_col(path: str):
-    """``input_file_name()`` reduced to the path RELATIVE to the lake
-    root — one regexp strip of the resolved ``file:`` URI prefix, so
-    bloom-manifest file names match ``_data_files`` in flat and
-    partitioned lakes alike."""
+def _lake_relpath(path: str, uri: Column) -> Column:
+    """A data file's URI (``input_file_name()``, ``_metadata.file_path``)
+    reduced to its name RELATIVE to the lake root — the on-disk name
+    ``_data_files`` lists and snapshot records carry. Spark's file URIs
+    are percent-encoded (a leaf ``s=a b`` reads back as ``s=a%20b``,
+    Hive's own escape ``s=x%3Ay`` as ``s=x%253Ay``), so the URI is
+    decoded first — with ``+`` protected, since ``url_decode`` is form
+    decoding — and then stripped of the ``file:`` lake-root prefix."""
     import re as _re
 
     base = os.path.abspath(path)
-    return F.regexp_replace(
-        F.input_file_name(), "^(file:/*)?" + _re.escape(base.lstrip("/")) + "/", ""
-    )
+    decoded = F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
+    return F.regexp_replace(decoded, "^(file:/*)?" + _re.escape(base.lstrip("/")) + "/", "")
+
+
+def _relpath_col(path: str):
+    """``input_file_name()`` as a lake-relative name, so bloom- and
+    NDV-manifest file names match ``_data_files`` in flat and
+    partitioned lakes alike."""
+    return _lake_relpath(path, F.input_file_name())
+
+
+def _dv_key_files(keys, files) -> dict[str, str]:
+    """{deletion-vector key -> the live RELATIVE file it masks} for
+    the ``keys`` of a record's ``dv_rows``/``dv_files`` (the sidecars'
+    ``file`` column) against its live ``files``. Masks are keyed by the
+    lake-relative file name; records written before that keyed them
+    by file BASENAME, which repeats across partition leaves (Spark
+    names every task's output ``part-NNNNN-<job uuid>``, in every
+    leaf the task wrote). A key with no ``/`` that names no live file
+    is such a legacy key: it resolves to the one live file with that
+    basename, and raises ``ValueError`` when several live files share
+    it — guessing is what masks rows of the wrong file. Keys naming no
+    live file (rewritten away) are left out."""
+    live = set(files)
+    out = {k: k for k in keys if k in live}
+    legacy = [k for k in keys if k not in live and "/" not in k]
+    if legacy:
+        by_base: dict[str, list[str]] = {}
+        for n in live:
+            by_base.setdefault(os.path.basename(n), []).append(n)
+        for k in legacy:
+            hits = sorted(by_base.get(k, ()))
+            if len(hits) > 1:
+                raise ValueError(
+                    f"deletion-vector key {k!r} is a bare file basename shared by "
+                    f"{len(hits)} live files ({hits[0]!r}, {hits[1]!r}, ...) — the "
+                    "record predates lake-relative mask keys and cannot say which "
+                    "file it masks; roll back to a version before that delete"
+                )
+            if hits:
+                out[k] = hits[0]
+    return out
+
+
+def _dv_rows_by_file(dv_rows: dict[str, int] | None, files) -> dict[str, int]:
+    """A record's ``dv_rows`` re-keyed by live RELATIVE file name
+    (``_dv_key_files``'s resolution and ambiguity rule): {file ->
+    masked rows}, legacy basename and relative entries for one file
+    summed."""
+    out: dict[str, int] = {}
+    if not dv_rows:
+        return out
+    for k, n in _dv_key_files(dv_rows, files).items():
+        out[n] = out.get(n, 0) + int(dv_rows[k])
+    return out
 
 
 def floor_div(num: Column, den: int | Column) -> Column:
@@ -1175,9 +1230,11 @@ def optimize_clustered(
     names = _data_files(base)
     if any("/" in n for n in names):
         if info is not None and info.get("dvs"):
-            # masks are keyed by file basename, and basenames repeat
-            # across leaf directories — rewrite the masks away first
-            # (lake_update/merge or a non-DV delete materializes them)
+            # masks are keyed by lake-relative name, but records written
+            # before that keyed them by file basename, which repeats
+            # across leaf directories — the refusal guards those legacy
+            # keys; rewrite the masks away first (lake_update/merge or a
+            # non-DV delete materializes them)
             raise ValueError(
                 "optimize_clustered on a PARTITIONED lake with live "
                 "deletion vectors is not supported — materialize the "
@@ -1666,7 +1723,8 @@ def manifest_assisted_count(
     with live deletion vectors, an INTERIOR file's live matching rows
     are its physical rows minus its masked positions (every physical
     row matches the box, masked ones are simply gone), so interior
-    files contribute ``rows − dv_rows[basename]`` still unopened;
+    files contribute ``rows − dv_rows[file]`` still unopened (keys
+    resolve against the live inventory, ``_dv_rows_by_file``);
     boundary files read through ``boundary_reader`` (the caller's
     mask-applying snapshot reader) instead of the raw parquet paths.
     The fast path no longer degrades wholesale under DVs."""
@@ -1674,11 +1732,10 @@ def manifest_assisted_count(
     inside, boundary, rows_by_file = _classify_box_files(
         spark, path, manifest_path, box, col_types, equals_strs, files=files
     )
-    dvr = dv_rows or {}
-    metadata_count = sum(
-        int(rows_by_file[f]) - int(dvr.get(f, dvr.get(os.path.basename(f), 0)))
-        for f in inside
-    )
+    dvr = {}
+    if dv_rows:
+        dvr = _dv_rows_by_file(dv_rows, files if files is not None else _data_files(path))
+    metadata_count = sum(int(rows_by_file[f]) - dvr.get(f, 0) for f in inside)
     if not boundary:
         return metadata_count
     if boundary_reader is not None:
@@ -1744,10 +1801,11 @@ def manifest_assisted_minmax(
 
     _compact_recover_tree(path)
     box = dict(box or {})
-    dvr = dv_rows or {}
+    existing = set(_data_files(path) if files is None else files)
+    dvr = _dv_rows_by_file(dv_rows, existing)
 
     def _is_masked(f: str) -> bool:
-        return int(dvr.get(f, dvr.get(os.path.basename(f), 0))) > 0
+        return dvr.get(f, 0) > 0
 
     mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
     stats: dict[str, dict[str, tuple]] = {}
@@ -1756,7 +1814,6 @@ def manifest_assisted_minmax(
         if r.lo is None or r.hi is None:
             continue  # all-null stat row: no usable bound, file reads as boundary
         stats.setdefault(r.file, {})[r.col] = (r.lo, r.hi)
-    existing = set(_data_files(path) if files is None else files)
     known = set(stats)
     interior, boundary, masked_names = [], [], []
     for f in sorted(existing):
@@ -2106,10 +2163,10 @@ def manifest_assisted_ndv(
         inside, boundary = [], _data_files(path)
     else:
         inside, boundary = _data_files(path), []
-    dvr = dv_rows or {}
+    dvr = _dv_rows_by_file(dv_rows, _data_files(path)) if dv_rows else {}
 
     def _is_masked(f: str) -> bool:
-        return int(dvr.get(f, dvr.get(os.path.basename(f), 0))) > 0
+        return dvr.get(f, 0) > 0
 
     masked_names = sorted(f for f in (*inside, *boundary) if _is_masked(f))
     if masked_names and masked_reader is None:

@@ -151,6 +151,9 @@ from pyspark.sql import functions as F
 from .layout import (
     _all_data_files,
     _data_files,
+    _dv_key_files,
+    _dv_rows_by_file,
+    _lake_relpath,
     _partition_skippable,
     _partition_values,
     file_stats,
@@ -526,10 +529,12 @@ def commit_snapshot(
     * ``renames`` — rename lineage {current column -> [prior names,
       newest first]}, so later commits keep resolving pre-rename files;
     * ``dvs`` / ``dv_rows`` — deletion-vector sidecars under
-      ``_snapshots/dv/`` and {file basename -> deleted rows}; entries
-      for files that left the live set are harmless (their anti-join
-      matches nothing; row counting sums live files only);
-    * ``dv_files`` (round 14) — {sidecar -> [masked basenames]}, pure
+      ``_snapshots/dv/`` and {file -> deleted rows}, keyed by the
+      lake-relative file name (the ``files`` entry; records written
+      before that used the basename, resolved by ``_dv_key_files``);
+      entries for files that left the live set are harmless (their
+      anti-join matches nothing; row counting sums live files only);
+    * ``dv_files`` (round 14) — {sidecar -> [masked file keys]}, pure
       pruning metadata: a rewrite removing every file a sidecar masks
       drops the sidecar, so vacuum reclaims it once the old versions
       expire. An entry lives exactly as long as its sidecar is in the
@@ -698,9 +703,10 @@ def _commit_filechange(
 
     Deletion-vector commits (round 13 — ADVICE r12 #1) pass their mask
     as a DELTA, never an absolute list: ``dv_add`` names the new
-    sidecar(s), ``dv_rows_add`` the per-file (basename) deleted-row
-    deltas, ``masked_files`` the live RELATIVE names the delta masks,
-    and ``planned_dv_rows`` the dv_rows map of the head the plan read.
+    sidecar(s), ``dv_rows_add`` the per-file deleted-row deltas (keyed
+    like the sidecars' ``file`` column), ``masked_files`` the live
+    RELATIVE names the delta masks, and ``planned_dv_rows`` the dv_rows
+    map of the head the plan read.
     The commit merges the delta into the dvs/dv_rows of the head it
     actually lands on, so a concurrent DV delete's sidecar reference
     is never overwritten by a stale list. The rebase is taken only
@@ -722,12 +728,14 @@ def _commit_filechange(
     unreadable planned-head record raises).
 
     Mask-metadata PRUNING (round 14 — ADVICE r13 #4): when this commit
-    removes files, dv_rows entries for basenames no longer live are
-    dropped, and sidecars whose recorded masked basenames
-    (``dv_files``) are all dead are dropped too — a rewrite that
-    materializes masks stops referencing them, so vacuum can reclaim
-    the sidecars once older versions expire, instead of the metadata
-    bloating monotonically."""
+    removes files, dv_rows entries for files no longer live are
+    dropped, and sidecars whose recorded masked files (``dv_files``)
+    are all dead are dropped too — a rewrite that materializes masks
+    stops referencing them, so vacuum can reclaim the sidecars once
+    older versions expire, instead of the metadata bloating
+    monotonically. Every comparison goes through ``_dv_rows_by_file``/
+    ``_dv_key_files``, so legacy basename keys resolve (or refuse)
+    the same way the reader does."""
     new_rows = _file_row_counts(path, sorted(added), spark)
     expect = planned_head
     plan_dvr_lazy = planned_dv_rows
@@ -758,7 +766,7 @@ def _commit_filechange(
                     f"new file name(s) already live at v{head} "
                     f"(e.g. {sorted(collide)[0]!r}) — re-plan and retry"
                 )
-            head_dvr = head_info.get("dv_rows") or {}
+            head_dvr = _dv_rows_by_file(head_info.get("dv_rows"), live_set)
             if removed:
                 # symmetric DV guard (round 14): this plan READ the
                 # removed files under the planned head's masks; if the
@@ -781,9 +789,9 @@ def _commit_filechange(
                             "readable — cannot verify its deletion-vector "
                             "state; re-plan and retry"
                         ) from exc
+                plan_removed_dvr = _dv_rows_by_file(plan_dvr_lazy, live_set)
                 for rel in sorted(removed):
-                    b = os.path.basename(rel)
-                    if int(head_dvr.get(b, 0)) != int(plan_dvr_lazy.get(b, 0)):
+                    if head_dvr.get(rel, 0) != plan_removed_dvr.get(rel, 0):
                         raise SnapshotConflictError(
                             f"planned against v{expect} but head is v{head}, "
                             f"and a concurrent deletion vector masks {rel!r}, "
@@ -792,7 +800,7 @@ def _commit_filechange(
                             "deleted rows; re-plan and retry"
                         )
             if dv_add is not None or dv_rows_add:
-                plan_dvr = planned_dv_rows or {}
+                plan_dvr = _dv_rows_by_file(planned_dv_rows, live_set)
                 for rel in sorted(masked_files or ()):
                     if rel in added:
                         continue  # this commit's own new file carries the mask
@@ -803,8 +811,7 @@ def _commit_filechange(
                             f"{rel!r} — this deletion vector no longer applies; "
                             "re-plan and retry"
                         )
-                    b = os.path.basename(rel)
-                    if int(head_dvr.get(b, 0)) != int(plan_dvr.get(b, 0)):
+                    if head_dvr.get(rel, 0) != plan_dvr.get(rel, 0):
                         raise SnapshotConflictError(
                             f"planned against v{expect} but head is v{head}, and a "
                             f"concurrent deletion vector masks {rel!r} too — "
@@ -830,12 +837,14 @@ def _commit_filechange(
             # references them — dead entries are harmless to reads but
             # bloat every later commit and pin sidecars in vacuum
             # (commit_snapshot drops the dv_files of dropped sidecars)
-            live_base = {os.path.basename(n) for n in files}
-            dv_rows = {b: n for b, n in dv_rows.items() if b in live_base}
+            live_keys = _dv_key_files(
+                {*dv_rows, *(k for ks in dv_files.values() for k in ks)}, files
+            )
+            dv_rows = {k: n for k, n in dv_rows.items() if k in live_keys}
             dvs = [
                 s
                 for s in dvs or []
-                if s not in dv_files or any(b in live_base for b in dv_files[s])
+                if s not in dv_files or any(k in live_keys for k in dv_files[s])
             ] if dv_rows else []
         try:
             return commit_snapshot(
@@ -1120,15 +1129,20 @@ def _read_record(
 
 
 def _dv_df(spark: SparkSession, path: str, info: dict | None) -> DataFrame | None:
-    """The union of a commit's deletion-vector sidecars: (file
-    basename, pos) rows masking deleted positions. None when the
-    commit carries no DVs."""
+    """The union of a commit's deletion-vector sidecars: (file, pos)
+    rows masking deleted positions, ``file`` the lake-relative name —
+    legacy basename keys are rewritten to the live file they resolve
+    to (``_dv_key_files``, which refuses an ambiguous one). None when
+    the commit carries no DVs."""
     names = (info or {}).get("dvs") or []
     if not names:
         return None
-    return spark.read.parquet(
+    dv = spark.read.parquet(
         *[os.path.join(_snap_dir(path), "dv", n) for n in names]
     ).select("file", "pos")
+    keyed = _dv_key_files(info.get("dv_rows") or {}, info["files"])
+    legacy = {k: n for k, n in keyed.items() if k != n}
+    return dv.replace(legacy, subset=["file"]) if legacy else dv
 
 
 # total DV'd positions up to this many broadcast into the read-side
@@ -1158,9 +1172,9 @@ def _read_files(
       sound because a file carries exactly one generation of the name.
 
     Deletion vectors (round 12): when the record carries ``dvs``, the
-    read masks DV'd positions with a (file basename, row_index)
-    anti-join — broadcast when the recorded deleted-row total is under
-    ``_DV_BROADCAST_CAP``, plain shuffle above. ``_keep_position_cols``
+    read masks DV'd positions with a (lake-relative file name,
+    row_index) anti-join — broadcast when the recorded deleted-row
+    total is under ``_DV_BROADCAST_CAP``, plain shuffle above. ``_keep_position_cols``
     keeps ``__file``/``__pos`` in the output (the DV writers' hook).
 
     With no usable record (plain dirs, pre-round-12 logs, adopt
@@ -1176,7 +1190,7 @@ def _read_files(
         if not want_pos:
             return df
         out = df.withColumn(
-            "__file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+            "__file", _lake_relpath(path, F.col("_metadata.file_path"))
         ).withColumn("__pos", F.col("_metadata.row_index"))
         if dv is not None:
             total = sum((info or {}).get("dv_rows", {}).values())
@@ -1877,9 +1891,10 @@ def lake_delete(
     )
     prev_rows = head_info.get("file_rows", {})
     prev_dv_rows = head_info.get("dv_rows", {})
+    masked_before = _dv_rows_by_file(prev_dv_rows, live)
     # dropped files count their LIVE rows (physical minus already-DV'd)
     rows_dropped = sum(
-        int(prev_rows[n]) - int(prev_dv_rows.get(n, 0)) for n in drop if n in prev_rows
+        int(prev_rows[n]) - masked_before.get(n, 0) for n in drop if n in prev_rows
     )
     if use_dv:
         dv_per_file: dict[str, int] = {}
@@ -1899,20 +1914,26 @@ def lake_delete(
             hits.coalesce(1).write.parquet(os.path.join(dv_dir, name))
             per = spark.read.parquet(os.path.join(dv_dir, name)).groupBy("file").count()
             dv_per_file = {r["file"]: int(r["count"]) for r in per.collect()}
-            if dv_per_file:
+            stray = set(dv_per_file) - set(rewrite)
+            if dv_per_file and not stray:
                 new_sidecars.append(name)
             else:
                 import shutil as _shutil
 
                 _shutil.rmtree(os.path.join(dv_dir, name), ignore_errors=True)
+            if stray:
+                # a mask keyed to no file this delete read would apply
+                # to nothing — the delete would silently not happen
+                raise RuntimeError(
+                    f"deletion-vector positions keyed {sorted(stray)[0]!r}, which is "
+                    f"not a lake-relative name of a file read under {path!r}"
+                )
         dv_count = sum(dv_per_file.values())
         # the mask goes in as a DELTA (sidecar names + per-file counts),
         # merged into whatever head the commit lands on — a concurrent
         # DV delete's sidecars survive the rebase instead of being
         # overwritten by this plan's stale absolute list (ADVICE r12 #1)
-        masked = {
-            n for n in rewrite if os.path.basename(n) in dv_per_file
-        }
+        masked = set(dv_per_file)
         n_kept = len(keep) + len(rewrite) - len(dv_per_file)
         version = _commit_filechange(
             path,
@@ -2184,6 +2205,7 @@ def _read_changes_infos(
     # files under v_from's (their live rows at that version).
     info_from_read = {
         **info_to,
+        "files": info_from["files"],
         "dvs": info_from.get("dvs"),
         "dv_rows": info_from.get("dv_rows"),
     }
@@ -2205,12 +2227,11 @@ def _read_changes_infos(
             empty = spark.createDataFrame([], "file string, pos long")
             dv_f = dv_f if dv_f is not None else empty
             dv_t = dv_t if dv_t is not None else empty
-            base_by_name = {os.path.basename(n): n for n in shared}
             new_pos = dv_t.join(dv_f, ["file", "pos"], "left_anti").filter(
-                F.col("file").isin(list(base_by_name))
+                F.col("file").isin(sorted(shared))
             )
             back_pos = dv_f.join(dv_t, ["file", "pos"], "left_anti").filter(
-                F.col("file").isin(list(base_by_name))
+                F.col("file").isin(sorted(shared))
             )
 
             def dv_rows_for(pos_df: DataFrame) -> DataFrame | None:
@@ -2220,7 +2241,7 @@ def _read_changes_infos(
                 rows = _read_files(
                     spark,
                     path,
-                    sorted(base_by_name[n] for n in names),
+                    sorted(names),
                     {**info_to, "dvs": None, "dv_rows": None},
                     _keep_position_cols=True,
                 )
@@ -2303,14 +2324,11 @@ def _record_row_count(info: dict) -> int | None:
     rows = info.get("file_rows")
     if rows is None:
         return None
-    dvr = info.get("dv_rows") or {}
     try:
-        # dv_rows is keyed by file BASENAME (the reader's __file key);
-        # fall through to it for hive-partitioned relative names
-        return sum(
-            int(rows[n]) - int(dvr.get(n, dvr.get(os.path.basename(n), 0)))
-            for n in info["files"]
-        )
+        # dv_rows is keyed by lake-relative name; legacy basename keys
+        # resolve to their one live file, or raise when ambiguous
+        dvr = _dv_rows_by_file(info.get("dv_rows"), info["files"])
+        return sum(int(rows[n]) - dvr.get(n, 0) for n in info["files"])
     except KeyError:
         return None
 
@@ -2672,11 +2690,7 @@ def lake_publish_branch(
         for b, n in br_dvr.items()
         if int(n) - int(fork_dvr.get(b, 0)) > 0
     }
-    masked = {
-        n
-        for n in branch_files
-        if os.path.basename(n) in dv_rows_add
-    }
+    masked = set(_dv_key_files(dv_rows_add, branch_files).values())
     has_dv_delta = bool(dv_add or dv_rows_add)
     # schema (round 13 — DDL on branches): when the BRANCH evolved its
     # schema in staging (vs its fork state), publish carries the

@@ -271,10 +271,13 @@ def test_dv_mask_aware_metadata_count_fast_path(spark, tmp_path):
 
 
 def test_dv_on_hive_partitioned_lake(spark, tmp_path):
-    """Round 13: dv_rows is keyed by file BASENAME while a partitioned
-    lake's live list carries directory-relative names — the metadata
-    row count must subtract through the basename fallback, and reads
-    must mask correctly across partition dirs."""
+    """Round 13: a partitioned lake's live list carries
+    directory-relative names, and every task of a partitioned write
+    reuses its ``part-NNNNN`` basename in each leaf it writes — masks
+    (``dv_rows``, the sidecars' ``file``, the reader's ``__file``) are
+    keyed by the lake-relative name, so the metadata row count
+    subtracts the mask and reads mask only the deleted positions, never
+    the same positions of a sibling leaf's same-named file."""
     from mlb_data_pipeline_spark.operators.snapshots import snapshot_row_count
 
     lake = str(tmp_path / "lake")
@@ -295,3 +298,111 @@ def test_dv_on_hive_partitioned_lake(spark, tmp_path):
     assert snapshot_row_count(lake) == 350
     # time travel: unmasked
     assert read_snapshot(spark, lake, 1).count() == 400
+
+
+def _colliding_lake(spark, lake):
+    """A lake whose three string leaves all hold the same
+    ``part-00000-<uuid>`` basename (one task writes every leaf). ``c:d``
+    is stored Hive-escaped (``s=c%3Ad``) and ``a b`` raw; Spark reads
+    both back percent-encoded."""
+    s = F.element_at(
+        F.array(F.lit("a b"), F.lit("c:d"), F.lit("e")), (F.col("id") % 3 + 1).cast("int")
+    )
+    df = spark.range(0, 300).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v"), s.alias("s")
+    )
+    lake_write(spark, df.repartition(1), lake, partition_by=["s"])
+    files = snapshot_info(lake)["files"]
+    assert len(files) == 3 and len({os.path.basename(n) for n in files}) == 1
+    return files
+
+
+def _ks(df):
+    return sorted(r["k"] for r in df.select("k").collect())
+
+
+def test_dv_masks_only_its_own_leaf_when_basenames_collide(spark, tmp_path):
+    """Masks are keyed by lake-relative name: a DV delete in one leaf
+    leaves the same positions of the sibling leaves' same-named files
+    alone, on every reader — the snapshot read, the metadata row
+    count, CDC, and a branch delete published to main."""
+    from mlb_data_pipeline_spark.operators.snapshots import (
+        lake_branch_create,
+        lake_publish_branch,
+    )
+
+    lake = str(tmp_path / "lake")
+    _colliding_lake(spark, lake)  # v1
+    ct = {"k": "bigint", "s": "string"}
+    rep = lake_delete(spark, lake, "s = 'c:d' AND k < 150", col_types=ct, use_dv=True)  # v2
+    gone = [k for k in range(150) if k % 3 == 1]
+    assert rep["rows_deleted"] == len(gone) == 50 and rep["files_dv"] == 1
+    cur = read_snapshot(spark, lake)
+    assert _ks(cur.filter("s = 'a b'")) == list(range(0, 300, 3))
+    assert _ks(cur.filter("s = 'e'")) == list(range(2, 300, 3))
+    assert _ks(cur.filter("s = 'c:d'")) == [k for k in range(1, 300, 3) if k >= 150]
+    assert snapshot_row_count(lake) == cur.count() == 250
+    assert all("/" in f for f in snapshot_info(lake)["dv_rows"])
+    ch = read_changes(spark, lake, 1, 2)
+    assert ch.filter("__change != 'delete' OR __n != 1").count() == 0
+    assert _ks(ch) == gone
+
+    # a branch DV delete in another leaf masks the same rows on main
+    lake_branch_create(lake, "b")
+    lake_delete(
+        spark, lake, "s = 'a b' AND k >= 240", col_types=ct, use_dv=True, branch="b"
+    )
+    lake_publish_branch(lake, "b")
+    cur = read_snapshot(spark, lake)
+    assert _ks(cur.filter("s = 'a b'")) == list(range(0, 240, 3))
+    assert _ks(cur.filter("s = 'e'")) == list(range(2, 300, 3))
+    assert _ks(cur.filter("s = 'c:d'")) == [k for k in range(1, 300, 3) if k >= 150]
+    assert snapshot_row_count(lake) == cur.count() == 230
+
+
+def _stage_legacy_dv(spark, lake, rel, positions):
+    """Commit a mask the way records written before lake-relative keys
+    did: the sidecar's ``file`` and the record's ``dv_rows`` keyed by
+    the file's basename."""
+    import uuid
+
+    base = os.path.basename(rel)
+    side = f"dv-legacy-{uuid.uuid4().hex[:8]}"
+    spark.createDataFrame(
+        [(base, int(p)) for p in positions], "file string, pos long"
+    ).coalesce(1).write.parquet(os.path.join(lake, "_snapshots", "dv", side))
+    return S._commit_filechange(
+        lake, S.current_version(lake), removed=set(), added=set(), op="delete",
+        dv_add=[side], dv_rows_add={base: len(positions)},
+        masked_files={rel}, planned_dv_rows={}, dv_files_add={side: [base]},
+    )
+
+
+def test_dv_legacy_basename_keys_resolve_or_refuse(spark, tmp_path):
+    """A basename key that names no live file resolves to the one live
+    file with that basename; when several live files share it the read
+    and the row count raise instead of guessing."""
+    import re
+
+    lake = str(tmp_path / "lake")
+    for i, s in enumerate(("a b", "c:d")):  # one write per leaf: distinct basenames
+        df = spark.range(100 * i, 100 * i + 100).select(
+            F.col("id").alias("k"), F.lit(s).alias("s")
+        )
+        lake_write(spark, df.coalesce(1), lake, partition_by=["s"])
+    rel = next(n for n in snapshot_info(lake)["files"] if n.startswith("s=c"))
+    raw = spark.read.parquet(os.path.join(lake, rel)).select("k", "_metadata.row_index")
+    masked = sorted(r["k"] for r in raw.filter("row_index < 3").collect())
+    _stage_legacy_dv(spark, lake, rel, [0, 1, 2])
+    cur = read_snapshot(spark, lake)
+    assert _ks(cur) == sorted(set(range(200)) - set(masked))
+    assert snapshot_row_count(lake) == 197
+
+    amb = str(tmp_path / "amb")
+    files = _colliding_lake(spark, amb)
+    _stage_legacy_dv(spark, amb, files[0], [0, 1])
+    base = re.escape(os.path.basename(files[0]))
+    with pytest.raises(ValueError, match=base):
+        read_snapshot(spark, amb)
+    with pytest.raises(ValueError, match=base):
+        snapshot_row_count(amb)

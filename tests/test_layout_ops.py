@@ -419,6 +419,34 @@ def test_bloom_manifest_skips_files_no_false_negatives(spark, tmp_path):
     assert len(out.inputFiles()) < n_total
 
 
+def test_bloom_manifest_keys_escaped_leaves_by_on_disk_name(spark, tmp_path):
+    """Spark's file URIs percent-encode a leaf (``s=a b`` reads back as
+    ``s=a%20b``, Hive's ``s=c%3Ad`` as ``s=c%253Ad``): the manifest's
+    bitmap words are keyed by the on-disk relative name its files list
+    carries, or a probe would find no words for the file and "prove" a
+    present value absent."""
+    from mlb_data_pipeline_spark.operators.layout import (
+        _data_files,
+        bloom_skippable_files,
+        save_bloom_manifest,
+    )
+
+    leaves = ["a b", "c:d", "e+f"]
+    rows = [(i, f"src{i}", leaves[i % 3]) for i in range(30)]
+    lake = str(tmp_path / "blake")
+    spark.createDataFrame(rows, "id long, source string, s string").coalesce(
+        1
+    ).write.partitionBy("s").parquet(lake)
+    bloom_manifest = str(tmp_path / "bbloom")
+    save_bloom_manifest(spark, lake, "source", bloom_manifest)
+    words = spark.read.parquet(bloom_manifest + "/words").select("file").distinct()
+    assert {r.file for r in words.collect()} == set(_data_files(lake))
+    for i, leaf in enumerate(leaves):
+        skippable = bloom_skippable_files(spark, bloom_manifest, f"src{i}")
+        (holding,) = [n for n in _data_files(lake) if n.startswith(f"s={leaf[0]}")]
+        assert holding not in skippable, leaf
+
+
 def test_bloom_manifest_unknown_file_is_must_read(spark, tmp_path):
     from mlb_data_pipeline_spark.operators.layout import (
         append_bloom_manifest,

@@ -321,7 +321,7 @@ def test_partitioned_optimize_jobs_do_not_grow_with_leaves(spark, tmp_path):
     """Every dirty leaf of a partitioned snapshot lake rewrites in ONE
     read/shuffle/write: the Spark job count is the same for 2 dirty
     leaves as for 6. Compact basenames never repeat across leaves
-    (deletion vectors key masks by basename), the report names dirty
+    (legacy deletion-vector records key masks by basename), the report names dirty
     files leaf-prefixed, and a second call rewrites nothing."""
     sc = spark.sparkContext
 
