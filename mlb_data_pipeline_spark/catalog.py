@@ -1368,23 +1368,45 @@ def lake_delete_where(
     branch: str | None = None,
 ) -> dict:
     """SQL DELETE on a REGISTERED lake table — the catalog wires the
-    table path, the schema's column types (temporal literal folding),
-    and the registered scan manifest (footer-free classification +
-    in-call manifest maintenance) with no caller opt-in. ``use_dv``
-    masks instead of rewriting (deletion vectors); ``branch`` targets
-    a WAP branch's head (round 13)."""
+    table path and the schema's column types (temporal literal
+    folding) with no caller opt-in; the operator classifies files from
+    the commit record's per-file stats. A registered scan manifest is
+    kept current in the same call (``_maintain_scan_manifest``: rows of
+    departed files dropped, written files statted) — on main only,
+    since the manifest describes main's live set. ``use_dv`` masks
+    instead of rewriting (deletion vectors); ``branch`` targets a WAP
+    branch's head (round 13)."""
     ent = _lake_entry(spark, name)
     from .operators.snapshots import lake_delete
 
-    return lake_delete(
+    rep = lake_delete(
         spark,
         ent["path"],
         predicate,
         col_types=_lake_col_types(spark, ent),
-        scan_manifest=ent["scan_manifest"],
         use_dv=use_dv,
         branch=branch,
     )
+    _maintain_scan_manifest(spark, ent, branch)
+    return rep
+
+
+def _maintain_scan_manifest(spark: SparkSession, ent: dict, branch: str | None) -> None:
+    """After a DML commit on main, bring a registered table's scan
+    manifest up to the new live set: GC rows whose files left it, then
+    stat the files the op wrote — O(changed files). The columns come
+    from the manifest itself (its distinct ``col`` set). A branch
+    commit changes nothing main reads, so it is left alone."""
+    mf_path = ent["scan_manifest"]
+    if mf_path is None or branch is not None:
+        return
+    from .operators.layout import append_scan_manifest, compact_scan_manifest
+
+    mf = spark.read.option("mergeSchema", "true").parquet(mf_path)
+    cols = [r.col for r in mf.select("col").distinct().collect()]
+    compact_scan_manifest(spark, ent["path"], mf_path)
+    if cols:
+        append_scan_manifest(spark, ent["path"], cols, mf_path)
 
 
 def lake_explain_delete(
@@ -1404,35 +1426,19 @@ def lake_explain_delete(
     Pinned to the classifier itself by test: the explanation can never
     drift from what the delete actually does."""
     ent = _lake_entry(spark, name)
-    from .operators.snapshots import (
-        _classify_for_delete,
-        _ref_info,
-        has_snapshots,
-        snapshot_files,
-    )
+    from .operators.snapshots import _classify_for_delete, _ref_info, has_snapshots
 
-    phys = None
     if branch is not None:
-        binfo = _ref_info(ent["path"], branch=branch)
-        files = sorted(binfo["files"])
-        phys = binfo.get("phys")
+        info = _ref_info(ent["path"], branch=branch)
     elif has_snapshots(ent["path"]):
-        from .operators.snapshots import snapshot_info
-
-        files = snapshot_files(ent["path"])
-        phys = snapshot_info(ent["path"]).get("phys")
+        info = _ref_info(ent["path"])
     else:
         from .operators.layout import _data_files
 
-        files = _data_files(ent["path"])
+        info = {"files": _data_files(ent["path"])}
+    files = info["files"]
     drop, keep, rewrite = _classify_for_delete(
-        ent["path"],
-        predicate,
-        _lake_col_types(spark, ent),
-        spark,
-        ent["scan_manifest"],
-        files=files,
-        phys=phys,
+        ent["path"], predicate, _lake_col_types(spark, ent), info
     )
     return {
         "table": name,
@@ -1459,15 +1465,16 @@ def lake_update_where(
     ent = _lake_entry(spark, name)
     from .operators.snapshots import lake_update
 
-    return lake_update(
+    rep = lake_update(
         spark,
         ent["path"],
         assignments,
         predicate,
         col_types=_lake_col_types(spark, ent),
-        scan_manifest=ent["scan_manifest"],
         branch=branch,
     )
+    _maintain_scan_manifest(spark, ent, branch)
+    return rep
 
 
 def lake_merge_into(
@@ -1482,15 +1489,9 @@ def lake_merge_into(
     ent = _lake_entry(spark, name)
     from .operators.snapshots import lake_merge
 
-    return lake_merge(
-        spark,
-        ent["path"],
-        source,
-        key,
-        when_matched=when_matched,
-        scan_manifest=ent["scan_manifest"],
-        branch=branch,
-    )
+    rep = lake_merge(spark, ent["path"], source, key, when_matched=when_matched, branch=branch)
+    _maintain_scan_manifest(spark, ent, branch)
+    return rep
 
 
 def lake_approx_distinct(

@@ -393,7 +393,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    pointer_doubling: bool = False,
     local_edge_budget: int | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair list: (id, component)
@@ -409,13 +408,6 @@ def connected_components(
     the convergence-count action materializes it, so lineage truncation
     costs no extra job (measured 1.9 s → 1.2 s on the sf0.1 near-dup
     graph vs eager).
-
-    ``pointer_doubling=True`` adds a label-graph self-join per round
-    (each node also adopts its LABEL'S label), making convergence
-    O(log diameter) rounds instead of O(diameter). Near-dup graphs have
-    shallow chains (sf0.1 converges in 2 rounds), and at cluster scale
-    the extra join is a full shuffle of the label set — so the shortcut
-    is opt-in for genuinely deep graphs, not the default.
 
     SMALL-GRAPH TIER (round 14, tightened round 15): when the
     symmetrized edge list is within ``local_edge_budget`` (default env
@@ -507,13 +499,6 @@ def connected_components(
             F.least(F.col("component"), F.coalesce("nbr_component", F.col("component"))).alias("component"),
             F.col("component").alias("__prev"),
         )
-        if pointer_doubling:
-            parent = stepped.select(F.col("id").alias("__pid"), F.col("component").alias("__pcomp"))
-            stepped = stepped.join(parent, stepped.component == parent["__pid"], "left").select(
-                "id",
-                F.least(F.col("component"), F.coalesce("__pcomp", F.col("component"))).alias("component"),
-                F.col("__prev"),
-            )
         updated = stepped.select(
             "id",
             "component",

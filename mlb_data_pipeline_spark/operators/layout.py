@@ -89,19 +89,23 @@ def _data_files(path: str) -> list[str]:
     return files
 
 
+def _decoded_uri(uri: Column) -> Column:
+    """A Spark file URI (``input_file_name()``, ``_metadata.file_path``)
+    percent-decoded: a leaf ``s=a b`` reads back as ``s=a%20b``, Hive's
+    own escape ``s=x%3Ay`` as ``s=x%253Ay``. ``+`` is protected, since
+    ``url_decode`` is form decoding."""
+    return F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
+
+
 def _lake_relpath(path: str, uri: Column) -> Column:
-    """A data file's URI (``input_file_name()``, ``_metadata.file_path``)
-    reduced to its name RELATIVE to the lake root — the on-disk name
-    ``_data_files`` lists and snapshot records carry. Spark's file URIs
-    are percent-encoded (a leaf ``s=a b`` reads back as ``s=a%20b``,
-    Hive's own escape ``s=x%3Ay`` as ``s=x%253Ay``), so the URI is
-    decoded first — with ``+`` protected, since ``url_decode`` is form
-    decoding — and then stripped of the ``file:`` lake-root prefix."""
+    """A data file's URI, decoded (``_decoded_uri``) and reduced to its
+    name RELATIVE to the lake root — the on-disk name ``_data_files``
+    lists and snapshot records carry."""
     import re as _re
 
     base = os.path.abspath(path)
-    decoded = F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
-    return F.regexp_replace(decoded, "^(file:/*)?" + _re.escape(base.lstrip("/")) + "/", "")
+    prefix = "^(file:/*)?" + _re.escape(base.lstrip("/")) + "/"
+    return F.regexp_replace(_decoded_uri(uri), prefix, "")
 
 
 def _relpath_col(path: str):
@@ -322,69 +326,72 @@ def _stat_num(v):
     return None
 
 
-def file_stats(path: str, cols: list[str], names: list[str] | None = None) -> list[dict]:
-    """Per-file min/max for ``cols`` from the REAL parquet footers (what
-    a scan's file-skipping sees) via pyarrow — one row per data file.
-
-    Only numeric/temporal physical types (``_EXACT_STAT_TYPES``) are
+def _footer_stats(md, cols=None) -> dict:
+    """``{"min", "max", "nulls"}`` of one pyarrow ``FileMetaData``, keyed
+    by physical column path, over ``cols`` (every column when None) —
+    the fold behind ``file_stats`` and the stats a snapshot commit
+    records. Only numeric/temporal physical types (``_EXACT_STAT_TYPES``) are
     folded: string/binary footer stats may be truncated bounds, and a
     wrong fold there would overstate pruning. Temporal logical values
-    normalize to epoch numbers (``_stat_num``). A column absent from a
-    file's ``min``/``max`` dict means "no usable stats" — callers must
-    treat that file as unprunable on that column. ``names`` restricts
-    the stat pass to an explicit subset of RELATIVE names (e.g. a
-    snapshot's live list, which the on-disk listing cannot tell from
-    dead files)."""
+    normalize to epoch numbers (``_stat_num``). A column absent from
+    ``min``/``max`` means "no usable stats"; a ``nulls`` value of None
+    means the footer did not say for every row group."""
+    n_rg = md.num_row_groups
+    lo: dict[str, object] = {}
+    hi: dict[str, object] = {}
+    nulls: dict[str, int] = {}
+    # per-column count of row groups that contributed usable stats: a
+    # bound (or null count) folded from SOME row groups only is NOT the
+    # file's — a stats-less row group could hold the true extreme (or
+    # nulls), so partial coverage degrades to "no usable stats" (round 11)
+    mm_cover: dict[str, int] = {}
+    nc_cover: dict[str, int] = {}
+    for rg in range(n_rg):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            c = g.column(ci)
+            cname = c.path_in_schema
+            if cols is not None and cname not in cols:
+                continue
+            if c.physical_type not in _EXACT_STAT_TYPES or c.statistics is None:
+                continue
+            s = c.statistics
+            # null counts ride along (round 11): the metadata-count fast
+            # path needs provably NO nulls in a file's box columns
+            if s.has_null_count:
+                nulls[cname] = nulls.get(cname, 0) + int(s.null_count)
+                nc_cover[cname] = nc_cover.get(cname, 0) + 1
+            if not s.has_min_max:
+                continue
+            mn = _stat_num(s.min)
+            mx = _stat_num(s.max)
+            if mn is None or mx is None:
+                continue
+            lo[cname] = mn if cname not in lo else min(lo[cname], mn)
+            hi[cname] = mx if cname not in hi else max(hi[cname], mx)
+            mm_cover[cname] = mm_cover.get(cname, 0) + 1
+    for cname in list(lo):
+        if mm_cover.get(cname, 0) != n_rg:
+            lo.pop(cname, None)
+            hi.pop(cname, None)
+    return {
+        "min": lo,
+        "max": hi,
+        "nulls": {c: (n if nc_cover.get(c, 0) == n_rg else None) for c, n in nulls.items()},
+    }
+
+
+def file_stats(path: str, cols: list[str], names: list[str] | None = None) -> list[dict]:
+    """Per-file min/max/null counts for ``cols`` from the REAL parquet
+    footers (what a scan's file-skipping sees) — one row per data file,
+    folded by ``_footer_stats``. ``names`` restricts the pass to a
+    subset of RELATIVE names (e.g. a snapshot's live list)."""
     import pyarrow.parquet as pq
 
     out = []
     for name in (names if names is not None else _data_files(path)):
         md = pq.ParquetFile(os.path.join(path, name)).metadata
-        n_rg = md.num_row_groups
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-        nulls: dict[str, int] = {}
-        # per-column count of row groups that contributed usable stats:
-        # a bound (or null count) folded from SOME row groups only is
-        # NOT the file's — a stats-less row group could hold the true
-        # extreme (or nulls), so partial coverage degrades to "no
-        # usable stats" rather than a falsely tight bound (round 11).
-        mm_cover: dict[str, int] = {}
-        nc_cover: dict[str, int] = {}
-        for rg in range(n_rg):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                c = g.column(ci)
-                cname = c.path_in_schema
-                if cname not in cols or c.statistics is None:
-                    continue
-                if c.physical_type not in _EXACT_STAT_TYPES:
-                    continue
-                s = c.statistics
-                # null counts ride along (round 11): the metadata-count
-                # fast path may only trust a file's row count when its
-                # box columns provably hold NO nulls (a NULL row never
-                # matches a box predicate)
-                if s.has_null_count:
-                    nulls[cname] = nulls.get(cname, 0) + int(s.null_count)
-                    nc_cover[cname] = nc_cover.get(cname, 0) + 1
-                if not s.has_min_max:
-                    continue
-                mn = _stat_num(s.min)
-                mx = _stat_num(s.max)
-                if mn is None or mx is None:
-                    continue
-                lo[cname] = mn if cname not in lo else min(lo[cname], mn)
-                hi[cname] = mx if cname not in hi else max(hi[cname], mx)
-                mm_cover[cname] = mm_cover.get(cname, 0) + 1
-        for cname in list(lo):
-            if mm_cover.get(cname, 0) != n_rg:
-                lo.pop(cname, None)
-                hi.pop(cname, None)
-        nulls_out: dict[str, object] = {
-            c: (n if nc_cover.get(c, 0) == n_rg else None) for c, n in nulls.items()
-        }
-        out.append({"file": name, "min": lo, "max": hi, "nulls": nulls_out, "rows": md.num_rows})
+        out.append({"file": name, **_footer_stats(md, cols), "rows": md.num_rows})
     return out
 
 
@@ -1042,8 +1049,8 @@ def cluster_report(
 def _cluster_fold(
     stats: list[dict], specs: list[tuple[str, int, int]], max_span_frac: float
 ) -> dict:
-    """``cluster_report`` over footer stats already read — the one
-    stats pass ``optimize_clustered`` also takes its row counts from."""
+    """``cluster_report`` over stats already read — the one stats pass
+    ``optimize_clustered`` also takes its row counts from."""
     cols = [c for c, _, _ in specs]
     rng = {c: max(1, hi - lo) for c, lo, hi in specs}
     dirty, fracs = [], []
@@ -1162,7 +1169,9 @@ def optimize_clustered(
     """Rewrite ONLY the badly-clustered (or undersized) files of a
     clustered lake back into tight key ranges.
 
-    Selection: ONE footer-stats pass over the live files picks those
+    Selection: ONE stats pass over the live files (the commit
+    record's per-file stats on a snapshot lake, the footers of a plain
+    one) picks those
     whose box spans > ``max_span_frac`` of the declared range on any
     clustered column, that lack stats, or that hold fewer than
     ``min_rows`` rows (small-file compaction). PARTITIONED lakes
@@ -1241,7 +1250,14 @@ def optimize_clustered(
                 "masks first (any rewrite of the DV'd files does)"
             )
         names = [n for n in names if "/" in n]
-    stats = file_stats(base, [c for c, _, _ in specs], names)
+    cols = [c for c, _, _ in specs]
+    if info is not None:
+        from .snapshots import _lake_file_stats
+
+        # the commit record's per-file stats: no footer is opened
+        stats = _lake_file_stats(base, cols, {**info, "files": names})
+    else:
+        stats = file_stats(base, cols, names)
     rep = _cluster_fold(stats, specs, max_span_frac)
     rows_by_file = {fs["file"]: fs["rows"] for fs in stats}
     dirty = set(rep["dirty_files"])

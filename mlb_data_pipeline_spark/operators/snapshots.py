@@ -19,10 +19,10 @@ Iceberg/Delta-shaped transaction log on top of the same directory:
   disk until ``vacuum_lake`` expires them, so historical reads are
   bit-exact, not best-effort.
 * **Pruned DML** — ``lake_delete`` / ``lake_update`` / ``lake_merge``
-  classify the live files from stats (the registered SCAN MANIFEST
-  when given — zero footer opens for manifest-known files — else the
-  parquet footers) plus directory-encoded partition values before
-  touching any data:
+  classify the live files from the per-file column stats the commit
+  record carries (zero footer opens; a record written before the
+  stats leg falls back to the footers) plus directory-encoded
+  partition values before touching any data:
 
   - delete: files whose stats prove EVERY row matches drop from the
     snapshot without being opened (a metadata-only delete); files
@@ -121,15 +121,15 @@ travel, and row-level DML are beyond-reference scale surface
   Avro manifests exactly as Iceberg does; one json per commit keeps
   the protocol honest at this repo's scale without changing any
   reader semantics.)
-* ``lake_delete``'s three-way classification reads only parquet
-  FOOTERS (driver-side, metadata-scale) — the same budget as
+* ``lake_delete``'s three-way classification reads only the commit
+  record (driver-side, metadata-scale) — the same budget as
   ``pruned_read``'s planning collect. The rewrite job reads only the
   boundary files.
 * ``lake_merge`` anti-joins the source key set over candidate files
   only — broadcast when the probe proved the key set small
   (<= _MERGE_KEY_PROBE_CAP distinct), plain shuffle above it (a
   corpus-scale source must never ship its keys to every executor);
-  candidate selection is footer stats + (for small key sets) a
+  candidate selection is record stats + (for small key sets) a
   sorted-keys interval probe. Inserts never touch existing files.
 * ``vacuum_lake`` is the ONLY operation that deletes data bytes, and
   it deletes strictly (on-disk) - (referenced by retained snapshots);
@@ -153,6 +153,7 @@ from .layout import (
     _data_files,
     _dv_key_files,
     _dv_rows_by_file,
+    _footer_stats,
     _lake_relpath,
     _partition_skippable,
     _partition_values,
@@ -260,10 +261,11 @@ def _put_record(path: str, record: dict, branch: str | None = None) -> int:
 # ---------------------------------------------------------------------------
 # Sharded snapshot manifests (round 13, X47 — the Iceberg manifest-file
 # shape). Below ``_MANIFEST_SHARD_THRESHOLD`` live files a commit
-# embeds its file list + per-file row counts in the json (the simple,
-# debuggable representation every earlier round used). Above it, the
-# json stays O(1): the file list lives in IMMUTABLE parquet manifests
-# under ``_snapshots/manifests/`` — columns (file, rows) — and the
+# embeds its file list + per-file row counts and column stats in the
+# json (the simple, debuggable representation every earlier round
+# used). Above it, the json stays O(1): the file list lives in
+# IMMUTABLE parquet manifests under ``_snapshots/manifests/`` —
+# columns (file, rows, stats), stats one json string per file — and the
 # record carries ``manifest_refs`` (the manifests whose union covers
 # the live set), ``removed_files`` (names subtracted from that union),
 # and ``n_files``. Manifests are REUSED across commits: an append
@@ -274,41 +276,43 @@ def _put_record(path: str, record: dict, branch: str | None = None) -> int:
 # the live set) the commit compacts to one fresh manifest — the
 # Iceberg manifest-rewrite maintenance step, folded in. Readers are
 # unchanged: ``snapshot_info`` resolves a sharded record to the same
-# (files, file_rows) dict shape, cached per immutable (path, version).
+# (files, file_rows, file_stats) dict shape, cached per immutable
+# (path, version).
 # ---------------------------------------------------------------------------
 
 _MANIFEST_SHARD_THRESHOLD = 2048
 _MANIFEST_MAX_REFS = 32
 
-_SNAP_RESOLVE_CACHE: dict[tuple, dict] = {}
-_MANIFEST_ROWS_CACHE: dict[tuple[str, str], dict[str, int]] = {}
+_SNAP_RESOLVE_CACHE: dict[tuple, tuple] = {}
+_MANIFEST_ROWS_CACHE: dict[tuple[str, str], tuple[dict, dict]] = {}
 
 
 def _manifest_dir(path: str) -> str:
     return os.path.join(_snap_dir(path), "manifests")
 
 
-def _manifest_rows(path: str, ref: str) -> dict[str, int]:
-    """file -> rows for ONE manifest parquet; cached (manifests are
-    immutable once a commit references them)."""
+def _manifest_rows(path: str, ref: str) -> tuple[dict[str, int], dict[str, dict]]:
+    """(file -> rows, file -> column stats) for ONE manifest parquet;
+    cached (manifests are immutable once a commit references them).
+    Manifests written before the stats column carry rows only."""
     key = (os.path.abspath(path), ref)
     hit = _MANIFEST_ROWS_CACHE.get(key)
     if hit is not None:
         return hit
     import pyarrow.parquet as pq
 
-    t = pq.read_table(os.path.join(_manifest_dir(path), ref))
-    out = {
-        f: int(r)
-        for f, r in zip(t.column("file").to_pylist(), t.column("rows").to_pylist())
-    }
+    t = pq.read_table(os.path.join(_manifest_dir(path), ref)).to_pylist()
+    rows = {r["file"]: int(r["rows"]) for r in t}
+    stats = {r["file"]: json.loads(r["stats"]) for r in t if r.get("stats") is not None}
     if len(_MANIFEST_ROWS_CACHE) > 64:
         _MANIFEST_ROWS_CACHE.clear()
-    _MANIFEST_ROWS_CACHE[key] = out
-    return out
+    _MANIFEST_ROWS_CACHE[key] = (rows, stats)
+    return rows, stats
 
 
-def _write_manifest(path: str, rows: dict[str, int]) -> str:
+def _write_manifest(
+    path: str, names: list[str], file_rows: dict[str, int], file_stats: dict[str, dict]
+) -> str:
     import uuid
 
     import pyarrow as pa
@@ -317,10 +321,14 @@ def _write_manifest(path: str, rows: dict[str, int]) -> str:
     d = _manifest_dir(path)
     os.makedirs(d, exist_ok=True)
     ref = f"m-{uuid.uuid4().hex[:16]}.parquet"
-    names = sorted(rows)
+    names = sorted(names)
     t = pa.table(
-        {"file": names, "rows": [int(rows[n]) for n in names]},
-        schema=pa.schema([("file", pa.string()), ("rows", pa.int64())]),
+        {
+            "file": names,
+            "rows": [int(file_rows[n]) for n in names],
+            "stats": [json.dumps(file_stats[n]) if n in file_stats else None for n in names],
+        },
+        schema=pa.schema([("file", pa.string()), ("rows", pa.int64()), ("stats", pa.string())]),
     )
     pq.write_table(t, os.path.join(d, ref))
     return ref
@@ -328,8 +336,8 @@ def _write_manifest(path: str, rows: dict[str, int]) -> str:
 
 def _resolve_record(path: str, record: dict) -> dict:
     """A PLAIN record passes through; a SHARDED one (manifest_refs)
-    materializes files/file_rows from its manifests minus the removed
-    list. Cached by the resolution INPUTS (path, refs, removed) —
+    materializes files/file_rows/file_stats from its manifests minus
+    the removed list. Cached by the resolution INPUTS (path, refs, removed) —
     always sound (two records with equal inputs resolve identically,
     whatever chain or lake incarnation they belong to), and a branch
     fork that copies main's refs verbatim is a cache HIT."""
@@ -341,18 +349,20 @@ def _resolve_record(path: str, record: dict) -> dict:
         tuple(record.get("removed_files") or ()),
     )
     hit = _SNAP_RESOLVE_CACHE.get(key)
-    if hit is not None:
-        return {**record, "files": hit[0], "file_rows": hit[1]}
-    rows: dict[str, int] = {}
-    for ref in record["manifest_refs"]:
-        rows.update(_manifest_rows(path, ref))
-    removed = set(record.get("removed_files") or [])
-    files = sorted(set(rows) - removed)
-    file_rows = {n: rows[n] for n in files}
-    if len(_SNAP_RESOLVE_CACHE) > 64:
-        _SNAP_RESOLVE_CACHE.clear()
-    _SNAP_RESOLVE_CACHE[key] = (files, file_rows)
-    return {**record, "files": files, "file_rows": file_rows}
+    if hit is None:
+        rows: dict[str, int] = {}
+        stats: dict[str, dict] = {}
+        for ref in record["manifest_refs"]:
+            ref_rows, ref_stats = _manifest_rows(path, ref)
+            rows.update(ref_rows)
+            stats.update(ref_stats)
+        removed = set(record.get("removed_files") or [])
+        files = sorted(set(rows) - removed)
+        hit = (files, {n: rows[n] for n in files}, {n: stats[n] for n in files if n in stats})
+        if len(_SNAP_RESOLVE_CACHE) > 64:
+            _SNAP_RESOLVE_CACHE.clear()
+        _SNAP_RESOLVE_CACHE[key] = hit
+    return {**record, "files": hit[0], "file_rows": hit[1], "file_stats": hit[2]}
 
 
 def snapshot_files(path: str, version: int | str | None = None) -> list[str]:
@@ -415,71 +425,79 @@ def version_as_of(path: str, ts: float) -> int:
     return best
 
 
-# above this many NEW files in one commit, per-file row counts come
-# from ONE distributed job over the staged footers instead of a serial
-# driver loop (a 10k-file ingest commit must not pay 10k serial opens)
+# above this many NEW files in one commit, the footers are read by
+# ONE distributed job over the staged files instead of a serial driver
+# loop (a 10k-file ingest commit must not pay 10k serial opens)
 _FOOTER_JOB_THRESHOLD = 64
 
 
-def _file_row_counts(
+def _footer_meta(
     path: str, names: list[str], spark: SparkSession | None = None
-) -> dict[str, int]:
-    """Per-file parquet row counts for ``names`` (relative to ``path``)
-    — footer metadata only, never data pages. Small batches read
-    serially on the driver (O(delta), the common commit); above
-    ``_FOOTER_JOB_THRESHOLD`` files with a session available, the
-    footers are opened in ONE distributed job (the
-    ``save_scan_manifest`` pattern), so a wide ingest commit's
-    metadata harvest parallelizes across executors."""
+) -> tuple[dict[str, int], dict[str, dict]]:
+    """(file -> parquet row count, file -> column stats) for ``names``
+    (relative to ``path``) from ONE footer open per file, never data
+    pages; the stats are ``layout._footer_stats`` over every column,
+    keyed by physical name. Small batches read serially on the driver
+    (O(delta), the common commit); above ``_FOOTER_JOB_THRESHOLD``
+    files with a session available, the footers are opened in ONE
+    distributed job, so a wide ingest commit's metadata harvest
+    parallelizes across executors."""
     if spark is not None and len(names) > _FOOTER_JOB_THRESHOLD:
-        return _file_row_counts_job(path, names, spark)
+        return _footer_meta_job(path, names, spark)
     import pyarrow.parquet as pq
 
-    return {
-        n: int(pq.ParquetFile(_store().data_path(path, n)).metadata.num_rows)
-        for n in names
-    }
+    rows, stats = {}, {}
+    for n in names:
+        md = pq.ParquetFile(_store().data_path(path, n)).metadata
+        rows[n] = int(md.num_rows)
+        stats[n] = _footer_stats(md)
+    return rows, stats
 
 
-def _file_row_counts_job(
+def _footer_meta_job(
     path: str, names: list[str], spark: SparkSession
-) -> dict[str, int]:
+) -> tuple[dict[str, int], dict[str, dict]]:
     sc = spark.sparkContext
     # executor-openable locations come from the store (POSIX: a join;
     # an object-store impl returns URIs pyarrow opens directly)
     pairs = [(n, _store().data_path(path, n)) for n in names]
     n_slices = max(1, min(len(pairs) // 16 + 1, sc.defaultParallelism))
 
-    def _counts(it):
+    def _meta(it):
         import pyarrow.parquet as pq
 
         for rel, full in it:
-            yield rel, int(pq.ParquetFile(full).metadata.num_rows)
+            md = pq.ParquetFile(full).metadata
+            yield rel, int(md.num_rows), _footer_stats(md)
 
-    return dict(sc.parallelize(pairs, n_slices).mapPartitions(_counts).collect())
+    got = sc.parallelize(pairs, n_slices).mapPartitions(_meta).collect()
+    return {n: r for n, r, _ in got}, {n: st for n, _, st in got}
 
 
-def _files_repr(path: str, prev: dict, files: list[str], file_rows: dict[str, int]) -> dict:
-    """The files/file_rows legs of a snapshot or branch record: plain
-    below the shard threshold; above it, the parent's immutable
-    manifests are reused, one delta manifest covers files they don't,
-    the rest subtracts via removed_files, and the set compacts to a
-    single fresh manifest when refs or dead weight pile up (X47)."""
+def _files_repr(
+    path: str, prev: dict, files: list[str], file_rows: dict[str, int], file_stats: dict
+) -> dict:
+    """The files/file_rows/file_stats legs of a snapshot or branch
+    record: plain below the shard threshold; above it, the parent's
+    immutable manifests are reused, one delta manifest covers files
+    they don't, the rest subtracts via removed_files, and the set
+    compacts to a single fresh manifest when refs or dead weight pile
+    up (X47)."""
     if len(files) <= _MANIFEST_SHARD_THRESHOLD:
-        return {"files": sorted(files), "file_rows": dict(file_rows)}
+        return {"files": sorted(files), "file_rows": dict(file_rows), "file_stats": dict(file_stats)}
     refs = list(prev.get("manifest_refs") or [])
-    covered: dict[str, int] = {}
+    covered: set[str] = set()
     for ref in refs:
-        covered.update(_manifest_rows(path, ref))
-    fresh = {n: file_rows[n] for n in files if n not in covered}
+        covered.update(_manifest_rows(path, ref)[0])
+    fresh = [n for n in files if n not in covered]
     if fresh:
-        refs.append(_write_manifest(path, fresh))
+        refs.append(_write_manifest(path, fresh, file_rows, file_stats))
         covered.update(fresh)
-    removed = sorted(set(covered) - set(files))
+    removed = sorted(covered - set(files))
     if len(refs) > _MANIFEST_MAX_REFS or len(removed) > max(
         _MANIFEST_SHARD_THRESHOLD // 4, len(files) // 2
     ):
-        refs = [_write_manifest(path, {n: file_rows[n] for n in files})]
+        refs = [_write_manifest(path, files, file_rows, file_stats)]
         removed = []
     return {"manifest_refs": refs, "removed_files": removed, "n_files": len(files)}
 
@@ -499,7 +517,7 @@ def commit_snapshot(
     spark: SparkSession | None = None,
     phys: dict[str, str] | None = None,
     branch: str | None = None,
-    _new_rows: dict[str, int] | None = None,
+    _new_meta: tuple[dict[str, int], dict[str, dict]] | None = None,
 ) -> int:
     """Commit ``files`` as the next version of a ref — main, or the
     WAP branch ``branch``. The one record builder of both chains.
@@ -511,12 +529,17 @@ def commit_snapshot(
     commit path passes ``parent`` (round 12) — a stale plan can never
     silently build over a concurrent commit.
 
-    Every commit also carries ``file_rows`` — per-file row counts,
-    inherited from the parent for carried-over files and read from the
-    parquet FOOTER for files new to this commit (O(delta) metadata
-    reads; ``_new_rows`` passes counts a retrying caller already read).
-    ``COUNT(*)`` on a snapshot lake is therefore a pure metadata sum at
-    any version, Iceberg-style.
+    Every commit also carries ``file_rows`` (per-file row counts) and
+    ``file_stats`` (per-file {"min", "max", "nulls"} column stats keyed
+    by physical name, ``layout._footer_stats``), inherited from the
+    parent for carried-over files and read from ONE footer open for
+    files new to this commit (O(delta) metadata reads; ``_new_meta``
+    passes the (rows, stats) a caller already holds). ``COUNT(*)`` on
+    a snapshot lake is therefore a pure metadata sum at any version,
+    and DML, OPTIMIZE and publish plan without opening a footer (the
+    Delta ``add.stats`` / Iceberg manifest-bounds shape). Files carried
+    over from records written before the stats leg have no
+    ``file_stats`` entry; readers fall back to their footers.
 
     Every other record key is INHERITED from the head unless the
     commit passes it; an empty value blocks inheritance (a truncating
@@ -552,11 +575,14 @@ def commit_snapshot(
             f"planned against v{parent} but head is v{head} — re-plan and retry"
         )
     prev = _ref_info(path, head, branch) if head is not None else {}
-    known = {**(_new_rows or {}), **prev.get("file_rows", {})}
-    file_rows = {n: known[n] for n in files if n in known}
-    fresh = [n for n in files if n not in known]
+    new_rows, new_stats = _new_meta or ({}, {})
+    known_rows = {**new_rows, **prev.get("file_rows", {})}
+    known_stats = {**new_stats, **prev.get("file_stats", {})}
+    fresh = [n for n in files if n not in known_rows]
     if fresh:
-        file_rows.update(_file_row_counts(path, fresh, spark))
+        fresh_rows, fresh_stats = _footer_meta(path, fresh, spark)
+        known_rows.update(fresh_rows)
+        known_stats.update(fresh_stats)
     record = {
         "version": (head or 0) + 1,
         "parent": head,
@@ -564,7 +590,9 @@ def commit_snapshot(
         "ts": time.time(),
         "summary": summary or {},
     }
-    record.update(_files_repr(path, prev, files, file_rows))
+    live_rows = {n: known_rows[n] for n in files if n in known_rows}
+    live_stats = {n: known_stats[n] for n in files if n in known_stats}
+    record.update(_files_repr(path, prev, files, live_rows, live_stats))
     given = {
         "schema": schema_json,
         "renames": renames,
@@ -635,7 +663,7 @@ def _commit_append(
     this raises instead of retrying (a real schema-evolution conflict
     — the caller re-plans, same contract as the DDL paths' parent
     assertion)."""
-    new_rows = _file_row_counts(path, list(new_files), spark)
+    new_meta = _footer_meta(path, list(new_files), spark)
     for attempt in range(_COMMIT_RETRIES + 1):
         head, cur = _head(path, branch)
         if require_meta is not None and head:
@@ -661,7 +689,7 @@ def _commit_append(
                 spark=spark,
                 phys=phys,
                 branch=branch,
-                _new_rows=new_rows,
+                _new_meta=new_meta,
             )
         except SnapshotConflictError:
             if attempt == _COMMIT_RETRIES:
@@ -688,6 +716,7 @@ def _commit_filechange(
     require_schema: str | None = None,
     phys: dict[str, str] | None = None,
     branch: str | None = None,
+    added_meta: tuple[dict[str, int], dict[str, dict]] | None = None,
 ) -> int:
     """Commit a DML/OPTIMIZE-shaped change on a ref, planned against
     ``planned_head``: drop ``removed`` from the live set, add
@@ -698,8 +727,10 @@ def _commit_filechange(
     new head's live set — equivalent to the serial order "this op
     first, the concurrent commit after". A removed file missing from
     the new head is a REAL write-write conflict (both ops touched the
-    same rows): raise, the caller must re-plan. The added files'
-    footers are read once, before the loop.
+    same rows): raise, the caller must re-plan. ``added_meta`` is the
+    (rows, stats) the caller already holds for added files (a rewrite
+    that counted its output, a branch head's record); the footers of
+    the other added files are read once, before the loop.
 
     Deletion-vector commits (round 13 — ADVICE r12 #1) pass their mask
     as a DELTA, never an absolute list: ``dv_add`` names the new
@@ -736,7 +767,11 @@ def _commit_filechange(
     monotonically. Every comparison goes through ``_dv_rows_by_file``/
     ``_dv_key_files``, so legacy basename keys resolve (or refuse)
     the same way the reader does."""
-    new_rows = _file_row_counts(path, sorted(added), spark)
+    known_rows, known_stats = added_meta or ({}, {})
+    new_rows, new_stats = _footer_meta(
+        path, sorted(n for n in added if n not in known_rows), spark
+    )
+    new_meta = ({**known_rows, **new_rows}, {**known_stats, **new_stats})
     expect = planned_head
     plan_dvr_lazy = planned_dv_rows
     for attempt in range(_COMMIT_RETRIES + 1):
@@ -862,7 +897,7 @@ def _commit_filechange(
                 dropped_names=dropped_names,
                 phys=phys,
                 branch=branch,
-                _new_rows=new_rows,
+                _new_meta=new_meta,
             )
         except SnapshotConflictError:
             if attempt == _COMMIT_RETRIES:
@@ -1282,6 +1317,8 @@ def lake_rollback(path: str, version: int) -> int:
         dv_files=info.get("dv_files") or {},
         dropped_names=info.get("dropped_names") or [],
         phys=info.get("phys") or {},
+        # the target's own record holds the restored files' metadata
+        _new_meta=(info.get("file_rows") or {}, info.get("file_stats") or {}),
     )
 
 
@@ -1545,6 +1582,8 @@ def vacuum_lake(
     # keep_last until lake_untag releases it
     tagged = set(lake_tags(path).values())
     retained = sorted(set(vs[-keep_last:]) | (tagged & set(vs)))
+    # every main record is read exactly once, for both passes below
+    infos = {v: snapshot_info(path, v) for v in vs}
     if retain_s is not None:
         # time-based retention (round 13, Iceberg expire_snapshots'
         # older_than shape): every version committed within the window
@@ -1552,8 +1591,7 @@ def vacuum_lake(
         # composing with keep_last and tags (union, never narrower)
         cutoff_ts = time.time() - retain_s
         retained = sorted(
-            set(retained)
-            | {v for v in vs if snapshot_info(path, v)["ts"] >= cutoff_ts}
+            set(retained) | {v for v in vs if infos[v]["ts"] >= cutoff_ts}
         )
     # ONE pass over the records: every main version (files ever
     # referenced), and — retained alongside — the retained versions
@@ -1567,7 +1605,7 @@ def vacuum_lake(
     man_referenced: set[str] = set()
     kept_infos = []
     for v in vs:
-        info = snapshot_info(path, v)
+        info = infos[v]
         ever_referenced.update(info["files"])
         if v in retained:
             kept_infos.append(info)
@@ -1717,48 +1755,30 @@ def _all_rows_match(
     return True
 
 
-def _lake_file_stats(
-    spark: SparkSession | None,
-    path: str,
-    cols: list[str],
-    scan_manifest: str | None,
-    files: list[str] | None = None,
-) -> list[dict]:
-    """Per-live-file stats in ``file_stats``'s dict shape, sourced from
-    the SCAN MANIFEST when one is given (no footer opens for
-    manifest-known files); unknown files stat from their own footer
-    (O(delta)). ``files`` overrides the inventory (round 13 — branch
-    DML classifies over the BRANCH head's live set)."""
-    live = files if files is not None else _data_files(path)
-    if scan_manifest is None or spark is None or not cols:
-        return file_stats(path, cols, live)
-    mf = spark.read.option("mergeSchema", "true").parquet(scan_manifest)
-    by_file: dict[str, dict] = {}
-    rows_by_file: dict[str, int] = {}
-    for r in mf.filter(F.col("col").isin(list(cols))).collect():
-        rows_by_file[r.file] = int(r.rows)
-        d = by_file.setdefault(r.file, {"min": {}, "max": {}, "nulls": {}})
-        if r.lo is not None and r.hi is not None:
-            d["min"][r.col] = float(r.lo)
-            d["max"][r.col] = float(r.hi)
-        nc = getattr(r, "nulls", None) if "nulls" in mf.columns else None
-        d["nulls"][r.col] = int(nc) if nc is not None else None
-    known = set(rows_by_file)
+def _lake_file_stats(path: str, cols: list[str], info: dict) -> list[dict]:
+    """Stats of the files of record ``info`` (its ``files``) in
+    ``file_stats``'s dict shape, sorted by file: the record's own
+    ``file_stats`` entry (every column, folded at commit from the footer
+    that also gave ``file_rows``), or — for files the record has no
+    entry for (records written before the stats leg, plain parquet
+    dirs) — the file's footer, folded over ``cols``."""
+    rows = info.get("file_rows") or {}
+    stats = info.get("file_stats") or {}
     out = [
-        {"file": n, "rows": rows_by_file[n], **by_file[n]}
-        for n in live
-        if n in known
+        {"file": n, "rows": int(rows[n]), **stats[n]}
+        for n in info["files"]
+        if n in stats and n in rows
     ]
-    unknown = [n for n in live if n not in known]
-    if unknown:
-        out.extend(file_stats(path, cols, unknown))
+    missing = [n for n in info["files"] if n not in stats or n not in rows]
+    if missing:
+        out.extend(file_stats(path, cols, missing))
     return sorted(out, key=lambda fs: fs["file"])
 
 
 def _phys_keyed(struct, phys: dict[str, str]):
     """Re-key a column-keyed extraction structure (dict, or nested
     tuple/list of dicts) from LOGICAL to PHYSICAL names (round 14 —
-    column mapping). Footer and manifest stats are keyed by the
+    column mapping). Footer and record stats are keyed by the
     PHYSICAL parquet column name; consulting them under a remapped
     logical name would read a dead column's stats (e.g. the dropped
     ``x`` a live re-added ``x`` replaced) and mis-classify files.
@@ -1774,26 +1794,22 @@ def _phys_keyed(struct, phys: dict[str, str]):
 
 
 def _classify_for_delete(
-    path: str,
-    predicate: str,
-    col_types: dict | None,
-    spark: SparkSession | None = None,
-    scan_manifest: str | None = None,
-    files: list[str] | None = None,
-    phys: dict[str, str] | None = None,
+    path: str, predicate: str, col_types: dict | None, info: dict
 ) -> tuple[list[str], list[str], list[str]]:
-    """(drop, keep, rewrite) — the three-way file classification behind
-    ``lake_delete``/``lake_update``, decided from stats + partition
-    values only. With a registered scan manifest (round 11) the stats
-    come from ITS rows — zero footer opens for manifest-known files,
-    the difference between O(manifest scan) and O(open 100k footers)
-    at scale; files the manifest hasn't seen fall back to their own
-    footer. Unparseable predicates classify everything as rewrite
-    (correct, just unpruned)."""
+    """(drop, keep, rewrite) — the three-way classification of the
+    files of record ``info`` (a ref's head; ``{"files": [...]}`` for a
+    plain parquet dir) behind ``lake_delete``/``lake_update``/
+    ``lake_explain_delete``, decided from stats + partition values
+    only. The stats are the record's per-file ``file_stats`` — zero
+    footer opens, the difference between O(record) and O(open 100k
+    footers) at scale; files without an entry fall back to their own
+    footer (``_lake_file_stats``). Unparseable predicates classify
+    everything as rewrite (correct, just unpruned)."""
     from ..catalog import _extract_exact_clauses, _extract_skip_branches
 
     branches = _extract_skip_branches(predicate, col_types)
     exact = _extract_exact_clauses(predicate, col_types)
+    phys = info.get("phys")
     # column mapping (round 14): classification consults stats by the
     # PHYSICAL parquet name — a remapped logical column's stats exist
     # only in files written since its allocation, so older files (and
@@ -1808,11 +1824,9 @@ def _classify_for_delete(
         cols |= set(box) | set(equals) | set(nots) | set(nullness)
     if exact is not None:
         cols |= set(exact[0]) | set(exact[1])
-    inv = files if files is not None else _data_files(path)
-    stats = _lake_file_stats(
-        spark, path, sorted(cols), scan_manifest, files=inv
-    ) if cols else [
-        {"file": n, "min": {}, "max": {}, "nulls": {}, "rows": 0} for n in inv
+    stats = _lake_file_stats(path, sorted(cols), info) if cols else [
+        {"file": n, "min": {}, "max": {}, "nulls": {}, "rows": 0}
+        for n in sorted(info["files"])
     ]
     drop, keep, rewrite = [], [], []
     for fs in stats:
@@ -1848,13 +1862,13 @@ def lake_delete(
     path: str,
     predicate: str,
     col_types: dict | None = None,
-    scan_manifest: str | None = None,
     use_dv: bool = False,
     branch: str | None = None,
 ) -> dict:
-    """SQL DELETE over a snapshot lake, pruned to the boundary surface:
+    """SQL DELETE over a snapshot lake, pruned to the boundary surface
+    from the head record's per-file stats (no footer opened):
 
-    * files whose footers PROVE every row matches (closed box fully
+    * files whose stats PROVE every row matches (closed box fully
       containing [min, max], zero nulls; partition-value string
       equality) leave the snapshot WITHOUT being opened;
     * files provably containing no matching row keep their bytes;
@@ -1875,7 +1889,12 @@ def lake_delete(
 
     Old bytes stay on disk for time travel until ``vacuum_lake``.
     Returns the commit report (version, files dropped/kept/rewritten,
-    rows_deleted).
+    rows_deleted). ``rows_deleted`` is metadata arithmetic: the live
+    rows (``file_rows`` minus masked rows) of the dropped and rewritten
+    files minus the footer rows of the files the rewrite wrote — the
+    footers the commit reads anyway, each opened once. A registered
+    scan manifest is maintained by ``catalog.lake_delete_where``, not
+    here.
 
     ``branch`` (round 13 — DML ON BRANCHES): run the same pruned
     delete against a WAP branch's head instead of main, committing on
@@ -1885,10 +1904,7 @@ def lake_delete(
     file changes (and DV deltas) through the usual protocol."""
     head, head_info = _dml_head(path, branch)
     live = sorted(head_info["files"])
-    drop, keep, rewrite = _classify_for_delete(
-        path, predicate, col_types, spark, scan_manifest, files=live,
-        phys=head_info.get("phys"),
-    )
+    drop, keep, rewrite = _classify_for_delete(path, predicate, col_types, head_info)
     prev_rows = head_info.get("file_rows", {})
     prev_dv_rows = head_info.get("dv_rows", {})
     masked_before = _dv_rows_by_file(prev_dv_rows, live)
@@ -1956,8 +1972,6 @@ def lake_delete(
             spark=spark,
             branch=branch,
         )
-        if branch is None:
-            _maintain_manifest(spark, path, scan_manifest)
         return {
             "version": version,
             "files_dropped": len(drop),
@@ -1968,6 +1982,7 @@ def lake_delete(
             "rows_deleted": rows_dropped + dv_count,
         }
     new_files: list[str] = []
+    new_meta: tuple[dict[str, int], dict[str, dict]] = ({}, {})
     rows_deleted = 0
     if rewrite:
         # authoritative-schema read (round 12): a rewrite set spanning
@@ -1977,16 +1992,15 @@ def lake_delete(
         # materialized
         src = _read_files(spark, path, sorted(rewrite), head_info)
         kept_rows = src.filter(f"NOT ({predicate}) OR ({predicate}) IS NULL")
-        before = src.count()
         new_files = _write_new_files(kept_rows, path, _partition_cols(rewrite), info=head_info)
-        after_df = (
-            spark.read.option("basePath", path).parquet(
-                *[os.path.join(path, n) for n in new_files]
-            )
-            if new_files
-            else None
-        )
-        rows_deleted += before - (after_df.count() if after_df is not None else 0)
+        # rows in (live rows of the rewritten files) minus rows out
+        # (the new files' footers, handed on to the commit)
+        new_meta = _footer_meta(path, new_files, spark)
+        if all(n in prev_rows for n in rewrite):
+            before = sum(int(prev_rows[n]) - masked_before.get(n, 0) for n in rewrite)
+        else:
+            before = src.count()  # a record from before per-file row counts
+        rows_deleted = before - sum(new_meta[0].values())
     # rows_dropped was computed above from the parent commit's metadata
     # (never the files' bytes — they were classified unopened)
     version = _commit_filechange(
@@ -2004,9 +2018,8 @@ def lake_delete(
         },
         spark=spark,
         branch=branch,
+        added_meta=new_meta,
     )
-    if branch is None:
-        _maintain_manifest(spark, path, scan_manifest)
     return {
         "version": version,
         "files_dropped": len(drop),
@@ -2023,12 +2036,11 @@ def lake_merge(
     source: DataFrame,
     key: str,
     when_matched: str = "update",
-    scan_manifest: str | None = None,
     branch: str | None = None,
 ) -> dict:
     """MERGE INTO the lake by ``key``, rewriting ONLY candidate files:
 
-    * candidates = live files whose footer [min, max] on ``key`` can
+    * candidates = live files whose recorded [min, max] on ``key`` can
       contain a source key (per-key interval probe when the distinct
       source key set is small, one wide box otherwise; files without
       key stats are always candidates);
@@ -2042,7 +2054,10 @@ def lake_merge(
     of today's delta into a key-clustered lake touches the delta's key
     range, not the table. Source must carry exactly the lake's columns
     (upsert replaces whole rows; schema drift is an error, not a
-    guess)."""
+    guess). The key stats come from the head record (``file_stats``),
+    not the footers; a registered scan manifest is maintained by
+    ``catalog.lake_merge_into``. ``branch``: merge into a WAP branch's
+    head (see lake_delete)."""
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be 'update' or 'delete', got {when_matched!r}")
     head, head_info = _dml_head(path, branch)
@@ -2079,14 +2094,11 @@ def lake_merge(
             nums = [float(row.lo), float(row.hi)]
     import bisect
 
-    # column mapping (round 14): footer/manifest stats key by the
-    # PHYSICAL name — probe under it so a renamed key keeps its
-    # pruning (files without the physical stat stay candidates)
+    # column mapping (round 14): record stats key by the PHYSICAL
+    # name — probe under it so a renamed key keeps its pruning (files
+    # without the physical stat stay candidates)
     pkey = (head_info.get("phys") or {}).get(key, key)
-    stats = {
-        fs["file"]: fs
-        for fs in _lake_file_stats(spark, path, [pkey], scan_manifest, files=live)
-    }
+    stats = {fs["file"]: fs for fs in _lake_file_stats(path, [pkey], head_info)}
     candidates, untouched = [], []
     for n in live:
         fs = stats.get(n)
@@ -2131,8 +2143,6 @@ def lake_merge(
         path, head, removed=set(candidates), added=set(new_files),
         op="merge", summary=summary, spark=spark, branch=branch,
     )
-    if branch is None:
-        _maintain_manifest(spark, path, scan_manifest)
     return {
         "version": version,
         "files_candidates": len(candidates),
@@ -2371,31 +2381,12 @@ def lake_stats(path: str) -> dict:
     }
 
 
-def _maintain_manifest(spark: SparkSession, path: str, scan_manifest: str | None) -> None:
-    """In-call scan-manifest maintenance for the DML ops (mirrors
-    optimize_clustered's round-11 leg): GC rows whose files left the
-    live set, then stat the files the op wrote — O(changed files).
-    Columns come from the manifest itself (its distinct ``col`` set),
-    so callers pass only the path."""
-    if scan_manifest is None:
-        return
-    from .layout import append_scan_manifest, compact_scan_manifest
-
-    mf = spark.read.option("mergeSchema", "true").parquet(scan_manifest)
-    cols = [r.col for r in mf.select("col").distinct().collect()]
-    compact_scan_manifest(spark, path, scan_manifest)
-    if cols:
-        append_scan_manifest(spark, path, cols, scan_manifest)
-
-
-
 def lake_update(
     spark: SparkSession,
     path: str,
     assignments: dict[str, str],
     predicate: str,
     col_types: dict | None = None,
-    scan_manifest: str | None = None,
     branch: str | None = None,
 ) -> dict:
     """SQL ``UPDATE ... SET col = expr WHERE predicate`` over a
@@ -2409,14 +2400,14 @@ def lake_update(
     Updating a partition column moves rows between directories
     naturally (the rewrite writes through partitionBy).
 
+    The classification reads the head record's per-file stats, as
+    ``lake_delete``'s does; a registered scan manifest is maintained by
+    ``catalog.lake_update_where``.
+
     ``branch`` (round 13): apply the update on a WAP branch's head —
     same pruning, committed on the branch chain (see lake_delete)."""
     head, head_info = _dml_head(path, branch)
-    allmatch, keep, boundary = _classify_for_delete(
-        path, predicate, col_types, spark, scan_manifest,
-        files=sorted(head_info["files"]),
-        phys=head_info.get("phys"),
-    )
+    allmatch, keep, boundary = _classify_for_delete(path, predicate, col_types, head_info)
     to_rewrite = sorted(set(allmatch) | set(boundary))
     new_files: list[str] = []
     if to_rewrite:
@@ -2443,8 +2434,6 @@ def lake_update(
         path, head, removed=set(to_rewrite), added=set(new_files),
         op="update", summary=summary, spark=spark, branch=branch,
     )
-    if branch is None:
-        _maintain_manifest(spark, path, scan_manifest)
     return {
         "version": version,
         "files_untouched": len(keep),
@@ -2548,7 +2537,9 @@ def lake_branch_create(path: str, name: str, from_version: int | str | None = No
     # a sharded main fork copies manifest REFS verbatim (zero manifest
     # writes, zero file-list bytes); a plain main embeds the list
     record.update(
-        _files_repr(path, info, info["files"], info.get("file_rows", {}))
+        _files_repr(
+            path, info, info["files"], info.get("file_rows", {}), info.get("file_stats", {})
+        )
     )
     for k in ("schema", "renames", "dvs", "dv_rows", "dv_files", "dropped_names", "phys"):
         if info.get(k):
@@ -2724,6 +2715,9 @@ def lake_publish_branch(
         dropped_names=(info.get("dropped_names") or []) if evolved else None,
         phys=(info.get("phys") or {}) if evolved else None,
         require_schema=fork_schema if evolved else None,
+        # the branch head's record already holds the staged files'
+        # rows and stats: publish opens no footer
+        added_meta=(info.get("file_rows") or {}, info.get("file_stats") or {}),
     )
     if drop:
         # conditional drop (round 14): destroy the branch only if its

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.numeric import cents, dec, dsum, wmoney, wsum
-from ..operators.relational import asof_latest, band_range_join, median_exact, top_k_per_group
+from ..operators.relational import asof_latest, band_range_join, median_exact
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -635,39 +635,6 @@ def q17_asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return asof.unionByName(band).orderBy("part", "key_a", "key_b")
-
-
-# ---------------------------------------------------------------------------
-# Q18 — small cross join + top-k per group (J9, O3)
-# ---------------------------------------------------------------------------
-
-_Q18_SQL = """
-SELECT nation, r_name AS region, score
-FROM (
-  SELECT n.n_name AS nation, r.r_name,
-         (n.n_nationkey * 7 + r.r_regionkey * 13) % 19 AS score,
-         ROW_NUMBER() OVER (PARTITION BY n.n_name
-                            ORDER BY (n.n_nationkey * 7 + r.r_regionkey * 13) % 19 DESC,
-                                     r.r_name) AS rn
-  FROM nation n CROSS JOIN region r
-)
-WHERE rn <= 2
-ORDER BY nation, score DESC, region
-"""
-
-
-# retired from the registry (J9/O3 are covered by q36's oracled kNN join;
-# the window covers q20): kept as an importable helper for tests
-def crossjoin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    scored = nation.crossJoin(F.broadcast(region)).select(
-        F.col("n_name").alias("nation"),
-        F.col("r_name").alias("region"),
-        ((F.col("n_nationkey") * 7 + F.col("r_regionkey") * 13) % 19).alias("score"),
-    )
-    topk = top_k_per_group(scored, ["nation"], [F.col("score").desc(), F.col("region").asc()], k=2)
-    return topk.select("nation", "region", "score").orderBy("nation", F.col("score").desc(), "region")
 
 
 # ---------------------------------------------------------------------------

@@ -359,10 +359,13 @@ def shard_manifest(spark: SparkSession, data_path: str) -> DataFrame:
     shard write commits."""
     from pyspark.sql import functions as F
 
-    # input_file_name() returns a file:///-style URL, the FS listing a
-    # file:/-style path, and one dynamic-partition task reuses the SAME
-    # part basename in every partition dir it writes — so the join key
-    # is the full path normalized to a bare /-rooted form on both sides
+    from ..operators.layout import _decoded_uri
+
+    # input_file_name() returns a percent-encoded file:///-style URI,
+    # the FS listing a decoded file:/-style path, and one
+    # dynamic-partition task reuses the SAME part basename in every
+    # partition dir it writes — so the join key is the full decoded
+    # path normalized to a bare /-rooted form on both sides
     norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
     jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
@@ -384,7 +387,7 @@ def shard_manifest(spark: SparkSession, data_path: str) -> DataFrame:
         return spark.createDataFrame([], "file STRING, n_rows BIGINT, bytes BIGINT")
     counts = (
         spark.read.parquet(data_path.rstrip("/"))
-        .groupBy(norm(F.input_file_name()).alias("path"))
+        .groupBy(norm(_decoded_uri(F.input_file_name())).alias("path"))
         .agg(F.count("*").alias("n_rows"))
     )
     size_df = spark.createDataFrame(sizes, "file STRING, bytes BIGINT").withColumn(

@@ -29,18 +29,20 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # independent of pytest. Regenerate the list from a full `--durations`
 # run when the suite's shape changes.
 FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
-_SLOW_LIST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "slow_tests.txt")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SLOW_LIST = os.path.join(_ROOT, "tests", "slow_tests.txt")
 
 
-def _slow_ids() -> set[tuple[str, str]]:
+def _slow_ids() -> set[str]:
+    """The entries of ``slow_tests.txt``: ``<path>::<test>``, the path
+    relative to the repo root (so two test files with one basename in
+    different directories never share an entry)."""
     out = set()
     with open(_SLOW_LIST) as f:
         for line in f:
             line = line.strip()
-            if not line or line.startswith("#"):
-                continue
-            path, _, test = line.partition("::")
-            out.add((os.path.basename(path), test))
+            if line and not line.startswith("#"):
+                out.add(line)
     return out
 
 
@@ -59,8 +61,9 @@ def pytest_collection_modifyitems(config, items):
         reason="slow sweep; SPARK_GRAFT_FULL_TESTS=1 runs the full suite"
     )
     for item in items:
-        path, _, test = item.nodeid.partition("::")
-        if "slow" in item.keywords or (os.path.basename(path), test) in slow:
+        _, _, test = item.nodeid.partition("::")
+        rel = os.path.relpath(str(item.path), _ROOT).replace(os.sep, "/")
+        if "slow" in item.keywords or f"{rel}::{test}" in slow:
             item.add_marker(skip)
 
 

@@ -629,6 +629,24 @@ def test_shard_manifest_includes_zero_row_files(spark, tmp_path):
     assert len(m) == 2
 
 
+def test_shard_manifest_counts_escaped_partition_leaves(spark, tmp_path):
+    """``input_file_name()`` is percent-encoded and the listing is not:
+    leaves whose value holds a space (``s=a b``) or a character Hive
+    escapes on disk (``s=c%3Ad``) must still get their row counts."""
+    from mlb_data_pipeline_spark.sources.writers import shard_manifest
+
+    path = str(tmp_path / "rel")
+    rows = [(i, s) for s in ("a b", "c:d", "e") for i in range(10)]
+    (
+        spark.createDataFrame(rows, "id BIGINT, s STRING")
+        .repartition(1)
+        .write.partitionBy("s")
+        .parquet(path)
+    )
+    m = {r.file.split("/")[-2]: r.n_rows for r in shard_manifest(spark, path).collect()}
+    assert m == {"s=a b": 10, "s=c%3Ad": 10, "s=e": 10}
+
+
 def test_write_partitioned_static_clears_stale_partitions(spark, tmp_path):
     """A shard release rerun with fewer shards must not leave stale
     shard dirs behind (dynamic overwrite would — and the manifest

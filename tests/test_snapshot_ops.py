@@ -362,12 +362,15 @@ def test_partitioned_optimize_jobs_do_not_grow_with_leaves(spark, tmp_path):
 
 
 def test_optimize_refuses_partitioned_lake_with_deletion_vectors(spark, tmp_path):
-    """Masks are keyed by file basename, which repeats across leaf
-    directories, so OPTIMIZE on a partitioned lake with live deletion
-    vectors raises instead of guessing which file a mask meant."""
+    """Records written before lake-relative mask keys keyed masks by
+    file basename, which repeats across leaf directories, so OPTIMIZE
+    on a partitioned lake with live deletion vectors raises instead of
+    guessing which file a mask meant. One write task makes each leaf
+    one file spanning every k, so the delete is a boundary delete and
+    writes a mask at any core count."""
     lake = str(tmp_path / "lake")
     df = _kv(spark, 0, 400).withColumn("p", (F.col("k") % 2).cast("long"))
-    lake_write(spark, df, lake, partition_by=["p"])
+    lake_write(spark, df.repartition(1), lake, partition_by=["p"])
     lake_delete(
         spark, lake, "k BETWEEN 100 AND 149", col_types={"k": "bigint"}, use_dv=True
     )
@@ -789,29 +792,23 @@ def test_tags_resolve_and_survive_vacuum(spark, tmp_path):
 
 
 def test_dml_maintains_registered_manifest(spark, tmp_path):
-    """DML with scan_manifest= GC's rows for departed files and stats
-    the files it wrote in the same call — the metadata count stays
-    exact (and metadata-only for interiors) right after a delete and
-    an update, with no separate day-2 run."""
-    from mlb_data_pipeline_spark.operators.snapshots import lake_update
+    """DML on a registered table GC's the scan manifest's rows for
+    departed files and stats the files it wrote in the same call — the
+    metadata count stays exact (and metadata-only for interiors) right
+    after a delete and an update, with no separate day-2 run."""
+    from mlb_data_pipeline_spark.catalog import lake_delete_where, lake_update_where
 
     lake = str(tmp_path / "lake")
     manifest = str(tmp_path / "manifest")
     lake_write(spark, _kv(spark, 0, 1000).repartitionByRange(4, "k"), lake)
     save_scan_manifest(spark, lake, ["k", "v"], manifest)
     register_lake_table(spark, "t_dml_m", lake, scan_manifest=manifest)
-    lake_delete(
-        spark, lake, "k < 250",
-        col_types={"k": "bigint", "v": "bigint"}, scan_manifest=manifest,
-    )
+    lake_delete_where(spark, "t_dml_m", "k < 250")
     mf = spark.read.option("mergeSchema", "true").parquet(manifest)
     live = set(snapshot_files(lake))
     assert {r.file for r in mf.select("file").distinct().collect()} == live
     assert lake_count(spark, "t_dml_m", "k BETWEEN 300 AND 700") == 401
-    lake_update(
-        spark, lake, {"v": "v + 7"}, "k >= 900",
-        col_types={"k": "bigint", "v": "bigint"}, scan_manifest=manifest,
-    )
+    lake_update_where(spark, "t_dml_m", {"v": "v + 7"}, "k >= 900")
     mf = spark.read.option("mergeSchema", "true").parquet(manifest)
     assert {r.file for r in mf.select("file").distinct().collect()} == set(
         snapshot_files(lake)
@@ -906,14 +903,15 @@ def test_schema_evolution_gated_and_merge_read(spark, tmp_path):
 
 
 def test_dml_classification_from_manifest_zero_footer_opens(spark, tmp_path):
-    """With a scan manifest, DML planning never opens even the FOOTER
-    of a manifest-known file: corrupt an all-match file WHOLESALE
-    (footer included) — footer-driven classification would crash on
-    it; the manifest-driven path drops it metadata-only."""
+    """DML planning never opens even the FOOTER of a file the commit
+    record has stats for: corrupt an all-match file WHOLESALE (footer
+    included) — footer-driven classification would crash on it; the
+    record-driven path drops it metadata-only. No scan manifest is
+    involved: the record is the stats source."""
+    from mlb_data_pipeline_spark.catalog import lake_merge_into
+
     lake = str(tmp_path / "lake")
-    manifest = str(tmp_path / "manifest")
     lake_write(spark, _kv(spark, 0, 1000).repartitionByRange(4, "k"), lake)
-    save_scan_manifest(spark, lake, ["k", "v"], manifest)
     from mlb_data_pipeline_spark.operators.layout import file_stats
 
     covered = [fs["file"] for fs in file_stats(lake, ["k"]) if fs["max"]["k"] < 250]
@@ -922,23 +920,23 @@ def test_dml_classification_from_manifest_zero_footer_opens(spark, tmp_path):
         _corrupt(lake, n)  # WHOLE file, footer included
     rep = lake_delete(
         spark, lake, "k < 250",
-        col_types={"k": "bigint", "v": "bigint"}, scan_manifest=manifest,
+        col_types={"k": "bigint", "v": "bigint"},
     )
     assert rep["files_dropped"] == len(covered)
     cur = read_snapshot(spark, lake)
     assert cur.count() == 750 and cur.agg(F.min("k")).head()[0] == 250
-    # merge candidacy from the manifest too: non-candidate files can
-    # be fully corrupt and the merge still plans around them
+    # merge candidacy from the record too: non-candidate files can be
+    # corrupt and a merge into the registered table still plans around
+    # them
     lake2 = str(tmp_path / "lake2")
-    manifest2 = str(tmp_path / "manifest2")
     lake_write(spark, _kv(spark, 0, 1000).repartitionByRange(4, "k"), lake2)
-    save_scan_manifest(spark, lake2, ["k"], manifest2)
+    register_lake_table(spark, "t_merge_rec", lake2)
     non_cand = [fs["file"] for fs in file_stats(lake2, ["k"]) if fs["min"]["k"] > 520]
     assert non_cand
     for n in non_cand:
         _corrupt_data_pages(lake2, n)  # data pages only: they stay live
     src = spark.createDataFrame([(k, -5) for k in range(500, 510)], KV)
-    rep = lake_merge(spark, lake2, src, "k", scan_manifest=manifest2)
+    rep = lake_merge_into(spark, "t_merge_rec", src, "k")
     assert rep["files_untouched"] >= len(non_cand)
     assert read_snapshot(spark, lake2).filter("v = -5").count() == 10
 
@@ -1091,13 +1089,13 @@ def test_commit_row_counts_distribute_above_threshold(spark, tmp_path, monkeypat
 
     monkeypatch.setattr(S, "_FOOTER_JOB_THRESHOLD", 4)
     calls = {"job": 0}
-    real_job = S._file_row_counts_job
+    real_job = S._footer_meta_job
 
     def spy(path, names, spark_):
         calls["job"] += 1
         return real_job(path, names, spark_)
 
-    monkeypatch.setattr(S, "_file_row_counts_job", spy)
+    monkeypatch.setattr(S, "_footer_meta_job", spy)
     lake = str(tmp_path / "lake")
     df = spark.range(0, 120).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("v")
