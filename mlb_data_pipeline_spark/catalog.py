@@ -147,19 +147,27 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# Lake-table catalog with AUTOMATIC manifest-assisted planning (round 10).
+# Lake-table catalog with AUTOMATIC metadata-planned reads (round 10).
 #
-# pruned_read / bloom_skippable_files (operators/layout.py) are opt-in:
-# a user writing plain ``spark.read.parquet`` gets no file skipping from
-# the manifests they built. Registering a lake table here closes that
-# gap — ``lake_scan(spark, name, predicate)`` derives the box / Bloom
-# probes FROM the predicate itself and routes the read through
-# ``pruned_read`` with no caller opt-in, then applies the exact
-# predicate on top (pruning stays a superset guarantee, so an
-# unparseable conjunct only costs skipping, never rows). This is the
-# Python-side analogue of a Catalyst data-skipping rule: the table
-# registration is the "catalog", the predicate→box extraction is the
-# planning hook.
+# A user writing plain ``spark.read.parquet`` gets no file skipping from
+# the metadata the lake carries. Registering a lake table here closes
+# that gap — ``lake_scan(spark, name, predicate)`` derives skip clauses
+# FROM the predicate itself, plans the read with no caller opt-in, then
+# applies the exact predicate on top (pruning stays a superset
+# guarantee, so an unparseable conjunct only costs skipping, never
+# rows). This is the Python-side analogue of a Catalyst data-skipping
+# rule: the table registration is the "catalog", the predicate→clause
+# extraction is the planning hook.
+#
+# Every read resolves its ref (head, version, as-of timestamp, branch)
+# to ONE ``info`` (``_lake_info``), plans from one stats source
+# (``_lake_stats``: the commit record's per-file stats on a snapshot
+# lake, the registered scan manifest on a plain parquet lake) with one
+# per-file rule (``layout._skip_rules`` / ``layout._all_rows_match``,
+# which snapshot DML uses too), and reads through one reader
+# (``_reader``: on a snapshot lake the record's schema, deletion-vector
+# masks and column mapping hold on every read). Partition values and
+# Bloom manifests prune on both kinds of lake.
 #
 # Supported conjunct shapes (the same fragments a row-group pruner
 # handles): ``col BETWEEN a AND b``, ``col >= a``, ``col > a``,
@@ -167,8 +175,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # string -> Bloom probe when a Bloom manifest is registered for the
 # column), ``col IN (v1, v2, ...)`` (strings -> Bloom IN-list).
 # Date/timestamp literals (bare ISO strings or ``DATE '...'`` /
-# ``TIMESTAMP '...'``) fold to the SAME epoch units the scan manifest
-# stores (epoch days / epoch seconds, layout._stat_num) when the lake
+# ``TIMESTAMP '...'``) fold to the SAME epoch units the stats store
+# (epoch days / epoch seconds, layout._stat_num) when the lake
 # schema says the column is temporal. Top-level ``OR`` prunes with the
 # UNION of per-branch skip decisions (round 11); ``NOT`` still bails to
 # must-read-everything. Anything else contributes no skip clause.
@@ -193,8 +201,16 @@ def register_lake_table(
 ) -> None:
     """Register a parquet lake directory plus its (optional) persisted
     manifests under ``name``. Scoped per application like the table
-    cache — a restarted session re-registers. ``ndv_manifest`` (round
-    11) carries per-file HLL sketches for ``lake_approx_distinct``."""
+    cache — a restarted session re-registers.
+
+    ``scan_manifest`` is the stats source of a PLAIN parquet lake
+    (``layout.save_scan_manifest``). A snapshot lake plans from the
+    per-file stats of its commit records instead, so its scan manifest
+    is neither read nor maintained — that includes a plain lake whose
+    first DML adopted it into a snapshot lake. ``bloom_manifests``
+    ({col: manifest}) prune equalities on either kind of lake;
+    ``ndv_manifest`` (round 11) carries per-file HLL sketches for
+    ``lake_approx_distinct``."""
     _LAKE_TABLES[(spark.sparkContext.applicationId, name)] = {
         "path": path,
         "scan_manifest": scan_manifest,
@@ -524,57 +540,140 @@ def _lake_col_types(spark: SparkSession, ent: dict) -> dict:
 
                 schema = StructType.fromJson(_json.loads(sj))
         if schema is None:
-            schema = _lake_read_all(spark, ent["path"]).schema
+            from .operators.snapshots import read_snapshot
+
+            path = ent["path"]
+            schema = (read_snapshot(spark, path) if ver is not None else spark.read.parquet(path)).schema
         ent["col_types"] = {f.name: f.dataType.simpleString() for f in schema.fields}
         ent["col_types_ver"] = ver
     return ent["col_types"]
 
 
-def _lake_has_dvs(path: str, version: int | str | None = None) -> bool:
-    """True when the snapshot record at ``version`` (head when None)
-    carries deletion vectors. The manifest/metadata fast paths
-    (interior row counts, per-file min/max, persisted NDV sketches)
-    describe PHYSICAL file contents, so a live mask invalidates their
-    unopened-file shortcuts — those paths degrade to the pruned scan
-    (which applies the mask) rather than overcount (round 12)."""
-    from .operators.snapshots import has_snapshots, snapshot_info
-
-    if not has_snapshots(path):
-        return False
-    return bool(snapshot_info(path, version).get("dvs"))
-
-
-def _mask_stat_kwargs(
-    spark: SparkSession, path: str, version: int | str | None = None
+def _lake_info(
+    ent: dict,
+    version: int | str | None = None,
+    as_of_ts: float | None = None,
+    branch: str | None = None,
 ) -> dict:
-    """Mask plumbing for the manifest-assisted stats paths (round 14 —
-    per-FILE mask awareness, VERDICT r13 ask #4): the version's
-    dv_rows map plus a reader that applies its masks under the
-    recorded schema. Files with a zero/absent dv_rows entry keep their
-    exact footer stats / persisted sketches UNOPENED; only genuinely
-    masked files pay a live read. Empty when the version carries no
-    DVs (zero overhead on the common path)."""
-    if not _lake_has_dvs(path, version):
-        return {}
-    from .operators.snapshots import _read_files, snapshot_info
+    """The one ref resolver of the catalog's reads: ``branch=`` /
+    ``version=`` (a number or a tag) / ``as_of_ts=`` / the head, as
+    ``info``. On a snapshot lake that is the ref's commit record — one
+    read, sharded records resolved — so the read is planned from its
+    ``file_stats`` and read through it (``layout._read_names``); on a
+    plain parquet lake it is ``{"files": _data_files(path)}``. A head
+    read heals a torn OPTIMIZE swap first (ADVICE round 10). Raises
+    ``ValueError`` for two refs at once and for a record whose files
+    are missing (vacuumed)."""
+    from .operators.layout import _compact_recover_tree, _data_files
+    from .operators.snapshots import _ref_info, has_snapshots, snapshot_info, version_as_of
 
-    info = snapshot_info(path, version)
-    return {
-        "dv_rows": info.get("dv_rows") or {},
-        "masked_reader": lambda names: _read_files(spark, path, names, info),
-    }
+    path = ent["path"]
+    if branch is not None:
+        if version is not None or as_of_ts is not None:
+            raise ValueError("pass branch= or version=/as_of_ts=, not both")
+        info = _ref_info(path, branch=branch)
+        gone = f"branch {branch!r} references {{n}} missing file(s) (e.g. {{e!r}})"
+    else:
+        if as_of_ts is not None:
+            # SELECT ... AS OF TIMESTAMP: the latest version committed
+            # at or before the instant
+            if version is not None:
+                raise ValueError("pass version= or as_of_ts=, not both")
+            version = version_as_of(path, as_of_ts)
+        if version is None:
+            _compact_recover_tree(path)
+            if not has_snapshots(path):
+                return {"files": _data_files(path)}
+        info = snapshot_info(path, version)
+        gone = (
+            "snapshot references {n} vacuumed file(s) (e.g. {e!r}) — expired "
+            "versions cannot be read"
+        )
+    missing = [n for n in sorted(info["files"]) if not os.path.exists(os.path.join(path, n))]
+    if missing:
+        raise ValueError(gone.format(n=len(missing), e=missing[0]))
+    return info
 
 
-def _lake_read_all(spark: SparkSession, path: str) -> DataFrame:
-    """The whole-lake read: plain parquet for an unversioned directory,
-    the CURRENT snapshot for a transaction-logged one (a dead file a
-    delete/merge commit removed must never reach a reader, even though
-    its bytes stay on disk for time travel until vacuum)."""
-    from .operators.snapshots import has_snapshots, read_snapshot
+def _lake_stats(ent: dict, info: dict, cols: list[str]) -> list[dict]:
+    """The one stats source of the catalog's planning: per-file stats
+    of ``info``'s files in ``file_stats``' shape, keyed by physical
+    column. A snapshot lake's come from its commit record
+    (``snapshots._lake_file_stats``; records written before the stats
+    leg fall back to the footers over ``cols``). A plain lake's come
+    from its registered scan manifest, read once — files it does not
+    know, and every file without one, get empty stats and stay
+    must-read (``layout._manifest_stats``)."""
+    from .operators.layout import _manifest_stats
+    from .operators.snapshots import _lake_file_stats
 
-    if has_snapshots(path):
-        return read_snapshot(spark, path)
-    return spark.read.parquet(path)
+    if "version" in info:
+        return _lake_file_stats(ent["path"], cols, info)
+    return _manifest_stats(ent["scan_manifest"], info["files"])
+
+
+def _masked_rows(info: dict) -> dict[str, int]:
+    """{file -> masked rows} of a snapshot record (empty otherwise)."""
+    from .operators.layout import _dv_rows_by_file
+
+    return _dv_rows_by_file(info.get("dv_rows"), info["files"])
+
+
+def _reader(spark: SparkSession, ent: dict, info: dict):
+    """``names -> DataFrame`` through ``info`` (``layout._read_names``):
+    on a snapshot lake every read applies the record's schema,
+    deletion-vector masks and column mapping."""
+    from .operators.layout import _read_names
+
+    return lambda names: _read_names(spark, ent["path"], names, info)
+
+
+def _plan_skips(
+    spark: SparkSession, ent: dict, info: dict, predicate: str
+) -> tuple[int, dict[str, set[str]]]:
+    """(OR-branches, {skipped file: rules}) of ``predicate`` over
+    ``info``'s files — the one plan behind ``lake_scan`` and
+    ``lake_explain``. Skip clauses are translated to the record's
+    PHYSICAL column names (column mapping, round 14), the names its
+    stats are keyed by; Bloom manifests probe the registered column of
+    an equality. (0, {}) when no conjunct is usable."""
+    from .operators.layout import _bloom_skippable, _skipped_files
+    from .operators.snapshots import _phys_keyed
+
+    col_types = _lake_col_types(spark, ent)
+    branches = _extract_skip_branches(predicate, col_types)
+    if not branches:
+        return 0, {}
+    phys = info.get("phys") or {}
+    branches = _phys_keyed(branches, phys)
+    col_types = _phys_keyed(col_types, phys)
+    cols = sorted({c for br in branches for part in br for c in part})
+    blooms = ent["bloom_manifests"]
+    cache: dict[tuple, set[str]] = {}
+
+    def bloom_skip(equals: dict) -> set[str]:
+        out: set[str] = set()
+        for c, v in equals.items():
+            if c in blooms:
+                key = (c, repr(v))
+                if key not in cache:
+                    cache[key] = _bloom_skippable(spark, blooms[c], v)
+                out |= cache[key]
+        return out
+
+    stats = _lake_stats(ent, info, cols)
+    return len(branches), _skipped_files(stats, branches, col_types, bloom_skip)
+
+
+def _scan(spark: SparkSession, ent: dict, info: dict, predicate: str | None) -> DataFrame:
+    """The pruned read of ``info`` under ``predicate`` (``lake_scan``'s
+    body)."""
+    names = sorted(info["files"])
+    if predicate:
+        _, skipped = _plan_skips(spark, ent, info, predicate)
+        names = [n for n in names if n not in skipped]
+    df = _reader(spark, ent, info)(names)
+    return df.filter(predicate) if predicate else df
 
 
 def lake_scan(
@@ -585,164 +684,24 @@ def lake_scan(
     as_of_ts: float | None = None,
     branch: str | None = None,
 ) -> DataFrame:
-    """Read a registered lake table, automatically skipping files the
-    persisted manifests prove irrelevant to ``predicate`` — then apply
-    the exact predicate. With no registered manifests (or no usable
-    conjunct) this degrades to the plain whole-lake read + filter.
-    Top-level OR predicates prune with the UNION of per-branch keep
-    sets; a table registered with Bloom manifests but no scan manifest
-    prunes on the Blooms alone (round 11 — previously an error).
+    """Read a registered lake table, automatically skipping files
+    metadata proves irrelevant to ``predicate`` — then apply the exact
+    predicate. Top-level OR predicates prune with the UNION of
+    per-branch keep sets; a predicate with no usable conjunct reads
+    every file.
 
-    ``version`` (round 11): TIME TRAVEL — read the table AS OF a
-    committed snapshot version instead of the current head. Round 12:
-    historical reads prune through the SAME manifests as head reads —
-    a manifest row (footer min/max, nulls, Bloom bitmap, partition
-    value) is an immutable fact about a FILE, true at every version
-    that references it, so the historical file list simply intersects
-    the keep set; files the head-maintained manifest no longer knows
-    stay must-read (superset guarantee, never rows lost).
-
-    ``branch`` (round 13): read a WAP BRANCH's head through the same
-    manifest-intersection pruning — the audit query of
-    write-audit-publish is exactly the read that wants file skipping
-    on a big lake. Fork-shared files prune from their manifest rows;
-    branch-staged files the manifest hasn't seen stay must-read."""
+    The ref — the head, ``version`` (a committed version or tag: TIME
+    TRAVEL), ``as_of_ts`` (the latest version committed at or before
+    the instant) or ``branch`` (a WAP branch's head, the audit read) —
+    resolves to one ``info`` (``_lake_info``). On a snapshot lake the
+    plan comes from that record's per-file stats, partition values and
+    any registered Bloom manifests, and the kept files are read
+    through the record (its schema, deletion-vector masks and column
+    mapping). A plain parquet lake prunes from its registered scan
+    manifest, partition values and Blooms; files the manifest does not
+    know stay must-read (superset guarantee, never rows lost)."""
     ent = _lake_entry(spark, name)
-    path = ent["path"]
-    from .operators.layout import _compact_recover_tree, pruned_files
-
-    read_info: dict | None = None
-    if branch is not None:
-        if version is not None or as_of_ts is not None:
-            raise ValueError("pass branch= or version=/as_of_ts=, not both")
-        from .operators.snapshots import _ref_info, read_branch
-
-        read_info = _ref_info(path, branch=branch)
-        if not predicate:
-            return read_branch(spark, path, branch)
-        inventory = sorted(read_info["files"])
-        missing = [n for n in inventory if not os.path.exists(os.path.join(path, n))]
-        if missing:
-            raise ValueError(
-                f"branch {branch!r} references {len(missing)} missing file(s) "
-                f"(e.g. {missing[0]!r})"
-            )
-        col_types = _lake_col_types(spark, ent)
-        branches_ = _extract_skip_branches(predicate, col_types)
-        if not branches_:
-            return read_branch(spark, path, branch).filter(predicate)
-        from .operators.snapshots import _phys_keyed, _read_files
-
-        # column mapping (round 14): manifests/footers key stats by the
-        # PHYSICAL column name — translate the pruning structures so a
-        # remapped column never consults a dead same-named column's
-        # stats (files without the physical column stay must-read)
-        bphys = read_info.get("phys") or {}
-        if bphys:
-            branches_ = _phys_keyed(branches_, bphys)
-            col_types = _phys_keyed(col_types, bphys)
-
-        keep: set[str] = set()
-        for box, equals, nots, nullness in branches_:
-            blooms = [
-                (ent["bloom_manifests"][c], v)
-                for c, v in equals.items()
-                if c in ent["bloom_manifests"]
-            ]
-            keep |= set(
-                pruned_files(
-                    spark, path, ent["scan_manifest"], box,
-                    bloom_filters=blooms, equals=equals, not_equals=nots,
-                    nullness=nullness, col_types=col_types, files=inventory,
-                )
-            )
-        if not keep:
-            return read_branch(spark, path, branch).limit(0).filter(predicate)
-        return _read_files(spark, path, sorted(keep), read_info).filter(predicate)
-    if as_of_ts is not None:
-        # SELECT ... AS OF TIMESTAMP: resolve to the latest version
-        # committed at or before the instant, then the version path
-        if version is not None:
-            raise ValueError("pass version= or as_of_ts=, not both")
-        from .operators.snapshots import version_as_of
-
-        version = version_as_of(path, as_of_ts)
-    inventory: list[str] | None = None
-    if version is not None:
-        from .operators.snapshots import read_snapshot, snapshot_files
-
-        if not predicate:
-            return read_snapshot(spark, path, version)
-        inventory = snapshot_files(path, version)
-        missing = [n for n in inventory if not os.path.exists(os.path.join(path, n))]
-        if missing:
-            raise ValueError(
-                f"snapshot references {len(missing)} vacuumed file(s) "
-                f"(e.g. {missing[0]!r}) — expired versions cannot be read"
-            )
-    else:
-        # heal a torn OPTIMIZE swap before planning ANY read through
-        # the catalog — otherwise rewritten rows appear twice until the
-        # next optimize_clustered call (ADVICE round 10)
-        _compact_recover_tree(path)
-        if not predicate:
-            return _lake_read_all(spark, path)
-    col_types = _lake_col_types(spark, ent)
-    branches = _extract_skip_branches(predicate, col_types)
-    if not branches:
-        if inventory is not None:
-            from .operators.snapshots import read_snapshot
-
-            return read_snapshot(spark, path, version).filter(predicate)
-        return _lake_read_all(spark, path).filter(predicate)
-    from .operators.snapshots import _phys_keyed, has_snapshots as _has_snaps, snapshot_info as _snap_info
-
-    # column mapping (round 14): prune by PHYSICAL stat keys (see the
-    # branch path above) — the version's own record, so time travel
-    # prunes under the mapping in force at that version
-    mphys = _snap_info(path, version).get("phys") or {} if _has_snaps(path) else {}
-    if mphys:
-        branches = _phys_keyed(branches, mphys)
-        col_types = _phys_keyed(col_types, mphys)
-    keep: set[str] = set()
-    for box, equals, nots, nullness in branches:
-        blooms = [
-            (ent["bloom_manifests"][c], v)
-            for c, v in equals.items()
-            if c in ent["bloom_manifests"]
-        ]
-        keep |= set(
-            pruned_files(
-                spark,
-                path,
-                ent["scan_manifest"],
-                box,
-                bloom_filters=blooms,
-                equals=equals,
-                not_equals=nots,
-                nullness=nullness,
-                col_types=col_types,
-                files=inventory,
-            )
-        )
-    if not keep:
-        # provably-empty predicate: empty frame with the table's schema
-        if inventory is not None:
-            from .operators.snapshots import read_snapshot
-
-            return read_snapshot(spark, path, version).limit(0).filter(predicate)
-        return spark.read.parquet(path).limit(0).filter(predicate)
-    from .operators.snapshots import _read_files, has_snapshots, snapshot_info
-
-    if has_snapshots(path):
-        # authoritative-schema read (round 12): pruned subsets resolve
-        # adds/drops/renames/widens exactly as read_snapshot does —
-        # head reads under the head record, time travel under its own
-        return _read_files(
-            spark, path, sorted(keep), snapshot_info(path, version)
-        ).filter(predicate)
-    files = [os.path.join(path, n) for n in sorted(keep)]
-    return spark.read.option("basePath", path).parquet(*files).filter(predicate)
+    return _scan(spark, ent, _lake_info(ent, version, as_of_ts, branch), predicate)
 
 
 def lake_explain(
@@ -753,50 +712,19 @@ def lake_explain(
     branch: str | None = None,
 ) -> dict:
     """EXPLAIN for the catalog hook's file-skipping decision: which
-    live files a ``lake_scan(name, predicate)`` would read, which it
-    would skip, and WHY — per skipped file the set of rules that fired
-    (``partition`` directory value, ``stats`` manifest min/max or
-    all-null row, ``nulls`` null-count rule, ``bloom`` bitmap miss).
-    A file is skipped only when EVERY OR-branch proves it irrelevant;
-    the reasons union across branches. Metadata-only (no data read).
-    ``version`` (round 12): explain the TIME-TRAVEL scan's decision —
-    the version's file list is the inventory, same rules.
+    files of the ref (head, ``version`` or ``branch``) a
+    ``lake_scan(name, predicate)`` would read, which it would skip,
+    and WHY — per skipped file the set of rules that fired
+    (``partition`` directory value, ``stats`` min/max miss or all-null
+    column, ``nulls`` null-count rule, ``bloom`` bitmap miss). A file
+    is skipped only when EVERY OR-branch proves it irrelevant; the
+    reasons union across branches. Metadata-only (no data read).
 
-    The kept set here must equal what ``lake_scan`` actually reads —
-    pinned by test so the explainer can never drift from the planner.
-
-    Round 12: the manifest rules run as DataFrame filters — the SAME
-    ``miss`` predicate shape ``pruned_files`` plans with — and only
-    per-rule skipped-file name lists are collected (bounded by the
-    skip decision itself), so EXPLAIN stays metadata-scale on a
-    million-file manifest instead of collecting every stat row."""
-    from pyspark.sql import functions as F
-
-    from .operators.layout import (
-        _bloom_skippable,
-        _compact_recover_tree,
-        _data_files,
-        _partition_skippable,
-        _partition_values,
-    )
-
+    The plan is ``lake_scan``'s own (``_plan_skips``), so the kept set
+    here equals what ``lake_scan`` reads — pinned by test."""
     ent = _lake_entry(spark, name)
-    path = ent["path"]
-    if branch is not None:
-        # explain the BRANCH scan's decision (round 13): the branch
-        # head's file list is the inventory, same rules
-        if version is not None:
-            raise ValueError("pass branch= or version=, not both")
-        from .operators.snapshots import _ref_info
-
-        live = sorted(_ref_info(path, branch=branch)["files"])
-    elif version is not None:
-        from .operators.snapshots import snapshot_files
-
-        live = snapshot_files(path, version)
-    else:
-        _compact_recover_tree(path)
-        live = _data_files(path)
+    info = _lake_info(ent, version, branch=branch)
+    live = sorted(info["files"])
     out = {
         "table": name,
         "predicate": predicate,
@@ -809,100 +737,15 @@ def lake_explain(
     }
     if not predicate:
         return out
-    col_types = _lake_col_types(spark, ent)
-    branches = _extract_skip_branches(predicate, col_types)
-    if not branches:
+    n_branches, skipped = _plan_skips(spark, ent, info, predicate)
+    if not n_branches:
         out["reason"] = "no usable conjunct — full scan + exact filter"
         return out
-    # column mapping (round 14): the explainer consults the same
-    # physically-keyed stats as the planner — translate identically so
-    # the kept-set pin can never drift on a mapped lake
-    from .operators.snapshots import _phys_keyed, _ref_info
-
-    eph = _lake_phys(
-        path,
-        version,
-        binfo=_ref_info(path, branch=branch) if branch is not None else None,
-    )
-    if eph:
-        branches = _phys_keyed(branches, eph)
-        col_types = _phys_keyed(col_types, eph)
-    out["branches"] = len(branches)
-    live_set = set(live)
-    mf = (
-        spark.read.option("mergeSchema", "true").parquet(ent["scan_manifest"])
-        if ent["scan_manifest"] is not None
-        else None
-    )
-    has_nulls = mf is not None and "nulls" in mf.columns
-
-    def _rule_files(miss) -> set[str]:
-        # the skip decision distributes; only skipped NAMES collect
-        return {r.file for r in mf.filter(miss).select("file").distinct().collect()}
-
-    # bloom skip sets, computed once per (col, value) across branches
-    bloom_cache: dict[tuple, set] = {}
-    reasons: dict[str, set] = {}
-    skipped_all: set[str] | None = None
-    for box, equals, nots, nullness in branches:
-        by_rule: dict[str, set[str]] = {}
-        by_rule["partition"] = {
-            n
-            for n in live
-            if _partition_skippable(
-                _partition_values(n), box, equals, col_types, nots, nullness
-            )
-        }
-        if mf is not None:
-            stats_miss = F.lit(False)
-            for c, (lo, hi) in box.items():
-                try:
-                    lo_f, hi_f = float(lo), float(hi)
-                except (TypeError, ValueError):
-                    continue  # string bound: manifest proves nothing
-                stats_miss = stats_miss | (
-                    (F.col("col") == c)
-                    & (
-                        F.col("lo").isNull()
-                        | (F.col("hi") < F.lit(lo_f))
-                        | (F.col("lo") > F.lit(hi_f))
-                    )
-                )
-            by_rule["stats"] = _rule_files(stats_miss) & live_set
-            if nullness and has_nulls:
-                nulls_miss = F.lit(False)
-                for c, kind in nullness.items():
-                    if kind == "null":
-                        nulls_miss = nulls_miss | (
-                            (F.col("col") == c) & (F.col("nulls") == 0)
-                        )
-                    else:
-                        nulls_miss = nulls_miss | (
-                            (F.col("col") == c) & (F.col("nulls") == F.col("rows"))
-                        )
-                by_rule["nulls"] = _rule_files(nulls_miss) & live_set
-        bloom_skip: set[str] = set()
-        for c, v in equals.items():
-            if c in ent["bloom_manifests"]:
-                key = (c, repr(v))
-                if key not in bloom_cache:
-                    bloom_cache[key] = _bloom_skippable(
-                        spark, ent["bloom_manifests"][c], v
-                    )
-                bloom_skip |= bloom_cache[key] & live_set
-        if bloom_skip:
-            by_rule["bloom"] = bloom_skip
-        branch_skipped: set[str] = set()
-        for rule, names in by_rule.items():
-            branch_skipped |= names
-            for n in names:
-                reasons.setdefault(n, set()).add(rule)
-        skipped_all = branch_skipped if skipped_all is None else (skipped_all & branch_skipped)
-    skipped = skipped_all or set()
+    out["branches"] = n_branches
     out["files_kept"] = len(live) - len(skipped)
     out["files_skipped"] = len(skipped)
     out["skip_frac"] = round(len(skipped) / len(live), 4) if live else 0.0
-    out["skipped"] = {n: sorted(reasons[n]) for n in sorted(skipped)}
+    out["skipped"] = {n: sorted(skipped[n]) for n in sorted(skipped)}
     return out
 
 
@@ -915,21 +758,21 @@ def lake_join_scan(
     max_keys: int = 100_000,
     broadcast_dim: bool = True,
 ) -> DataFrame:
-    """Inner equi-join a registered lake FACT table to a small ``dim``
-    DataFrame with FILE-LEVEL dynamic pruning (round 11): the dim's
-    distinct join keys are collected (bounded by ``max_keys``) and
-    turned into a provable keep set before any fact data is read —
-    partition-value equality, per-key interval probes against the scan
-    manifest's footer ranges, and Bloom-manifest IN-list probes, the
-    same three rules ``lake_scan`` uses for literal predicates, now
-    driven by a JOIN's build side.
+    """Inner equi-join a registered lake FACT table (its head) to a
+    small ``dim`` DataFrame with FILE-LEVEL dynamic pruning (round 11):
+    the dim's distinct join keys are collected (bounded by
+    ``max_keys``) and turned into a provable keep set before any fact
+    data is read — partition-value equality, per-key interval probes
+    against each file's stats (``_lake_stats``: the commit record on a
+    snapshot lake, the scan manifest on a plain one), and Bloom-manifest
+    IN-list probes (``layout._join_kept``). The kept files read through
+    the record (``_reader``), so deletion-vector masks and column
+    mapping hold and ``fact_col`` is the logical column.
 
     Spark's own dynamic partition pruning handles hive-partitioned
     keys; this extends the idea to unpartitioned-but-CLUSTERED lakes,
     where a selective dim (a few customers, one brand) touches a few
-    files of a range-laid-out fact table instead of all of them. On a
-    key-clustered 100 TB fact table the read set becomes the dim's key
-    range, not the table.
+    files of a range-laid-out fact table instead of all of them.
 
     Degradation: a dim wider than ``max_keys`` distinct keys falls
     back to the whole-lake read + join (the keep set would approach
@@ -937,11 +780,10 @@ def lake_join_scan(
     (``broadcast_dim=False`` for a large dim after fallback)."""
     from pyspark.sql import functions as F
 
-    from .operators.layout import _compact_recover_tree, join_pruned_files
+    from .operators.layout import _join_kept
 
     ent = _lake_entry(spark, name)
-    path = ent["path"]
-    _compact_recover_tree(path)
+    info = _lake_info(ent)
     dcol = dim_col or fact_col
     if dcol not in dim.columns:
         raise ValueError(f"dim has no column {dcol!r}")
@@ -949,25 +791,21 @@ def lake_join_scan(
     probe = [r["__jk"] for r in keys_df.limit(max_keys + 1).collect()]
     right = F.broadcast(dim) if broadcast_dim else dim
     cond_name = fact_col if dim_col is None else None
-    if len(probe) > max_keys:
-        base = _lake_read_all(spark, path)
-    else:
-        col_types = _lake_col_types(spark, ent)
-        files = join_pruned_files(
+    files = sorted(info["files"])
+    if len(probe) <= max_keys:
+        from .operators.snapshots import _phys_keyed
+
+        phys = info.get("phys") or {}
+        pcol = phys.get(fact_col, fact_col)
+        files = _join_kept(
             spark,
-            path,
-            ent["scan_manifest"],
-            fact_col,
+            _lake_stats(ent, info, [pcol]),
+            pcol,
             probe,
-            bloom_manifest_path=ent["bloom_manifests"].get(fact_col),
-            col_types=col_types,
+            ent["bloom_manifests"].get(fact_col),
+            _phys_keyed(_lake_col_types(spark, ent), phys),
         )
-        if not files:
-            base = _lake_read_all(spark, path).limit(0)
-        else:
-            base = spark.read.option("basePath", path).parquet(
-                *[os.path.join(path, n) for n in sorted(files)]
-            )
+    base = _reader(spark, ent, info)(files)
     if cond_name is not None:
         return base.join(right, on=cond_name, how="inner")
     return base.join(right, on=base[fact_col] == right[dcol], how="inner")
@@ -1100,21 +938,6 @@ def _extract_exact_box(predicate: str, col_types: dict | None = None) -> dict | 
     return box
 
 
-def _lake_phys(path: str, version=None, binfo: dict | None = None) -> dict:
-    """The column-mapping ``phys`` dict (logical -> physical parquet
-    name) in force at a version / branch head (round 14). Stats in
-    manifests and footers key by the PHYSICAL name; every metadata
-    fast path must consult them through this map or it would read a
-    dead same-named column's stats. Empty = identity (no mapping)."""
-    if binfo is not None:
-        return binfo.get("phys") or {}
-    from .operators.snapshots import has_snapshots, snapshot_info
-
-    if not has_snapshots(path):
-        return {}
-    return snapshot_info(path, version).get("phys") or {}
-
-
 def lake_count(
     spark: SparkSession,
     name: str,
@@ -1122,175 +945,43 @@ def lake_count(
     version: int | str | None = None,
     branch: str | None = None,
 ) -> int:
-    """COUNT(*) over a registered lake table with metadata doing most
-    of the work (round 11 — the Iceberg metadata-count shape behind the
-    catalog hook). When the predicate folds to an EXACT closed box
-    (``_extract_exact_box``) and a scan manifest is registered, the
-    count routes through ``manifest_assisted_count``: interior files
-    contribute manifest row counts unopened, only boundary/unknown
-    files are read (filtered with the exact predicate string).
-    Otherwise this degrades to ``lake_scan(...).count()`` — same
-    answer, no metadata shortcut.
+    """COUNT(*) over a registered lake table (its head, ``version`` or
+    ``branch``) with metadata doing most of the work (the Iceberg
+    metadata-count shape). A bare COUNT(*) on a snapshot lake is the
+    record's ``file_rows`` sum minus masked rows — zero reads. When
+    the predicate folds EXACTLY (``_extract_exact_clauses``), files the
+    stats (``_lake_stats``) prove fully inside contribute their row
+    counts minus masked rows unopened, provably disjoint files nothing,
+    and only boundary files are read (``_reader``: masks and column
+    mapping apply) and filtered with the exact predicate string — in
+    one read, also for an integral ``IN`` (the union of its disjoint
+    point boxes). Otherwise
+    this is the pruned scan's count — same answer, no shortcut."""
+    from .operators.layout import _stats_count
+    from .operators.snapshots import _phys_keyed, _record_row_count
 
-    Round 13 (mask-aware): live deletion vectors no longer force the
-    whole count to a scan — interior files contribute
-    ``file_rows − dv_rows[file]`` unopened and boundary files read
-    through the mask-applying snapshot reader (see
-    ``manifest_assisted_count``)."""
     ent = _lake_entry(spark, name)
-    from .operators.layout import _compact_recover_tree, manifest_assisted_count
-
-    def _dv_kwargs(ver) -> dict:
-        """Mask plumbing for manifest_assisted_count at ``ver`` (head
-        when None): the version's dv_rows map + a boundary reader that
-        applies its masks. Empty when the version carries no DVs."""
-        has_map = bool(_lake_phys(ent["path"], ver))
-        if not _lake_has_dvs(ent["path"], ver) and not has_map:
-            return {}
-        from .operators.snapshots import _read_files, snapshot_info
-
-        info = snapshot_info(ent["path"], ver)
-        # a column-mapped lake's boundary files must read through the
-        # authoritative reader (raw parquet has PHYSICAL names; the
-        # WHERE is logical) even when no DV masks are live
-        return {
-            "dv_rows": info.get("dv_rows") or {},
-            "boundary_reader": lambda names: _read_files(
-                spark, ent["path"], names, info
-            ),
-        }
-
-    if branch is not None:
-        # COUNT on a WAP branch (round 13): bare counts are the branch
-        # record's own metadata sum (mask-subtracting); a foldable
-        # predicate routes through the same manifest-assisted path
-        # with the branch inventory — staged/rewritten files unknown
-        # to the manifest are boundary, read through the branch's
-        # mask-applying reader
-        if version is not None:
-            raise ValueError("pass branch= or version=, not both")
-        from .operators.snapshots import (
-            _read_files,
-            _record_row_count,
-            _ref_info,
-            read_branch,
-        )
-
-        binfo = _ref_info(ent["path"], branch=branch)
-        if not predicate:
-            n = _record_row_count(binfo)
-            return n if n is not None else read_branch(spark, ent["path"], branch).count()
-        if ent["scan_manifest"] is not None:
-            col_types = _lake_col_types(spark, ent)
-            clauses = _extract_exact_clauses(predicate, col_types)
-            if clauses is not None and clauses[2] is None:
-                from .operators.snapshots import _phys_keyed
-
-                ph = _lake_phys(ent["path"], binfo=binfo)
-                box, str_eq, _points = _phys_keyed(clauses, ph)
-                return manifest_assisted_count(
-                    spark,
-                    ent["path"],
-                    ent["scan_manifest"],
-                    box,
-                    where=predicate,
-                    col_types=_phys_keyed(col_types, ph),
-                    equals_strs=str_eq,
-                    files=sorted(binfo["files"]),
-                    dv_rows=binfo.get("dv_rows") or {},
-                    boundary_reader=lambda names: _read_files(
-                        spark, ent["path"], names, binfo
-                    ),
-                )
-        return lake_scan(spark, name, predicate, branch=branch).count()
-
-    if version is not None:
-        # time travel: the commit's own per-file row counts answer a
-        # bare COUNT(*) with zero reads; a foldable predicate routes
-        # through the SAME manifest-assisted path as head counts
-        # (round 12) with the version's file list as the inventory —
-        # manifest stats are immutable per-file facts
-        from .operators.snapshots import (
-            read_snapshot,
-            snapshot_files,
-            snapshot_row_count,
-        )
-
-        if not predicate:
-            n = snapshot_row_count(ent["path"], version)
-            if n is not None:
-                return n
-        elif ent["scan_manifest"] is not None:
-            col_types = _lake_col_types(spark, ent)
-            clauses = _extract_exact_clauses(predicate, col_types)
-            if clauses is not None and clauses[2] is None:
-                from .operators.snapshots import _phys_keyed
-
-                ph = _lake_phys(ent["path"], version)
-                box, str_eq, _points = _phys_keyed(clauses, ph)
-                return manifest_assisted_count(
-                    spark,
-                    ent["path"],
-                    ent["scan_manifest"],
-                    box,
-                    where=predicate,
-                    col_types=_phys_keyed(col_types, ph),
-                    equals_strs=str_eq,
-                    files=snapshot_files(ent["path"], version),
-                    **_dv_kwargs(version),
-                )
-        df = read_snapshot(spark, ent["path"], version)
-        return (df.filter(predicate) if predicate else df).count()
-    _compact_recover_tree(ent["path"])
+    info = _lake_info(ent, version, branch=branch)
     if not predicate:
-        from .operators.snapshots import has_snapshots, snapshot_row_count
-
-        if has_snapshots(ent["path"]):
-            # the commit carries per-file row counts: COUNT(*) is a
-            # metadata sum, zero data reads (round 11)
-            n = snapshot_row_count(ent["path"])
-            if n is not None:
-                return n
-        return _lake_read_all(spark, ent["path"]).count()
-    if ent["scan_manifest"] is not None:
-        col_types = _lake_col_types(spark, ent)
-        clauses = _extract_exact_clauses(predicate, col_types)
-        if clauses is not None:
-            from .operators.snapshots import _phys_keyed
-
-            ph = _lake_phys(ent["path"])
-            dvkw = _dv_kwargs(None)
-            box, str_eq, points = _phys_keyed(clauses[:2], ph) + (clauses[2],)
-            if points is None:
-                return manifest_assisted_count(
-                    spark,
-                    ent["path"],
-                    ent["scan_manifest"],
-                    box,
-                    where=predicate,
-                    col_types=_phys_keyed(col_types, ph),
-                    equals_strs=str_eq,
-                    **dvkw,
-                )
-            # IN over distinct integral points: a sum of disjoint
-            # point-box counts, each boundary-filtered with the ORIGINAL
-            # predicate narrowed to its point
-            col, vals = points
-            # stats key physically; the boundary WHERE stays logical
-            return sum(
-                manifest_assisted_count(
-                    spark,
-                    ent["path"],
-                    ent["scan_manifest"],
-                    {**box, ph.get(col, col): (v, v)},
-                    where=f"({predicate}) AND {col} = {v}",
-                    col_types=_phys_keyed(col_types, ph),
-                    equals_strs=str_eq,
-                    **dvkw,
-                )
-                for v in vals
-            )
-    return lake_scan(spark, name, predicate).count()
+        n = _record_row_count(info) if "version" in info else None
+        return n if n is not None else _scan(spark, ent, info, None).count()
+    col_types = _lake_col_types(spark, ent)
+    clauses = _extract_exact_clauses(predicate, col_types)
+    if clauses is None:
+        return _scan(spark, ent, info, predicate).count()
+    # stats key physically; the boundary WHERE stays logical
+    phys = info.get("phys") or {}
+    box, str_eq = _phys_keyed(clauses[:2], phys)
+    col_types = _phys_keyed(col_types, phys)
+    points = clauses[2]
+    # an integral IN is the union of its disjoint point boxes
+    boxes = [box] if points is None else [
+        {**box, phys.get(points[0], points[0]): (v, v)} for v in points[1]
+    ]
+    stats = _lake_stats(ent, info, sorted({c for b in boxes for c in b} | set(str_eq)))
+    return _stats_count(
+        stats, boxes, predicate, col_types, str_eq, _masked_rows(info), _reader(spark, ent, info)
+    )
 
 
 def lake_min_max(
@@ -1300,64 +991,40 @@ def lake_min_max(
     predicate: str | None = None,
     version: int | str | None = None,
 ) -> DataFrame:
-    """Exact (MIN, MAX) of ``col`` over a registered lake table with
-    metadata choosing the read set (round 11): when the predicate folds
-    to an EXACT closed box and a scan manifest is registered, only
-    box-boundary files plus the argmin/argmax candidate files are
-    opened (``manifest_assisted_minmax``); otherwise this degrades to
-    the pruned scan's aggregate. Returns a 1-row DataFrame
+    """Exact (MIN, MAX) of ``col`` over a registered lake table (its
+    head or ``version``) with metadata choosing the read set (round
+    11): when the predicate folds to an EXACT closed box, only
+    box-boundary files, masked files and the argmin/argmax candidate
+    files are opened (``layout._stats_minmax`` over ``_lake_stats``,
+    keyed by physical column), through the record's reader; otherwise
+    this is the pruned scan's aggregate. Returns a 1-row DataFrame
     (min_<col>, max_<col>) either way — same values, native type."""
-    ent = _lake_entry(spark, name)
     from pyspark.sql import functions as F
 
-    from .operators.layout import _compact_recover_tree, manifest_assisted_minmax
+    from .operators.layout import _stats_minmax
+    from .operators.snapshots import _phys_keyed
 
-    if version is not None:
-        # time travel (round 12): the metadata path works at any
-        # version — the version's file list is the inventory, manifest
-        # stats are immutable per-file facts; unknown files read
-        from .operators.snapshots import read_snapshot, snapshot_files
-
-        if ent["scan_manifest"] is not None and not _lake_phys(ent["path"], version):
-            col_types = _lake_col_types(spark, ent)
-            box = {} if not predicate else _extract_exact_box(predicate, col_types)
-            if box is not None:
-                return manifest_assisted_minmax(
-                    spark,
-                    ent["path"],
-                    ent["scan_manifest"],
-                    col,
-                    box=box,
-                    where=predicate,
-                    col_types=col_types,
-                    files=snapshot_files(ent["path"], version),
-                    **_mask_stat_kwargs(spark, ent["path"], version),
-                )
-        df = read_snapshot(spark, ent["path"], version)
-        if predicate:
-            df = df.filter(predicate)
-        return df.agg(F.min(col).alias(f"min_{col}"), F.max(col).alias(f"max_{col}"))
-    _compact_recover_tree(ent["path"])
+    ent = _lake_entry(spark, name)
+    info = _lake_info(ent, version)
     col_types = _lake_col_types(spark, ent)
-    # column mapping (round 14): a mapped lake's raw candidate reads
-    # and manifest stat keys don't line up with logical names —
-    # degrade to the authoritative pruned read (correct, conservative;
-    # mapped tables are the rare post-reuse case)
-    if ent["scan_manifest"] is not None and not _lake_phys(ent["path"]):
-        box = {} if not predicate else _extract_exact_box(predicate, col_types)
-        if box is not None:
-            return manifest_assisted_minmax(
-                spark,
-                ent["path"],
-                ent["scan_manifest"],
-                col,
-                box=box,
-                where=predicate,
-                col_types=col_types,
-                **_mask_stat_kwargs(spark, ent["path"]),
-            )
-    base = lake_scan(spark, name, predicate)
-    return base.agg(F.min(col).alias(f"min_{col}"), F.max(col).alias(f"max_{col}"))
+    box = {} if not predicate else _extract_exact_box(predicate, col_types)
+    if box is None:
+        return _scan(spark, ent, info, predicate).agg(
+            F.min(col).alias(f"min_{col}"), F.max(col).alias(f"max_{col}")
+        )
+    phys = info.get("phys") or {}
+    box = _phys_keyed(box, phys)
+    pcol = phys.get(col, col)
+    return _stats_minmax(
+        _lake_stats(ent, info, sorted({*box, pcol})),
+        col,
+        box,
+        predicate,
+        _phys_keyed(col_types, phys),
+        _masked_rows(info),
+        _reader(spark, ent, info),
+        stat_col=pcol,
+    )
 
 
 def lake_delete_where(
@@ -1370,16 +1037,14 @@ def lake_delete_where(
     """SQL DELETE on a REGISTERED lake table — the catalog wires the
     table path and the schema's column types (temporal literal
     folding) with no caller opt-in; the operator classifies files from
-    the commit record's per-file stats. A registered scan manifest is
-    kept current in the same call (``_maintain_scan_manifest``: rows of
-    departed files dropped, written files statted) — on main only,
-    since the manifest describes main's live set. ``use_dv`` masks
-    instead of rewriting (deletion vectors); ``branch`` targets a WAP
-    branch's head (round 13)."""
+    the commit record's per-file stats (a plain parquet lake is adopted
+    into a snapshot lake by its first DML). ``use_dv`` masks instead of
+    rewriting (deletion vectors); ``branch`` targets a WAP branch's
+    head (round 13)."""
     ent = _lake_entry(spark, name)
     from .operators.snapshots import lake_delete
 
-    rep = lake_delete(
+    return lake_delete(
         spark,
         ent["path"],
         predicate,
@@ -1387,26 +1052,6 @@ def lake_delete_where(
         use_dv=use_dv,
         branch=branch,
     )
-    _maintain_scan_manifest(spark, ent, branch)
-    return rep
-
-
-def _maintain_scan_manifest(spark: SparkSession, ent: dict, branch: str | None) -> None:
-    """After a DML commit on main, bring a registered table's scan
-    manifest up to the new live set: GC rows whose files left it, then
-    stat the files the op wrote — O(changed files). The columns come
-    from the manifest itself (its distinct ``col`` set). A branch
-    commit changes nothing main reads, so it is left alone."""
-    mf_path = ent["scan_manifest"]
-    if mf_path is None or branch is not None:
-        return
-    from .operators.layout import append_scan_manifest, compact_scan_manifest
-
-    mf = spark.read.option("mergeSchema", "true").parquet(mf_path)
-    cols = [r.col for r in mf.select("col").distinct().collect()]
-    compact_scan_manifest(spark, ent["path"], mf_path)
-    if cols:
-        append_scan_manifest(spark, ent["path"], cols, mf_path)
 
 
 def lake_explain_delete(
@@ -1426,16 +1071,9 @@ def lake_explain_delete(
     Pinned to the classifier itself by test: the explanation can never
     drift from what the delete actually does."""
     ent = _lake_entry(spark, name)
-    from .operators.snapshots import _classify_for_delete, _ref_info, has_snapshots
+    from .operators.snapshots import _classify_for_delete
 
-    if branch is not None:
-        info = _ref_info(ent["path"], branch=branch)
-    elif has_snapshots(ent["path"]):
-        info = _ref_info(ent["path"])
-    else:
-        from .operators.layout import _data_files
-
-        info = {"files": _data_files(ent["path"])}
+    info = _lake_info(ent, branch=branch)
     files = info["files"]
     drop, keep, rewrite = _classify_for_delete(
         ent["path"], predicate, _lake_col_types(spark, ent), info
@@ -1465,7 +1103,7 @@ def lake_update_where(
     ent = _lake_entry(spark, name)
     from .operators.snapshots import lake_update
 
-    rep = lake_update(
+    return lake_update(
         spark,
         ent["path"],
         assignments,
@@ -1473,8 +1111,6 @@ def lake_update_where(
         col_types=_lake_col_types(spark, ent),
         branch=branch,
     )
-    _maintain_scan_manifest(spark, ent, branch)
-    return rep
 
 
 def lake_merge_into(
@@ -1489,59 +1125,49 @@ def lake_merge_into(
     ent = _lake_entry(spark, name)
     from .operators.snapshots import lake_merge
 
-    rep = lake_merge(spark, ent["path"], source, key, when_matched=when_matched, branch=branch)
-    _maintain_scan_manifest(spark, ent, branch)
-    return rep
+    return lake_merge(spark, ent["path"], source, key, when_matched=when_matched, branch=branch)
 
 
 def lake_approx_distinct(
     spark: SparkSession, name: str, col: str, predicate: str | None = None
 ) -> int:
-    """APPROX_COUNT_DISTINCT(col) over a registered lake table with the
-    NDV sketch manifest doing the interior work (round 11): when the
-    predicate folds to an EXACT closed box, interior files contribute
-    their persisted per-file HLL sketches UNOPENED, only boundary
-    files sketch their qualifying rows live, and one union merges the
+    """APPROX_COUNT_DISTINCT(col) over a registered lake table's head
+    with the NDV sketch manifest doing the interior work (round 11):
+    when the predicate folds to an EXACT closed box, interior files
+    (``_lake_stats``) contribute their persisted per-file HLL sketches
+    UNOPENED, only boundary and masked files sketch their qualifying
+    rows live (through the record's reader), and one union merges the
     lot — error identical to sketching the qualifying rows directly
     (HLL union adds none). Without a registered NDV manifest (or with
-    an unfoldable predicate) this degrades to a live
-    ``approx_count_distinct`` over the pruned scan — same error class,
-    no metadata shortcut."""
+    an unfoldable predicate, or under column mapping — persisted
+    sketches are keyed by the name at save time, which may now name a
+    dead column) this is a live ``approx_count_distinct`` over the
+    pruned scan — same error class, no metadata shortcut."""
     ent = _lake_entry(spark, name)
     from pyspark.sql import functions as F
 
-    from .operators.layout import _compact_recover_tree, manifest_assisted_ndv
+    from .operators.layout import _stats_ndv
 
-    _compact_recover_tree(ent["path"])
+    info = _lake_info(ent)
     col_types = _lake_col_types(spark, ent)
     ndv_m = ent.get("ndv_manifest")
-    # column mapping (round 14): persisted sketches key by the name at
-    # save time — under a remap they may describe a dead column;
-    # degrade to the live sketch over the authoritative pruned read
-    if ndv_m is not None and not _lake_phys(ent["path"]):
-        dvkw = _mask_stat_kwargs(spark, ent["path"])
-        if not predicate:
-            return manifest_assisted_ndv(
-                spark, ent["path"], ndv_m, ent["scan_manifest"], col, **dvkw
-            )
-        clauses = _extract_exact_clauses(predicate, col_types)
-        if clauses is not None and clauses[2] is None:
-            box, str_eq, _points = clauses
-            return manifest_assisted_ndv(
-                spark,
-                ent["path"],
-                ndv_m,
-                ent["scan_manifest"],
-                col,
-                box=box,
-                where=predicate,
-                col_types=col_types,
-                equals_strs=str_eq,
-                **dvkw,
-            )
-    base = lake_scan(spark, name, predicate)
+    clauses = ({}, {}, None) if not predicate else _extract_exact_clauses(predicate, col_types)
+    if ndv_m is not None and not info.get("phys") and clauses is not None and clauses[2] is None:
+        box, str_eq, _points = clauses
+        return _stats_ndv(
+            spark,
+            _lake_stats(ent, info, sorted({*box, *str_eq})),
+            ndv_m,
+            col,
+            box,
+            predicate,
+            col_types,
+            str_eq,
+            _masked_rows(info),
+            _reader(spark, ent, info),
+        )
     # mirror the manifest path's string fold so both routes agree
-    row = base.agg(
+    row = _scan(spark, ent, info, predicate).agg(
         F.hll_sketch_estimate(
             F.hll_sketch_agg(F.col(col).cast("string"), F.lit(12))
         ).alias("ndv")

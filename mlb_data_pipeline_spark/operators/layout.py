@@ -587,6 +587,162 @@ def _partition_skippable(
     return False
 
 
+def _skip_rules(
+    fs: dict, box: dict, equals: dict, nots: dict, nullness: dict, col_types: dict | None
+) -> set[str]:
+    """The rules that PROVE no row of a file matches one conjunctive
+    branch (box, equals, nots, nullness) — the one per-file skip rule
+    of pruned scans, EXPLAIN, the metadata aggregates and snapshot DML.
+    ``fs`` is the file's stats entry in ``file_stats``' shape (``rows``
+    None when unknown). The rules:
+
+    * ``partition`` — a directory-encoded partition value misses
+      (``_partition_skippable``);
+    * ``stats`` — a min/max miss on a numeric box bound, or a provably
+      all-null box column (a box matches nothing);
+    * ``nulls`` — ``IS NULL`` on a provably null-free column, ``IS NOT
+      NULL`` on a provably all-null one.
+
+    Empty = keep: missing stats never skip."""
+    out: set[str] = set()
+    if _partition_skippable(
+        _partition_values(fs["file"]), box, equals, col_types, nots, nullness
+    ):
+        out.add("partition")
+    rows = fs["rows"]
+    for c, (lo, hi) in box.items():
+        try:
+            lo_f, hi_f = float(lo), float(hi)
+        except (TypeError, ValueError):
+            continue  # string bound: no exact stats to check
+        if c in fs["min"] and c in fs["max"]:
+            if fs["max"][c] < lo_f or fs["min"][c] > hi_f:
+                out.add("stats")
+        elif rows is not None and fs["nulls"].get(c) is not None and int(fs["nulls"][c]) == int(rows):
+            out.add("stats")
+    for c, kind in nullness.items():
+        nc = fs["nulls"].get(c)
+        if nc is None:
+            continue
+        if kind == "null" and int(nc) == 0:
+            out.add("nulls")
+        elif kind == "notnull" and rows is not None and int(nc) == int(rows) and rows > 0:
+            out.add("nulls")
+    return out
+
+
+def _surely_inside_file(st_lo: float, st_hi: float, lo: float, hi: float) -> bool:
+    """Strict containment check for the ALL-ROWS-MATCH proof — above
+    2^53 a stat's float fold rounds, so containment must hold with
+    one-ulp slack before trusting it."""
+    import math
+
+    exact = 2.0**53
+    lo_ok = st_lo >= lo if abs(st_lo) < exact else st_lo - math.ulp(st_lo) >= lo
+    hi_ok = st_hi <= hi if abs(st_hi) < exact else st_hi + math.ulp(st_hi) <= hi
+    return lo_ok and hi_ok
+
+
+def _all_rows_match(fs: dict, box: dict, str_eq: dict, col_types: dict | None) -> bool:
+    """True when a file's stats / partition values PROVE every row
+    matches an exact conjunctive (box, str_eq) predicate: each box
+    column's [min, max] is contained in the bound with a provably ZERO
+    null count (a NULL row never matches: it is not counted, not part
+    of a min/max, and a delete must keep it), and each string equality
+    is a matching directory-encoded partition value (every row shares
+    it)."""
+    pvals = _partition_values(fs["file"])
+    for c, (lo, hi) in box.items():
+        st_lo, st_hi = fs["min"].get(c), fs["max"].get(c)
+        if st_lo is None or st_hi is None:
+            pv = pvals.get(c)
+            if pv is not None:
+                x = _partition_num(pv, c, col_types)
+                if x is not None and float(lo) <= x <= float(hi):
+                    continue  # exact (v, v, nulls=0) partition stat
+            return False
+        if fs["nulls"].get(c) is None or int(fs["nulls"][c]) != 0:
+            return False
+        if not _surely_inside_file(float(st_lo), float(st_hi), float(lo), float(hi)):
+            return False
+    for c, v in str_eq.items():
+        if pvals.get(c) != v:
+            return False
+    return True
+
+
+def _manifest_stats(manifest_path: str | None, files) -> list[dict]:
+    """Stats of the RELATIVE ``files`` in ``file_stats``' shape, sorted
+    by file, from a scan manifest read once (driver-side, no Spark
+    job). Files the manifest does not know — appended after its last
+    save, or every file when there is no manifest — get empty stats and
+    ``rows`` None, so they stay must-read (the staleness rule).
+    Manifests written before the ``nulls`` column read it as unknown."""
+    known: dict[str, dict] = {}
+    if manifest_path is not None:
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        schema = pa.schema(
+            [
+                ("file", pa.string()),
+                ("rows", pa.int64()),
+                ("col", pa.string()),
+                ("lo", pa.float64()),
+                ("hi", pa.float64()),
+                ("nulls", pa.int64()),
+            ]
+        )
+        for r in ds.dataset(manifest_path, schema=schema, format="parquet").to_table().to_pylist():
+            fs = known.setdefault(r["file"], {"rows": r["rows"], "min": {}, "max": {}, "nulls": {}})
+            if r["lo"] is not None and r["hi"] is not None:
+                fs["min"][r["col"]], fs["max"][r["col"]] = r["lo"], r["hi"]
+            fs["nulls"][r["col"]] = r["nulls"]
+    return [
+        {"file": n, **known.get(n, {"rows": None, "min": {}, "max": {}, "nulls": {}})}
+        for n in sorted(files)
+    ]
+
+
+def _skipped_files(
+    stats: list[dict], branches: list[tuple], col_types: dict | None, bloom_skip
+) -> dict[str, set[str]]:
+    """{file: rules} for the files of ``stats`` that EVERY OR-branch
+    (box, equals, nots, nullness) proves irrelevant (``_skip_rules``),
+    each file's rules unioned across branches — the plan of a pruned
+    scan and of its EXPLAIN alike. ``bloom_skip(equals)`` returns the
+    files a branch's Bloom probes prove absent (rule ``bloom``)."""
+    out: dict[str, set[str]] | None = None
+    for box, equals, nots, nullness in branches:
+        bloom = bloom_skip(equals)
+        hit = {}
+        for fs in stats:
+            rules = _skip_rules(fs, box, equals, nots, nullness, col_types)
+            if fs["file"] in bloom:
+                rules.add("bloom")
+            if rules:
+                hit[fs["file"]] = rules
+        out = hit if out is None else {f: out[f] | r for f, r in hit.items() if f in out}
+    return out or {}
+
+
+def _read_names(
+    spark: SparkSession, path: str, names: list[str], info: dict | None = None
+) -> DataFrame:
+    """The rows of the RELATIVE ``names``: through the commit record
+    ``info`` on a snapshot lake (``snapshots._read_files`` — the
+    record's schema, deletion-vector masks and column mapping), as
+    plain parquet otherwise (``basePath`` keeps partition-directory
+    columns; no names: an empty frame with the lake's schema)."""
+    if info is not None and "version" in info:
+        from .snapshots import _read_files
+
+        return _read_files(spark, path, names, info)
+    if not names:
+        return spark.read.parquet(path).limit(0)
+    return spark.read.option("basePath", path).parquet(*[os.path.join(path, n) for n in names])
+
+
 def pruned_files(
     spark: SparkSession,
     path: str,
@@ -599,88 +755,30 @@ def pruned_files(
     col_types: dict | None = None,
     files: list[str] | None = None,
 ) -> list[str]:
-    """RELATIVE names of the data files a conjunctive box predicate can
-    possibly touch, decided from the persisted manifests alone. Skip
-    rule is the conservative one (matches pruning_report): a file is
-    dropped ONLY on a provable min/max miss on some box column (or a
-    provable Bloom miss on an equality); files with missing stats are
-    kept. With ``manifest_path=None`` the Bloom filters and partition
-    values still prune (round 11) — the on-disk listing is the file
-    inventory. Directory-encoded partition values prune on BOTH the
-    box and the equality clauses (``equals``/``col_types``, round 11):
-    partition columns never have footer stats, so without this the
-    most selective lake predicate — the partition key — skipped
-    nothing.
+    """RELATIVE names of the data files of a plain parquet lake that a
+    conjunctive box predicate can possibly touch, decided from the
+    persisted scan manifest (``_manifest_stats``), directory-encoded
+    partition values (box, ``equals``, ``not_equals``, ``nullness``,
+    with ``col_types`` folding temporal values) and Bloom manifests
+    (``bloom_filters``: (manifest, value) pairs) — the rule of
+    ``_skip_rules``: a file drops only on a provable miss; files with
+    missing stats, or unknown to the manifest, are kept. With
+    ``manifest_path=None`` partition values and Blooms still prune.
 
-    ``files`` (round 12): an explicit file inventory replacing the
-    live listing — the manifest-pruned TIME TRAVEL hook. Per-file
-    stats, Bloom bitmaps, and partition values are facts about a FILE,
-    true at every version that references it, so a historical
-    version's list prunes by the same rules; files the (head-
-    maintained) manifest no longer knows simply stay must-read.
+    ``files``: an explicit file inventory replacing the live listing —
+    per-file stats, Bloom bitmaps and partition values are facts about
+    a FILE, true at every version that references it."""
+    names = _data_files(path) if files is None else files
 
-    The collect is file PATHS of kept files (metadata-scale); the skip
-    decision itself runs as a DataFrame filter so it would distribute
-    over a million-file manifest unchanged."""
-    on_disk = set(_data_files(path) if files is None else files)
-    if box or equals or not_equals or nullness:
-        on_disk = {
-            n
-            for n in on_disk
-            if not _partition_skippable(
-                _partition_values(n), box, equals or {}, col_types, not_equals, nullness
-            )
-        }
-    if manifest_path is None:
-        kept = set(on_disk)
+    def bloom_skip(_equals) -> set[str]:
+        out: set[str] = set()
         for bloom_path, value in bloom_filters or []:
-            kept -= _bloom_skippable(spark, bloom_path, value)
-        return sorted(kept)
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
-    miss = F.lit(False)
-    for c, (lo, hi) in box.items():
-        try:
-            lo_f, hi_f = float(lo), float(hi)
-        except (TypeError, ValueError):
-            # non-numeric bound (string column): the manifest carries no
-            # usable stats for it, so it can never prove a miss — the
-            # column simply contributes no skip clause (must-read)
-            continue
-        miss = miss | (
-            (F.col("col") == c)
-            & (F.col("lo").isNull() | (F.col("hi") < F.lit(lo_f)) | (F.col("lo") > F.lit(hi_f)))
-        )
-    if nullness and "nulls" in mf.columns:
-        # per-file null counts (round 11): "col IS NULL" skips files
-        # PROVABLY null-free (nulls == 0); "col IS NOT NULL" skips
-        # all-null files (nulls == rows). NULL nulls = unknown = keep.
-        for c, kind in nullness.items():
-            if kind == "null":
-                miss = miss | ((F.col("col") == c) & (F.col("nulls") == 0))
-            else:
-                miss = miss | ((F.col("col") == c) & (F.col("nulls") == F.col("rows")))
-    skip = mf.filter(miss).select("file").distinct()
-    keep = mf.select("file").distinct().join(skip, "file", "left_anti")
-    known = {r.file for r in mf.select("file").distinct().collect()}
-    kept_names = {r.file for r in keep.collect()}
-    # optional equality skipping: each (bloom_manifest_path, value) drops
-    # files whose per-file Bloom bitmap PROVES the value absent — the
-    # string/high-cardinality complement of the min/max box rule (no
-    # false negatives; unknown files stay must-read)
-    for bloom_path, value in bloom_filters or []:
-        kept_names -= _bloom_skippable(spark, bloom_path, value)
-    # a manifest row may outlive its file (idempotent stream-replay
-    # rewrites, compaction): vanished files are simply not read
-    files = sorted(kept_names & on_disk)
-    # STALENESS GUARD: a data file the manifest has never seen (appended
-    # after the last save_scan_manifest) carries no stats here, so it
-    # can never be skipped — pruning must stay a superset guarantee
-    # even against a stale manifest, not just a fresh one.
-    stale_must_read = on_disk - known
-    for bloom_path, value in bloom_filters or []:
-        stale_must_read -= _bloom_skippable(spark, bloom_path, value)
-    files.extend(sorted(stale_must_read))
-    return files
+            out |= _bloom_skippable(spark, bloom_path, value)
+        return out
+
+    branch = (box, equals or {}, not_equals or {}, nullness or {})
+    skipped = _skipped_files(_manifest_stats(manifest_path, names), [branch], col_types, bloom_skip)
+    return sorted(n for n in names if n not in skipped)
 
 
 def pruned_read(
@@ -696,13 +794,7 @@ def pruned_read(
     between marker commit and old-file delete would otherwise leave
     BOTH copies of rewritten rows visible to this read)."""
     _compact_recover_tree(path)
-    files = pruned_files(spark, path, manifest_path, box, bloom_filters)
-    if not files:
-        # provably-empty box: an empty frame with the lake's schema
-        return spark.read.parquet(path).limit(0)
-    # basePath keeps partition-directory columns (dt=..., ingest_batch=...)
-    # in the schema exactly as a whole-lake read would
-    return spark.read.option("basePath", path).parquet(*[os.path.join(path, n) for n in files])
+    return _read_names(spark, path, pruned_files(spark, path, manifest_path, box, bloom_filters))
 
 
 # ---------------------------------------------------------------------------
@@ -1202,8 +1294,10 @@ def optimize_clustered(
       record's physical column names — and ONE optimize commit swaps
       them. Old bytes stay for time travel. Compact files are named
       ``compact-<digest>-<seq>.parquet`` with one digest per call and
-      one lake-wide sequence, so no basename repeats across leaves. A
-      partitioned snapshot lake with live deletion vectors is refused.
+      one lake-wide sequence, so no basename repeats across leaves.
+      Deletion-vector masks are keyed by lake-relative name; a legacy
+      record keying them by a basename several live files share raises
+      ``ValueError`` in the read (``_dv_key_files``).
     * plain parquet lakes: each leaf directory rewrites on its own,
       committed by marker + per-file move, old files deleted last;
       any crash heals via ``_compact_recover``.
@@ -1238,17 +1332,6 @@ def optimize_clustered(
         _compact_recover_tree(base)
     names = _data_files(base)
     if any("/" in n for n in names):
-        if info is not None and info.get("dvs"):
-            # masks are keyed by lake-relative name, but records written
-            # before that keyed them by file basename, which repeats
-            # across leaf directories — the refusal guards those legacy
-            # keys; rewrite the masks away first (lake_update/merge or a
-            # non-DV delete materializes them)
-            raise ValueError(
-                "optimize_clustered on a PARTITIONED lake with live "
-                "deletion vectors is not supported — materialize the "
-                "masks first (any rewrite of the DV'd files does)"
-            )
         names = [n for n in names if "/" in n]
     cols = [c for c, _, _ in specs]
     if info is not None:
@@ -1598,39 +1681,14 @@ def append_bloom_manifest(spark: SparkSession, path: str, manifest_path: str) ->
 
 
 def _classify_box_files(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str,
-    box: dict[str, tuple[float, float]],
-    col_types: dict | None = None,
-    equals_strs: dict[str, str] | None = None,
-    files: list[str] | None = None,
-) -> tuple[list[str], list[str], dict[str, int]]:
-    """(inside, boundary, rows_by_file) for a conjunctive box over a
-    manifested lake — the shared classification behind the metadata
-    aggregates (count, min/max candidates, NDV). INSIDE files are
-    provably all-matching with zero nulls on every box column (safe to
-    consume unopened); BOUNDARY files must be read + exactly filtered;
-    everything else is provably disjoint. Strict interiority widens by
-    one ULP above 2^53 (the manifest's float fold rounds) — a wrong
-    reclassification only adds a read, never a wrong answer.
-    ``files``: explicit inventory override (time travel, round 12) —
-    per-file stats are version-independent facts."""
-    import math
-
-    # mergeSchema: pre-round-11 manifests lack the nulls column; their
-    # rows surface nulls=NULL = unknown, which classifies as boundary
-    # (read + filter) — sound, never overcounting
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
-    has_nulls_col = "nulls" in mf.columns
-    rows_by_file = {r.file: r.rows for r in mf.select("file", "rows").distinct().collect()}
-    stats = {}
-    for r in mf.filter(F.col("col").isin(list(box))).collect():
-        nc = r.nulls if has_nulls_col else None
-        stats.setdefault(r.file, {})[r.col] = (r.lo, r.hi, nc)
-    inside: list[str] = []
-    boundary: list[str] = []
-    existing = set(_data_files(path) if files is None else files)
+    stats: list[dict], box: dict[str, tuple[float, float]], str_eq: dict, col_types: dict | None
+) -> tuple[list[str], list[str]]:
+    """(inside, boundary) over ``stats`` (``file_stats``' shape) for an
+    exact conjunctive (box, str_eq) — the classification behind the
+    metadata aggregates (count, min/max candidates, NDV). INSIDE files
+    provably match on every row (``_all_rows_match``: safe to consume
+    unopened); BOUNDARY files must be read and exactly filtered; the
+    rest are provably disjoint (``_skip_rules``)."""
     for c, (lo, hi) in box.items():
         try:
             float(lo), float(hi)
@@ -1639,63 +1697,58 @@ def _classify_box_files(
                 f"metadata aggregates need numeric box bounds; got {c}={lo!r}..{hi!r} "
                 "(use pruned_read with bloom_filters for string equality)"
             ) from exc
+    inside: list[str] = []
+    boundary: list[str] = []
+    for fs in stats:
+        if _skip_rules(fs, box, str_eq, {}, {}, col_types):
+            continue
+        (inside if _all_rows_match(fs, box, str_eq, col_types) else boundary).append(fs["file"])
+    return inside, boundary
 
-    def _surely_inside(st_lo: float, st_hi: float, lo_f: float, hi_f: float) -> bool:
-        exact = 2.0**53
-        lo_ok = st_lo >= lo_f if abs(st_lo) < exact else st_lo - math.ulp(st_lo) >= lo_f
-        hi_ok = st_hi <= hi_f if abs(st_hi) < exact else st_hi + math.ulp(st_hi) <= hi_f
-        return lo_ok and hi_ok
 
-    for f in rows_by_file:
-        if f not in existing:
-            continue  # vanished file (replay rewrite, compaction)
-        verdict = "inside"
-        pvals = _partition_values(f)
-        for c, (lo, hi) in box.items():
-            st = stats.get(f, {}).get(c)
-            if st is None and c in pvals:
-                # directory-encoded partition value: every row of the
-                # file shares it, non-null by construction — an exact
-                # (v, v, 0) stat row the footer could never provide
-                # (round 11, the Iceberg partition-stats rule)
-                v = _partition_num(pvals[c], c, col_types)
-                if v is not None:
-                    st = (v, v, 0)
-            if st is None:
-                verdict = "boundary"  # no usable stats: must read
-                continue
-            if st[0] is None or st[1] is None:
-                verdict = "skip"  # all-null column: a box matches nothing
-                break
-            if st[1] < float(lo) or st[0] > float(hi):
-                verdict = "skip"  # provable miss beats everything
-                break
-            if not _surely_inside(st[0], st[1], float(lo), float(hi)):
-                if verdict != "boundary":
-                    verdict = "boundary"
-            # a NULL row never matches a box predicate, but it IS in
-            # the manifest row count: the unopened-file shortcut needs
-            # a provable ZERO null count (unknown -> read and filter)
-            if st[2] is None or int(st[2]) != 0:
-                if verdict != "skip":
-                    verdict = "boundary"
-        # string equality classifies EXACTLY against directory-encoded
-        # partition values (every row shares them, never null); files
-        # without the partition key are boundary-read (round 11)
-        for c, v in (equals_strs or {}).items():
-            if verdict == "skip":
-                break
-            pv = pvals.get(c)
-            if pv is None:
-                verdict = "boundary"
-            elif pv != v:
-                verdict = "skip"
-        if verdict == "inside":
-            inside.append(f)
-        elif verdict == "boundary":
-            boundary.append(f)
-    boundary = sorted(set(boundary) | (existing - set(rows_by_file)))
-    return sorted(inside), boundary, rows_by_file
+def _box_filtered(df: DataFrame, box: dict, where: str | None) -> DataFrame:
+    """``df`` under the exact predicate string ``where``, else the
+    numeric box itself."""
+    if where is not None:
+        return df.filter(where)
+    cond = F.lit(True)
+    for c, (lo, hi) in box.items():
+        cond = cond & F.col(c).between(float(lo), float(hi))
+    return df.filter(cond)
+
+
+def _stats_count(
+    stats: list[dict],
+    boxes: list[dict],
+    where: str | None,
+    col_types: dict | None,
+    str_eq: dict | None,
+    dv_rows: dict[str, int],
+    reader,
+) -> int:
+    """COUNT(*) from ``stats`` under the union of exact, pairwise
+    disjoint ``boxes`` (one box, or the point boxes of an integral
+    ``IN``) with the string equalities ``str_eq``: files inside a box
+    contribute ``rows`` minus their masked rows (``dv_rows``, by
+    relative name) unopened; every other file some box may touch —
+    boundary files, inside files of unknown row count — is read ONCE
+    through ``reader(names)`` and filtered with the exact predicate
+    ``where`` (None: the one box itself, ``_box_filtered``). A file
+    inside one point box is provably disjoint from the others, so its
+    rows are never counted twice; one that is not is read instead."""
+    inside: set[str] = set()
+    boundary: set[str] = set()
+    for box in boxes:
+        i, b = _classify_box_files(stats, box, str_eq or {}, col_types)
+        inside.update(i)
+        boundary.update(b)
+    rows = {fs["file"]: fs["rows"] for fs in stats}
+    boundary |= {f for f in inside if rows[f] is None}
+    inside -= boundary
+    n = sum(int(rows[f]) - dv_rows.get(f, 0) for f in inside)
+    if boundary:
+        n += _box_filtered(reader(sorted(boundary)), boxes[0], where).count()
+    return n
 
 
 def manifest_assisted_count(
@@ -1707,11 +1760,10 @@ def manifest_assisted_count(
     col_types: dict | None = None,
     equals_strs: dict[str, str] | None = None,
     files: list[str] | None = None,
-    dv_rows: dict[str, int] | None = None,
-    boundary_reader=None,
 ) -> int:
-    """COUNT(*) under a conjunctive box predicate with metadata doing
-    most of the work (the Iceberg/Delta metadata-count pattern):
+    """COUNT(*) over a plain parquet lake under a conjunctive box
+    predicate with metadata doing most of the work (the Iceberg/Delta
+    metadata-count pattern, ``_stats_count`` over the scan manifest):
 
     * files whose stats prove them FULLY INSIDE the box on every box
       column contribute their manifest row count without being opened;
@@ -1720,52 +1772,62 @@ def manifest_assisted_count(
       to the manifest — are read and exactly filtered.
 
     On a well-clustered lake the read set is the box's surface, not
-    its volume. The classification collects box-column stat rows only
-    (metadata-scale, same budget as pruned_read's path collect).
+    its volume.
 
-    ``where`` (round 11): the exact predicate STRING to apply to
-    boundary files instead of the reconstructed numeric box — required
-    when the box folds temporal columns to epoch units (the raw column
-    can't compare against the folded bounds) and when the caller's
-    predicate is the source of truth (``lake_count``). The box must be
+    ``where``: the exact predicate STRING to apply to boundary files
+    instead of the reconstructed numeric box — required when the box
+    folds temporal columns to epoch units. The box must be
     semantically EQUAL to ``where`` on interior files, since those are
-    counted unopened.
-
-    ``files`` (round 12): explicit inventory override — historical
-    versions count through the same metadata path, since a manifest
-    row (stats + row count) is an immutable per-file fact.
-
-    ``dv_rows`` / ``boundary_reader`` (round 13 — mask-aware counts):
-    with live deletion vectors, an INTERIOR file's live matching rows
-    are its physical rows minus its masked positions (every physical
-    row matches the box, masked ones are simply gone), so interior
-    files contribute ``rows − dv_rows[file]`` still unopened (keys
-    resolve against the live inventory, ``_dv_rows_by_file``);
-    boundary files read through ``boundary_reader`` (the caller's
-    mask-applying snapshot reader) instead of the raw parquet paths.
-    The fast path no longer degrades wholesale under DVs."""
+    counted unopened. ``files``: explicit inventory override."""
     _compact_recover_tree(path)
-    inside, boundary, rows_by_file = _classify_box_files(
-        spark, path, manifest_path, box, col_types, equals_strs, files=files
+    names = _data_files(path) if files is None else files
+    return _stats_count(
+        _manifest_stats(manifest_path, names), [box], where, col_types, equals_strs, {},
+        lambda n: _read_names(spark, path, n),
     )
-    dvr = {}
-    if dv_rows:
-        dvr = _dv_rows_by_file(dv_rows, files if files is not None else _data_files(path))
-    metadata_count = sum(int(rows_by_file[f]) - dvr.get(f, 0) for f in inside)
-    if not boundary:
-        return metadata_count
-    if boundary_reader is not None:
-        df = boundary_reader(sorted(boundary))
-    else:
-        df = spark.read.option("basePath", path).parquet(
-            *[os.path.join(path, n) for n in sorted(boundary)]
-        )
-    if where is not None:
-        return metadata_count + df.filter(where).count()
-    cond = F.lit(True)
-    for c, (lo, hi) in box.items():
-        cond = cond & F.col(c).between(float(lo), float(hi))
-    return metadata_count + df.filter(cond).count()
+
+
+def _stats_minmax(
+    stats: list[dict],
+    col: str,
+    box: dict,
+    where: str | None,
+    col_types: dict | None,
+    dv_rows: dict[str, int],
+    reader,
+    stat_col: str | None = None,
+) -> DataFrame:
+    """Exact (MIN, MAX) of ``col`` under an exact box, reading only the
+    files whose stats (keyed ``stat_col``, the physical name; ``col``
+    when None) could hold the extreme: boundary files, masked files (a
+    masked file's stat may sit on a masked row), inside files without
+    stats on ``col``, and the inside files whose lo could undercut
+    every other inside file's lo (resp. hi overcut). A stored stat may
+    be a float() fold of the true value (error <= ulp/2), so candidacy
+    widens by 2 ulp. The extreme is computed EXACTLY from the read rows
+    (``reader(names)``), so it is bit-identical to a full scan."""
+    import math
+
+    sc = stat_col or col
+    inside, boundary = _classify_box_files(stats, box, {}, col_types)
+    by = {fs["file"]: fs for fs in stats}
+    read = set(boundary)
+    interior = []
+    for f in inside:
+        if dv_rows.get(f, 0) > 0 or sc not in by[f]["min"] or sc not in by[f]["max"]:
+            read.add(f)
+        else:
+            interior.append(f)
+    if interior:
+        lo_best = min(by[f]["min"][sc] for f in interior)
+        hi_best = max(by[f]["max"][sc] for f in interior)
+        slack_lo = 2 * math.ulp(abs(lo_best) or 1.0)
+        slack_hi = 2 * math.ulp(abs(hi_best) or 1.0)
+        for f in interior:
+            if by[f]["min"][sc] <= lo_best + slack_lo or by[f]["max"][sc] >= hi_best - slack_hi:
+                read.add(f)
+    df = _box_filtered(reader(sorted(read)), box, where)
+    return df.agg(F.min(col).alias(f"min_{col}"), F.max(col).alias(f"max_{col}"))
 
 
 def manifest_assisted_minmax(
@@ -1777,135 +1839,22 @@ def manifest_assisted_minmax(
     where: str | None = None,
     col_types: dict | None = None,
     files: list[str] | None = None,
-    dv_rows: dict[str, int] | None = None,
-    masked_reader=None,
 ):
-    """Exact (MIN, MAX) of ``col`` under a conjunctive box with
-    metadata choosing the READ SET (round 11 — the companion to
-    ``manifest_assisted_count``): only the files whose footer range
-    could CONTAIN the global extreme are opened.
-
-    Classification mirrors the count: a file provably disjoint from
-    the box contributes nothing; a box-BOUNDARY file must be read (its
-    footer min/max may come from rows outside the box); an INTERIOR
-    file's footer lo/hi bound all its in-box rows exactly. Among
-    interior files, only those whose lo could undercut every other
-    file's lo (resp. hi overcut) are read — the stored stat is a
-    float() fold of the true value (error <= ulp/2), so candidacy
-    widens by 2 ulp before trusting it. The extreme is then computed
-    EXACTLY from the read files (native column values, never the
-    rounded manifest doubles), so the result is bit-identical to a
-    full scan. On a range-clustered lake the read set is O(1) files.
-
-    ``dv_rows`` / ``masked_reader`` (round 14 — mask-aware min/max):
-    with live deletion vectors, a MASKED file's footer extreme may sit
-    on a masked row, so its stats can neither stand in for its live
-    rows nor narrow the candidate band — masked files always read,
-    through the caller's mask-applying snapshot reader, while UNMASKED
-    files keep the full metadata treatment (disjoint files skip,
-    non-candidate interiors stay unopened). Candidacy bounds come from
-    unmasked interior stats only: an unmasked file skipped by them has
-    a live extreme strictly inside some READ unmasked file's, and the
-    masked files' true extremes participate exactly because they are
-    read. A file with a zero/absent dv_rows entry has no masked rows —
-    its stats stay exact (the fast path no longer degrades wholesale
-    under DVs).
-
-    Returns a 1-row DataFrame (min_<col>, max_<col>) so the values
-    keep the column's native type end to end."""
-    import math
-
+    """Exact (MIN, MAX) of ``col`` over a plain parquet lake under a
+    conjunctive box with the scan manifest choosing the READ SET (the
+    companion to ``manifest_assisted_count``, ``_stats_minmax``): a
+    file provably disjoint from the box contributes nothing; a
+    box-BOUNDARY file must be read (its footer min/max may come from
+    rows outside the box); among INTERIOR files only those whose range
+    could hold the global extreme are opened. On a range-clustered lake
+    the read set is O(1) files. Returns a 1-row DataFrame
+    (min_<col>, max_<col>) so the values keep the column's native type
+    end to end."""
     _compact_recover_tree(path)
-    box = dict(box or {})
-    existing = set(_data_files(path) if files is None else files)
-    dvr = _dv_rows_by_file(dv_rows, existing)
-
-    def _is_masked(f: str) -> bool:
-        return dvr.get(f, 0) > 0
-
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
-    stats: dict[str, dict[str, tuple]] = {}
-    want_cols = set(box) | {col}
-    for r in mf.filter(F.col("col").isin(list(want_cols))).collect():
-        if r.lo is None or r.hi is None:
-            continue  # all-null stat row: no usable bound, file reads as boundary
-        stats.setdefault(r.file, {})[r.col] = (r.lo, r.hi)
-    known = set(stats)
-    interior, boundary, masked_names = [], [], []
-    for f in sorted(existing):
-        if f not in known:
-            # unknown to the manifest: must read (through the mask
-            # reader when masked)
-            (masked_names if _is_masked(f) else boundary).append(f)
-            continue
-        pvals = _partition_values(f)
-        verdict = "interior"
-        for c, (lo, hi) in box.items():
-            st = stats.get(f, {}).get(c)
-            if st is None and c in pvals:
-                v = _partition_num(pvals[c], c, col_types)
-                if v is not None:
-                    st = (v, v)
-            if st is None:
-                verdict = "boundary"
-                continue
-            if st[1] < float(lo) or st[0] > float(hi):
-                verdict = "skip"
-                break
-            if not (st[0] >= float(lo) and st[1] <= float(hi)):
-                verdict = "boundary"
-        if verdict == "skip":
-            continue  # masks only REMOVE rows: a disjoint file stays disjoint
-        if _is_masked(f):
-            masked_names.append(f)
-        elif verdict == "boundary" or stats[f].get(col) is None:
-            boundary.append(f)
-        else:
-            interior.append(f)
-    read = set(boundary)
-    if interior:
-        lo_best = min(stats[f][col][0] for f in interior)
-        hi_best = max(stats[f][col][1] for f in interior)
-        slack_lo = 2 * math.ulp(abs(lo_best) or 1.0)
-        slack_hi = 2 * math.ulp(abs(hi_best) or 1.0)
-        for f in interior:
-            if stats[f][col][0] <= lo_best + slack_lo or stats[f][col][1] >= hi_best - slack_hi:
-                read.add(f)
-    if masked_names and masked_reader is None:
-        raise ValueError("dv_rows passed without a masked_reader")
-    if not read and not masked_names:
-        empty = spark.read.parquet(path).limit(0)
-        return empty.agg(F.min(col).alias(f"min_{col}"), F.max(col).alias(f"max_{col}"))
-
-    def _filtered(df: DataFrame) -> DataFrame:
-        if where is not None:
-            return df.filter(where)
-        cond = F.lit(True)
-        for c, (lo, hi) in box.items():
-            cond = cond & F.col(c).between(float(lo), float(hi))
-        return df.filter(cond)
-
-    legs = []
-    if read:
-        legs.append(
-            _filtered(
-                spark.read.option("basePath", path).parquet(
-                    *[os.path.join(path, n) for n in sorted(read)]
-                )
-            )
-        )
-    if masked_names:
-        legs.append(_filtered(masked_reader(sorted(masked_names))))
-    aggs = [
-        df.agg(F.min(col).alias(f"min_{col}"), F.max(col).alias(f"max_{col}"))
-        for df in legs
-    ]
-    if len(aggs) == 1:
-        return aggs[0]
-    both = aggs[0].unionByName(aggs[1])
-    return both.agg(
-        F.min(f"min_{col}").alias(f"min_{col}"),
-        F.max(f"max_{col}").alias(f"max_{col}"),
+    names = _data_files(path) if files is None else files
+    return _stats_minmax(
+        _manifest_stats(manifest_path, names), col, dict(box or {}), where, col_types, {},
+        lambda n: _read_names(spark, path, n),
     )
 
 
@@ -2001,46 +1950,50 @@ def join_pruned_files(
     bloom_manifest_path: str | None = None,
     col_types: dict | None = None,
 ) -> list[str]:
-    """RELATIVE names of the live data files that could contain ANY of
-    ``keys`` in ``col`` — the file-level form of dynamic partition
-    pruning (round 11). Spark's own DPP prunes partition DIRECTORIES
-    from a join's build side; this prunes FILES, three ways, all
-    provable:
+    """RELATIVE names of the live files of a plain parquet lake that
+    could contain ANY of ``keys`` in ``col`` (``_join_kept`` over the
+    scan manifest's stats)."""
+    stats = _manifest_stats(manifest_path, _data_files(path))
+    return _join_kept(spark, stats, col, keys, bloom_manifest_path, col_types)
+
+
+def _join_kept(
+    spark: SparkSession,
+    stats: list[dict],
+    col: str,
+    keys: list,
+    bloom_manifest_path: str | None,
+    col_types: dict | None,
+) -> list[str]:
+    """The files of ``stats`` (``file_stats``' shape) that could
+    contain ANY of ``keys`` in ``col`` — the file-level form of dynamic
+    partition pruning (round 11). Spark's own DPP prunes partition
+    DIRECTORIES from a join's build side; this prunes FILES, three
+    ways, all provable:
 
     * directory-encoded partition value for ``col`` not among the
       keys → skip (every row shares it);
-    * manifest footer range [lo, hi] containing NO key → skip — a
-      PER-KEY interval probe (sorted keys + bisect), strictly tighter
-      than the one wide [min(keys), max(keys)] box when the key set
-      is sparse against a clustered layout;
+    * stats range [min, max] containing NO key → skip — a PER-KEY
+      interval probe (sorted keys + bisect), strictly tighter than the
+      one wide [min(keys), max(keys)] box when the key set is sparse
+      against a clustered layout; a provably all-null column → skip
+      (NULL never equi-joins);
     * Bloom manifest proving every key absent → skip (string /
       high-cardinality complement).
 
-    Files without usable stats, unknown to the manifests, or with any
-    key possibly present are kept — the same superset guarantee as
-    ``pruned_files``. NULL keys are dropped (a NULL never equi-joins)."""
+    Files without usable stats or with any key possibly present are
+    kept — the superset guarantee of ``_skip_rules``. NULL keys are
+    dropped (a NULL never equi-joins)."""
     import bisect
 
-    on_disk = _data_files(path)
     keys = [k for k in keys if k is not None]
     nums = sorted(
         float(k) for k in keys if isinstance(k, (int, float)) and not isinstance(k, bool)
     )
     others = [k for k in keys if not isinstance(k, (int, float)) or isinstance(k, bool)]
     kept: list[str] = []
-    ranges: dict[str, tuple[float, float]] = {}
-    allnull: set[str] = set()
-    if manifest_path is not None:
-        mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
-        for r in mf.filter(F.col("col") == col).collect():
-            if r.lo is not None and r.hi is not None:
-                ranges[r.file] = (float(r.lo), float(r.hi))
-            else:
-                # explicit all-null stat row (manifest round 11): the
-                # column is provably NULL in every row, and NULL never
-                # equi-joins — skippable outright
-                allnull.add(r.file)
-    for n in on_disk:
+    for fs in stats:
+        n = fs["file"]
         pv = _partition_values(n).get(col)
         if pv is not None:
             # exact string match, else the numeric fold
@@ -2056,13 +2009,12 @@ def join_pruned_files(
             # a shared directory value matching no key: provably no row
             # can equi-join
             continue
-        if n in allnull:
+        if col not in fs["min"] or col not in fs["max"]:
+            nc = fs["nulls"].get(col)
+            if not (nc is not None and fs["rows"] is not None and int(nc) == int(fs["rows"])):
+                kept.append(n)  # unknown / unstatted: must read
             continue
-        rng = ranges.get(n)
-        if rng is None:
-            kept.append(n)  # unknown / unstatted: must read
-            continue
-        lo, hi = rng
+        lo, hi = float(fs["min"][col]), float(fs["max"][col])
         hit = False
         if nums:
             i = bisect.bisect_left(nums, lo)
@@ -2151,52 +2103,48 @@ def manifest_assisted_ndv(
     where: str | None = None,
     col_types: dict | None = None,
     equals_strs: dict[str, str] | None = None,
-    dv_rows: dict[str, int] | None = None,
-    masked_reader=None,
 ) -> int:
-    """APPROX_COUNT_DISTINCT(col) under an exact conjunctive box with
-    metadata doing the interior work: interior files union their
-    PERSISTED sketches unopened; boundary files (plus interior files
-    the NDV manifest hasn't sketched) sketch their exactly-filtered
-    rows live; one ``hll_union_agg`` merges everything. With no box,
-    every live file is interior. Estimate error matches a direct
-    sketch of the qualifying rows (union adds none).
-
-    ``dv_rows`` / ``masked_reader`` (round 14 — mask-aware NDV): a
-    MASKED file's persisted sketch includes its masked rows, so it
-    cannot merge — masked files sketch their LIVE qualifying rows
-    through the caller's mask-applying reader instead; unmasked files
-    keep their persisted sketches unopened. Sound because HLL union
-    only ever ADDS values: excluding the masked file's stale sketch
-    and re-sketching its live rows removes exactly the masked-only
-    values."""
+    """APPROX_COUNT_DISTINCT(col) over a plain parquet lake under an
+    exact conjunctive box (``_stats_ndv`` over the scan manifest's
+    stats; none when ``scan_manifest_path`` is None)."""
     _compact_recover_tree(path)
-    if box and scan_manifest_path is not None:
-        inside, boundary, _rows = _classify_box_files(
-            spark, path, scan_manifest_path, box, col_types, equals_strs
-        )
-    elif box:
-        inside, boundary = [], _data_files(path)
-    else:
-        inside, boundary = _data_files(path), []
-    dvr = _dv_rows_by_file(dv_rows, _data_files(path)) if dv_rows else {}
+    stats = _manifest_stats(scan_manifest_path, _data_files(path))
+    return _stats_ndv(
+        spark, stats, ndv_manifest_path, col, dict(box or {}), where, col_types,
+        equals_strs, {}, lambda n: _read_names(spark, path, n),
+    )
 
-    def _is_masked(f: str) -> bool:
-        return dvr.get(f, 0) > 0
 
-    masked_names = sorted(f for f in (*inside, *boundary) if _is_masked(f))
-    if masked_names and masked_reader is None:
-        raise ValueError("dv_rows passed without a masked_reader")
-    inside = [f for f in inside if not _is_masked(f)]
-    boundary = [f for f in boundary if not _is_masked(f)]
+def _stats_ndv(
+    spark: SparkSession,
+    stats: list[dict],
+    ndv_manifest_path: str,
+    col: str,
+    box: dict,
+    where: str | None,
+    col_types: dict | None,
+    str_eq: dict | None,
+    dv_rows: dict[str, int],
+    reader,
+) -> int:
+    """APPROX_COUNT_DISTINCT(col) with metadata doing the interior
+    work: inside files (``_classify_box_files``) union their PERSISTED
+    sketches unopened; boundary files — plus inside files the NDV
+    manifest hasn't sketched, and MASKED ones (``dv_rows``: their
+    sketch counts masked rows) — sketch their exactly-filtered rows
+    live through ``reader(names)``; one ``hll_union_agg`` merges
+    everything. With no box, every file is inside. Estimate error
+    matches a direct sketch of the qualifying rows (union adds none,
+    and re-sketching a masked file's live rows drops exactly the
+    masked-only values)."""
+    inside, boundary = _classify_box_files(stats, box, str_eq or {}, col_types)
     mf = spark.read.parquet(ndv_manifest_path)
     lg_k = int(mf.select(F.max("lg_k")).head()[0] or _NDV_LG_K)
     sketched = {
         r.file for r in mf.filter(F.col("col") == col).select("file").distinct().collect()
     }
-    live_needed = [n for n in inside if n not in sketched]
-    inside = [n for n in inside if n in sketched]
-    boundary = sorted(set(boundary) | set(live_needed))
+    live = set(boundary) | {f for f in inside if f not in sketched or dv_rows.get(f, 0) > 0}
+    inside = [f for f in inside if f not in live]
     parts = []
     if inside:
         parts.append(
@@ -2204,33 +2152,9 @@ def manifest_assisted_ndv(
             .filter(F.col("file").isin(inside))
             .select("sketch")
         )
-    if boundary:
-        df = spark.read.option("basePath", path).parquet(
-            *[os.path.join(path, n) for n in boundary]
-        )
-        if where is not None:
-            df = df.filter(where)
-        elif box:
-            cond = F.lit(True)
-            for c, (lo, hi) in box.items():
-                cond = cond & F.col(c).between(float(lo), float(hi))
-            df = df.filter(cond)
+    if live:
         parts.append(
-            df.agg(
-                F.hll_sketch_agg(F.col(col).cast("string"), F.lit(lg_k)).alias("sketch")
-            )
-        )
-    if masked_names:
-        mdf = masked_reader(masked_names)
-        if where is not None:
-            mdf = mdf.filter(where)
-        elif box:
-            cond = F.lit(True)
-            for c, (lo, hi) in box.items():
-                cond = cond & F.col(c).between(float(lo), float(hi))
-            mdf = mdf.filter(cond)
-        parts.append(
-            mdf.agg(
+            _box_filtered(reader(sorted(live)), box, where).agg(
                 F.hll_sketch_agg(F.col(col).cast("string"), F.lit(lg_k)).alias("sketch")
             )
         )

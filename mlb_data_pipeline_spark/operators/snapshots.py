@@ -150,13 +150,14 @@ from pyspark.sql import functions as F
 
 from .layout import (
     _all_data_files,
+    _all_rows_match,
     _data_files,
     _dv_key_files,
     _dv_rows_by_file,
     _footer_stats,
     _lake_relpath,
-    _partition_skippable,
     _partition_values,
+    _skip_rules,
     file_stats,
 )
 
@@ -1141,18 +1142,6 @@ def _read_record(
     """The rows of one record of a ref (``read_snapshot`` /
     ``read_branch``)."""
     files = sorted(info["files"])
-    if not files:
-        # empty table: the commit record carries the authoritative
-        # schema (round 12) — on-disk leftovers may be vacuumed away
-        # entirely, or a dead pre-evolution file could supply a stale
-        # column set
-        if info.get("schema"):
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame([], StructType.fromJson(json.loads(info["schema"])))
-        # pre-round-12 commit without a schema leg: best-effort from
-        # whatever parquet remains on disk
-        return spark.read.parquet(path).limit(0)
     missing = [n for n in files if not os.path.exists(os.path.join(path, n))]
     if missing:
         on = "" if branch is None else f"branch {branch!r} "
@@ -1215,6 +1204,16 @@ def _read_files(
     With no usable record (plain dirs, pre-round-12 logs, adopt
     commits) this falls back to the mergeSchema read — the round-11
     behavior, unchanged (DV masking still applies if present)."""
+    if not names:
+        # nothing to read: the record's schema is authoritative (round
+        # 12) — on-disk leftovers may be vacuumed away entirely, or a
+        # dead pre-evolution file could supply a stale column set; a
+        # pre-round-12 record is best-effort from the parquet on disk
+        if (info or {}).get("schema"):
+            from pyspark.sql.types import StructType
+
+            return spark.createDataFrame([], StructType.fromJson(json.loads(info["schema"])))
+        return spark.read.parquet(path).limit(0)
     paths = [os.path.join(path, n) for n in names]
     dv = _dv_df(spark, path, info)
     want_pos = _keep_position_cols or dv is not None
@@ -1682,79 +1681,6 @@ def vacuum_lake(
 # ---------------------------------------------------------------------------
 
 
-def _branch_none_match(
-    fs: dict, box: dict, equals: dict, nots: dict, nullness: dict, col_types: dict | None
-) -> bool:
-    """True when a file's footer stats / partition values PROVE no row
-    matches this conjunctive branch — the same conservative skip rule
-    as ``pruned_files`` (missing stats always keep)."""
-    if _partition_skippable(
-        _partition_values(fs["file"]), box, equals, col_types, nots, nullness
-    ):
-        return True
-    for c, (lo, hi) in box.items():
-        try:
-            lo_f, hi_f = float(lo), float(hi)
-        except (TypeError, ValueError):
-            continue  # string bound: no footer stats to check
-        if c in fs["min"] and c in fs["max"]:
-            if fs["max"][c] < lo_f or fs["min"][c] > hi_f:
-                return True
-        elif fs["nulls"].get(c) is not None and int(fs["nulls"][c]) == int(fs["rows"]):
-            return True  # provably all-null column: a box matches nothing
-    for c, kind in (nullness or {}).items():
-        nc = fs["nulls"].get(c)
-        if kind == "null" and nc is not None and int(nc) == 0:
-            return True
-        if kind == "notnull" and nc is not None and int(nc) == int(fs["rows"]) and fs["rows"] > 0:
-            return True
-    return False
-
-
-def _surely_inside_file(st_lo: float, st_hi: float, lo: float, hi: float) -> bool:
-    """Strict containment check for the ALL-ROWS-MATCH proof — above
-    2^53 the footer stat's float fold rounds, so containment must hold
-    with one-ulp slack before trusting it (same rule as
-    ``manifest_assisted_count``)."""
-    import math
-
-    exact = 2.0**53
-    lo_ok = st_lo >= lo if abs(st_lo) < exact else st_lo - math.ulp(st_lo) >= lo
-    hi_ok = st_hi <= hi if abs(st_hi) < exact else st_hi + math.ulp(st_hi) <= hi
-    return lo_ok and hi_ok
-
-
-def _all_rows_match(
-    fs: dict, box: dict, str_eq: dict, col_types: dict | None
-) -> bool:
-    """True when a file's footer stats / partition values PROVE every
-    row matches an exact conjunctive (box, str_eq) predicate: each box
-    column's [min, max] is contained in the bound with a provably ZERO
-    null count (a NULL row never matches, and deleted-where-NULL rows
-    must be kept), and each string equality is a matching
-    directory-encoded partition value (every row shares it)."""
-    pvals = _partition_values(fs["file"])
-    for c, (lo, hi) in box.items():
-        st_lo, st_hi = fs["min"].get(c), fs["max"].get(c)
-        if st_lo is None or st_hi is None:
-            pv = pvals.get(c)
-            if pv is not None:
-                from .layout import _partition_num
-
-                x = _partition_num(pv, c, col_types)
-                if x is not None and float(lo) <= x <= float(hi):
-                    continue  # exact (v, v, nulls=0) partition stat
-            return False
-        if fs["nulls"].get(c) is None or int(fs["nulls"][c]) != 0:
-            return False
-        if not _surely_inside_file(float(st_lo), float(st_hi), float(lo), float(hi)):
-            return False
-    for c, v in str_eq.items():
-        if pvals.get(c) != v:
-            return False
-    return True
-
-
 def _lake_file_stats(path: str, cols: list[str], info: dict) -> list[dict]:
     """Stats of the files of record ``info`` (its ``files``) in
     ``file_stats``'s dict shape, sorted by file: the record's own
@@ -1831,7 +1757,7 @@ def _classify_for_delete(
     drop, keep, rewrite = [], [], []
     for fs in stats:
         if branches and all(
-            _branch_none_match(fs, box, equals, nots, nullness, col_types)
+            _skip_rules(fs, box, equals, nots, nullness, col_types)
             for box, equals, nots, nullness in branches
         ):
             keep.append(fs["file"])  # provably zero matching rows

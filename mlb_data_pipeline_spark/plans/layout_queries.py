@@ -381,29 +381,26 @@ def q23_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # snapshot-DML twin (round 11): delete + update + time travel,
-    # all THROUGH the catalog (lake_*_where wire path, col_types, and
-    # the registered scan manifest automatically)
+    # all THROUGH the catalog (lake_*_where wire path, col_types); every
+    # read plans from the commit record's per-file stats, no manifest
     import shutil
 
     from ..catalog import lake_delete_where, lake_update_where
-    from ..operators.layout import save_scan_manifest as _ssm
     from ..operators.snapshots import lake_write
 
     slake = os.path.join(base, "snap_data")
-    smanifest = os.path.join(base, "snap_manifest")
     if os.path.exists(slake):
         shutil.rmtree(slake)
     lake_write(spark, o.select("ck", "pc").repartitionByRange(4, "ck"), slake)
-    _ssm(spark, slake, ["ck", "pc"], smanifest)
-    register_lake_table(spark, "q23_orders_snap", slake, scan_manifest=smanifest)
+    register_lake_table(spark, "q23_orders_snap", slake)
     lake_delete_where(spark, "q23_orders_snap", "ck BETWEEN 0 AND 60")
     lake_update_where(spark, "q23_orders_snap", {"pc": "pc + 55555"}, "ck BETWEEN 90 AND 120")
     dml = agg(lake_scan(spark, "q23_orders_snap"), "dml")
     dml_v1 = agg(lake_scan(spark, "q23_orders_snap", version=1), "dml_v1")
 
-    # manifest-pruned TIME TRAVEL (round 12): v1 under a box — files
-    # the DML left alone prune from their (still-true) manifest rows;
-    # files the manifest GC'd stay must-read
+    # pruned TIME TRAVEL (round 12): v1 under a box — the v1 record's
+    # own per-file stats prune its files, including those the DML
+    # later removed
     tt_box = agg(
         lake_scan(spark, "q23_orders_snap", "ck BETWEEN 100 AND 400", version=1),
         "tt_box",

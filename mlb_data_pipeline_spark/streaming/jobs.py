@@ -663,8 +663,6 @@ def lake_snapshot_stream(
     rows_stream: DataFrame,
     lake_path: str,
     checkpoint_dir: str,
-    stat_cols: list[str] | None = None,
-    box_manifest_path: str | None = None,
     optimize_every: int | None = None,
     optimize_specs: list[tuple[str, int, int]] | None = None,
     optimize_bits: int = 10,
@@ -688,8 +686,8 @@ def lake_snapshot_stream(
     write and commit, are ``vacuum_lake`` fodder). foreachBatch retries
     therefore converge to exactly-once visible rows.
 
-    ``stat_cols``/``box_manifest_path``: optional manifest maintenance
-    per commit — O(batch) footer appends, same as lake_append_stream.
+    Each commit records its files' row counts and column stats, so the
+    catalog plans reads from the record: no scan manifest to maintain.
 
     Maintenance cadence (round 11, mirrors lake_append_stream's):
     every ``optimize_every`` committed batches an in-stream
@@ -734,7 +732,6 @@ def lake_snapshot_stream(
     micro-batch lands as its own file, and without in-staging
     compaction the publish would ship that fragmentation straight to
     main (at 100 TB, a small-files problem on the PUBLISHED table)."""
-    from ..operators.layout import append_scan_manifest
     from ..operators.snapshots import (
         _commit_append,
         _ref_info,
@@ -877,20 +874,11 @@ def lake_snapshot_stream(
             summary={"batch_id": batch_id, "files_added": len(new)},
             spark=spark,
         )
-        if box_manifest_path is not None and stat_cols:
-            append_scan_manifest(spark, lake_path, stat_cols, box_manifest_path)
         if optimize_every and optimize_specs and (batch_id + 1) % optimize_every == 0:
             from ..operators.layout import optimize_clustered
             from ..operators.snapshots import vacuum_lake
 
-            optimize_clustered(
-                spark,
-                lake_path,
-                optimize_specs,
-                optimize_bits,
-                manifest_path=box_manifest_path,
-                stat_cols=stat_cols,
-            )
+            optimize_clustered(spark, lake_path, optimize_specs, optimize_bits)
             if vacuum_keep_last is not None:
                 vacuum_lake(lake_path, keep_last=vacuum_keep_last)
 

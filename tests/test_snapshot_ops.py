@@ -361,21 +361,48 @@ def test_partitioned_optimize_jobs_do_not_grow_with_leaves(spark, tmp_path):
     assert jobs_2 == jobs_6 <= 4, (jobs_2, jobs_6)
 
 
-def test_optimize_refuses_partitioned_lake_with_deletion_vectors(spark, tmp_path):
-    """Records written before lake-relative mask keys keyed masks by
-    file basename, which repeats across leaf directories, so OPTIMIZE
-    on a partitioned lake with live deletion vectors raises instead of
-    guessing which file a mask meant. One write task makes each leaf
-    one file spanning every k, so the delete is a boundary delete and
-    writes a mask at any core count."""
+def test_optimize_partitioned_lake_with_deletion_vectors(spark, tmp_path):
+    """Masks are keyed by lake-relative name, so OPTIMIZE rewrites a
+    partitioned lake with live deletion vectors. One write task gives
+    both leaves the same file basename; a DV delete masks rows of one
+    leaf only, and the compacted lake holds exactly the live rows with
+    no mask left."""
+    from mlb_data_pipeline_spark.operators.snapshots import snapshot_info
+
     lake = str(tmp_path / "lake")
     df = _kv(spark, 0, 400).withColumn("p", (F.col("k") % 2).cast("long"))
     lake_write(spark, df.repartition(1), lake, partition_by=["p"])
-    lake_delete(
-        spark, lake, "k BETWEEN 100 AND 149", col_types={"k": "bigint"}, use_dv=True
+    files = snapshot_info(lake)["files"]
+    assert len(files) == 2 and len({os.path.basename(n) for n in files}) == 1
+    rep = lake_delete(
+        spark, lake, "k BETWEEN 100 AND 149 AND p = 0",
+        col_types={"k": "bigint", "p": "bigint"}, use_dv=True,
     )
+    assert rep["files_dv"] == 1
+    want = [k for k in range(400) if not (100 <= k <= 149 and k % 2 == 0)]
+    assert len(want) == 375
+    assert optimize_clustered(spark, lake, [("k", 0, 400)], bits=8)["files_rewritten"] == 2
+    assert not snapshot_info(lake).get("dv_rows")
+    assert sorted(r.k for r in read_snapshot(spark, lake).select("k").collect()) == want
+
+
+def test_optimize_refuses_partitioned_lake_with_deletion_vectors(spark, tmp_path):
+    """A record written before lake-relative mask keys keyed a mask by
+    file basename. When several live files share that basename (one
+    write task writes every leaf), OPTIMIZE raises instead of guessing
+    which file the mask meant, and commits nothing."""
+    import re
+
+    from mlb_data_pipeline_spark.operators.snapshots import snapshot_info
+    from tests.test_deletion_vectors import _stage_legacy_dv
+
+    lake = str(tmp_path / "lake")
+    df = _kv(spark, 0, 400).withColumn("p", (F.col("k") % 2).cast("long"))
+    lake_write(spark, df.repartition(1), lake, partition_by=["p"])
+    files = sorted(snapshot_info(lake)["files"])
+    _stage_legacy_dv(spark, lake, files[0], [0, 1])
     v = current_version(lake)
-    with pytest.raises(ValueError, match="deletion vectors"):
+    with pytest.raises(ValueError, match=re.escape(os.path.basename(files[0]))):
         optimize_clustered(spark, lake, [("k", 0, 400)], bits=8)
     assert current_version(lake) == v
 
@@ -792,10 +819,10 @@ def test_tags_resolve_and_survive_vacuum(spark, tmp_path):
 
 
 def test_dml_maintains_registered_manifest(spark, tmp_path):
-    """DML on a registered table GC's the scan manifest's rows for
-    departed files and stats the files it wrote in the same call — the
-    metadata count stays exact (and metadata-only for interiors) right
-    after a delete and an update, with no separate day-2 run."""
+    """DML on a registered snapshot table with a scan manifest: the
+    catalog plans from the commit record, so the metadata count stays
+    exact right after a delete and an update with no manifest upkeep
+    (the manifest is neither read nor maintained)."""
     from mlb_data_pipeline_spark.catalog import lake_delete_where, lake_update_where
 
     lake = str(tmp_path / "lake")
@@ -804,15 +831,8 @@ def test_dml_maintains_registered_manifest(spark, tmp_path):
     save_scan_manifest(spark, lake, ["k", "v"], manifest)
     register_lake_table(spark, "t_dml_m", lake, scan_manifest=manifest)
     lake_delete_where(spark, "t_dml_m", "k < 250")
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest)
-    live = set(snapshot_files(lake))
-    assert {r.file for r in mf.select("file").distinct().collect()} == live
     assert lake_count(spark, "t_dml_m", "k BETWEEN 300 AND 700") == 401
     lake_update_where(spark, "t_dml_m", {"v": "v + 7"}, "k >= 900")
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest)
-    assert {r.file for r in mf.select("file").distinct().collect()} == set(
-        snapshot_files(lake)
-    )
     assert lake_count(spark, "t_dml_m", "k BETWEEN 300 AND 700") == 401
     got = lake_scan(spark, "t_dml_m", "k >= 995").orderBy("k").collect()
     assert [r.v for r in got] == [k * 2 + 7 for k in range(995, 1000)]
@@ -830,12 +850,8 @@ def test_snapshot_stream_maintenance_cadence(spark, tmp_path):
     from mlb_data_pipeline_spark.streaming.jobs import lake_snapshot_stream
 
     lake = str(tmp_path / "lake")
-    manifest = str(tmp_path / "manifest")
     src = str(tmp_path / "src")
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
-
     lake_write(spark, _kv(spark, 0, 2000).repartitionByRange(4, "k"), lake)
-    save_scan_manifest(spark, lake, ["k"], manifest)
     # four unsorted full-range batches (each file wide-span = dirty)
     for i in range(4):
         (
@@ -852,8 +868,6 @@ def test_snapshot_stream_maintenance_cadence(spark, tmp_path):
         stream,
         lake,
         str(tmp_path / "ckpt"),
-        stat_cols=["k"],
-        box_manifest_path=manifest,
         optimize_every=2,
         optimize_specs=[("k", 0, 2000)],
         vacuum_keep_last=3,
