@@ -165,9 +165,9 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # lake, the registered scan manifest on a plain parquet lake) with one
 # per-file rule (``layout._skip_rules`` / ``layout._all_rows_match``,
 # which snapshot DML uses too), and reads through one reader
-# (``_reader``: on a snapshot lake the record's schema, deletion-vector
-# masks and column mapping hold on every read). Partition values and
-# Bloom manifests prune on both kinds of lake.
+# (``layout._read_names``: on a snapshot lake the record's schema,
+# deletion-vector masks and column mapping hold on every read).
+# Partition values and Bloom manifests prune on both kinds of lake.
 #
 # Supported conjunct shapes (the same fragments a row-group pruner
 # handles): ``col BETWEEN a AND b``, ``col >= a``, ``col > a``,
@@ -562,8 +562,9 @@ def _lake_info(
     ``file_stats`` and read through it (``layout._read_names``); on a
     plain parquet lake it is ``{"files": _data_files(path)}``. A head
     read heals a torn OPTIMIZE swap first (ADVICE round 10). Raises
-    ``ValueError`` for two refs at once and for a record whose files
-    are missing (vacuumed)."""
+    ``ValueError`` for two refs at once and, on a branch or version
+    ref, for a record whose files are missing (vacuumed); a head read
+    probes no file (its planning stays metadata-only)."""
     from .operators.layout import _compact_recover_tree, _data_files
     from .operators.snapshots import _ref_info, has_snapshots, snapshot_info, version_as_of
 
@@ -584,6 +585,7 @@ def _lake_info(
             _compact_recover_tree(path)
             if not has_snapshots(path):
                 return {"files": _data_files(path)}
+            return snapshot_info(path)
         info = snapshot_info(path, version)
         gone = (
             "snapshot references {n} vacuumed file(s) (e.g. {e!r}) — expired "
@@ -610,22 +612,6 @@ def _lake_stats(ent: dict, info: dict, cols: list[str]) -> list[dict]:
     if "version" in info:
         return _lake_file_stats(ent["path"], cols, info)
     return _manifest_stats(ent["scan_manifest"], info["files"])
-
-
-def _masked_rows(info: dict) -> dict[str, int]:
-    """{file -> masked rows} of a snapshot record (empty otherwise)."""
-    from .operators.layout import _dv_rows_by_file
-
-    return _dv_rows_by_file(info.get("dv_rows"), info["files"])
-
-
-def _reader(spark: SparkSession, ent: dict, info: dict):
-    """``names -> DataFrame`` through ``info`` (``layout._read_names``):
-    on a snapshot lake every read applies the record's schema,
-    deletion-vector masks and column mapping."""
-    from .operators.layout import _read_names
-
-    return lambda names: _read_names(spark, ent["path"], names, info)
 
 
 def _plan_skips(
@@ -668,11 +654,13 @@ def _plan_skips(
 def _scan(spark: SparkSession, ent: dict, info: dict, predicate: str | None) -> DataFrame:
     """The pruned read of ``info`` under ``predicate`` (``lake_scan``'s
     body)."""
+    from .operators.layout import _read_names
+
     names = sorted(info["files"])
     if predicate:
         _, skipped = _plan_skips(spark, ent, info, predicate)
         names = [n for n in names if n not in skipped]
-    df = _reader(spark, ent, info)(names)
+    df = _read_names(spark, ent["path"], names, info)
     return df.filter(predicate) if predicate else df
 
 
@@ -766,8 +754,8 @@ def lake_join_scan(
     against each file's stats (``_lake_stats``: the commit record on a
     snapshot lake, the scan manifest on a plain one), and Bloom-manifest
     IN-list probes (``layout._join_kept``). The kept files read through
-    the record (``_reader``), so deletion-vector masks and column
-    mapping hold and ``fact_col`` is the logical column.
+    the record (``layout._read_names``), so deletion-vector masks and
+    column mapping hold and ``fact_col`` is the logical column.
 
     Spark's own dynamic partition pruning handles hive-partitioned
     keys; this extends the idea to unpartitioned-but-CLUSTERED lakes,
@@ -780,7 +768,7 @@ def lake_join_scan(
     (``broadcast_dim=False`` for a large dim after fallback)."""
     from pyspark.sql import functions as F
 
-    from .operators.layout import _join_kept
+    from .operators.layout import _join_kept, _read_names
 
     ent = _lake_entry(spark, name)
     info = _lake_info(ent)
@@ -805,7 +793,7 @@ def lake_join_scan(
             ent["bloom_manifests"].get(fact_col),
             _phys_keyed(_lake_col_types(spark, ent), phys),
         )
-    base = _reader(spark, ent, info)(files)
+    base = _read_names(spark, ent["path"], files, info)
     if cond_name is not None:
         return base.join(right, on=cond_name, how="inner")
     return base.join(right, on=base[fact_col] == right[dcol], how="inner")
@@ -952,12 +940,13 @@ def lake_count(
     the predicate folds EXACTLY (``_extract_exact_clauses``), files the
     stats (``_lake_stats``) prove fully inside contribute their row
     counts minus masked rows unopened, provably disjoint files nothing,
-    and only boundary files are read (``_reader``: masks and column
-    mapping apply) and filtered with the exact predicate string — in
-    one read, also for an integral ``IN`` (the union of its disjoint
-    point boxes). Otherwise
-    this is the pruned scan's count — same answer, no shortcut."""
-    from .operators.layout import _stats_count
+    and only boundary files are read (``layout._read_names``: masks and
+    column mapping apply) and filtered with the exact predicate string
+    — in one read, also for an integral ``IN`` (the union of its
+    disjoint point boxes, each within any range on the same column).
+    Otherwise this is the pruned scan's count — same answer, no
+    shortcut."""
+    from .operators.layout import _dv_rows_by_file, _read_names, _stats_count
     from .operators.snapshots import _phys_keyed, _record_row_count
 
     ent = _lake_entry(spark, name)
@@ -974,13 +963,24 @@ def lake_count(
     box, str_eq = _phys_keyed(clauses[:2], phys)
     col_types = _phys_keyed(col_types, phys)
     points = clauses[2]
-    # an integral IN is the union of its disjoint point boxes
-    boxes = [box] if points is None else [
-        {**box, phys.get(points[0], points[0]): (v, v)} for v in points[1]
-    ]
+    boxes = [box]
+    if points is not None:
+        # an integral IN is the union of its disjoint point boxes; a
+        # point outside the column's own bound matches nothing
+        pc = phys.get(points[0], points[0])
+        lo, hi = box.get(pc, (-_INF, _INF))
+        boxes = [{**box, pc: (v, v)} for v in points[1] if lo <= v <= hi]
+        if not boxes:
+            return 0
     stats = _lake_stats(ent, info, sorted({c for b in boxes for c in b} | set(str_eq)))
     return _stats_count(
-        stats, boxes, predicate, col_types, str_eq, _masked_rows(info), _reader(spark, ent, info)
+        stats,
+        boxes,
+        predicate,
+        col_types,
+        str_eq,
+        _dv_rows_by_file(info.get("dv_rows"), info["files"]),
+        lambda names: _read_names(spark, ent["path"], names, info),
     )
 
 
@@ -1001,7 +1001,7 @@ def lake_min_max(
     (min_<col>, max_<col>) either way — same values, native type."""
     from pyspark.sql import functions as F
 
-    from .operators.layout import _stats_minmax
+    from .operators.layout import _dv_rows_by_file, _read_names, _stats_minmax
     from .operators.snapshots import _phys_keyed
 
     ent = _lake_entry(spark, name)
@@ -1021,8 +1021,8 @@ def lake_min_max(
         box,
         predicate,
         _phys_keyed(col_types, phys),
-        _masked_rows(info),
-        _reader(spark, ent, info),
+        _dv_rows_by_file(info.get("dv_rows"), info["files"]),
+        lambda names: _read_names(spark, ent["path"], names, info),
         stat_col=pcol,
     )
 
@@ -1146,7 +1146,7 @@ def lake_approx_distinct(
     ent = _lake_entry(spark, name)
     from pyspark.sql import functions as F
 
-    from .operators.layout import _stats_ndv
+    from .operators.layout import _dv_rows_by_file, _read_names, _stats_ndv
 
     info = _lake_info(ent)
     col_types = _lake_col_types(spark, ent)
@@ -1163,8 +1163,8 @@ def lake_approx_distinct(
             predicate,
             col_types,
             str_eq,
-            _masked_rows(info),
-            _reader(spark, ent, info),
+            _dv_rows_by_file(info.get("dv_rows"), info["files"]),
+            lambda names: _read_names(spark, ent["path"], names, info),
         )
     # mirror the manifest path's string fold so both routes agree
     row = _scan(spark, ent, info, predicate).agg(

@@ -124,6 +124,30 @@ def test_count_of_an_integral_in_reads_its_boundary_files_once(spark, tmp_path):
     assert jobs <= scan_jobs
 
 
+def test_count_of_an_in_keeps_the_range_on_its_column(spark, tmp_path):
+    """An IN point outside a range bound on the same column matches
+    nothing. A file whose stats pin the column to that point (a
+    partition leaf, or a flat file of one value) must not be counted
+    from metadata."""
+    part = str(tmp_path / "part")
+    lake_write(spark, _rows(spark, 0, 300, with_p=True), part, partition_by=["p"])
+    register_lake_table(spark, "t_in_range_part", part)
+    flat = str(tmp_path / "flat")
+    lake_write(spark, spark.range(0, 10).select(F.lit(5).cast("long").alias("k")).coalesce(1), flat)
+    lake_write(spark, spark.range(100, 200).select(F.col("id").alias("k")).coalesce(1), flat)
+    register_lake_table(spark, "t_in_range_flat", flat)
+    for table, pred in (
+        ("t_in_range_part", "p IN (0, 2) AND p >= 1"),
+        ("t_in_range_part", "p IN (0, 1) AND p BETWEEN 1 AND 2 AND k < 150"),
+        ("t_in_range_part", "p IN (0) AND p >= 1"),
+        ("t_in_range_flat", "k IN (5, 150) AND k BETWEEN 100 AND 200"),
+        ("t_in_range_flat", "k IN (5, 150) AND k >= 6"),
+    ):
+        want = lake_scan(spark, table, pred).count()
+        assert lake_count(spark, table, pred) == want, pred
+    assert lake_count(spark, "t_in_range_part", "p IN (0, 2) AND p >= 1") == 100
+
+
 # ---------------------------------------------------------------------------
 # Differential: every catalog read equals the ref's own read + filter.
 # ---------------------------------------------------------------------------
@@ -157,10 +181,19 @@ _NUM = st.integers(min_value=-20, max_value=720)
 
 
 @st.composite
-def _leaf(draw, vcol):
+def _leaf(draw, vcol, with_p):
     # boxes on the NULL-bearing column are weighted up: a file inside
-    # them on its min/max still holds rows the box excludes
-    kind = draw(st.sampled_from(["box", "ge", "lt", "in", "null", "vbox", "vbox", "vbox"]))
+    # them on its min/max still holds rows the box excludes; on the
+    # partitioned lake every leaf pins ``p`` to one value, so an IN and
+    # a range on ``p`` meet files that lie wholly inside one point
+    kinds = ["box", "ge", "lt", "in", "null", "vbox", "vbox", "vbox"]
+    kind = draw(st.sampled_from(kinds + ["pin", "prange", "pboth"] * 2 if with_p else kinds))
+    pin = f"p IN ({', '.join(map(str, draw(st.lists(st.integers(0, 2), min_size=1, max_size=3))))})"
+    prange = f"p {draw(st.sampled_from(['>=', '<=', '>', '<', '=']))} {draw(st.integers(0, 2))}"
+    if kind in ("pin", "prange"):
+        return pin if kind == "pin" else prange
+    if kind == "pboth":
+        return f"{pin} AND {prange}"
     if kind == "box":
         a, b = sorted((draw(_NUM), draw(_NUM)))
         return f"k BETWEEN {a} AND {b}"
@@ -182,9 +215,10 @@ def _case(draw):
     table = draw(st.sampled_from(["diff_flat", "diff_part"]))
     ref = draw(st.sampled_from(["head", 1, 3, "b"]))
     vcol = "v" if ref in (1, 3) else "w"
-    pred = draw(_leaf(vcol))
+    with_p = table == "diff_part"
+    pred = draw(_leaf(vcol, with_p))
     if draw(st.booleans()):
-        pred = f"{pred} {draw(st.sampled_from(['AND', 'OR']))} {draw(_leaf(vcol))}"
+        pred = f"{pred} {draw(st.sampled_from(['AND', 'OR']))} {draw(_leaf(vcol, with_p))}"
     return table, ref, vcol, pred
 
 

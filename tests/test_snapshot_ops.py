@@ -818,7 +818,7 @@ def test_tags_resolve_and_survive_vacuum(spark, tmp_path):
         read_snapshot(spark, lake, "baseline")
 
 
-def test_dml_maintains_registered_manifest(spark, tmp_path):
+def test_dml_counts_from_record_with_registered_manifest(spark, tmp_path):
     """DML on a registered snapshot table with a scan manifest: the
     catalog plans from the commit record, so the metadata count stays
     exact right after a delete and an update with no manifest upkeep
