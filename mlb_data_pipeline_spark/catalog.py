@@ -4,10 +4,9 @@ The driver testdata (TESTDATA.md) is a TPC-H-ish star schema plus
 ``events`` (stream), ``documents`` (text corpus) and ``embeddings``
 (vector table), one parquet file per table under a scale-factor dir.
 
-``load_tables`` returns plain DataFrames; ``register_views`` additionally
-registers them as temp views so the SQL surface works. Reads use the
-parquet footer schema (no inference cost); filters/projections push down
-to the scan (Parquet row-group stats + column projection).
+``load_tables`` returns plain DataFrames. Reads use the parquet footer
+schema (no inference cost); filters/projections push down to the scan
+(Parquet row-group stats + column projection).
 
 Loaded tables are cached per (application, sf_dir, table): a DataFrame is
 an immutable analyzed plan over an immutable testdata path, so re-loading
@@ -560,12 +559,11 @@ def _lake_info(
     ``info``. On a snapshot lake that is the ref's commit record — one
     read, sharded records resolved — so the read is planned from its
     ``file_stats`` and read through it (``layout._read_names``); on a
-    plain parquet lake it is ``{"files": _data_files(path)}``. A head
-    read heals a torn OPTIMIZE swap first (ADVICE round 10). Raises
+    plain parquet lake it is ``{"files": _data_files(path)}``. Raises
     ``ValueError`` for two refs at once and, on a branch or version
     ref, for a record whose files are missing (vacuumed); a head read
     probes no file (its planning stays metadata-only)."""
-    from .operators.layout import _compact_recover_tree, _data_files
+    from .operators.layout import _data_files
     from .operators.snapshots import _ref_info, has_snapshots, snapshot_info, version_as_of
 
     path = ent["path"]
@@ -582,7 +580,6 @@ def _lake_info(
                 raise ValueError("pass version= or as_of_ts=, not both")
             version = version_as_of(path, as_of_ts)
         if version is None:
-            _compact_recover_tree(path)
             if not has_snapshots(path):
                 return {"files": _data_files(path)}
             return snapshot_info(path)
@@ -1173,10 +1170,3 @@ def lake_approx_distinct(
         ).alias("ndv")
     ).head()
     return int(row.ndv) if row is not None and row.ndv is not None else 0
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

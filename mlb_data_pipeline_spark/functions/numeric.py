@@ -12,8 +12,8 @@ So the engine's canonical "money math" is::
 
     CAST(ROUND(SUM(CAST(x AS DECIMAL(18,6))), 2) AS DOUBLE)
 
-mirrored in the oracle SQL. ``dsum``/``davg``/``dexpr`` build the Spark
-side of that contract.
+mirrored in the oracle SQL. ``dsum`` builds the Spark side of that
+contract.
 
 Width note: the CONTRACT is "exact decimal domain", not a fixed width —
 any (precision, scale) that exactly holds the operand values yields
@@ -47,11 +47,6 @@ def dec(col: Column | str, width: str | None = None) -> Column:
 def dsum(col: Column | str, scale: int = 2) -> Column:
     """Exact, order-independent SUM of a double column, rounded to `scale`."""
     return F.round(F.sum(dec(col)), scale).cast("double")
-
-
-def davg(col: Column | str, scale: int = 2) -> Column:
-    """AVG as exact decimal sum / count, rounded in the decimal domain."""
-    return F.round(F.sum(dec(col)) / F.count(F.col(col) if isinstance(col, str) else col), scale).cast("double")
 
 
 # ---------------------------------------------------------------------------

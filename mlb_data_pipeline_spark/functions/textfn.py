@@ -142,7 +142,8 @@ def extract_field(col: Column | str, label: str) -> Column:
 # classic URL-dedup failure. Normalization below is the standard
 # pretraining-pipeline form; patterns are anchored or single-match, so
 # Spark's replace-all and DuckDB's replace-first semantics agree, and
-# the chain is mirrored verbatim by ``normalize_url_sql``.
+# the chain is mirrored verbatim in q27's oracle SQL
+# (plans/curation_queries.py).
 
 _URL_STEPS = [
     (r"#.*$", ""),         # fragment
@@ -160,14 +161,6 @@ def normalize_url(col: Column | str) -> Column:
     for pat, repl in _URL_STEPS:
         c = F.regexp_replace(c, pat, repl)
     return c
-
-
-def normalize_url_sql(expr: str) -> str:
-    """DuckDB mirror of ``normalize_url`` (same patterns, same order)."""
-    out = f"lower({expr})"
-    for pat, repl in _URL_STEPS:
-        out = f"regexp_replace({out}, '{pat}', '{repl}')"
-    return out
 
 
 def url_domain(col: Column | str) -> Column:

@@ -790,10 +790,7 @@ def pruned_read(
 ) -> DataFrame:
     """Read only the files ``pruned_files`` keeps. Callers still apply
     the exact predicate — pruning is a superset guarantee, never a
-    filter. Heals any torn optimize_clustered swap first (a crash
-    between marker commit and old-file delete would otherwise leave
-    BOTH copies of rewritten rows visible to this read)."""
-    _compact_recover_tree(path)
+    filter."""
     return _read_names(spark, path, pruned_files(spark, path, manifest_path, box, bloom_filters))
 
 
@@ -1116,14 +1113,17 @@ def write_hilbert(
 # re-sort of a 100 TB lake per append is impossible; the realistic
 # maintenance (Delta OPTIMIZE ZORDER's shape) rewrites ONLY the files
 # whose footer boxes prove them badly clustered, leaving the
-# well-clustered bulk untouched. Selection is metadata-only (footers),
-# the rewrite pays one range shuffle over just the dirty rows, and the
-# swap is move-in-then-delete under a roll-forward commit marker so a
-# crash at any point is recoverable without row loss (a crash between
-# phases is healed by the marker on the next call — never by hand).
-# Manifests need no coordinated update: pruned_read ignores manifest
-# rows whose files vanished and must-reads unknown files, so pruning
-# degrades (never corrupts) until the day-2 append_scan_manifest run.
+# well-clustered bulk untouched. Selection is metadata-only (the commit
+# record's per-file stats), the rewrite pays one shuffle over just the
+# dirty rows, and the swap is ONE remove+add commit in the snapshot log
+# (Delta OPTIMIZE's shape): a plain parquet lake is adopted into the
+# log first, as on its first DML. The new files are invisible until
+# that commit references them, so a crash at any point leaves the head
+# and its rows as they were, plus orphans for vacuum_lake; the old
+# bytes stay for time travel. A plain lake's scan manifest needs no
+# coordinated update: pruned_read ignores manifest rows whose files
+# left the live set and must-reads unknown files, so pruning degrades
+# (never corrupts) until the day-2 append_scan_manifest run.
 # ---------------------------------------------------------------------------
 
 
@@ -1166,85 +1166,6 @@ def _cluster_fold(
     }
 
 
-def _compact_marker(path: str) -> str:
-    return os.path.join(path, "_compact_pending.json")
-
-
-def _compact_recover(path: str) -> None:
-    """Roll the last optimize_clustered forward if it crashed mid-swap:
-    the marker lists the new file names (staged under __compact_tmp or
-    already moved in) and the old names to delete. No marker + a stale
-    tmp dir means the crash hit during the BUILD — old files are all
-    intact, so the tmp is simply discarded."""
-    import json as _json
-    import shutil
-
-    marker = _compact_marker(path)
-    tmp = os.path.join(path, "__compact_tmp")
-    if os.path.exists(marker + ".tmp"):
-        os.remove(marker + ".tmp")  # torn pre-commit stage: not yet binding
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            plan = _json.load(fh)
-        for name in plan["new"]:
-            staged = os.path.join(tmp, name)
-            final = os.path.join(path, name)
-            if os.path.exists(staged) and not os.path.exists(final):
-                os.replace(staged, final)
-        for name in plan["old"]:
-            p = os.path.join(path, name)
-            if os.path.exists(p):
-                os.remove(p)
-        os.remove(marker)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-
-
-def _compact_recover_tree(path: str) -> None:
-    """Read-path guard (round 11, ADVICE): heal a torn
-    optimize_clustered swap ANYWHERE under the lake before planning a
-    read. Without this, a crash between the marker commit and the
-    old-file delete leaves BOTH old and new copies of the rewritten
-    rows on disk until the NEXT optimize call — every read in between
-    would silently return duplicated rows. One extra listing walk per
-    read, metadata-scale (the same budget as ``_data_files``).
-
-    Snapshot lakes never swap by marker: a ``__compact_tmp`` there is
-    an in-flight OPTIMIZE's staging, and deleting it would make that
-    OPTIMIZE commit the removal of its dirty files with nothing in
-    their place — so they are left alone."""
-    from .snapshots import has_snapshots
-
-    base = os.path.abspath(path)
-    if not os.path.isdir(base) or has_snapshots(base):
-        return
-    for root, dirs, names in os.walk(base):
-        # don't descend into staging dirs — _compact_recover owns them
-        dirs[:] = [d for d in dirs if d != "__compact_tmp" and not d.startswith(".")]
-        if "_compact_pending.json" in names or "_compact_pending.json.tmp" in names or (
-            os.path.isdir(os.path.join(root, "__compact_tmp"))
-        ):
-            _compact_recover(root)
-
-
-def _maintain_manifest_after_optimize(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str | None,
-    specs: list[tuple[str, int, int]],
-    stat_cols: list[str] | None,
-    rewrote: bool,
-) -> None:
-    """The in-call manifest leg of ``optimize_clustered`` (round 11):
-    GC rows whose files the swap deleted, then stat the new compact
-    files — O(rewritten files), a no-op when nothing was rewritten."""
-    if manifest_path is None or not rewrote:
-        return
-    cols = stat_cols or [c for c, _, _ in specs]
-    compact_scan_manifest(spark, path, manifest_path)
-    append_scan_manifest(spark, path, cols, manifest_path)
-
-
 def optimize_clustered(
     spark: SparkSession,
     path: str,
@@ -1253,94 +1174,68 @@ def optimize_clustered(
     *,
     max_span_frac: float = 0.5,
     min_rows: int | None = None,
-    n_files: int | None = None,
     curve: str = "zorder",
-    manifest_path: str | None = None,
-    stat_cols: list[str] | None = None,
 ) -> dict:
     """Rewrite ONLY the badly-clustered (or undersized) files of a
-    clustered lake back into tight key ranges.
+    clustered lake back into tight key ranges, as ONE commit in the
+    lake's snapshot log (operators/snapshots.py). A plain parquet lake
+    is adopted into the log first (v1 = ``adopt``, the files as they
+    are; that commit opens each footer once for its row count and
+    stats), as on its first DML; read it through the snapshot readers
+    (``read_snapshot``, the catalog) from then on.
 
-    Selection: ONE stats pass over the live files (the commit
-    record's per-file stats on a snapshot lake, the footers of a plain
-    one) picks those
-    whose box spans > ``max_span_frac`` of the declared range on any
-    clustered column, that lack stats, or that hold fewer than
-    ``min_rows`` rows (small-file compaction). PARTITIONED lakes
-    (``dt=...``, ``ingest_batch=...`` directories — the
-    ``lake_append_stream`` layout) are selected across every leaf
-    partition directory at once and ``dirty_files`` names are
-    leaf-prefixed; files directly under the root of a partitioned
-    lake are a writer error and stay untouched.
+    Selection: ONE pass over the commit record's per-file stats of the
+    live files (a footer is opened only for a file its record has no
+    stats for) picks those whose box spans >
+    ``max_span_frac`` of the declared range on any clustered column,
+    that lack stats, or that hold fewer than ``min_rows`` rows
+    (small-file compaction). PARTITIONED lakes (``dt=...`` directories)
+    are selected across every leaf partition directory at once and
+    ``dirty_files`` names are leaf-prefixed; files directly under the
+    root of a partitioned lake are a writer error and stay untouched.
 
-    Rewrite: the dirty rows re-sort on the z-key and land one file per
-    (leaf, QUAD-ALIGNED z-prefix cell) — ``partitionBy`` into the
-    hidden staging dir, files then lifted into their leaf. Rows never
-    move across partitions (the partition value IS the directory).
-    Every output file's bounding box is contained in one aligned cell
-    whose per-dim span is <= max_span_frac/2 by construction, so a
-    rewrite is IDEMPOTENT — the second call finds nothing dirty —
-    rather than hoping sampled range boundaries line up with curve
-    seams. ``n_files`` is accepted for API symmetry but the cell grid
-    decides the real file count (occupied cells only).
+    Rewrite: the dirty files of ALL leaves rewrite in one pass — one
+    read under the head's commit record (explicit schema, so no
+    footer-inference job; deletion vectors and column mapping resolve
+    as in every reader), one shuffle on (partition columns, cell), one
+    write through the record's physical column names. The rows re-sort
+    on the curve key and land one file per (leaf, QUAD-ALIGNED key
+    prefix cell). Rows never move across partitions (the partition
+    value IS the directory). Every output file's bounding box is
+    contained in one aligned cell whose per-dim span is <=
+    max_span_frac/2 by construction, so a rewrite is IDEMPOTENT — the
+    second call finds nothing dirty — rather than hoping sampled range
+    boundaries line up with curve seams. Compact files are named
+    ``compact-<digest>-<seq>.parquet`` with one digest per call and one
+    lake-wide sequence, so no basename repeats across leaves.
+    Deletion-vector masks are keyed by lake-relative name; a legacy
+    record keying them by a basename several live files share raises
+    ``ValueError`` in the read (``_dv_key_files``).
 
-    Commit:
-
-    * SNAPSHOT lakes (operators/snapshots.py): the dirty files of ALL
-      leaves rewrite in one pass — one read under the head's commit
-      record (explicit schema, so no footer-inference job; deletion
-      vectors and column mapping resolve as in every reader), one
-      shuffle on (partition columns, cell), one write through the
-      record's physical column names — and ONE optimize commit swaps
-      them. Old bytes stay for time travel. Compact files are named
-      ``compact-<digest>-<seq>.parquet`` with one digest per call and
-      one lake-wide sequence, so no basename repeats across leaves.
-      Deletion-vector masks are keyed by lake-relative name; a legacy
-      record keying them by a basename several live files share raises
-      ``ValueError`` in the read (``_dv_key_files``).
-    * plain parquet lakes: each leaf directory rewrites on its own,
-      committed by marker + per-file move, old files deleted last;
-      any crash heals via ``_compact_recover``.
+    Commit: ONE optimize commit removes the dirty files and adds the
+    compact ones, asserted against the head the pick was planned on (a
+    concurrent commit in between rebases or raises). Old bytes stay for
+    time travel until ``vacuum_lake``; a crash before the commit leaves
+    the head as it was.
 
     ``curve``: "zorder" (default) or "hilbert" — Hilbert lakes
     (``write_hilbert``) re-cluster on the same curve their files were
     laid out with. BOTH curves' top n*k key bits identify the same
     aligned quadtree cell (k quadrant choices per level), so the
-    aligned-cell tightness/idempotence argument is curve-independent.
-
-    ``manifest_path`` (round 11): when given, the scan manifest is
-    maintained IN the same call after the swap — stale rows for the
-    rewritten files are GC'd (``compact_scan_manifest``) and the new
-    compact files are statted (``append_scan_manifest`` over
-    ``stat_cols`` or the spec columns). Without it, correctness still
-    holds through pruned_read's staleness rules; pruning on rewritten
-    files just degrades to must-read until the next manifest append."""
+    aligned-cell tightness/idempotence argument is curve-independent."""
     if curve not in ("zorder", "hilbert"):
         raise ValueError(f"curve must be 'zorder' or 'hilbert', got {curve!r}")
-    from .snapshots import has_snapshots, snapshot_info
+    from .snapshots import _dml_head, _lake_file_stats, _read_files, _to_physical
 
     base = path.rstrip("/")
-    info = None
-    if has_snapshots(base):
-        # snapshot lakes swap files through the transaction log, not
-        # the marker protocol. The head read here is the one the swap
-        # commit asserts (round 12): a concurrent commit between plan
-        # and commit rebases or raises instead of silently resurrecting
-        # its files
-        info = snapshot_info(base)
-    else:
-        _compact_recover_tree(base)
+    # the head read here is the one the swap commit asserts: a commit
+    # landing between plan and commit rebases or raises instead of
+    # silently resurrecting its files
+    info = _dml_head(base)[1]
     names = _data_files(base)
     if any("/" in n for n in names):
         names = [n for n in names if "/" in n]
-    cols = [c for c, _, _ in specs]
-    if info is not None:
-        from .snapshots import _lake_file_stats
-
-        # the commit record's per-file stats: no footer is opened
-        stats = _lake_file_stats(base, cols, {**info, "files": names})
-    else:
-        stats = file_stats(base, cols, names)
+    stats = _lake_file_stats(base, [c for c, _, _ in specs], {**info, "files": names})
     rep = _cluster_fold(stats, specs, max_span_frac)
     rows_by_file = {fs["file"]: fs["rows"] for fs in stats}
     dirty = set(rep["dirty_files"])
@@ -1349,28 +1244,14 @@ def optimize_clustered(
     if not dirty:
         return {**rep, "files_rewritten": 0, "files_written": 0, "rows_rewritten": 0}
     olds = sorted(dirty)
-    if info is not None:
-        from .snapshots import _read_files, _to_physical
-
-        df = _read_files(spark, base, olds, info)
-        # keyed on LOGICAL names, written under the record's PHYSICAL
-        # ones: a renamed column keeps its original parquet name
-        keyed = _to_physical(_with_cell_key(df, specs, bits, curve, max_span_frac), info)
-        written = _swap_snapshot(base, info, olds, keyed)
-    else:
-        by_leaf: dict[str, list[str]] = {}
-        for n in olds:
-            by_leaf.setdefault(os.path.dirname(n), []).append(os.path.basename(n))
-        written = 0
-        for leaf, files in sorted(by_leaf.items()):
-            d = os.path.join(base, leaf)
-            df = spark.read.parquet(*[os.path.join(d, n) for n in files])
-            written += _swap_leaf(d, files, _with_cell_key(df, specs, bits, curve, max_span_frac))
-    _maintain_manifest_after_optimize(spark, base, manifest_path, specs, stat_cols, True)
+    df = _read_files(spark, base, olds, info)
+    # keyed on LOGICAL names, written under the record's PHYSICAL ones:
+    # a renamed column keeps its original parquet name
+    keyed = _to_physical(_with_cell_key(df, specs, bits, curve, max_span_frac), info)
     return {
         **rep,
         "files_rewritten": len(dirty),
-        "files_written": written,
+        "files_written": _swap_snapshot(base, info, olds, keyed),
         "rows_rewritten": int(sum(rows_by_file[f] for f in dirty)),
     }
 
@@ -1388,8 +1269,8 @@ def _with_cell_key(
     per_dim = min(max(1, math.ceil(math.log2(2.0 / max_span_frac))), bits)
     if n_dims == 1:
         # 1-D clustering is a plain range sort — both curves degenerate
-        # to the scaled cell itself (common for single-key streaming
-        # lakes: ingest_batch dirs clustered on one column)
+        # to the scaled cell itself (common for streaming lakes
+        # clustered on one key column)
         c0, lo0, hi0 = specs[0]
         keyed = df.withColumn("__zkey", scale_to_bits_int(c0, lo0, hi0, bits))
     elif curve == "hilbert":
@@ -1405,26 +1286,6 @@ def _with_cell_key(
     return keyed.withColumn("__zb", F.shiftright(F.col("__zkey"), (bits - per_dim) * n_dims))
 
 
-def _stage_cells(keyed: DataFrame, tmp: str, partition_cols: list[str]) -> list[str]:
-    """Write ``keyed`` (``_with_cell_key``) under ``tmp`` as one file
-    per (partition leaf, cell), each sorted on the curve key; return
-    the staged file paths, sorted."""
-    (
-        keyed.repartition(*partition_cols, "__zb")
-        .sortWithinPartitions(*partition_cols, "__zb", "__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols, "__zb")
-        .parquet(tmp)
-    )
-    staged = []
-    for root, _dirs, fnames in os.walk(tmp):
-        for n in fnames:
-            if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                staged.append(os.path.join(root, n))
-    return sorted(staged)
-
-
 def _swap_snapshot(base: str, info: dict, dirty: list[str], keyed: DataFrame) -> int:
     """Stage ``keyed`` (the rows of the RELATIVE ``dirty`` files, every
     leaf at once, under physical names), lift each file into its leaf
@@ -1436,8 +1297,23 @@ def _swap_snapshot(base: str, info: dict, dirty: list[str], keyed: DataFrame) ->
 
     from .snapshots import _commit_filechange, _partition_cols
 
+    # one file per (partition leaf, cell), each sorted on the curve key
     tmp = os.path.join(base, "__compact_tmp")
-    staged = _stage_cells(keyed, tmp, _partition_cols(dirty))
+    partition_cols = _partition_cols(dirty)
+    (
+        keyed.repartition(*partition_cols, "__zb")
+        .sortWithinPartitions(*partition_cols, "__zb", "__zkey")
+        .drop("__zkey")
+        .write.mode("overwrite")
+        .partitionBy(*partition_cols, "__zb")
+        .parquet(tmp)
+    )
+    staged = sorted(
+        os.path.join(root, n)
+        for root, _dirs, fnames in os.walk(tmp)
+        for n in fnames
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    )
     # old bytes stay on disk for time travel, so a rollback +
     # re-optimize re-selects the SAME dirty set: the digest is salted
     # per run, or the new names would overwrite compact files a
@@ -1461,37 +1337,6 @@ def _swap_snapshot(base: str, info: dict, dirty: list[str], keyed: DataFrame) ->
         op="optimize",
         summary={"files_rewritten": len(dirty), "files_written": len(new_names)},
     )
-    return len(new_names)
-
-
-def _swap_leaf(d: str, dirty: list[str], keyed: DataFrame) -> int:
-    """Stage ``keyed`` (the rows of the ``dirty`` files of plain parquet
-    directory ``d``) and swap it in under the marker protocol. Returns
-    the number of files written."""
-    import hashlib
-    import json
-    import shutil
-
-    tmp = os.path.join(d, "__compact_tmp")
-    staged = _stage_cells(keyed, tmp, [])
-    digest = hashlib.sha256("\n".join(dirty).encode()).hexdigest()[:12]
-    new_names = [f"compact-{digest}-{i:05d}.parquet" for i in range(len(staged))]
-    for src, dst in zip(staged, new_names):
-        os.replace(src, os.path.join(tmp, dst))
-    # atomic marker write: a torn marker would brick recovery (json
-    # parse error on every subsequent call), so stage + rename
-    marker_tmp = _compact_marker(d) + ".tmp"
-    with open(marker_tmp, "w") as fh:
-        json.dump({"new": new_names, "old": dirty}, fh)
-    os.replace(marker_tmp, _compact_marker(d))
-    for name in new_names:
-        os.replace(os.path.join(tmp, name), os.path.join(d, name))
-    for name in dirty:
-        p = os.path.join(d, name)
-        if os.path.exists(p):
-            os.remove(p)
-    os.remove(_compact_marker(d))
-    shutil.rmtree(tmp, ignore_errors=True)
     return len(new_names)
 
 
@@ -1778,8 +1623,9 @@ def manifest_assisted_count(
     instead of the reconstructed numeric box — required when the box
     folds temporal columns to epoch units. The box must be
     semantically EQUAL to ``where`` on interior files, since those are
-    counted unopened. ``files``: explicit inventory override."""
-    _compact_recover_tree(path)
+    counted unopened. ``files``: explicit inventory override; by
+    default the live files (``_data_files``: the head's list once
+    OPTIMIZE has adopted the lake into the snapshot log)."""
     names = _data_files(path) if files is None else files
     return _stats_count(
         _manifest_stats(manifest_path, names), [box], where, col_types, equals_strs, {},
@@ -1849,8 +1695,7 @@ def manifest_assisted_minmax(
     could hold the global extreme are opened. On a range-clustered lake
     the read set is O(1) files. Returns a 1-row DataFrame
     (min_<col>, max_<col>) so the values keep the column's native type
-    end to end."""
-    _compact_recover_tree(path)
+    end to end. The inventory is ``manifest_assisted_count``'s."""
     names = _data_files(path) if files is None else files
     return _stats_minmax(
         _manifest_stats(manifest_path, names), col, dict(box or {}), where, col_types, {},
@@ -2091,28 +1936,6 @@ def append_ndv_manifest(
         F.lit(lg_k).alias("lg_k"),
     )
     long.coalesce(1).write.mode("append").parquet(manifest_path)
-
-
-def manifest_assisted_ndv(
-    spark: SparkSession,
-    path: str,
-    ndv_manifest_path: str,
-    scan_manifest_path: str | None,
-    col: str,
-    box: dict[str, tuple[float, float]] | None = None,
-    where: str | None = None,
-    col_types: dict | None = None,
-    equals_strs: dict[str, str] | None = None,
-) -> int:
-    """APPROX_COUNT_DISTINCT(col) over a plain parquet lake under an
-    exact conjunctive box (``_stats_ndv`` over the scan manifest's
-    stats; none when ``scan_manifest_path`` is None)."""
-    _compact_recover_tree(path)
-    stats = _manifest_stats(scan_manifest_path, _data_files(path))
-    return _stats_ndv(
-        spark, stats, ndv_manifest_path, col, dict(box or {}), where, col_types,
-        equals_strs, {}, lambda n: _read_names(spark, path, n),
-    )
 
 
 def _stats_ndv(

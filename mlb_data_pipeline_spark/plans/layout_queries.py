@@ -621,12 +621,14 @@ def q45_bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #        ask #3; the simhash demo it displaces keeps its oracle as
 #        r67) — incremental OPTIMIZE: unsorted appends degrade a
 #        z-ordered lake; optimize_clustered rewrites only the
-#        footer-selected wide-span files into quad-aligned cells. The
-#        oracle aggregates the SAME logical rows straight off the raw
-#        table, so a compaction that loses, duplicates, or corrupts a
-#        single row breaks the hash — the swap protocol itself is
-#        under the gate. Pruning restoration + crash recovery are
-#        pinned in tests/test_layout_ops.py.
+#        footer-selected wide-span files into quad-aligned cells,
+#        adopting the plain lake into the snapshot log first and
+#        committing the swap as one optimize commit. The oracle
+#        aggregates the SAME logical rows straight off the raw table,
+#        so an adoption or compaction that loses, duplicates, or
+#        corrupts a single row breaks the hash — the commit protocol
+#        itself is under the gate. Pruning restoration + crash safety
+#        are pinned in tests/test_layout_ops.py.
 # ---------------------------------------------------------------------------
 
 _Q46_SQL = """
@@ -648,6 +650,7 @@ def q46_optimize_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..operators.layout import optimize_clustered, write_zordered, zorder_specs
+    from ..operators.snapshots import read_snapshot
 
     base = os.path.join(
         "/tmp/spark_graft_io", os.path.basename(sf_dir.rstrip("/")), "q46_lake"
@@ -665,7 +668,7 @@ def q46_optimize_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_zordered(clustered, lake, specs, bits=8, n_files=16)
     appended.coalesce(2).write.mode("append").parquet(lake)  # unsorted, wide-span
     optimize_clustered(spark, lake, specs, bits=8)
-    df = spark.read.parquet(lake)
+    df = read_snapshot(spark, lake)
     return df.agg(
         F.count("*").alias("n_orders"),
         F.sum("pc").cast("long").alias("total_cents"),

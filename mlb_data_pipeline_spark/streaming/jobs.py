@@ -562,103 +562,6 @@ def sq8_index_stream(
     q.awaitTermination()
 
 
-def lake_append_stream(
-    rows_stream: DataFrame,
-    lake_path: str,
-    stat_cols: list[str],
-    box_manifest_path: str,
-    checkpoint_dir: str,
-    bloom_manifest_path: str | None = None,
-    optimize_every: int | None = None,
-    optimize_specs: list[tuple[str, int, int]] | None = None,
-    optimize_bits: int = 10,
-) -> None:
-    """Streaming LAKE ingestion with manifest maintenance (the Y2/Y4
-    day-2 legs driven from a stream): each micro-batch lands as its own
-    ``ingest_batch=<id>`` partition directory, then the box manifest
-    (and optionally the Bloom manifest) appends stats for exactly the
-    new files — O(batch) footer reads, never a re-stat.
-
-    Delivery: foreachBatch is at-least-once on retry. The batch
-    directory is the replay guard — a committed batch's dir (with its
-    ``_SUCCESS`` marker) is skipped wholesale on redelivery, and a
-    half-written dir (no marker) is overwritten in place; manifest
-    appends are file-name keyed, so re-running them after either
-    outcome adds nothing for files already statted. Readers are safe
-    at EVERY point in between because ``pruned_read`` /
-    ``manifest_assisted_count`` treat manifest-unknown files as
-    must-read and manifest-known-but-vanished files as absent.
-    Bootstrap data loaded outside the stream must use batch labels the
-    stream will never emit (e.g. ``ingest_batch=-1``) — stream batch
-    ids start at 0.
-
-    Clustering maintenance stays OUT of the per-batch hot path by
-    design (a per-batch re-sort would serialize the stream on a range
-    shuffle). Round 11 AUTOMATES the documented operator cadence:
-    pass ``optimize_every=N`` and every N committed batches the call
-    runs ``optimize_clustered`` over the lake — wide-span batch files
-    are selected across every ``ingest_batch=`` leaf from one
-    footer-stats pass and re-sort into tight cells inside their own
-    leaf (each leaf swaps under its own crash marker), the scan
-    manifest is GC'd + re-statted in the same call, and the Bloom
-    manifest (if any) appends rows for the compact files.
-    ``optimize_specs`` gives the (col, lo, hi) clustering ranges; when
-    omitted they derive from the manifest's global min/max per
-    ``stat_cols`` (one metadata aggregate, no data scan). Replay-safe:
-    a redelivered batch skips its committed dir, and OPTIMIZE
-    idempotence means a re-run maintenance tick finds nothing dirty."""
-    import os
-
-    from ..operators.layout import (
-        append_bloom_manifest,
-        append_scan_manifest,
-        optimize_clustered,
-    )
-
-    def _derived_specs(spark) -> list[tuple[str, int, int]]:
-        from pyspark.sql import functions as F
-
-        mf = spark.read.option("mergeSchema", "true").parquet(box_manifest_path)
-        rows = (
-            mf.filter(F.col("col").isin(stat_cols))
-            .groupBy("col")
-            .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi"))
-            .collect()
-        )
-        got = {r.col: (int(r.lo), int(r.hi)) for r in rows}
-        return [(c, got[c][0], got[c][1]) for c in stat_cols if c in got]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_dir = os.path.join(lake_path, f"ingest_batch={batch_id}")
-        if not os.path.exists(os.path.join(batch_dir, "_SUCCESS")):
-            batch_df.write.mode("overwrite").parquet(batch_dir)
-        append_scan_manifest(spark, lake_path, stat_cols, box_manifest_path)
-        if bloom_manifest_path is not None:
-            append_bloom_manifest(spark, lake_path, bloom_manifest_path)
-        if optimize_every and (batch_id + 1) % optimize_every == 0:
-            specs = optimize_specs or _derived_specs(spark)
-            if specs:
-                optimize_clustered(
-                    spark,
-                    lake_path,
-                    specs,
-                    optimize_bits,
-                    manifest_path=box_manifest_path,
-                    stat_cols=stat_cols,
-                )
-                if bloom_manifest_path is not None:
-                    append_bloom_manifest(spark, lake_path, bloom_manifest_path)
-
-    q = (
-        rows_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def lake_snapshot_stream(
     rows_stream: DataFrame,
     lake_path: str,
@@ -675,10 +578,10 @@ def lake_snapshot_stream(
     """Streaming ingestion into a SNAPSHOT lake (operators/snapshots.py)
     with exactly-once VISIBILITY: each micro-batch's files land
     invisible (no snapshot references them), then ONE atomic commit
-    flips them live. Unlike ``lake_append_stream``'s dir-per-batch
-    protocol — where safety rests on readers honoring manifest rules —
-    a reader here can NEVER observe a half-ingested batch: it sees the
-    pre-commit snapshot or the post-commit one, nothing between.
+    flips them live. A reader can NEVER observe a half-ingested batch:
+    it sees the pre-commit snapshot or the post-commit one, nothing
+    between. A plain parquet dir adopts into the log before the first
+    batch is written (v1 = ``adopt``, or ``stream_init`` when empty).
 
     Replay guard: the commit summary records ``batch_id``; a
     redelivered batch whose id is already in the retained history is
@@ -689,11 +592,12 @@ def lake_snapshot_stream(
     Each commit records its files' row counts and column stats, so the
     catalog plans reads from the record: no scan manifest to maintain.
 
-    Maintenance cadence (round 11, mirrors lake_append_stream's):
-    every ``optimize_every`` committed batches an in-stream
-    ``optimize_clustered`` re-sorts the accumulated wide-span batch
-    files (snapshot-aware: one commit, old bytes stay for time
-    travel), and — when ``vacuum_keep_last`` is set — ``vacuum_lake``
+    Maintenance cadence (round 11): every ``optimize_every`` committed
+    batches an in-stream ``optimize_clustered`` (with
+    ``optimize_specs``) re-sorts the accumulated wide-span batch files
+    (one optimize commit, old bytes stay for time travel), so range
+    reads through the catalog keep skipping files across batches, and
+    — when ``vacuum_keep_last`` is set — ``vacuum_lake``
     expires history down to the last N versions in the same tick, so
     the log and the dead bytes stay bounded on an infinite stream.
 

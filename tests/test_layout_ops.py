@@ -21,6 +21,7 @@ from mlb_data_pipeline_spark.operators.layout import (
     write_zordered,
     zorder_key,
 )
+from mlb_data_pipeline_spark.operators.snapshots import read_snapshot
 
 
 def _py_interleave(cells: list[int], bits: int) -> int:
@@ -1022,7 +1023,7 @@ def test_optimize_clustered_restores_pruning_without_touching_clean_files(spark,
     untouched = clean_files - set(rep0["dirty_files"])
     assert untouched <= after_files
     assert not (set(rep0["dirty_files"]) & after_files)
-    assert spark.read.parquet(lake).count() == 200 * 200 + 8_000
+    assert read_snapshot(spark, lake).count() == 200 * 200 + 8_000
     healed = pruning_report(lake, box)["skip_frac"]
     assert healed > degraded and healed >= 0.5, (base_skip, degraded, healed)
 
@@ -1030,19 +1031,51 @@ def test_optimize_clustered_restores_pruning_without_touching_clean_files(spark,
     assert again["files_rewritten"] == 0  # idempotent once clustered
 
 
-def test_optimize_clustered_crash_recovery_rolls_forward(spark, tmp_path):
-    """A crash between move-in and delete-old must heal on the next
-    call via the commit marker: staged new files move in, listed old
-    files delete, no rows lost or duplicated."""
-    import json
-    import os as _os
-    import shutil
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "partitioned"])
+def test_optimize_plain_lake_adopts_into_snapshot_log(spark, tmp_path, partitioned):
+    """OPTIMIZE of a plain parquet lake adopts it into the snapshot log
+    first (v1 = the files as they are) and swaps the dirty files in ONE
+    optimize commit: v1 reads the pre-OPTIMIZE rows exactly, the head
+    reads the same multiset, and a second call rewrites nothing."""
+    from mlb_data_pipeline_spark.operators.layout import optimize_clustered
+    from mlb_data_pipeline_spark.operators.snapshots import lake_history, snapshot_files
 
-    from mlb_data_pipeline_spark.operators.layout import (
-        _data_files,
-        optimize_clustered,
-        write_zordered,
+    lake = str(tmp_path / "plainlake")
+    df = spark.range(4_000).select(
+        (F.col("id") * 37 % 200).alias("x"),
+        (F.col("id") * 73 % 200).alias("y"),
+        (F.col("id") % 2).alias("p"),
     )
+    writer = df.coalesce(2).write
+    (writer.partitionBy("p") if partitioned else writer).parquet(lake)
+
+    def rows(d):
+        return sorted(map(tuple, d.select("x", "y", F.col("p").cast("long")).collect()))
+
+    before = rows(spark.read.parquet(lake))
+    specs = [("x", 0, 199), ("y", 0, 199)]
+    rep = optimize_clustered(spark, lake, specs, bits=8)
+    assert rep["files_rewritten"] >= 1
+    assert [h["op"] for h in lake_history(lake)] == ["adopt", "optimize"]
+    assert rows(read_snapshot(spark, lake, 1)) == before
+    assert rows(read_snapshot(spark, lake)) == before
+    if partitioned:
+        assert all(f.startswith("p=") for f in rep["dirty_files"])
+        assert all(n.startswith("p=") for n in snapshot_files(lake))
+    again = optimize_clustered(spark, lake, specs, bits=8)
+    assert again["files_rewritten"] == 0
+    assert [h["op"] for h in lake_history(lake)] == ["adopt", "optimize"]
+
+
+def test_optimize_clustered_crash_before_commit_keeps_head(spark, tmp_path, monkeypatch):
+    """A crash after OPTIMIZE staged its compact files and before its
+    commit leaves the head and its rows as they were: the compact
+    files are orphans no record references. The next call re-selects
+    the dirty files and commits; a partitioned lake keeps its rows
+    through the same rewrite."""
+    from mlb_data_pipeline_spark.operators import snapshots
+    from mlb_data_pipeline_spark.operators.layout import _all_data_files, optimize_clustered
+    from mlb_data_pipeline_spark.operators.snapshots import lake_history, snapshot_files
 
     lake = str(tmp_path / "crashlake")
     df = spark.range(1_000).select(
@@ -1050,29 +1083,40 @@ def test_optimize_clustered_crash_recovery_rolls_forward(spark, tmp_path):
     )
     specs = [("x", 0, 99), ("y", 0, 99)]
     write_zordered(df, lake, specs, bits=6, n_files=4)
-    names = _data_files(lake)
-    victim = names[0]
-    # simulate the crash window: new content staged + marker written,
-    # old file still present, process died before the swap finished
-    tmp = _os.path.join(lake, "__compact_tmp")
-    _os.makedirs(tmp)
-    staged = "compact-deadbeef0000-00000.parquet"
-    shutil.copy(_os.path.join(lake, victim), _os.path.join(tmp, staged))
-    with open(_os.path.join(lake, "_compact_pending.json"), "w") as fh:
-        json.dump({"new": [staged], "old": [victim]}, fh)
+    spark.range(1_000, 1_500).select(
+        (F.col("id") * 37 % 100).alias("x"), (F.col("id") * 73 % 100).alias("y")
+    ).coalesce(1).write.mode("append").parquet(lake)  # unsorted, wide-span
 
-    out = optimize_clustered(spark, lake, specs, bits=6)
-    assert not _os.path.exists(_os.path.join(lake, "_compact_pending.json"))
-    assert not _os.path.exists(tmp)
-    assert staged in _data_files(lake) and victim not in _data_files(lake)
-    assert spark.read.parquet(lake).count() == 1_000  # no loss, no dup
-    # partitioned lakes compact per leaf directory (round 11; the old
-    # behavior was a loud refusal)
+    def rows(d):
+        return sorted(map(tuple, d.select("x", "y").collect()))
+
+    before = rows(spark.read.parquet(lake))
+    assert len(before) == 1_500
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("crash before the optimize commit")
+
+    monkeypatch.setattr(snapshots, "_commit_filechange", crash)
+    with pytest.raises(RuntimeError, match="crash before the optimize commit"):
+        optimize_clustered(spark, lake, specs, bits=6)
+    monkeypatch.undo()
+    # the adoption committed; the swap did not
+    assert [h["op"] for h in lake_history(lake)] == ["adopt"]
+    assert rows(read_snapshot(spark, lake)) == before
+    orphans = {n for n in _all_data_files(lake) if "compact-" in n}
+    assert orphans and not orphans & set(snapshot_files(lake))
+
+    rep = optimize_clustered(spark, lake, specs, bits=6)
+    assert rep["files_rewritten"] >= 1
+    assert [h["op"] for h in lake_history(lake)] == ["adopt", "optimize"]
+    assert rows(read_snapshot(spark, lake)) == before  # no loss, no dup
+    assert not orphans & set(snapshot_files(lake))
+    # partitioned lakes compact per leaf directory
     part = str(tmp_path / "partlake")
     df.withColumn("p", F.col("x") % 2).write.partitionBy("p").parquet(part)
     rep = optimize_clustered(spark, part, specs, bits=6)
     assert rep["files_total"] > 0
-    assert spark.read.parquet(part).count() == 1_000  # rows intact
+    assert read_snapshot(spark, part).count() == 1_000  # rows intact
 
 
 def test_lake_scan_partitioned_lake_keeps_partition_columns(spark, tmp_path):
@@ -1138,7 +1182,7 @@ def test_optimize_clustered_hilbert_curve(spark, tmp_path):
 
     out = optimize_clustered(spark, lake, specs, bits=8, curve="hilbert")
     assert out["files_rewritten"] >= 1
-    assert spark.read.parquet(lake).count() == 150 * 150 + 5_000
+    assert read_snapshot(spark, lake).count() == 150 * 150 + 5_000
     assert pruning_report(lake, box)["skip_frac"] >= 0.5
     assert optimize_clustered(spark, lake, specs, bits=8, curve="hilbert")["files_rewritten"] == 0
     with pytest.raises(ValueError, match="curve"):
@@ -1409,70 +1453,12 @@ def test_lake_count_null_rows_never_overcount(spark, tmp_path):
     assert lake_count(spark, "nulllake", pred2) == whole.filter(pred2).count() == 107
 
 
-def test_read_paths_heal_torn_optimize_swap(spark, tmp_path):
-    """ADVICE r10 (medium): a crash between optimize_clustered's marker
-    commit and old-file delete leaves BOTH copies of rewritten rows on
-    disk. Round 11: pruned_read and lake_scan roll the swap forward
-    before planning, so no read between the crash and the next
-    OPTIMIZE sees duplicated rows."""
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import (
-        _compact_marker,
-        _data_files,
-        pruned_read,
-        save_scan_manifest,
-        write_zordered,
-    )
-
-    lake = str(tmp_path / "torn_lake")
-    df = spark.range(5_000).select(
-        (F.col("id") % 100).alias("x"), (F.col("id") / 100).cast("long").alias("y")
-    )
-    write_zordered(df, lake, [("x", 0, 99), ("y", 0, 99)], bits=6, n_files=4)
-    # simulate a torn swap: copy a real data file as the "staged new"
-    # file, commit the marker listing it plus a victim old file — i.e.
-    # the crash happened right after the marker write
-    names = _data_files(lake)
-    victim = names[0]
-    tmp = os.path.join(lake, "__compact_tmp")
-    os.makedirs(tmp)
-    staged = "compact-test-00000.parquet"
-    shutil.copy(os.path.join(lake, victim), os.path.join(tmp, staged))
-    with open(_compact_marker(lake), "w") as fh:
-        json.dump({"new": [staged], "old": [victim]}, fh)
-    # a naive read now would see victim AND its staged copy -> dup rows
-    manifest = str(tmp_path / "torn_manifest")
-    # pruned_read heals before planning: exactly 5000 rows, marker gone
-    save_scan_manifest(spark, lake, ["x", "y"], manifest)
-    got = pruned_read(spark, lake, manifest, {"x": (0, 99)})
-    assert got.count() == 5_000
-    assert not os.path.exists(_compact_marker(lake))
-    assert not os.path.exists(tmp)
-
-    # same guard on the catalog hook (fresh staged name, fresh victim)
-    victim2 = _data_files(lake)[0]
-    staged2 = "compact-test2-00000.parquet"
-    os.makedirs(tmp, exist_ok=True)
-    shutil.copy(os.path.join(lake, victim2), os.path.join(tmp, staged2))
-    with open(_compact_marker(lake), "w") as fh:
-        json.dump({"new": [staged2], "old": [victim2]}, fh)
-    register_lake_table(spark, "tornlake", lake, scan_manifest=None)
-    assert lake_scan(spark, "tornlake").count() == 5_000
-    assert not os.path.exists(_compact_marker(lake))
-
-
 def test_optimize_clustered_partitioned_lake_per_leaf(spark, tmp_path):
-    """Round 11 (VERDICT ask #4): a PARTITIONED lake (the
-    lake_append_stream ingest_batch=<id> layout) degrades under
-    unsorted appends and optimize_clustered restores pruning per leaf
-    directory — rows intact, partition column intact, files never
-    crossing partition dirs, idempotent second run."""
+    """Round 11 (VERDICT ask #4): a PARTITIONED lake (ingest_batch=<id>
+    leaf directories) degrades under unsorted appends and
+    optimize_clustered restores pruning per leaf directory — rows
+    intact, partition column intact, files never crossing partition
+    dirs, idempotent second run."""
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.operators.layout import (
@@ -1509,7 +1495,7 @@ def test_optimize_clustered_partitioned_lake_per_leaf(spark, tmp_path):
     assert rep["files_rewritten"] >= 2  # at least the two appended files
     assert all("/" in f or "=" in f for f in rep["dirty_files"])  # leaf-prefixed
     # rows and the directory-encoded partition column survive
-    got = spark.read.parquet(lake)
+    got = read_snapshot(spark, lake)
     assert got.count() == 2 * 24_000
     assert got.groupBy("ingest_batch").count().count() == 2
     # every data file still lives under a partition dir
@@ -1519,61 +1505,6 @@ def test_optimize_clustered_partitioned_lake_per_leaf(spark, tmp_path):
 
     again = optimize_clustered(spark, lake, specs, bits=8)
     assert again["files_rewritten"] == 0  # idempotent
-
-
-def test_streaming_lake_optimize_between_batches(spark, tmp_path):
-    """The streaming-lake maintenance story end to end: stream batches
-    land as ingest_batch dirs with manifest appends, OPTIMIZE runs
-    between batches (per-leaf), the manifest re-stats the rewritten
-    files, and a pruned query returns identical results before and
-    after — the operator cadence lake_append_stream documents."""
-    from pyspark.sql import functions as F
-
-    from mlb_data_pipeline_spark.operators.layout import (
-        append_scan_manifest,
-        cluster_report,
-        optimize_clustered,
-        pruned_read,
-        save_scan_manifest,
-    )
-
-    lake = str(tmp_path / "slake")
-    manifest = str(tmp_path / "slake_manifest")
-    specs = [("k", 0, 9999)]
-
-    def land(batch_id: int, df) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(lake, f"ingest_batch={batch_id}"))
-        if os.path.exists(manifest):
-            append_scan_manifest(spark, lake, ["k"], manifest)
-        else:
-            save_scan_manifest(spark, lake, ["k"], manifest)
-
-    # batch 0: unsorted full-range rows (wide span = dirty)
-    land(0, spark.range(5_000).select((F.col("id") * 97 % 10_000).alias("k")).coalesce(2))
-    box = {"k": (100.0, 900.0)}
-    before = pruned_read(spark, lake, manifest, box).filter(
-        F.col("k").between(100, 900)
-    ).groupBy().agg(F.count("*").alias("n"), F.sum("k").alias("s")).head()
-
-    # maintenance between batches, gated on the dirty fraction
-    assert cluster_report(lake, specs)["files_dirty"] >= 1
-    rep = optimize_clustered(spark, lake, specs, bits=10)
-    assert rep["files_rewritten"] >= 1
-    append_scan_manifest(spark, lake, ["k"], manifest)  # re-stat rewritten files
-
-    after = pruned_read(spark, lake, manifest, box).filter(
-        F.col("k").between(100, 900)
-    ).groupBy().agg(F.count("*").alias("n"), F.sum("k").alias("s")).head()
-    assert (before.n, before.s) == (after.n, after.s)
-
-    # batch 1 lands after the OPTIMIZE; everything still consistent
-    land(1, spark.range(2_000).select((F.col("id") + 20_000).alias("k")).coalesce(1))
-    got = pruned_read(spark, lake, manifest, box).filter(F.col("k").between(100, 900))
-    whole = spark.read.parquet(lake).filter(F.col("k").between(100, 900))
-    assert got.count() == whole.count()
-    # the rewritten leaf now prunes: batch-1 file (k >= 20000) skippable
-    kept = pruned_read(spark, lake, manifest, box).inputFiles()
-    assert all("ingest_batch=1" not in f for f in kept)
 
 
 def test_q23_catalog_hook_branches_actually_prune(spark, sf_dir):
@@ -1798,7 +1729,7 @@ def test_compact_scan_manifest_drops_vanished_rows(spark, tmp_path):
     assert rep["files_dropped"] > 0
     assert rep["rows_after"] < rep["rows_before"]
     after = pruned_read(spark, lake, manifest, box).filter(F.col("x") <= 20).count()
-    assert before == after == spark.read.parquet(lake).filter("x <= 20").count()
+    assert before == after == read_snapshot(spark, lake).filter("x <= 20").count()
     # idempotent
     rep2 = compact_scan_manifest(spark, lake, manifest)
     assert rep2["files_dropped"] == 0

@@ -277,7 +277,9 @@ def test_seeded_shuffle_one_hash_exchange_no_global_sort(spark):
     # its plan-re-executing boundary-sampling job
     from mlb_data_pipeline_spark.operators.curation import seeded_shuffle
 
-    df = spark.range(0, 1000).withColumnRenamed("id", "k")
+    # more than one input split, so the plan needs its exchange at any
+    # core count (a one-split input is planned with none at local[1])
+    df = spark.range(0, 1000, numPartitions=4).withColumnRenamed("id", "k")
     plan = (
         seeded_shuffle(df, "k", n_shards=8)
         ._jdf.queryExecution()

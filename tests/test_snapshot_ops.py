@@ -273,9 +273,8 @@ def test_optimize_snapshot_lake_preserves_time_travel(spark, tmp_path):
     assert lake_history(lake)[-1]["op"] == "optimize"
     assert read_snapshot(spark, lake).count() == n_before
     # the pre-optimize version reads bit-exact: optimize never deleted
-    # its files (marker protocol bypassed on snapshot lakes)
+    # its files
     assert read_snapshot(spark, lake, v_before).count() == n_before
-    assert not os.path.exists(os.path.join(lake, "_compact_pending.json"))
     # idempotent: second call finds nothing dirty, no new commit
     v = current_version(lake)
     rep2 = optimize_clustered(spark, lake, [("k", 0, 2000)], bits=8)
@@ -408,25 +407,27 @@ def test_optimize_refuses_partitioned_lake_with_deletion_vectors(spark, tmp_path
 
 
 def test_read_path_keeps_snapshot_optimize_staging(spark, tmp_path, monkeypatch):
-    """A read beside OPTIMIZE on a snapshot lake: the read-path guard
-    that heals torn marker swaps must not take the in-flight rewrite's
-    staging dir for one, or OPTIMIZE commits the removal of its dirty
-    files with nothing in their place."""
+    """A read beside OPTIMIZE on a snapshot lake: a catalog scan that
+    runs while the rewrite's staging dir is in flight must leave that
+    dir alone, or OPTIMIZE commits the removal of its dirty files with
+    nothing in their place. The read itself sees the pre-OPTIMIZE
+    head."""
     from pyspark.sql.readwriter import DataFrameWriter
-
-    from mlb_data_pipeline_spark.operators.layout import _compact_recover_tree
 
     lake = str(tmp_path / "lake")
     lake_write(spark, _kv(spark, 0, 2000).repartition(4), lake)
+    register_lake_table(spark, "t_optimize_staging", lake)
     write = DataFrameWriter.parquet
+    seen = []
 
     def staged_then_read(self, path, *args, **kwargs):
         write(self, path, *args, **kwargs)
         if path.endswith("__compact_tmp"):
-            _compact_recover_tree(lake)  # what lake_scan runs first
+            seen.append(lake_scan(spark, "t_optimize_staging").count())
 
     monkeypatch.setattr(DataFrameWriter, "parquet", staged_then_read)
     rep = optimize_clustered(spark, lake, [("k", 0, 2000)], bits=8)
+    assert seen == [2000]
     assert rep["files_written"] > 0
     assert read_snapshot(spark, lake).count() == 2000
 
@@ -842,7 +843,9 @@ def test_snapshot_stream_maintenance_cadence(spark, tmp_path):
     """optimize_every + vacuum_keep_last inside the snapshot stream:
     wide-span batch files re-cluster mid-stream with ONE snapshot
     commit, history stays bounded, rows stay exact, and the replay
-    guard survives vacuum (monotonic batch-id rule)."""
+    guard survives vacuum (monotonic batch-id rule). A range read
+    through the catalog skips files across batches with exact rows,
+    and a batch landed after the last OPTIMIZE is visible and prunes."""
     from mlb_data_pipeline_spark.operators.snapshots import (
         lake_history,
         read_snapshot,
@@ -885,6 +888,39 @@ def test_snapshot_stream_maintenance_cadence(spark, tmp_path):
     assert read_snapshot(spark, lake).count() == 2000 + 4 * 2000
     with pytest.raises(ValueError, match=">= 2"):
         lake_snapshot_stream(stream2, lake, str(tmp_path / "ckpt3"), vacuum_keep_last=1)
+
+    # the re-clustered lake prunes a range read across batches, exactly
+    register_lake_table(spark, "t_stream_cadence", lake)
+    pred = "k BETWEEN 100 AND 300"
+
+    def box_rows(df):
+        return sorted(map(tuple, df.filter(pred).select("k", "v").collect()))
+
+    got = lake_scan(spark, "t_stream_cadence", pred)
+    assert box_rows(got) == box_rows(read_snapshot(spark, lake))
+    assert len(box_rows(got)) == 201 * 5
+    assert 0 < len(got.inputFiles()) < len(snapshot_files(lake))
+
+    # a narrow batch landed after the last OPTIMIZE (batch 4: no tick)
+    live = set(snapshot_files(lake))
+    spark.range(1500, 2000).select(
+        F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
+    ).coalesce(1).write.mode("append").parquet(src)
+    lake_snapshot_stream(
+        spark.readStream.schema(KV).option("maxFilesPerTrigger", "1").parquet(src),
+        lake,
+        str(tmp_path / "ckpt"),
+        optimize_every=2,
+        optimize_specs=[("k", 0, 2000)],
+        vacuum_keep_last=3,
+    )
+    assert lake_history(lake)[-1]["op"] == "stream_append"
+    (landed,) = set(snapshot_files(lake)) - live
+    assert lake_count(spark, "t_stream_cadence") == 2000 + 4 * 2000 + 500
+    assert lake_scan(spark, "t_stream_cadence", "v = -1").count() == 500
+    got = lake_scan(spark, "t_stream_cadence", pred)
+    assert box_rows(got) == box_rows(read_snapshot(spark, lake))
+    assert not any(os.path.basename(landed) in f for f in got.inputFiles())
 
 
 def test_schema_evolution_gated_and_merge_read(spark, tmp_path):

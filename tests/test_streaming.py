@@ -589,81 +589,6 @@ def test_sq8_index_stream_equals_batch_store(spark, tmp_path):
     )
 
 
-def test_lake_append_stream_manifests_and_prunes(spark, tmp_path):
-    """Streaming lake ingestion (Y2/Y4 from a stream): micro-batches
-    land as ingest_batch=<id> partition dirs, manifests append
-    O(batch), and a pruned read over the finished lake is exact while
-    skipping files — including across batch directories. Replaying a
-    committed batch through the process function is a no-op."""
-    from pyspark.sql import functions as F
-
-    from mlb_data_pipeline_spark.operators.layout import (
-        manifest_assisted_count,
-        pruned_read,
-        save_bloom_manifest,
-        save_scan_manifest,
-    )
-    from mlb_data_pipeline_spark.streaming.jobs import lake_append_stream
-
-    lake = str(tmp_path / "lake")
-    box_m = str(tmp_path / "box_m")
-    bloom_m = str(tmp_path / "bloom_m")
-    # bootstrap: an initial batch-0 lake + manifests
-    seed = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") % 4).cast("string").alias("tag")
-    )
-    seed.coalesce(2).write.parquet(lake + "/ingest_batch=-1")
-    save_scan_manifest(spark, lake, ["k"], box_m)
-    save_bloom_manifest(spark, lake, "tag", bloom_m)
-
-    src = str(tmp_path / "src")
-    spark.range(1000, 2000).select(
-        F.col("id").alias("k"), F.lit("9").alias("tag")
-    ).coalesce(1).write.mode("append").parquet(src)
-    spark.range(2000, 3000).select(
-        F.col("id").alias("k"), F.lit("8").alias("tag")
-    ).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("k BIGINT, tag STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    lake_append_stream(stream, lake, ["k"], box_m, str(tmp_path / "ckpt"), bloom_m)
-
-    whole = spark.read.parquet(lake)
-    assert whole.count() == 3000
-    assert "ingest_batch" in whole.columns  # partition provenance survives
-
-    # box pruning across batch dirs: k in [1200, 1300] lives in one
-    # streamed batch only
-    out = pruned_read(spark, lake, box_m, {"k": (1200, 1300)})
-    got = out.filter(F.col("k").between(1200, 1300))
-    assert got.count() == 101
-    assert len(out.inputFiles()) < len(whole.inputFiles())
-
-    # bloom equality pruning: tag '9' exists only in the first streamed batch
-    out9 = pruned_read(
-        spark, lake, box_m, {"k": (0, 10**9)}, bloom_filters=[(bloom_m, "9")]
-    )
-    assert out9.filter(F.col("tag") == "9").count() == 1000
-    assert len(out9.inputFiles()) < len(whole.inputFiles())
-
-    # metadata count stays exact over the partitioned lake
-    assert manifest_assisted_count(spark, lake, box_m, {"k": (0, 2999)}) == 3000
-
-    # replay guard: re-running the committed batch dirs appends nothing
-    n_words = spark.read.parquet(bloom_m + "/words").count()
-    n_stats = spark.read.parquet(box_m).count()
-    from mlb_data_pipeline_spark.operators.layout import (
-        append_bloom_manifest,
-        append_scan_manifest,
-    )
-    append_scan_manifest(spark, lake, ["k"], box_m)
-    append_bloom_manifest(spark, lake, bloom_m)
-    assert spark.read.parquet(box_m).count() == n_stats
-    assert spark.read.parquet(bloom_m + "/words").count() == n_words
-
-
 def test_session_window_exact_gap_merges(spark):
     """Boundary pin for the r58 oracle rule (ADVICE r9 claimed the
     opposite): measured on Spark 4.1.2, an event arriving EXACTLY
@@ -771,57 +696,6 @@ def test_dynamic_gap_session_bridges_over_short_gap_event(spark):
     duck = con.execute(_R66_BODY + " ORDER BY user_id, session_start").fetchall()
     assert [(r[1], r[4]) for r in duck] == [(1, 3), (2, 2)]
     assert duck[0][3] == got[0].e
-
-
-def test_lake_append_stream_auto_optimize_cadence(spark, tmp_path):
-    """Round 11: the documented maintenance cadence is automated —
-    optimize_every=N runs a per-leaf OPTIMIZE (with in-call manifest
-    GC + re-stat) every N committed batches. Rows stay exact, the
-    manifest covers every live file afterward (no must-read debt), the
-    compacted leaves actually contain compact files, and a pruned read
-    over the finished lake matches the whole-lake filter."""
-    from pyspark.sql import functions as F
-
-    from mlb_data_pipeline_spark.operators.layout import (
-        _data_files,
-        pruned_read,
-        save_scan_manifest,
-        verify_manifest,
-    )
-    from mlb_data_pipeline_spark.streaming.jobs import lake_append_stream
-
-    lake = str(tmp_path / "optlake")
-    box_m = str(tmp_path / "optbox")
-    seed = spark.range(0, 2_000).select((F.col("id") * 37 % 10_000).alias("k"))
-    seed.coalesce(2).write.parquet(lake + "/ingest_batch=-1")
-    save_scan_manifest(spark, lake, ["k"], box_m)
-
-    src = str(tmp_path / "optsrc")
-    for i in range(4):  # four micro-batches, unsorted full-range keys
-        spark.range(2_000 * (i + 1), 2_000 * (i + 2)).select(
-            (F.col("id") * 73 % 10_000).alias("k")
-        ).coalesce(2).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("k BIGINT")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    lake_append_stream(
-        stream, lake, ["k"], box_m, str(tmp_path / "optckpt"), optimize_every=2
-    )
-
-    whole = spark.read.parquet(lake)
-    assert whole.count() == 10_000
-    # maintenance ticked: compact files exist in at least one leaf
-    assert any("compact-" in n for n in _data_files(lake))
-    # the in-call manifest leg left no must-read debt and no stale rows
-    fsck = verify_manifest(spark, lake, box_m)
-    assert fsck["coverage_frac"] == 1.0, fsck
-    assert fsck["stale_manifest_files"] == []
-    # pruned read exact + actually pruning after compaction
-    out = pruned_read(spark, lake, box_m, {"k": (0, 999)})
-    assert out.filter("k <= 999").count() == whole.filter("k <= 999").count()
-    assert len(out.inputFiles()) < len(whole.inputFiles())
 
 
 def test_dynamic_session_stream_equals_batch(spark, events_dir, events_batch):
