@@ -493,17 +493,6 @@ def _extract_skip_branches(
     return branches
 
 
-def _extract_skip_clauses(predicate: str, col_types: dict | None = None) -> tuple[dict, dict]:
-    """(box, equals) for a purely conjunctive predicate — ({}, {}) when
-    the predicate disjoins or negates (use ``_extract_skip_branches``
-    for the OR-union form). Kept as the stable single-box surface the
-    tests and ``manifest_assisted_count`` callers pin."""
-    branches = _extract_skip_branches(predicate, col_types)
-    if branches is None or len(branches) != 1:
-        return {}, {}
-    return branches[0][0], branches[0][1]
-
-
 def _lake_entry(spark: SparkSession, name: str) -> dict:
     ent = _LAKE_TABLES.get((spark.sparkContext.applicationId, name))
     if ent is None:

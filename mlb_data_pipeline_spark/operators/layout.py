@@ -29,6 +29,10 @@ beyond-reference scale surface (SURVEY §2.15).
 * Pruning is measurable, not asserted: ``file_stats`` reads the real
   parquet footers and ``pruning_report`` computes the fraction of
   files a box predicate can skip under the laid-out vs naive layout.
+* Reads prune through the catalog (catalog.py ``lake_scan``,
+  ``lake_count``, ``lake_min_max``, ``lake_join_scan`` on a registered
+  lake): this module holds their per-file rule and metadata
+  aggregates, and the manifests a plain parquet lake plans from.
 """
 
 from __future__ import annotations
@@ -300,7 +304,8 @@ def write_zordered(
 # under Python min()/max(). BYTE_ARRAY / FIXED_LEN_BYTE_ARRAY stats may
 # be TRUNCATED bounds (parquet writers shorten long strings), so folding
 # them with min()/max() can under/overstate the range — those columns
-# are excluded, which downstream (pruning_report) treats as must-read.
+# are excluded, which downstream (pruning_report, the catalog reads)
+# treats as must-read.
 _EXACT_STAT_TYPES = {"BOOLEAN", "INT32", "INT64", "FLOAT", "DOUBLE"}
 
 
@@ -397,22 +402,14 @@ def file_stats(path: str, cols: list[str], names: list[str] | None = None) -> li
 
 def pruning_report(path: str, box: dict[str, tuple[float, float]]) -> dict:
     """Fraction of files a conjunctive box predicate
-    ``{col: (lo, hi)}`` can SKIP from footer stats alone — the number a
-    100 TB scan actually feels. Returns files_total / files_hit /
-    skip_frac."""
+    ``{col: (lo, hi)}`` can SKIP from footer stats and partition values
+    alone — the number a 100 TB scan actually feels, under the one
+    per-file rule (``_skip_rules``: missing stats never skip). Returns
+    files_total / files_hit / skip_frac."""
     stats = file_stats(path, list(box))
-    hit = 0
-    for fs in stats:
-        # A file is skippable ONLY on a provable min/max miss on some
-        # box column. Missing footer stats (stats disabled, all-null,
-        # excluded string type) mean the scanner MUST read the file, so
-        # the column contributes "might overlap", never "skip".
-        skippable = any(
-            col in fs["min"] and col in fs["max"] and (fs["max"][col] < lo or fs["min"][col] > hi)
-            for col, (lo, hi) in box.items()
-        )
-        hit += int(not skippable)
+    skipped = _skipped_files(stats, [(box, {}, {}, {})], None, lambda _e: set())
     total = len(stats)
+    hit = total - len(skipped)
     return {
         "files_total": total,
         "files_hit": hit,
@@ -421,12 +418,12 @@ def pruning_report(path: str, box: dict[str, tuple[float, float]]) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Scan manifest + pruned read — the read-path half of the layout story
-# (round 9). write_zordered makes every file a small hyper-rectangle;
-# the manifest persists each file's footer min/max as a TINY parquet
-# table (one row per file x column — the Delta/Iceberg data-skipping
-# pattern), and pruned_read turns a box predicate into a file list
-# WITHOUT touching any data footer at plan time. At 100 TB the
+# Scan manifest — the read-path half of the layout story (round 9).
+# write_zordered makes every file a small hyper-rectangle; the manifest
+# persists each file's footer min/max as a TINY parquet table (one row
+# per file x column — the Delta/Iceberg data-skipping pattern), and the
+# catalog's reads of a registered plain lake turn a predicate into a
+# file list WITHOUT touching any data footer at plan time. At 100 TB the
 # manifest for ~100k files x 4 clustered columns is ~400k rows — a
 # sub-second driver decision that replaces opening 100k parquet
 # footers per query.
@@ -449,7 +446,8 @@ def build_scan_manifest(spark: SparkSession, path: str, cols: list[str]) -> Data
     """The footer stats of every data file in ``path`` as a DataFrame:
     (file, rows, col, lo, hi, nulls) — long format so a box check is a
     plain filter. Columns without usable stats (string/binary,
-    all-null) are simply ABSENT, which pruned_read treats as must-read.
+    all-null) are simply ABSENT, which the catalog reads treat as
+    must-read.
     ``nulls`` (round 11) is the column's footer null count, NULL when
     the footer didn't say — the metadata-count fast path needs a
     provable zero before trusting an unopened file's row count."""
@@ -592,7 +590,8 @@ def _skip_rules(
 ) -> set[str]:
     """The rules that PROVE no row of a file matches one conjunctive
     branch (box, equals, nots, nullness) — the one per-file skip rule
-    of pruned scans, EXPLAIN, the metadata aggregates and snapshot DML.
+    of pruned scans, EXPLAIN, the metadata aggregates, snapshot DML and
+    ``pruning_report``.
     ``fs`` is the file's stats entry in ``file_stats``' shape (``rows``
     None when unknown). The rules:
 
@@ -726,72 +725,19 @@ def _skipped_files(
     return out or {}
 
 
-def _read_names(
-    spark: SparkSession, path: str, names: list[str], info: dict | None = None
-) -> DataFrame:
+def _read_names(spark: SparkSession, path: str, names: list[str], info: dict) -> DataFrame:
     """The rows of the RELATIVE ``names``: through the commit record
     ``info`` on a snapshot lake (``snapshots._read_files`` — the
     record's schema, deletion-vector masks and column mapping), as
     plain parquet otherwise (``basePath`` keeps partition-directory
     columns; no names: an empty frame with the lake's schema)."""
-    if info is not None and "version" in info:
+    if "version" in info:
         from .snapshots import _read_files
 
         return _read_files(spark, path, names, info)
     if not names:
         return spark.read.parquet(path).limit(0)
     return spark.read.option("basePath", path).parquet(*[os.path.join(path, n) for n in names])
-
-
-def pruned_files(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str | None,
-    box: dict[str, tuple[float, float]],
-    bloom_filters: list[tuple[str, object]] | None = None,
-    equals: dict[str, object] | None = None,
-    not_equals: dict[str, list] | None = None,
-    nullness: dict[str, str] | None = None,
-    col_types: dict | None = None,
-    files: list[str] | None = None,
-) -> list[str]:
-    """RELATIVE names of the data files of a plain parquet lake that a
-    conjunctive box predicate can possibly touch, decided from the
-    persisted scan manifest (``_manifest_stats``), directory-encoded
-    partition values (box, ``equals``, ``not_equals``, ``nullness``,
-    with ``col_types`` folding temporal values) and Bloom manifests
-    (``bloom_filters``: (manifest, value) pairs) — the rule of
-    ``_skip_rules``: a file drops only on a provable miss; files with
-    missing stats, or unknown to the manifest, are kept. With
-    ``manifest_path=None`` partition values and Blooms still prune.
-
-    ``files``: an explicit file inventory replacing the live listing —
-    per-file stats, Bloom bitmaps and partition values are facts about
-    a FILE, true at every version that references it."""
-    names = _data_files(path) if files is None else files
-
-    def bloom_skip(_equals) -> set[str]:
-        out: set[str] = set()
-        for bloom_path, value in bloom_filters or []:
-            out |= _bloom_skippable(spark, bloom_path, value)
-        return out
-
-    branch = (box, equals or {}, not_equals or {}, nullness or {})
-    skipped = _skipped_files(_manifest_stats(manifest_path, names), [branch], col_types, bloom_skip)
-    return sorted(n for n in names if n not in skipped)
-
-
-def pruned_read(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str,
-    box: dict[str, tuple[float, float]],
-    bloom_filters: list[tuple[str, object]] | None = None,
-) -> DataFrame:
-    """Read only the files ``pruned_files`` keeps. Callers still apply
-    the exact predicate — pruning is a superset guarantee, never a
-    filter."""
-    return _read_names(spark, path, pruned_files(spark, path, manifest_path, box, bloom_filters))
 
 
 # ---------------------------------------------------------------------------
@@ -1121,9 +1067,8 @@ def write_hilbert(
 # that commit references them, so a crash at any point leaves the head
 # and its rows as they were, plus orphans for vacuum_lake; the old
 # bytes stay for time travel. A plain lake's scan manifest needs no
-# coordinated update: pruned_read ignores manifest rows whose files
-# left the live set and must-reads unknown files, so pruning degrades
-# (never corrupts) until the day-2 append_scan_manifest run.
+# coordinated update: once adopted, the lake's catalog reads plan from
+# the commit record's per-file stats and do not consult it.
 # ---------------------------------------------------------------------------
 
 
@@ -1343,8 +1288,9 @@ def _swap_snapshot(base: str, info: dict, dirty: list[str], keyed: DataFrame) ->
 def append_scan_manifest(spark: SparkSession, path: str, cols: list[str], manifest_path: str) -> None:
     """Day-2 manifest maintenance: stat ONLY data files the manifest has
     not seen (O(delta) footer reads, never a full re-stat) and append
-    their rows. With ``pruned_read``'s staleness guard this makes the
-    lake-append protocol: append data -> append manifest; a crash
+    their rows. With the catalog reads' staleness rule
+    (``_manifest_stats``: files it does not know stay must-read) this
+    makes the lake-append protocol: append data -> append manifest; a crash
     between the two only costs pruning on the new files (they are
     must-read until statted), never correctness. Idempotent: re-running
     with no new files appends nothing."""
@@ -1534,14 +1480,6 @@ def _classify_box_files(
     provably match on every row (``_all_rows_match``: safe to consume
     unopened); BOUNDARY files must be read and exactly filtered; the
     rest are provably disjoint (``_skip_rules``)."""
-    for c, (lo, hi) in box.items():
-        try:
-            float(lo), float(hi)
-        except (TypeError, ValueError) as exc:
-            raise ValueError(
-                f"metadata aggregates need numeric box bounds; got {c}={lo!r}..{hi!r} "
-                "(use pruned_read with bloom_filters for string equality)"
-            ) from exc
     inside: list[str] = []
     boundary: list[str] = []
     for fs in stats:
@@ -1551,21 +1489,16 @@ def _classify_box_files(
     return inside, boundary
 
 
-def _box_filtered(df: DataFrame, box: dict, where: str | None) -> DataFrame:
-    """``df`` under the exact predicate string ``where``, else the
-    numeric box itself."""
-    if where is not None:
-        return df.filter(where)
-    cond = F.lit(True)
-    for c, (lo, hi) in box.items():
-        cond = cond & F.col(c).between(float(lo), float(hi))
-    return df.filter(cond)
+def _filtered(df: DataFrame, where: str | None) -> DataFrame:
+    """``df`` under the exact predicate string ``where``; all of
+    ``df`` when there is none (an empty box)."""
+    return df.filter(where) if where else df
 
 
 def _stats_count(
     stats: list[dict],
     boxes: list[dict],
-    where: str | None,
+    where: str,
     col_types: dict | None,
     str_eq: dict | None,
     dv_rows: dict[str, int],
@@ -1578,9 +1511,9 @@ def _stats_count(
     relative name) unopened; every other file some box may touch —
     boundary files, inside files of unknown row count — is read ONCE
     through ``reader(names)`` and filtered with the exact predicate
-    ``where`` (None: the one box itself, ``_box_filtered``). A file
-    inside one point box is provably disjoint from the others, so its
-    rows are never counted twice; one that is not is read instead."""
+    string ``where``. A file inside one point box is provably disjoint
+    from the others, so its rows are never counted twice; one that is
+    not is read instead."""
     inside: set[str] = set()
     boundary: set[str] = set()
     for box in boxes:
@@ -1592,45 +1525,8 @@ def _stats_count(
     inside -= boundary
     n = sum(int(rows[f]) - dv_rows.get(f, 0) for f in inside)
     if boundary:
-        n += _box_filtered(reader(sorted(boundary)), boxes[0], where).count()
+        n += reader(sorted(boundary)).filter(where).count()
     return n
-
-
-def manifest_assisted_count(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str,
-    box: dict[str, tuple[float, float]],
-    where: str | None = None,
-    col_types: dict | None = None,
-    equals_strs: dict[str, str] | None = None,
-    files: list[str] | None = None,
-) -> int:
-    """COUNT(*) over a plain parquet lake under a conjunctive box
-    predicate with metadata doing most of the work (the Iceberg/Delta
-    metadata-count pattern, ``_stats_count`` over the scan manifest):
-
-    * files whose stats prove them FULLY INSIDE the box on every box
-      column contribute their manifest row count without being opened;
-    * files provably DISJOINT on some column contribute zero;
-    * only BOUNDARY files — plus files with missing stats or unknown
-      to the manifest — are read and exactly filtered.
-
-    On a well-clustered lake the read set is the box's surface, not
-    its volume.
-
-    ``where``: the exact predicate STRING to apply to boundary files
-    instead of the reconstructed numeric box — required when the box
-    folds temporal columns to epoch units. The box must be
-    semantically EQUAL to ``where`` on interior files, since those are
-    counted unopened. ``files``: explicit inventory override; by
-    default the live files (``_data_files``: the head's list once
-    OPTIMIZE has adopted the lake into the snapshot log)."""
-    names = _data_files(path) if files is None else files
-    return _stats_count(
-        _manifest_stats(manifest_path, names), [box], where, col_types, equals_strs, {},
-        lambda n: _read_names(spark, path, n),
-    )
 
 
 def _stats_minmax(
@@ -1651,7 +1547,8 @@ def _stats_minmax(
     every other inside file's lo (resp. hi overcut). A stored stat may
     be a float() fold of the true value (error <= ulp/2), so candidacy
     widens by 2 ulp. The extreme is computed EXACTLY from the read rows
-    (``reader(names)``), so it is bit-identical to a full scan."""
+    (``reader(names)`` under the exact predicate string ``where``), so
+    it is bit-identical to a full scan."""
     import math
 
     sc = stat_col or col
@@ -1672,35 +1569,8 @@ def _stats_minmax(
         for f in interior:
             if by[f]["min"][sc] <= lo_best + slack_lo or by[f]["max"][sc] >= hi_best - slack_hi:
                 read.add(f)
-    df = _box_filtered(reader(sorted(read)), box, where)
+    df = _filtered(reader(sorted(read)), where)
     return df.agg(F.min(col).alias(f"min_{col}"), F.max(col).alias(f"max_{col}"))
-
-
-def manifest_assisted_minmax(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str,
-    col: str,
-    box: dict[str, tuple[float, float]] | None = None,
-    where: str | None = None,
-    col_types: dict | None = None,
-    files: list[str] | None = None,
-):
-    """Exact (MIN, MAX) of ``col`` over a plain parquet lake under a
-    conjunctive box with the scan manifest choosing the READ SET (the
-    companion to ``manifest_assisted_count``, ``_stats_minmax``): a
-    file provably disjoint from the box contributes nothing; a
-    box-BOUNDARY file must be read (its footer min/max may come from
-    rows outside the box); among INTERIOR files only those whose range
-    could hold the global extreme are opened. On a range-clustered lake
-    the read set is O(1) files. Returns a 1-row DataFrame
-    (min_<col>, max_<col>) so the values keep the column's native type
-    end to end. The inventory is ``manifest_assisted_count``'s."""
-    names = _data_files(path) if files is None else files
-    return _stats_minmax(
-        _manifest_stats(manifest_path, names), col, dict(box or {}), where, col_types, {},
-        lambda n: _read_names(spark, path, n),
-    )
 
 
 def compact_scan_manifest(spark: SparkSession, path: str, manifest_path: str) -> dict:
@@ -1785,21 +1655,6 @@ def bloom_manifest_stats(spark: SparkSession, manifest_path: str) -> DataFrame:
         F.round(fill, 6).alias("fill_frac"),
         F.round(F.pow(fill, F.lit(int(meta.k))), 8).alias("implied_fpp"),
     )
-
-def join_pruned_files(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str | None,
-    col: str,
-    keys: list,
-    bloom_manifest_path: str | None = None,
-    col_types: dict | None = None,
-) -> list[str]:
-    """RELATIVE names of the live files of a plain parquet lake that
-    could contain ANY of ``keys`` in ``col`` (``_join_kept`` over the
-    scan manifest's stats)."""
-    stats = _manifest_stats(manifest_path, _data_files(path))
-    return _join_kept(spark, stats, col, keys, bloom_manifest_path, col_types)
 
 
 def _join_kept(
@@ -1977,7 +1832,7 @@ def _stats_ndv(
         )
     if live:
         parts.append(
-            _box_filtered(reader(sorted(live)), box, where).agg(
+            _filtered(reader(sorted(live)), where).agg(
                 F.hll_sketch_agg(F.col(col).cast("string"), F.lit(lg_k)).alias("sketch")
             )
         )

@@ -12,7 +12,7 @@ Iceberg/Delta-shaped transaction log on top of the same directory:
   listing the table's live data files (relative paths), its parent
   version, the operation, and a wall-clock timestamp. Readers resolve
   the latest version; ``layout._data_files`` honors the log, so every
-  existing read path (pruned_read, lake_scan, lake_count, manifests,
+  existing read path (the catalog's ``lake_*`` reads, manifests,
   OPTIMIZE) sees only live files with no caller opt-in.
 * **Time travel** — ``read_snapshot(spark, path, version=...)`` or
   ``version_as_of(path, ts)``: files removed by later commits stay on
@@ -123,7 +123,7 @@ travel, and row-level DML are beyond-reference scale surface
   reader semantics.)
 * ``lake_delete``'s three-way classification reads only the commit
   record (driver-side, metadata-scale) — the same budget as
-  ``pruned_read``'s planning collect. The rewrite job reads only the
+  ``lake_scan``'s planning. The rewrite job reads only the
   boundary files.
 * ``lake_merge`` anti-joins the source key set over candidate files
   only — broadcast when the probe proved the key set small

@@ -336,9 +336,11 @@ def pretraining_data_pipeline(
     )
     if stats_manifest_cols:
         # round 9: data-skipping manifest over the release (Y2) —
-        # downstream consumers pruned_read / manifest-count by token
-        # length, position, or any numeric release column without
-        # opening shard footers; _-prefixed so discovery ignores it
+        # downstream consumers register it with the release
+        # (register_lake_table(scan_manifest=)) and lake_scan /
+        # lake_count by token length, position, or any numeric release
+        # column without opening shard footers; _-prefixed so
+        # discovery ignores it
         from ..operators.layout import save_scan_manifest
 
         save_scan_manifest(

@@ -686,7 +686,7 @@ def q46_optimize_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 #        predicate — the partition key — skipped nothing through the
 #        hook. Now directory-encoded values prune lake_scan file lists,
 #        classify lake_count files as exactly (v, v, nulls=0), and
-#        manifest_assisted_minmax opens only box-boundary plus
+#        lake_min_max opens only box-boundary plus
 #        argmin/argmax candidate files. The oracle runs the identical
 #        predicates on the raw table: a wrong skip loses rows and
 #        breaks the hash.

@@ -5,9 +5,10 @@ Every ``lake_*`` read resolves its ref (head, version, branch) to one
 record, prunes with the record's per-file stats under the one per-file
 rule (``layout._skip_rules`` / ``layout._all_rows_match``) and reads the
 kept files through ``snapshots._read_files``, so deletion-vector masks
-and column mapping hold on every read. No scan manifest is registered
-anywhere in this file: on a snapshot lake the record is the stats
-source."""
+and column mapping hold on every read. On a snapshot lake the record is
+the stats source: the differential's ``diff_adopted`` lake registers a
+scan manifest saved while it was plain parquet, which its first DML
+(adopt) leaves stale, and its reads must not consult it."""
 
 from __future__ import annotations
 
@@ -28,6 +29,7 @@ from mlb_data_pipeline_spark.catalog import (
     register_lake_table,
 )
 from mlb_data_pipeline_spark.operators import snapshots as S
+from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 from mlb_data_pipeline_spark.operators.snapshots import (
     lake_branch_append,
     lake_branch_create,
@@ -155,25 +157,38 @@ def test_count_of_an_in_keeps_the_range_on_its_column(spark, tmp_path):
 
 @pytest.fixture(scope="module")
 def _lakes(spark, tmp_path_factory):
-    """A flat and a partitioned snapshot lake, each taken through a
-    rewrite delete (v2), a DV delete (v3), a rename v -> w (v4) and a
-    branch ``b`` with an append. Returns {table name: lake path}."""
+    """A flat and a partitioned snapshot lake and a flat plain parquet
+    lake registered with its scan manifest (``diff_adopted``, which its
+    first DML adopts as v1), each taken through a rewrite delete (v2), a
+    DV delete (v3), a rename v -> w and a branch ``b`` with an append.
+    The adopted log records its schema (``lake_record_schema``, v4)
+    before the rename, which needs one. Returns {table name: lake
+    path}."""
     base = tmp_path_factory.mktemp("record_reads")
     out = {}
-    for name, with_p in (("diff_flat", False), ("diff_part", True)):
+    for name, with_p in (("diff_flat", False), ("diff_part", True), ("diff_adopted", False)):
         lake = str(base / name)
         df = _rows(spark, 0, 600, with_p).repartitionByRange(4, "k")
-        lake_write(spark, df, lake, partition_by=["p"] if with_p else None)
+        manifest = None
+        if name == "diff_adopted":
+            df.write.parquet(lake)
+            manifest = str(base / "diff_adopted_manifest")
+            save_scan_manifest(spark, lake, ["k", "v"], manifest)
+        else:
+            lake_write(spark, df, lake, partition_by=["p"] if with_p else None)
         ct = {"k": "bigint", "v": "double"}
         lake_delete(spark, lake, "k BETWEEN 100 AND 160", col_types=ct)
         rep = lake_delete(spark, lake, "k BETWEEN 300 AND 330", col_types=ct, use_dv=True)
         assert rep["files_dv"] >= 1
+        if manifest is not None:
+            S.lake_record_schema(spark, lake)
         lake_rename_column(lake, "v", "w")
         lake_branch_create(lake, "b")
         add = _rows(spark, 600, 700, with_p).withColumnRenamed("v", "w")
         lake_branch_append(spark, lake, "b", add.coalesce(1))
-        register_lake_table(spark, name, lake)
+        register_lake_table(spark, name, lake, scan_manifest=manifest)
         out[name] = lake
+    assert S.lake_history(out["diff_adopted"])[0]["op"] == "adopt"
     return out
 
 
@@ -212,7 +227,7 @@ def _leaf(draw, vcol, with_p):
 
 @st.composite
 def _case(draw):
-    table = draw(st.sampled_from(["diff_flat", "diff_part"]))
+    table = draw(st.sampled_from(["diff_flat", "diff_part", "diff_adopted"]))
     ref = draw(st.sampled_from(["head", 1, 3, "b"]))
     vcol = "v" if ref in (1, 3) else "w"
     with_p = table == "diff_part"
@@ -281,16 +296,12 @@ def test_min_max_interior_files_need_null_free_box_columns(spark, tmp_path):
     rows the box excludes when that column has NULLs, so its range of
     the aggregated column cannot stand in for its matching rows: file a
     holds (c NULL, x 0) and (c 5, x 100), file b holds (c 5, x 50)."""
-    from mlb_data_pipeline_spark.operators.layout import (
-        manifest_assisted_minmax,
-        save_scan_manifest,
-    )
-
     lake = str(tmp_path / "lake")
     schema = "c bigint, x bigint"
-    spark.createDataFrame([(None, 0), (5, 100)], schema).coalesce(1).write.parquet(lake + "/a")
-    spark.createDataFrame([(5, 50)], schema).coalesce(1).write.parquet(lake + "/b")
+    spark.createDataFrame([(None, 0), (5, 100)], schema).coalesce(1).write.parquet(lake)
+    spark.createDataFrame([(5, 50)], schema).coalesce(1).write.mode("append").parquet(lake)
     manifest = str(tmp_path / "manifest")
     save_scan_manifest(spark, lake, ["c", "x"], manifest)
-    got = manifest_assisted_minmax(spark, lake, manifest, "x", box={"c": (0, 10)}).head()
+    register_lake_table(spark, "t_minmax_nulls", lake, scan_manifest=manifest)
+    got = lake_min_max(spark, "t_minmax_nulls", "x", "c BETWEEN 0 AND 10").head()
     assert (got["min_x"], got["max_x"]) == (50, 100)

@@ -170,29 +170,32 @@ def test_file_stats_reads_real_footers(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Manifest-pruned read (Y2, round 9)
+# Manifest-pruned catalog reads of a plain lake (Y2, round 9)
 # ---------------------------------------------------------------------------
 
 
-def test_pruned_read_skips_files_and_loses_no_rows(spark, tmp_path):
-    from mlb_data_pipeline_spark.operators.layout import (
-        pruned_read,
-        save_scan_manifest,
-        write_zordered,
-    )
+def _registered(spark, name, lake, cols, manifest, **kw):
+    """Save ``lake``'s scan manifest over ``cols`` at ``manifest`` and
+    register the lake under ``name`` with it."""
+    from mlb_data_pipeline_spark.catalog import register_lake_table
+    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
+
+    save_scan_manifest(spark, lake, cols, manifest)
+    register_lake_table(spark, name, lake, scan_manifest=manifest, **kw)
+
+
+def test_lake_scan_skips_files_and_loses_no_rows(spark, tmp_path):
+    from mlb_data_pipeline_spark.catalog import lake_scan
 
     grid = spark.range(200 * 200).select(
         (F.col("id") % 200).alias("x"), (F.col("id") / 200).cast("long").alias("y")
     )
     lake = str(tmp_path / "lake")
-    manifest = str(tmp_path / "manifest")
     write_zordered(grid, lake, [("x", 0, 199), ("y", 0, 199)], bits=8, n_files=16)
-    save_scan_manifest(spark, lake, ["x", "y"], manifest)
+    _registered(spark, "zgrid", lake, ["x", "y"], str(tmp_path / "manifest"))
 
-    box = {"x": (0, 49), "y": (0, 49)}
-    pr = pruned_read(spark, lake, manifest, box)
-    # superset guarantee: exact predicate on top gives the full answer
-    got = pr.filter(F.col("x").between(0, 49) & F.col("y").between(0, 49))
+    got = lake_scan(spark, "zgrid", "x BETWEEN 0 AND 49 AND y BETWEEN 0 AND 49")
+    # superset guarantee: the exact predicate on top gives the full answer
     assert got.count() == 50 * 50
     # and the scan really did skip files (the measured payoff)
     n_read = len(got.inputFiles())
@@ -201,70 +204,70 @@ def test_pruned_read_skips_files_and_loses_no_rows(spark, tmp_path):
     assert n_read <= n_total // 2, (n_read, n_total)
 
 
-def test_pruned_read_empty_box_returns_empty_with_schema(spark, tmp_path):
-    from mlb_data_pipeline_spark.operators.layout import (
-        pruned_read,
-        save_scan_manifest,
-        write_zordered,
-    )
+def test_lake_scan_empty_box_returns_empty_with_schema(spark, tmp_path):
+    from mlb_data_pipeline_spark.catalog import lake_scan
 
     grid = spark.range(1000).select(
         (F.col("id") % 100).alias("x"), (F.col("id") / 100).cast("long").alias("y")
     )
     lake = str(tmp_path / "lake2")
-    manifest = str(tmp_path / "manifest2")
     write_zordered(grid, lake, [("x", 0, 99), ("y", 0, 9)], bits=8, n_files=4)
-    save_scan_manifest(spark, lake, ["x", "y"], manifest)
-    out = pruned_read(spark, lake, manifest, {"x": (10_000, 20_000)})
+    _registered(spark, "zgrid2", lake, ["x", "y"], str(tmp_path / "manifest2"))
+    out = lake_scan(spark, "zgrid2", "x BETWEEN 10000 AND 20000")
     assert out.count() == 0
+    assert out.inputFiles() == []  # every file skipped
     assert set(out.columns) == {"x", "y"}
 
 
-def test_pruned_read_missing_stats_column_is_conservative(spark, tmp_path):
-    from mlb_data_pipeline_spark.operators.layout import pruned_read, save_scan_manifest
+def test_lake_scan_missing_stats_column_is_conservative(spark, tmp_path):
+    from mlb_data_pipeline_spark.catalog import lake_scan
 
     # string column -> no usable footer stats -> manifest has no rows
-    # for it -> a box on it must read EVERY file, never skip
+    # for it -> a range on it must read EVERY file, never skip
     lake = str(tmp_path / "slake")
     manifest = str(tmp_path / "smanifest")
     spark.createDataFrame([(i, "zzz") for i in range(100)], "n long, s string").repartition(
         4
     ).write.parquet(lake)
-    save_scan_manifest(spark, lake, ["n", "s"], manifest)
-    out = pruned_read(spark, lake, manifest, {"s": ("aaa", "bbb")})
-    assert out.count() == 100  # all rows reachable; exact filter is the caller's
+    _registered(spark, "slake", lake, ["n", "s"], manifest)
+    assert spark.read.parquet(manifest).filter("col = 's'").count() == 0
+    out = lake_scan(spark, "slake", "s BETWEEN 'aaa' AND 'zzzz'")
+    assert out.count() == 100  # all rows reachable
     n_total = len(spark.read.parquet(lake).inputFiles())
     assert len(out.inputFiles()) == n_total
 
 
-def test_pruned_read_stale_manifest_reads_new_files(spark, tmp_path):
+def test_stale_manifest_files_are_read_and_counted(spark, tmp_path):
     """Files appended AFTER the manifest was built have no stats rows;
-    they must be read unconditionally or pruning silently loses rows.
-    (The append itself would normally be followed by a manifest
-    rebuild — this pins the safety net for the window in between.)"""
-    from mlb_data_pipeline_spark.operators.layout import (
-        pruned_read,
-        save_scan_manifest,
-        write_zordered,
-    )
+    they must be read unconditionally or pruning silently loses rows,
+    and counted from their rows, never from metadata. (The append
+    itself would normally be followed by a manifest rebuild — this
+    pins the safety net for the window in between.)"""
+    from mlb_data_pipeline_spark.catalog import lake_count, lake_scan
 
     grid = spark.range(1000).select(
         (F.col("id") % 100).alias("x"), (F.col("id") / 100).cast("long").alias("y")
     )
     lake = str(tmp_path / "lake3")
-    manifest = str(tmp_path / "manifest3")
     write_zordered(grid, lake, [("x", 0, 99), ("y", 0, 9)], bits=8, n_files=4)
-    save_scan_manifest(spark, lake, ["x", "y"], manifest)
+    _registered(spark, "stale3", lake, ["x", "y"], str(tmp_path / "manifest3"))
     # append rows INSIDE the box after the manifest snapshot
     spark.createDataFrame([(5, 500), (6, 600)], "x long, y long").coalesce(1).write.mode(
         "append"
     ).parquet(lake)
 
-    out = pruned_read(spark, lake, manifest, {"x": (0, 10)})
-    got = out.filter(F.col("x").between(0, 10))
+    got = lake_scan(spark, "stale3", "x BETWEEN 0 AND 10")
     direct = spark.read.parquet(lake).filter(F.col("x").between(0, 10))
     assert got.count() == direct.count()
     assert {(r.x, r.y) for r in got.collect()} == {(r.x, r.y) for r in direct.collect()}
+    assert lake_count(spark, "stale3", "x BETWEEN 0 AND 10") == direct.count()
+
+    # a stale file the box cuts: x = 5 counts, x = 500 does not
+    lake2 = str(tmp_path / "clake2")
+    spark.createDataFrame([(i,) for i in range(50)], "x long").coalesce(1).write.parquet(lake2)
+    _registered(spark, "stale_count", lake2, ["x"], str(tmp_path / "cmanifest2"))
+    spark.createDataFrame([(5,), (500,)], "x long").coalesce(1).write.mode("append").parquet(lake2)
+    assert lake_count(spark, "stale_count", "x BETWEEN 0 AND 10") == 12  # 11 + stale 5
 
 
 # ---------------------------------------------------------------------------
@@ -348,12 +351,8 @@ def test_append_scan_manifest_incremental_and_idempotent(spark, tmp_path):
     the NEW files; pruning then skips them on provable misses again
     (the staleness guard had them as must-read). Replays append
     nothing."""
-    from mlb_data_pipeline_spark.operators.layout import (
-        append_scan_manifest,
-        pruned_read,
-        save_scan_manifest,
-        write_zordered,
-    )
+    from mlb_data_pipeline_spark.catalog import lake_scan
+    from mlb_data_pipeline_spark.operators.layout import append_scan_manifest
 
     grid = spark.range(1000).select(
         (F.col("id") % 100).alias("x"), (F.col("id") / 100).cast("long").alias("y")
@@ -361,7 +360,7 @@ def test_append_scan_manifest_incremental_and_idempotent(spark, tmp_path):
     lake = str(tmp_path / "lake4")
     manifest = str(tmp_path / "manifest4")
     write_zordered(grid, lake, [("x", 0, 99), ("y", 0, 9)], bits=8, n_files=4)
-    save_scan_manifest(spark, lake, ["x", "y"], manifest)
+    _registered(spark, "day2", lake, ["x", "y"], manifest)
     n0 = spark.read.parquet(manifest).count()
 
     # append a file far OUTSIDE the box
@@ -369,16 +368,16 @@ def test_append_scan_manifest_incremental_and_idempotent(spark, tmp_path):
         "append"
     ).parquet(lake)
     # before the manifest append: staleness guard reads the new file
-    pre = pruned_read(spark, lake, manifest, {"x": (0, 10)})
+    pre = lake_scan(spark, "day2", "x BETWEEN 0 AND 10")
     n_total = len(spark.read.parquet(lake).inputFiles())
     append_scan_manifest(spark, lake, ["x", "y"], manifest)
     n1 = spark.read.parquet(manifest).count()
     assert n1 == n0 + 2  # two stat rows (x, y) for the one new file
     # after: the new file is provably outside the box -> skipped again
-    post = pruned_read(spark, lake, manifest, {"x": (0, 10)})
+    post = lake_scan(spark, "day2", "x BETWEEN 0 AND 10")
     assert len(post.inputFiles()) < len(pre.inputFiles()) <= n_total
     # rows identical either way
-    assert post.filter(F.col("x") <= 10).count() == pre.filter(F.col("x") <= 10).count()
+    assert post.count() == pre.count()
 
     append_scan_manifest(spark, lake, ["x", "y"], manifest)  # replay: no-op
     assert spark.read.parquet(manifest).count() == n1
@@ -390,11 +389,10 @@ def test_append_scan_manifest_incremental_and_idempotent(spark, tmp_path):
 
 
 def test_bloom_manifest_skips_files_no_false_negatives(spark, tmp_path):
+    from mlb_data_pipeline_spark.catalog import lake_scan
     from mlb_data_pipeline_spark.operators.layout import (
         bloom_skippable_files,
-        pruned_read,
         save_bloom_manifest,
-        save_scan_manifest,
     )
 
     # hash-cluster by source so each file holds few sources
@@ -402,22 +400,20 @@ def test_bloom_manifest_skips_files_no_false_negatives(spark, tmp_path):
     df = spark.createDataFrame(rows, "id long, source string, n long")
     lake = str(tmp_path / "blake")
     df.repartition(8, "source").write.parquet(lake)
-    box_manifest = str(tmp_path / "bbox")
     bloom_manifest = str(tmp_path / "bbloom")
-    save_scan_manifest(spark, lake, ["id", "n"], box_manifest)
     save_bloom_manifest(spark, lake, "source", bloom_manifest)
+    _registered(
+        spark, "blake", lake, ["id", "n"], str(tmp_path / "bbox"),
+        bloom_manifests={"source": bloom_manifest},
+    )
 
     n_total = len(spark.read.parquet(lake).inputFiles())
     skippable = bloom_skippable_files(spark, bloom_manifest, "src3")
     assert skippable  # hash clustering -> most files provably lack src3
 
-    out = pruned_read(
-        spark, lake, box_manifest, {"id": (0, 10**9)},
-        bloom_filters=[(bloom_manifest, "src3")],
-    )
-    got = out.filter(F.col("source") == "src3")
+    got = lake_scan(spark, "blake", "id BETWEEN 0 AND 1000000000 AND source = 'src3'")
     assert got.count() == 500  # every src3 row survives: no false negatives
-    assert len(out.inputFiles()) < n_total
+    assert len(got.inputFiles()) < n_total
 
 
 def test_bloom_manifest_keys_escaped_leaves_by_on_disk_name(spark, tmp_path):
@@ -449,21 +445,22 @@ def test_bloom_manifest_keys_escaped_leaves_by_on_disk_name(spark, tmp_path):
 
 
 def test_bloom_manifest_unknown_file_is_must_read(spark, tmp_path):
+    from mlb_data_pipeline_spark.catalog import lake_scan
     from mlb_data_pipeline_spark.operators.layout import (
         append_bloom_manifest,
         bloom_skippable_files,
-        pruned_read,
         save_bloom_manifest,
-        save_scan_manifest,
     )
 
     df = spark.createDataFrame([(i, "alpha") for i in range(100)], "id long, source string")
     lake = str(tmp_path / "blake2")
     df.coalesce(2).write.parquet(lake)
-    box_manifest = str(tmp_path / "bbox2")
     bloom_manifest = str(tmp_path / "bbloom2")
-    save_scan_manifest(spark, lake, ["id"], box_manifest)
     save_bloom_manifest(spark, lake, "source", bloom_manifest)
+    _registered(
+        spark, "blake2", lake, ["id"], str(tmp_path / "bbox2"),
+        bloom_manifests={"source": bloom_manifest},
+    )
 
     # append a file with a NEW source value after both snapshots
     spark.createDataFrame([(999, "omega")], "id long, source string").coalesce(1).write.mode(
@@ -472,11 +469,8 @@ def test_bloom_manifest_unknown_file_is_must_read(spark, tmp_path):
 
     # bloom proves 'omega' absent from the ORIGINAL files; the appended
     # file is unknown to both manifests -> must-read -> the row is found
-    out = pruned_read(
-        spark, lake, box_manifest, {"id": (0, 10**9)},
-        bloom_filters=[(bloom_manifest, "omega")],
-    )
-    assert out.filter(F.col("source") == "omega").count() == 1
+    out = lake_scan(spark, "blake2", "id BETWEEN 0 AND 1000000000 AND source = 'omega'")
+    assert out.count() == 1
 
     # day-2: append the bloom rows; now 'beta' lookups skip it too
     append_bloom_manifest(spark, lake, bloom_manifest)
@@ -487,55 +481,6 @@ def test_bloom_manifest_unknown_file_is_must_read(spark, tmp_path):
     n_words = spark.read.parquet(bloom_manifest + "/words").count()
     append_bloom_manifest(spark, lake, bloom_manifest)
     assert spark.read.parquet(bloom_manifest + "/words").count() == n_words
-
-
-def test_manifest_assisted_count_exact_and_metadata_heavy(spark, tmp_path):
-    """The metadata-count contract: exact answer (equals the direct
-    filtered count) for boxes aligned and unaligned with file
-    boundaries, with interior files never opened (classification is
-    manifest-only; here we can only observe exactness plus the skip
-    set indirectly — interior+disjoint dominate on a clustered
-    layout)."""
-    from mlb_data_pipeline_spark.operators.layout import (
-        manifest_assisted_count,
-        save_scan_manifest,
-        write_zordered,
-    )
-
-    grid = spark.range(200 * 200).select(
-        (F.col("id") % 200).alias("x"), (F.col("id") / 200).cast("long").alias("y")
-    )
-    lake = str(tmp_path / "clake")
-    manifest = str(tmp_path / "cmanifest")
-    write_zordered(grid, lake, [("x", 0, 199), ("y", 0, 199)], bits=8, n_files=16)
-    save_scan_manifest(spark, lake, ["x", "y"], manifest)
-
-    for box in (
-        {"x": (0, 199), "y": (0, 199)},     # whole lake: pure metadata
-        {"x": (0, 49), "y": (0, 49)},
-        {"x": (13, 151), "y": (77, 143)},   # unaligned boundaries
-        {"x": (500, 600)},                  # provably empty
-    ):
-        got = manifest_assisted_count(spark, lake, manifest, box)
-        cond = F.lit(True)
-        for c, (lo, hi) in box.items():
-            cond = cond & F.col(c).between(lo, hi)
-        want = spark.read.parquet(lake).filter(cond).count()
-        assert got == want, (box, got, want)
-
-
-def test_manifest_assisted_count_stale_files_counted(spark, tmp_path):
-    from mlb_data_pipeline_spark.operators.layout import (
-        manifest_assisted_count,
-        save_scan_manifest,
-    )
-
-    lake = str(tmp_path / "clake2")
-    manifest = str(tmp_path / "cmanifest2")
-    spark.createDataFrame([(i,) for i in range(50)], "x long").coalesce(1).write.parquet(lake)
-    save_scan_manifest(spark, lake, ["x"], manifest)
-    spark.createDataFrame([(5,), (500,)], "x long").coalesce(1).write.mode("append").parquet(lake)
-    assert manifest_assisted_count(spark, lake, manifest, {"x": (0, 10)}) == 12  # 11 + stale 5
 
 
 def test_verify_manifest_reports_missing_and_stale(spark, tmp_path):
@@ -594,27 +539,25 @@ def test_bloom_manifest_stats_gauge(spark, tmp_path):
 def test_bloom_pruning_in_list_semantics(spark, tmp_path):
     """col IN (v1, v2): a file is skippable only when the bitmap
     proves BOTH values absent — rows for either value always survive."""
-    from mlb_data_pipeline_spark.operators.layout import (
-        pruned_read,
-        save_bloom_manifest,
-        save_scan_manifest,
-    )
+    from mlb_data_pipeline_spark.catalog import lake_scan
+    from mlb_data_pipeline_spark.operators.layout import save_bloom_manifest
 
     rows = [(i, f"src{i % 8}") for i in range(4000)]
     lake = str(tmp_path / "inlake")
     spark.createDataFrame(rows, "id long, source string").repartition(8, "source").write.parquet(lake)
-    box_m, bloom_m = str(tmp_path / "inbox"), str(tmp_path / "inbloom")
-    save_scan_manifest(spark, lake, ["id"], box_m)
+    bloom_m = str(tmp_path / "inbloom")
     save_bloom_manifest(spark, lake, "source", bloom_m)
-
-    out = pruned_read(
-        spark, lake, box_m, {"id": (0, 10**9)},
-        bloom_filters=[(bloom_m, ["src2", "src5"])],
+    _registered(
+        spark, "inbloom", lake, ["id"], str(tmp_path / "inbox"),
+        bloom_manifests={"source": bloom_m},
     )
-    got = out.filter(F.col("source").isin("src2", "src5"))
+
+    got = lake_scan(
+        spark, "inbloom", "id BETWEEN 0 AND 1000000000 AND source IN ('src2', 'src5')"
+    )
     assert got.count() == 1000  # 500 per source: nothing lost
     n_total = len(spark.read.parquet(lake).inputFiles())
-    assert len(out.inputFiles()) < n_total  # and files provably lacking both skip
+    assert len(got.inputFiles()) < n_total  # and files provably lacking both skip
 
 
 def test_bloom_manifest_numeric_column_probe_type_safe(spark, tmp_path):
@@ -623,29 +566,25 @@ def test_bloom_manifest_numeric_column_probe_type_safe(spark, tmp_path):
     compute different bit positions and 'prove' present values absent.
     The meta table now pins the built dtype and probes cast to it: no
     false negatives on numeric columns."""
-    from pyspark.sql import functions as F
-
+    from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
     from mlb_data_pipeline_spark.operators.layout import (
         bloom_skippable_files,
-        pruned_read,
         save_bloom_manifest,
-        save_scan_manifest,
     )
 
     lake = str(tmp_path / "nlake")
     bloom_m = str(tmp_path / "nbloom")
-    box_m = str(tmp_path / "nbox")
     # two files with disjoint BIGINT key ranges
     spark.createDataFrame([(i,) for i in range(100)], "k long").coalesce(1).write.parquet(lake)
     spark.createDataFrame([(i,) for i in range(1000, 1100)], "k long").coalesce(1).write.mode(
         "append"
     ).parquet(lake)
     save_bloom_manifest(spark, lake, "k", bloom_m, expected_per_file=128)
-    save_scan_manifest(spark, lake, ["k"], box_m)
+    # no scan manifest: the Bloom probe alone decides what is read
+    register_lake_table(spark, "nbloom", lake, bloom_manifests={"k": bloom_m})
     # no false negative: the file holding k=1050 is never skippable
     skip = bloom_skippable_files(spark, bloom_m, 1050)
-    full = pruned_read(spark, lake, box_m, {}, bloom_filters=[(bloom_m, 1050)])
-    assert full.filter(F.col("k") == 1050).count() == 1
+    assert lake_scan(spark, "nbloom", "k = 1050").count() == 1
     # and the bitmap still prunes: a value in NO file skips at least one
     assert len(bloom_skippable_files(spark, bloom_m, 55555)) >= 1
     # the present value's own file must not be in its skip set
@@ -657,13 +596,14 @@ def test_scan_manifest_temporal_columns(spark, tmp_path):
     """ADVICE r9: date/timestamp logical columns ride INT32/INT64
     physical storage, so they pass the footer-stats gate but pyarrow
     returns datetime objects — the manifest build used to crash on
-    float(). Temporal stats now fold as epoch days / epoch seconds and
-    prune with box bounds in the same units."""
+    float(). Temporal stats now fold as epoch days / epoch seconds, and
+    the catalog folds date literals to the same units to prune."""
     import datetime as dt
 
     from pyspark.sql import functions as F
 
-    from mlb_data_pipeline_spark.operators.layout import pruned_read, save_scan_manifest
+    from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
+    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "tlake")
     manifest = str(tmp_path / "tmanifest")
@@ -676,9 +616,10 @@ def test_scan_manifest_temporal_columns(spark, tmp_path):
     save_scan_manifest(spark, lake, ["d", "ts", "n"], manifest)  # used to raise TypeError
     mf = spark.read.parquet(manifest)
     assert mf.filter(F.col("col") == "d").count() == 2  # both files statted
-    # box in EPOCH DAYS covers only the first file's date range
-    lo = (d0 - dt.date(1970, 1, 1)).days
-    out = pruned_read(spark, lake, manifest, {"d": (lo, lo + 9)})
+    # the date range folds to EPOCH DAYS and covers only the first
+    # file's range
+    register_lake_table(spark, "tlake", lake, scan_manifest=manifest)
+    out = lake_scan(spark, "tlake", "d BETWEEN '2024-01-01' AND '2024-01-10'")
     assert out.count() == 10  # second file pruned, no rows lost
     assert len(out.inputFiles()) == 1
 
@@ -829,28 +770,30 @@ def test_write_hilbert_three_columns(spark, tmp_path):
     assert rep["files_total"] >= 8 and rep["skip_frac"] > 0.3, rep
 
 
-def test_extract_skip_clauses_shapes():
+def test_extract_skip_branches_single_branch_shapes():
     """Pure-function pins for the catalog hook's predicate->skip
-    extraction: supported conjunct shapes fold correctly, disjunctions
-    and negations extract NOTHING (must-read), and keywords hiding
-    inside string literals can neither disable nor poison pruning."""
-    from mlb_data_pipeline_spark.catalog import _extract_skip_clauses as ex
+    extraction: supported conjunct shapes fold correctly, negations
+    extract NOTHING (must-read), and keywords hiding inside string
+    literals can neither disable nor poison pruning."""
+    from mlb_data_pipeline_spark.catalog import _extract_skip_branches as br
 
     inf = float("inf")
-    assert ex("k BETWEEN 100 AND 900 AND v >= 0") == (
-        {"k": (100, 900), "v": (0, inf)}, {}
-    )
-    assert ex("tag = '3' AND k <= 500") == ({"k": (-inf, 500)}, {"tag": "3"})
-    assert ex("k > 5 AND k > 10 AND k < 99") == ({"k": (10, 99)}, {})
+
+    def one(box, equals):
+        return [(box, equals, {}, {})]
+
+    assert br("k BETWEEN 100 AND 900 AND v >= 0") == one({"k": (100, 900), "v": (0, inf)}, {})
+    assert br("tag = '3' AND k <= 500") == one({"k": (-inf, 500)}, {"tag": "3"})
+    assert br("k > 5 AND k > 10 AND k < 99") == one({"k": (10, 99)}, {})
     # numeric equality / IN skip BOTH ways: box point/range for the
-    # min/max manifest plus a Bloom probe if one is registered
-    assert ex("k = 7") == ({"k": (7, 7)}, {"k": 7})
-    assert ex("tag IN ('a', 'b')") == ({}, {"tag": ["a", "b"]})
-    assert ex("k IN (1, 5, 9)") == ({"k": (1, 9)}, {"k": [1, 5, 9]})
-    # unsound shapes extract nothing (single-box surface; the OR form
-    # goes through _extract_skip_branches below)
-    assert ex("k BETWEEN 1 AND 2 OR v = 3") == ({}, {})
-    assert ex("NOT k = 5") == ({}, {})
+    # min/max stats plus a Bloom probe if one is registered
+    assert br("k = 7") == one({"k": (7, 7)}, {"k": 7})
+    assert br("tag IN ('a', 'b')") == one({}, {"tag": ["a", "b"]})
+    assert br("k IN (1, 5, 9)") == one({"k": (1, 9)}, {"k": [1, 5, 9]})
+    # a top-level OR is two branches (pinned in the next test); a
+    # negation extracts nothing
+    assert len(br("k BETWEEN 1 AND 2 OR v = 3")) == 2
+    assert br("NOT k = 5") is None
     # literals can't poison extraction: comparison-shaped text inside a
     # string literal must never mint a box clause. Round 11: the
     # conjunct split runs on the literal-scrubbed text (offsets map 1:1
@@ -858,17 +801,17 @@ def test_extract_skip_clauses_shapes():
     # including literals with two or more interior ANDs, which the old
     # raw-text split severed into a fake `y = 1` conjunct that
     # unsoundly pruned files (VERDICT r10 What's-wrong #1).
-    assert ex("note = 'x AND y = 1 AND z = 2'") == ({}, {"note": "x AND y = 1 AND z = 2"})
-    assert ex("comment = 'x AND ck < 3 AND y'") == ({}, {"comment": "x AND ck < 3 AND y"})
-    assert ex("note = 'k BETWEEN 1 AND 2'") == ({}, {"note": "k BETWEEN 1 AND 2"})
-    assert ex("note = 'a OR b' AND k >= 4") == ({"k": (4, inf)}, {"note": "a OR b"})
+    assert br("note = 'x AND y = 1 AND z = 2'") == one({}, {"note": "x AND y = 1 AND z = 2"})
+    assert br("comment = 'x AND ck < 3 AND y'") == one({}, {"comment": "x AND ck < 3 AND y"})
+    assert br("note = 'k BETWEEN 1 AND 2'") == one({}, {"note": "k BETWEEN 1 AND 2"})
+    assert br("note = 'a OR b' AND k >= 4") == one({"k": (4, inf)}, {"note": "a OR b"})
     # a ')' inside a literal can't break the paren unwrap
-    assert ex("(note = ':-)')") == ({}, {"note": ":-)"})
+    assert br("(note = ':-)')") == one({}, {"note": ":-)"})
     # unparseable conjuncts degrade to must-read on that column only
-    assert ex("length(s) > 3 AND k <= 9") == ({"k": (-inf, 9)}, {})
+    assert br("length(s) > 3 AND k <= 9") == one({"k": (-inf, 9)}, {})
     # parenthesized OR inside a conjunct no longer disables the OTHER
     # conjuncts (depth-aware split): sound, just less pruning
-    assert ex("k >= 4 AND (v = 1 OR v = 2)") == ({"k": (4, inf)}, {})
+    assert br("k >= 4 AND (v = 1 OR v = 2)") == one({"k": (4, inf)}, {})
 
 
 def test_extract_skip_branches_and_temporal_shapes():
@@ -879,9 +822,6 @@ def test_extract_skip_branches_and_temporal_shapes():
     )
     from mlb_data_pipeline_spark.catalog import (
         _extract_skip_branches as br,
-    )
-    from mlb_data_pipeline_spark.catalog import (
-        _extract_skip_clauses as ex,
     )
 
     inf = float("inf")
@@ -913,22 +853,21 @@ def test_extract_skip_branches_and_temporal_shapes():
     # stores: dates as epoch days, timestamps as epoch seconds
     ct = {"d": "date", "ts": "timestamp"}
     # strict < on a date column tightens exactly by one day (10013-1)
-    assert ex("d >= '1997-01-01' AND d < DATE '1997-06-01'", ct) == (
-        {"d": (9862.0, 10012.0)},
-        {},
-    )
+    assert br("d >= '1997-01-01' AND d < DATE '1997-06-01'", ct) == [
+        ({"d": (9862.0, 10012.0)}, {}, {}, {})
+    ]
     # strict ops on integral columns tighten by one unit; on unknown or
     # fractional-capable columns they keep the widened inclusive bound
-    assert ex("k > 5 AND k < 10", {"k": "bigint"}) == ({"k": (6, 9)}, {})
-    assert ex("k > 5 AND k < 10", {"k": "double"}) == ({"k": (5, 10)}, {})
+    assert br("k > 5 AND k < 10", {"k": "bigint"}) == [({"k": (6, 9)}, {}, {}, {})]
+    assert br("k > 5 AND k < 10", {"k": "double"}) == [({"k": (5, 10)}, {}, {}, {})]
     assert exact("k > 5 AND k < 10", {"k": "bigint"}) == {"k": (6, 9)}
     assert exact("k > 5", {"k": "double"}) is None
-    assert ex("ts BETWEEN '1997-01-01 00:00:00' AND '1997-01-02 12:30:00'", ct) == (
-        {"ts": (852076800.0, 852208200.0)},
-        {},
-    )
-    # a bare date string on a NON-temporal column contributes no box
-    assert ex("s >= '1997-01-01'", {"s": "string"}) == ({}, {})
+    assert br("ts BETWEEN '1997-01-01 00:00:00' AND '1997-01-02 12:30:00'", ct) == [
+        ({"ts": (852076800.0, 852208200.0)}, {}, {}, {})
+    ]
+    # a bare date string on a NON-temporal column contributes no box,
+    # so the only branch has no usable clause: must-read
+    assert br("s >= '1997-01-01'", {"s": "string"}) is None
 
     # exact-box extraction (lake_count fast path): inclusive shapes
     # only — a strict op or unrecognized conjunct disqualifies, since
@@ -1370,12 +1309,13 @@ def test_lake_scan_bloom_only_registration_degrades_gracefully(spark, tmp_path):
 
 
 def test_lake_count_metadata_fast_path_never_opens_interior_files(spark, tmp_path):
-    """Round 11 (VERDICT ask #5): lake_count routes exact-box COUNTs
-    through manifest_assisted_count. Plan-shape proof: after the
-    manifest is built, an INTERIOR file is overwritten with garbage
-    bytes — a metadata count never opens it, so the answer is still
-    correct and no read error fires; the same count through a full
-    scan would crash."""
+    """Round 11 (VERDICT ask #5): lake_count answers exact-box COUNTs
+    from the scan manifest (``layout._stats_count``): exact for boxes
+    aligned and unaligned with file boundaries. Plan-shape proof:
+    after the manifest is built, an INTERIOR file is overwritten with
+    garbage bytes — a metadata count never opens it, so the answer is
+    still correct and no read error fires; the same count through a
+    full scan would crash."""
     import os
 
     from pyspark.sql import functions as F
@@ -1394,6 +1334,14 @@ def test_lake_count_metadata_fast_path_never_opens_interior_files(spark, tmp_pat
     manifest = str(tmp_path / "cnt_manifest")
     save_scan_manifest(spark, lake, ["x", "y"], manifest)
     register_lake_table(spark, "cntlake", lake, scan_manifest=manifest)
+
+    for box in (
+        "x BETWEEN 0 AND 199 AND y BETWEEN 0 AND 199",  # whole lake: pure metadata
+        "x BETWEEN 0 AND 49 AND y BETWEEN 0 AND 49",
+        "x BETWEEN 13 AND 151 AND y BETWEEN 77 AND 143",  # unaligned boundaries
+        "x BETWEEN 500 AND 600",  # provably empty
+    ):
+        assert lake_count(spark, "cntlake", box) == spark.read.parquet(lake).filter(box).count(), box
 
     pred = "x BETWEEN 0 AND 99 AND y BETWEEN 0 AND 99"
     expect = spark.read.parquet(lake).filter(pred).count()
@@ -1646,7 +1594,7 @@ def test_partition_value_pruning_through_the_hook(spark, tmp_path):
 
 
 def test_lake_min_max_reads_only_candidate_files(spark, tmp_path):
-    """manifest_assisted_minmax (round 11): MIN/MAX under a box opens
+    """lake_min_max (round 11): MIN/MAX under a box opens
     only box-boundary files plus the argmin/argmax candidates — proven
     by corrupting a mid-range interior file after the manifest is
     built; values stay bit-identical to the full scan."""
@@ -1693,15 +1641,12 @@ def test_compact_scan_manifest_drops_vanished_rows(spark, tmp_path):
     """Manifest GC (round 11): OPTIMIZE churn leaves rows for vanished
     files; compact_scan_manifest rewrites the manifest keeping only
     live rows, idempotently, and pruning answers are unchanged."""
-    import os as _os
-
     from pyspark.sql import functions as F
 
+    from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
     from mlb_data_pipeline_spark.operators.layout import (
-        _data_files,
         compact_scan_manifest,
         optimize_clustered,
-        pruned_read,
         save_scan_manifest,
         write_zordered,
     )
@@ -1722,13 +1667,14 @@ def test_compact_scan_manifest_drops_vanished_rows(spark, tmp_path):
 
     append_scan_manifest(spark, lake, ["x", "y"], manifest)
     optimize_clustered(spark, lake, specs, bits=8)
+    register_lake_table(spark, "gclake", lake, scan_manifest=manifest)
 
-    box = {"x": (0.0, 20.0)}
-    before = pruned_read(spark, lake, manifest, box).filter(F.col("x") <= 20).count()
+    pred = "x BETWEEN 0.0 AND 20.0"
+    before = lake_scan(spark, "gclake", pred).count()
     rep = compact_scan_manifest(spark, lake, manifest)
     assert rep["files_dropped"] > 0
     assert rep["rows_after"] < rep["rows_before"]
-    after = pruned_read(spark, lake, manifest, box).filter(F.col("x") <= 20).count()
+    after = lake_scan(spark, "gclake", pred).count()
     assert before == after == read_snapshot(spark, lake).filter("x <= 20").count()
     # idempotent
     rep2 = compact_scan_manifest(spark, lake, manifest)

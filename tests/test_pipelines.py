@@ -757,15 +757,12 @@ def test_pretraining_pipeline_dup_chunk_gate(spark, tmp_path):
 def test_pretraining_pipeline_stats_manifest_prunes_release(spark, tmp_path):
     """Round-9 integration: the chain emits a data-skipping manifest
     over the release (_SCAN_MANIFEST, skipped by discovery), and a
-    consumer's pruned_read / manifest-count over a numeric column is
-    exact without opening all shard footers."""
+    consumer that registers the release with it scans and counts over
+    a numeric column exactly without opening all shard footers."""
     from pyspark.sql import functions as F
 
+    from mlb_data_pipeline_spark.catalog import lake_count, lake_scan, register_lake_table
     from mlb_data_pipeline_spark.operators.dedup import build_signature_store
-    from mlb_data_pipeline_spark.operators.layout import (
-        manifest_assisted_count,
-        pruned_read,
-    )
     from mlb_data_pipeline_spark.pipelines import pretraining_data_pipeline
 
     corpus = spark.createDataFrame(
@@ -787,13 +784,10 @@ def test_pretraining_pipeline_stats_manifest_prunes_release(spark, tmp_path):
     release = spark.read.parquet(out)
     total = release.count()
     assert total > 0
-    manifest = out + "/_SCAN_MANIFEST"
+    register_lake_table(spark, "release", out, scan_manifest=out + "/_SCAN_MANIFEST")
     # pruning never loses rows, whole-range metadata count is exact
-    assert manifest_assisted_count(spark, out, manifest, {"n_tok": (0, 10**9)}) == total
+    assert lake_count(spark, "release", "n_tok BETWEEN 0 AND 1000000000") == total
     want = release.filter(F.col("n_tok").between(20, 25)).count()
-    got = pruned_read(spark, out, manifest, {"n_tok": (20, 25)}).filter(
-        F.col("n_tok").between(20, 25)
-    )
-    assert got.count() == want
+    assert lake_scan(spark, "release", "n_tok BETWEEN 20 AND 25").count() == want
     # the release read itself must not see the manifest's rows
     assert "lo" not in release.columns

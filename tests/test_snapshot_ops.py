@@ -488,7 +488,7 @@ def test_lake_join_scan_per_key_probe_beats_wide_box(spark, tmp_path):
     every file; the per-key interval probe keeps only the two end
     files. Middle files are garbled to prove they are never read."""
     from mlb_data_pipeline_spark.catalog import lake_join_scan
-    from mlb_data_pipeline_spark.operators.layout import file_stats, join_pruned_files
+    from mlb_data_pipeline_spark.operators.layout import file_stats
 
     lake = str(tmp_path / "lake")
     manifest = str(tmp_path / "manifest")
@@ -496,13 +496,14 @@ def test_lake_join_scan_per_key_probe_beats_wide_box(spark, tmp_path):
     save_scan_manifest(spark, lake, ["k"], manifest)
     register_lake_table(spark, "t_join_sparse", lake, scan_manifest=manifest)
     keys = [1, 999]
-    kept = join_pruned_files(spark, lake, manifest, "k", keys)
+    dim = spark.createDataFrame([(k,) for k in keys], "dk long")
+    read = lake_join_scan(spark, "t_join_sparse", dim, "k", "dk").inputFiles()
+    kept = {os.path.relpath(f.removeprefix("file:"), lake) for f in read}
     assert len(kept) == 2  # the wide box [1, 999] would keep all 8
     stats = file_stats(lake, ["k"])
     for fs in stats:
         if fs["file"] not in kept:
             _corrupt_data_pages(lake, fs["file"])
-    dim = spark.createDataFrame([(k,) for k in keys], "dk long")
     got = lake_join_scan(spark, "t_join_sparse", dim, "k", "dk").select("k").collect()
     assert sorted(r.k for r in got) == keys
 
@@ -522,21 +523,18 @@ def test_lake_join_scan_partition_and_bloom_rules(spark, tmp_path):
     # partition rule: dim keys name two of five partitions
     register_lake_table(spark, "t_join_part", lake)
     dim = spark.createDataFrame([("s1",), ("s3",)], "dk string")
-    from mlb_data_pipeline_spark.operators.layout import join_pruned_files
-
-    kept = join_pruned_files(spark, lake, None, "part", ["s1", "s3"])
-    assert len(kept) == 2
     got = lake_join_scan(spark, "t_join_part", dim, "part", "dk")
+    assert len(got.inputFiles()) == 2
     assert got.count() == 80
     # bloom rule: u is high-cardinality inside files; a u-key hits one
     # partition's file only
     save_bloom_manifest(spark, lake, "u", bloom, expected_per_file=64)
     register_lake_table(spark, "t_join_bloom", lake, bloom_manifests={"u": bloom})
-    kept = join_pruned_files(spark, lake, None, "u", ["u7"], bloom_manifest_path=bloom)
-    assert len(kept) == 1
     dim_u = spark.createDataFrame([("u7", 1)], "dk string, w long")
-    got = lake_join_scan(spark, "t_join_bloom", dim_u, "u", "dk").collect()
-    assert len(got) == 1 and got[0].k == 7
+    got = lake_join_scan(spark, "t_join_bloom", dim_u, "u", "dk")
+    assert len(got.inputFiles()) == 1
+    rows = got.collect()
+    assert len(rows) == 1 and rows[0].k == 7
 
 
 def test_lake_join_scan_snapshot_aware_and_fallback(spark, tmp_path):
