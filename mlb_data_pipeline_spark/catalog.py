@@ -4,7 +4,7 @@ The driver testdata (TESTDATA.md) is a TPC-H-ish star schema plus
 ``events`` (stream), ``documents`` (text corpus) and ``embeddings``
 (vector table), one parquet file per table under a scale-factor dir.
 
-``load_tables`` returns plain DataFrames. Reads use the parquet footer
+``load_table`` returns plain DataFrames. Reads use the parquet footer
 schema (no inference cost); filters/projections push down to the scan
 (Parquet row-group stats + column projection).
 
@@ -141,12 +141,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 # ---------------------------------------------------------------------------
-# Lake-table catalog with AUTOMATIC metadata-planned reads (round 10).
+# Lake-table catalog with AUTOMATIC metadata-planned reads.
 #
 # A user writing plain ``spark.read.parquet`` gets no file skipping from
 # the metadata the lake carries. Registering a lake table here closes
@@ -158,15 +154,16 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # rule: the table registration is the "catalog", the predicate→clause
 # extraction is the planning hook.
 #
-# Every read resolves its ref (head, version, as-of timestamp, branch)
-# to ONE ``info`` (``_lake_info``), plans from one stats source
-# (``_lake_stats``: the commit record's per-file stats on a snapshot
-# lake, the registered scan manifest on a plain parquet lake) with one
+# Registration adopts a plain parquet lake into the snapshot log
+# (``snapshots._adopt``), so a registered table is always a snapshot
+# lake. Every read resolves its ref (head, version, as-of timestamp,
+# branch) to ONE commit record (``_lake_info``), plans from that
+# record's per-file stats (``snapshots._lake_file_stats``) with one
 # per-file rule (``layout._skip_rules`` / ``layout._all_rows_match``,
 # which snapshot DML uses too), and reads through one reader
-# (``layout._read_names``: on a snapshot lake the record's schema,
-# deletion-vector masks and column mapping hold on every read).
-# Partition values and Bloom manifests prune on both kinds of lake.
+# (``snapshots._read_files``: the record's schema, deletion-vector
+# masks and column mapping hold on every read). Partition values and
+# Bloom manifests prune too.
 #
 # Supported conjunct shapes (the same fragments a row-group pruner
 # handles): ``col BETWEEN a AND b``, ``col >= a``, ``col > a``,
@@ -186,7 +183,7 @@ _LAKE_TABLES: dict[tuple[str, str], dict] = {}
 _INF = float("inf")
 
 # Spark simpleString dtypes whose columns take only integer values —
-# dates included because the manifest folds them to whole epoch days
+# dates included because the stats fold them to whole epoch days
 _INTEGRAL_TYPES = frozenset({"tinyint", "smallint", "int", "bigint", "date"})
 
 
@@ -194,25 +191,31 @@ def register_lake_table(
     spark: SparkSession,
     name: str,
     path: str,
-    scan_manifest: str | None = None,
     bloom_manifests: dict[str, str] | None = None,
     ndv_manifest: str | None = None,
 ) -> None:
-    """Register a parquet lake directory plus its (optional) persisted
+    """Register a lake directory plus its (optional) persisted
     manifests under ``name``. Scoped per application like the table
     cache — a restarted session re-registers.
 
-    ``scan_manifest`` is the stats source of a PLAIN parquet lake
-    (``layout.save_scan_manifest``). A snapshot lake plans from the
-    per-file stats of its commit records instead, so its scan manifest
-    is neither read nor maintained — that includes a plain lake whose
-    first DML adopted it into a snapshot lake. ``bloom_manifests``
-    ({col: manifest}) prune equalities on either kind of lake;
+    A plain parquet directory is adopted into the snapshot log first
+    (``snapshots._adopt``: v1 = ``adopt`` over its data files, each
+    footer opened once, the schema recorded); on a lake that already
+    has a log this costs one listing. Every read then plans from the
+    commit records. Appends go through ``lake_write``: a file written
+    into the directory outside the snapshot writers is not part of the
+    table. Registration raises, and registers nothing, when the
+    directory does not exist or the adoption commit cannot be written.
+    ``bloom_manifests`` ({col: manifest}) prune equalities;
     ``ndv_manifest`` (round 11) carries per-file HLL sketches for
     ``lake_approx_distinct``."""
+    from .operators.snapshots import _adopt
+
+    if not os.path.isdir(path):
+        raise ValueError(f"no lake directory at {path!r}")
+    _adopt(spark, path)
     _LAKE_TABLES[(spark.sparkContext.applicationId, name)] = {
         "path": path,
-        "scan_manifest": scan_manifest,
         "bloom_manifests": dict(bloom_manifests or {}),
         "ndv_manifest": ndv_manifest,
     }
@@ -253,7 +256,7 @@ def _parse_lit(tok: str):
 
 def _temporal_num(col: str, val, col_types: dict | None):
     """Fold an ISO date/timestamp string literal on a temporal column
-    to the SAME epoch units the scan manifest stores (layout._stat_num:
+    to the SAME epoch units the per-file stats store (layout._stat_num:
     dates as epoch DAYS, timestamps as epoch SECONDS, session-UTC).
     None when the column is not temporal or the literal doesn't parse
     — the caller degrades to must-read on that conjunct."""
@@ -327,7 +330,7 @@ def _extract_conjuncts(
     [vals]} for ``<>``/``!=`` — prunable ONLY against directory-encoded
     partition values, where every row provably shares the value
     (round 11); nullness: {col: 'null'|'notnull'} for ``IS [NOT]
-    NULL`` — prunable from the manifest's per-file null counts
+    NULL`` — prunable from the per-file null counts
     (``IS NULL`` skips null-free files, ``IS NOT NULL`` skips all-null
     files) and from partition values (directory-encoded => non-null).
     Unmatched conjuncts contribute no skip clause (must-read on that
@@ -417,7 +420,7 @@ def _extract_conjuncts(
             col, op, lit = m.group(1), m.group(2), _parse_lit(m.group(3))
             if op in ("=", "=="):
                 # equality skips BOTH ways: a box point for the min/max
-                # manifest (numeric or temporal-folded) AND a Bloom
+                # stats (numeric or temporal-folded) AND a Bloom
                 # probe if one is registered for the column
                 equals[col] = lit
                 b = bound(col, lit)
@@ -507,31 +510,24 @@ def _lake_col_types(spark: SparkSession, ent: dict) -> dict:
     registration entry KEYED TO THE HEAD VERSION (round 12): a
     schema-evolution commit (``lake_write allow_schema_evolution``)
     invalidates the cache, so a long-lived session folds predicates on
-    the added column without re-registration. Unversioned lakes cache
-    once (their schema has no commit to change under).
+    the added column without re-registration.
 
-    Source of truth, in order: the head COMMIT RECORD's persisted
-    schema (round 12 — zero file reads), else the lake read's resolved
-    schema (one footer for a plain dir; merge-schema snapshot read for
-    a pre-round-12 log without the schema leg)."""
-    from .operators.snapshots import current_version, snapshot_info
+    Source of truth: the head COMMIT RECORD's persisted schema (round
+    12 — zero file reads), else the merge-schema snapshot read of a
+    pre-round-12 log without the schema leg."""
+    from .operators.snapshots import current_version, read_snapshot, snapshot_info
 
     ver = current_version(ent["path"])
     if "col_types" not in ent or ent.get("col_types_ver") != ver:
-        schema = None
-        if ver is not None:
-            sj = snapshot_info(ent["path"], ver).get("schema")
-            if sj:
-                import json as _json
+        sj = snapshot_info(ent["path"], ver).get("schema")
+        if sj:
+            import json as _json
 
-                from pyspark.sql.types import StructType
+            from pyspark.sql.types import StructType
 
-                schema = StructType.fromJson(_json.loads(sj))
-        if schema is None:
-            from .operators.snapshots import read_snapshot
-
-            path = ent["path"]
-            schema = (read_snapshot(spark, path) if ver is not None else spark.read.parquet(path)).schema
+            schema = StructType.fromJson(_json.loads(sj))
+        else:
+            schema = read_snapshot(spark, ent["path"], ver).schema
         ent["col_types"] = {f.name: f.dataType.simpleString() for f in schema.fields}
         ent["col_types_ver"] = ver
     return ent["col_types"]
@@ -545,15 +541,13 @@ def _lake_info(
 ) -> dict:
     """The one ref resolver of the catalog's reads: ``branch=`` /
     ``version=`` (a number or a tag) / ``as_of_ts=`` / the head, as
-    ``info``. On a snapshot lake that is the ref's commit record — one
-    read, sharded records resolved — so the read is planned from its
-    ``file_stats`` and read through it (``layout._read_names``); on a
-    plain parquet lake it is ``{"files": _data_files(path)}``. Raises
-    ``ValueError`` for two refs at once and, on a branch or version
-    ref, for a record whose files are missing (vacuumed); a head read
-    probes no file (its planning stays metadata-only)."""
-    from .operators.layout import _data_files
-    from .operators.snapshots import _ref_info, has_snapshots, snapshot_info, version_as_of
+    the ref's commit record — one read, sharded records resolved — so
+    the read is planned from its ``file_stats`` and read through it
+    (``snapshots._read_files``). Raises ``ValueError`` for two refs at
+    once and, on a branch or version ref, for a record whose files are
+    missing (vacuumed); a head read probes no file (its planning stays
+    metadata-only)."""
+    from .operators.snapshots import _ref_info, snapshot_info, version_as_of
 
     path = ent["path"]
     if branch is not None:
@@ -569,8 +563,6 @@ def _lake_info(
                 raise ValueError("pass version= or as_of_ts=, not both")
             version = version_as_of(path, as_of_ts)
         if version is None:
-            if not has_snapshots(path):
-                return {"files": _data_files(path)}
             return snapshot_info(path)
         info = snapshot_info(path, version)
         gone = (
@@ -583,23 +575,6 @@ def _lake_info(
     return info
 
 
-def _lake_stats(ent: dict, info: dict, cols: list[str]) -> list[dict]:
-    """The one stats source of the catalog's planning: per-file stats
-    of ``info``'s files in ``file_stats``' shape, keyed by physical
-    column. A snapshot lake's come from its commit record
-    (``snapshots._lake_file_stats``; records written before the stats
-    leg fall back to the footers over ``cols``). A plain lake's come
-    from its registered scan manifest, read once — files it does not
-    know, and every file without one, get empty stats and stay
-    must-read (``layout._manifest_stats``)."""
-    from .operators.layout import _manifest_stats
-    from .operators.snapshots import _lake_file_stats
-
-    if "version" in info:
-        return _lake_file_stats(ent["path"], cols, info)
-    return _manifest_stats(ent["scan_manifest"], info["files"])
-
-
 def _plan_skips(
     spark: SparkSession, ent: dict, info: dict, predicate: str
 ) -> tuple[int, dict[str, set[str]]]:
@@ -610,7 +585,7 @@ def _plan_skips(
     stats are keyed by; Bloom manifests probe the registered column of
     an equality. (0, {}) when no conjunct is usable."""
     from .operators.layout import _bloom_skippable, _skipped_files
-    from .operators.snapshots import _phys_keyed
+    from .operators.snapshots import _lake_file_stats, _phys_keyed
 
     col_types = _lake_col_types(spark, ent)
     branches = _extract_skip_branches(predicate, col_types)
@@ -633,20 +608,20 @@ def _plan_skips(
                 out |= cache[key]
         return out
 
-    stats = _lake_stats(ent, info, cols)
+    stats = _lake_file_stats(ent["path"], cols, info)
     return len(branches), _skipped_files(stats, branches, col_types, bloom_skip)
 
 
 def _scan(spark: SparkSession, ent: dict, info: dict, predicate: str | None) -> DataFrame:
     """The pruned read of ``info`` under ``predicate`` (``lake_scan``'s
     body)."""
-    from .operators.layout import _read_names
+    from .operators.snapshots import _read_files
 
     names = sorted(info["files"])
     if predicate:
         _, skipped = _plan_skips(spark, ent, info, predicate)
         names = [n for n in names if n not in skipped]
-    df = _read_names(spark, ent["path"], names, info)
+    df = _read_files(spark, ent["path"], names, info)
     return df.filter(predicate) if predicate else df
 
 
@@ -667,13 +642,10 @@ def lake_scan(
     The ref — the head, ``version`` (a committed version or tag: TIME
     TRAVEL), ``as_of_ts`` (the latest version committed at or before
     the instant) or ``branch`` (a WAP branch's head, the audit read) —
-    resolves to one ``info`` (``_lake_info``). On a snapshot lake the
-    plan comes from that record's per-file stats, partition values and
-    any registered Bloom manifests, and the kept files are read
-    through the record (its schema, deletion-vector masks and column
-    mapping). A plain parquet lake prunes from its registered scan
-    manifest, partition values and Blooms; files the manifest does not
-    know stay must-read (superset guarantee, never rows lost)."""
+    resolves to one commit record (``_lake_info``). The plan comes from
+    that record's per-file stats, partition values and any registered
+    Bloom manifests, and the kept files are read through the record
+    (its schema, deletion-vector masks and column mapping)."""
     ent = _lake_entry(spark, name)
     return _scan(spark, ent, _lake_info(ent, version, as_of_ts, branch), predicate)
 
@@ -737,11 +709,10 @@ def lake_join_scan(
     the dim's distinct join keys are collected (bounded by
     ``max_keys``) and turned into a provable keep set before any fact
     data is read — partition-value equality, per-key interval probes
-    against each file's stats (``_lake_stats``: the commit record on a
-    snapshot lake, the scan manifest on a plain one), and Bloom-manifest
+    against each file's stats in the commit record, and Bloom-manifest
     IN-list probes (``layout._join_kept``). The kept files read through
-    the record (``layout._read_names``), so deletion-vector masks and
-    column mapping hold and ``fact_col`` is the logical column.
+    the record (``snapshots._read_files``), so deletion-vector masks
+    and column mapping hold and ``fact_col`` is the logical column.
 
     Spark's own dynamic partition pruning handles hive-partitioned
     keys; this extends the idea to unpartitioned-but-CLUSTERED lakes,
@@ -754,7 +725,8 @@ def lake_join_scan(
     (``broadcast_dim=False`` for a large dim after fallback)."""
     from pyspark.sql import functions as F
 
-    from .operators.layout import _join_kept, _read_names
+    from .operators.layout import _join_kept
+    from .operators.snapshots import _lake_file_stats, _phys_keyed, _read_files
 
     ent = _lake_entry(spark, name)
     info = _lake_info(ent)
@@ -767,19 +739,17 @@ def lake_join_scan(
     cond_name = fact_col if dim_col is None else None
     files = sorted(info["files"])
     if len(probe) <= max_keys:
-        from .operators.snapshots import _phys_keyed
-
         phys = info.get("phys") or {}
         pcol = phys.get(fact_col, fact_col)
         files = _join_kept(
             spark,
-            _lake_stats(ent, info, [pcol]),
+            _lake_file_stats(ent["path"], [pcol], info),
             pcol,
             probe,
             ent["bloom_manifests"].get(fact_col),
             _phys_keyed(_lake_col_types(spark, ent), phys),
         )
-    base = _read_names(spark, ent["path"], files, info)
+    base = _read_files(spark, ent["path"], files, info)
     if cond_name is not None:
         return base.join(right, on=cond_name, how="inner")
     return base.join(right, on=base[fact_col] == right[dcol], how="inner")
@@ -921,24 +891,29 @@ def lake_count(
 ) -> int:
     """COUNT(*) over a registered lake table (its head, ``version`` or
     ``branch``) with metadata doing most of the work (the Iceberg
-    metadata-count shape). A bare COUNT(*) on a snapshot lake is the
-    record's ``file_rows`` sum minus masked rows — zero reads. When
-    the predicate folds EXACTLY (``_extract_exact_clauses``), files the
-    stats (``_lake_stats``) prove fully inside contribute their row
-    counts minus masked rows unopened, provably disjoint files nothing,
-    and only boundary files are read (``layout._read_names``: masks and
+    metadata-count shape). A bare COUNT(*) is the record's
+    ``file_rows`` sum minus masked rows — zero reads. When the
+    predicate folds EXACTLY (``_extract_exact_clauses``), files the
+    record's stats prove fully inside contribute their row counts
+    minus masked rows unopened, provably disjoint files nothing, and
+    only boundary files are read (``snapshots._read_files``: masks and
     column mapping apply) and filtered with the exact predicate string
     — in one read, also for an integral ``IN`` (the union of its
     disjoint point boxes, each within any range on the same column).
     Otherwise this is the pruned scan's count — same answer, no
     shortcut."""
-    from .operators.layout import _dv_rows_by_file, _read_names, _stats_count
-    from .operators.snapshots import _phys_keyed, _record_row_count
+    from .operators.layout import _dv_rows_by_file, _stats_count
+    from .operators.snapshots import (
+        _lake_file_stats,
+        _phys_keyed,
+        _read_files,
+        _record_row_count,
+    )
 
     ent = _lake_entry(spark, name)
     info = _lake_info(ent, version, branch=branch)
     if not predicate:
-        n = _record_row_count(info) if "version" in info else None
+        n = _record_row_count(info)
         return n if n is not None else _scan(spark, ent, info, None).count()
     col_types = _lake_col_types(spark, ent)
     clauses = _extract_exact_clauses(predicate, col_types)
@@ -958,7 +933,9 @@ def lake_count(
         boxes = [{**box, pc: (v, v)} for v in points[1] if lo <= v <= hi]
         if not boxes:
             return 0
-    stats = _lake_stats(ent, info, sorted({c for b in boxes for c in b} | set(str_eq)))
+    stats = _lake_file_stats(
+        ent["path"], sorted({c for b in boxes for c in b} | set(str_eq)), info
+    )
     return _stats_count(
         stats,
         boxes,
@@ -966,7 +943,7 @@ def lake_count(
         col_types,
         str_eq,
         _dv_rows_by_file(info.get("dv_rows"), info["files"]),
-        lambda names: _read_names(spark, ent["path"], names, info),
+        lambda names: _read_files(spark, ent["path"], names, info),
     )
 
 
@@ -981,14 +958,14 @@ def lake_min_max(
     head or ``version``) with metadata choosing the read set (round
     11): when the predicate folds to an EXACT closed box, only
     box-boundary files, masked files and the argmin/argmax candidate
-    files are opened (``layout._stats_minmax`` over ``_lake_stats``,
+    files are opened (``layout._stats_minmax`` over the record's stats,
     keyed by physical column), through the record's reader; otherwise
     this is the pruned scan's aggregate. Returns a 1-row DataFrame
     (min_<col>, max_<col>) either way — same values, native type."""
     from pyspark.sql import functions as F
 
-    from .operators.layout import _dv_rows_by_file, _read_names, _stats_minmax
-    from .operators.snapshots import _phys_keyed
+    from .operators.layout import _dv_rows_by_file, _stats_minmax
+    from .operators.snapshots import _lake_file_stats, _phys_keyed, _read_files
 
     ent = _lake_entry(spark, name)
     info = _lake_info(ent, version)
@@ -1002,13 +979,13 @@ def lake_min_max(
     box = _phys_keyed(box, phys)
     pcol = phys.get(col, col)
     return _stats_minmax(
-        _lake_stats(ent, info, sorted({*box, pcol})),
+        _lake_file_stats(ent["path"], sorted({*box, pcol}), info),
         col,
         box,
         predicate,
         _phys_keyed(col_types, phys),
         _dv_rows_by_file(info.get("dv_rows"), info["files"]),
-        lambda names: _read_names(spark, ent["path"], names, info),
+        lambda names: _read_files(spark, ent["path"], names, info),
         stat_col=pcol,
     )
 
@@ -1023,8 +1000,7 @@ def lake_delete_where(
     """SQL DELETE on a REGISTERED lake table — the catalog wires the
     table path and the schema's column types (temporal literal
     folding) with no caller opt-in; the operator classifies files from
-    the commit record's per-file stats (a plain parquet lake is adopted
-    into a snapshot lake by its first DML). ``use_dv`` masks instead of
+    the commit record's per-file stats. ``use_dv`` masks instead of
     rewriting (deletion vectors); ``branch`` targets a WAP branch's
     head (round 13)."""
     ent = _lake_entry(spark, name)
@@ -1120,7 +1096,7 @@ def lake_approx_distinct(
     """APPROX_COUNT_DISTINCT(col) over a registered lake table's head
     with the NDV sketch manifest doing the interior work (round 11):
     when the predicate folds to an EXACT closed box, interior files
-    (``_lake_stats``) contribute their persisted per-file HLL sketches
+    (by the record's stats) contribute their persisted per-file HLL sketches
     UNOPENED, only boundary and masked files sketch their qualifying
     rows live (through the record's reader), and one union merges the
     lot — error identical to sketching the qualifying rows directly
@@ -1132,7 +1108,8 @@ def lake_approx_distinct(
     ent = _lake_entry(spark, name)
     from pyspark.sql import functions as F
 
-    from .operators.layout import _dv_rows_by_file, _read_names, _stats_ndv
+    from .operators.layout import _dv_rows_by_file, _stats_ndv
+    from .operators.snapshots import _lake_file_stats, _read_files
 
     info = _lake_info(ent)
     col_types = _lake_col_types(spark, ent)
@@ -1142,7 +1119,7 @@ def lake_approx_distinct(
         box, str_eq, _points = clauses
         return _stats_ndv(
             spark,
-            _lake_stats(ent, info, sorted({*box, *str_eq})),
+            _lake_file_stats(ent["path"], sorted({*box, *str_eq}), info),
             ndv_m,
             col,
             box,
@@ -1150,7 +1127,7 @@ def lake_approx_distinct(
             col_types,
             str_eq,
             _dv_rows_by_file(info.get("dv_rows"), info["files"]),
-            lambda names: _read_names(spark, ent["path"], names, info),
+            lambda names: _read_files(spark, ent["path"], names, info),
         )
     # mirror the manifest path's string fold so both routes agree
     row = _scan(spark, ent, info, predicate).agg(

@@ -231,33 +231,13 @@ def minhash_neardup_pairs(
     )
 
 
-def simhash16(tokens_col: Column) -> Column:
-    """16-bit SimHash over a token set: token hash = first 16 bits of
-    md5; simhash bit b is the sign of sum over tokens of (2*bit_b - 1).
-    All integer arithmetic — engine-neutral."""
-    tok_val = F.transform(
-        tokens_col, lambda t: F.conv(F.substring(F.md5(t.cast("binary")), 1, 4), 16, 10).cast("int")
-    )
-    def bit_contrib(b: int):
-        # factory avoids default-arg lambda (PySpark dispatches on arity)
-        return lambda acc, v: acc + (F.shiftright(v, b).bitwiseAND(F.lit(1)) * 2 - 1)
-
-    bits = []
-    for b in range(16):
-        contrib = F.aggregate(tok_val, F.lit(0), bit_contrib(b))
-        bits.append(F.when(contrib > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    out = bits[0]
-    for expr in bits[1:]:
-        out = out + expr
-    return out
-
-
 def simhash16_arrow():
-    """Arrow kernel computing the SAME 16-bit simhash as ``simhash16``:
-    token value = int(md5(token)[:4], 16) via hashlib (identical hex to
-    any engine's md5), bit sums are INTEGER arithmetic (order-free), so
-    the result is bit-identical to the JVM expression and to the DuckDB
-    oracle — safe for oracled queries, ~5x the fold throughput."""
+    """Arrow kernel computing a 16-bit SimHash over a token set: token
+    value = int(md5(token)[:4], 16) via hashlib (identical hex to any
+    engine's md5); simhash bit b is the sign of the sum over tokens of
+    (2*bit_b - 1). The bit sums are INTEGER arithmetic (order-free), so
+    the result is bit-identical to the DuckDB oracle — safe for
+    oracled queries."""
     import hashlib
 
     @F.pandas_udf("int")

@@ -31,8 +31,8 @@ beyond-reference scale surface (SURVEY §2.15).
   files a box predicate can skip under the laid-out vs naive layout.
 * Reads prune through the catalog (catalog.py ``lake_scan``,
   ``lake_count``, ``lake_min_max``, ``lake_join_scan`` on a registered
-  lake): this module holds their per-file rule and metadata
-  aggregates, and the manifests a plain parquet lake plans from.
+  lake): this module holds their per-file rule, metadata aggregates
+  and the Bloom and NDV manifests.
 """
 
 from __future__ import annotations
@@ -74,7 +74,7 @@ def _all_data_files(path: str) -> list[str]:
 
 def _data_files(path: str) -> list[str]:
     """Sorted RELATIVE paths of the LIVE parquet data files under
-    ``path`` — the one listing primitive the manifest/pruning/optimize
+    ``path`` — the one listing primitive the adoption/pruning/optimize
     family shares, so flat and partitioned lakes behave identically.
     On a snapshot lake (round 11, operators/snapshots.py) "live" means
     the current snapshot's file list: files a delete/merge/optimize
@@ -88,7 +88,7 @@ def _data_files(path: str) -> list[str]:
     if head is not None:
         # intersect, don't trust: a referenced file may have been
         # vacuumed out from under a stale log copy — absent files are
-        # simply not read (same rule as the manifest's vanished rows)
+        # simply not read
         return sorted(set(files) & set(snapshot_files(path, head)))
     return files
 
@@ -312,8 +312,8 @@ _EXACT_STAT_TYPES = {"BOOLEAN", "INT32", "INT64", "FLOAT", "DOUBLE"}
 def _stat_num(v):
     """Footer stat -> comparable NUMBER, or None if unusable. Temporal
     logical types ride INT32/INT64 physical storage, so pyarrow hands
-    back datetime.date / datetime.datetime objects that the manifest's
-    double lo/hi columns (and float box bounds) cannot hold: dates fold
+    back datetime.date / datetime.datetime objects that the record's
+    numeric stats (and float box bounds) cannot hold: dates fold
     as EPOCH DAYS, timestamps as EPOCH SECONDS — box bounds over those
     columns use the same units."""
     import datetime as _dt
@@ -417,19 +417,6 @@ def pruning_report(path: str, box: dict[str, tuple[float, float]]) -> dict:
     }
 
 
-# ---------------------------------------------------------------------------
-# Scan manifest — the read-path half of the layout story (round 9).
-# write_zordered makes every file a small hyper-rectangle; the manifest
-# persists each file's footer min/max as a TINY parquet table (one row
-# per file x column — the Delta/Iceberg data-skipping pattern), and the
-# catalog's reads of a registered plain lake turn a predicate into a
-# file list WITHOUT touching any data footer at plan time. At 100 TB the
-# manifest for ~100k files x 4 clustered columns is ~400k rows — a
-# sub-second driver decision that replaces opening 100k parquet
-# footers per query.
-# ---------------------------------------------------------------------------
-
-
 def zorder_specs(df: DataFrame, cols: list[str]) -> list[tuple[str, int, int]]:
     """Data-derived (col, lo, hi) specs for ``write_zordered`` via ONE
     1-row bounds aggregate — a bounded metadata collect (2 longs per
@@ -440,48 +427,6 @@ def zorder_specs(df: DataFrame, cols: list[str]) -> list[tuple[str, int, int]]:
         aggs.append(F.max(F.col(c).cast("long")).alias(f"__hi_{c}"))
     row = df.agg(*aggs).head()
     return [(c, row[f"__lo_{c}"], row[f"__hi_{c}"]) for c in cols]
-
-
-def build_scan_manifest(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
-    """The footer stats of every data file in ``path`` as a DataFrame:
-    (file, rows, col, lo, hi, nulls) — long format so a box check is a
-    plain filter. Columns without usable stats (string/binary,
-    all-null) are simply ABSENT, which the catalog reads treat as
-    must-read.
-    ``nulls`` (round 11) is the column's footer null count, NULL when
-    the footer didn't say — the metadata-count fast path needs a
-    provable zero before trusting an unopened file's row count."""
-    stats = file_stats(path, cols)
-    rows = []
-    for fs in stats:
-        for c in cols:
-            nc = fs["nulls"].get(c)
-            if c in fs["min"] and c in fs["max"]:
-                rows.append(
-                    (
-                        fs["file"],
-                        int(fs["rows"]),
-                        c,
-                        float(fs["min"][c]),
-                        float(fs["max"][c]),
-                        int(nc) if nc is not None else None,
-                    )
-                )
-            elif nc is not None and int(nc) == int(fs["rows"]) and fs["rows"] > 0:
-                # PROVABLY all-null column: no min/max exists, but the
-                # fact itself prunes — a box can never match (lo/hi
-                # NULL rows mean "no non-null values"), and IS NOT NULL
-                # skips the file outright (round 11)
-                rows.append((fs["file"], int(fs["rows"]), c, None, None, int(nc)))
-    return spark.createDataFrame(
-        rows, "file string, rows long, col string, lo double, hi double, nulls long"
-    )
-
-
-def save_scan_manifest(spark: SparkSession, path: str, cols: list[str], manifest_path: str) -> None:
-    """Persist the manifest next to the lake (rebuild after any
-    rewrite: write_zordered, compaction, refresh)."""
-    build_scan_manifest(spark, path, cols).coalesce(1).write.mode("overwrite").parquet(manifest_path)
 
 
 def _bloom_skippable(spark: SparkSession, manifest_path: str, value) -> set[str]:
@@ -592,8 +537,8 @@ def _skip_rules(
     branch (box, equals, nots, nullness) — the one per-file skip rule
     of pruned scans, EXPLAIN, the metadata aggregates, snapshot DML and
     ``pruning_report``.
-    ``fs`` is the file's stats entry in ``file_stats``' shape (``rows``
-    None when unknown). The rules:
+    ``fs`` is the file's stats entry in ``file_stats``' shape. The
+    rules:
 
     * ``partition`` — a directory-encoded partition value misses
       (``_partition_skippable``);
@@ -617,7 +562,7 @@ def _skip_rules(
         if c in fs["min"] and c in fs["max"]:
             if fs["max"][c] < lo_f or fs["min"][c] > hi_f:
                 out.add("stats")
-        elif rows is not None and fs["nulls"].get(c) is not None and int(fs["nulls"][c]) == int(rows):
+        elif fs["nulls"].get(c) is not None and int(fs["nulls"][c]) == int(rows):
             out.add("stats")
     for c, kind in nullness.items():
         nc = fs["nulls"].get(c)
@@ -625,7 +570,7 @@ def _skip_rules(
             continue
         if kind == "null" and int(nc) == 0:
             out.add("nulls")
-        elif kind == "notnull" and rows is not None and int(nc) == int(rows) and rows > 0:
+        elif kind == "notnull" and int(nc) == int(rows) and rows > 0:
             out.add("nulls")
     return out
 
@@ -670,39 +615,6 @@ def _all_rows_match(fs: dict, box: dict, str_eq: dict, col_types: dict | None) -
     return True
 
 
-def _manifest_stats(manifest_path: str | None, files) -> list[dict]:
-    """Stats of the RELATIVE ``files`` in ``file_stats``' shape, sorted
-    by file, from a scan manifest read once (driver-side, no Spark
-    job). Files the manifest does not know — appended after its last
-    save, or every file when there is no manifest — get empty stats and
-    ``rows`` None, so they stay must-read (the staleness rule).
-    Manifests written before the ``nulls`` column read it as unknown."""
-    known: dict[str, dict] = {}
-    if manifest_path is not None:
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
-        schema = pa.schema(
-            [
-                ("file", pa.string()),
-                ("rows", pa.int64()),
-                ("col", pa.string()),
-                ("lo", pa.float64()),
-                ("hi", pa.float64()),
-                ("nulls", pa.int64()),
-            ]
-        )
-        for r in ds.dataset(manifest_path, schema=schema, format="parquet").to_table().to_pylist():
-            fs = known.setdefault(r["file"], {"rows": r["rows"], "min": {}, "max": {}, "nulls": {}})
-            if r["lo"] is not None and r["hi"] is not None:
-                fs["min"][r["col"]], fs["max"][r["col"]] = r["lo"], r["hi"]
-            fs["nulls"][r["col"]] = r["nulls"]
-    return [
-        {"file": n, **known.get(n, {"rows": None, "min": {}, "max": {}, "nulls": {}})}
-        for n in sorted(files)
-    ]
-
-
 def _skipped_files(
     stats: list[dict], branches: list[tuple], col_types: dict | None, bloom_skip
 ) -> dict[str, set[str]]:
@@ -723,21 +635,6 @@ def _skipped_files(
                 hit[fs["file"]] = rules
         out = hit if out is None else {f: out[f] | r for f, r in hit.items() if f in out}
     return out or {}
-
-
-def _read_names(spark: SparkSession, path: str, names: list[str], info: dict) -> DataFrame:
-    """The rows of the RELATIVE ``names``: through the commit record
-    ``info`` on a snapshot lake (``snapshots._read_files`` — the
-    record's schema, deletion-vector masks and column mapping), as
-    plain parquet otherwise (``basePath`` keeps partition-directory
-    columns; no names: an empty frame with the lake's schema)."""
-    if "version" in info:
-        from .snapshots import _read_files
-
-        return _read_files(spark, path, names, info)
-    if not names:
-        return spark.read.parquet(path).limit(0)
-    return spark.read.option("basePath", path).parquet(*[os.path.join(path, n) for n in names])
 
 
 # ---------------------------------------------------------------------------
@@ -1066,9 +963,7 @@ def write_hilbert(
 # log first, as on its first DML. The new files are invisible until
 # that commit references them, so a crash at any point leaves the head
 # and its rows as they were, plus orphans for vacuum_lake; the old
-# bytes stay for time travel. A plain lake's scan manifest needs no
-# coordinated update: once adopted, the lake's catalog reads plan from
-# the commit record's per-file stats and do not consult it.
+# bytes stay for time travel.
 # ---------------------------------------------------------------------------
 
 
@@ -1176,7 +1071,7 @@ def optimize_clustered(
     # the head read here is the one the swap commit asserts: a commit
     # landing between plan and commit rebases or raises instead of
     # silently resurrecting its files
-    info = _dml_head(base)[1]
+    info = _dml_head(spark, base)[1]
     names = _data_files(base)
     if any("/" in n for n in names):
         names = [n for n in names if "/" in n]
@@ -1283,46 +1178,6 @@ def _swap_snapshot(base: str, info: dict, dirty: list[str], keyed: DataFrame) ->
         summary={"files_rewritten": len(dirty), "files_written": len(new_names)},
     )
     return len(new_names)
-
-
-def append_scan_manifest(spark: SparkSession, path: str, cols: list[str], manifest_path: str) -> None:
-    """Day-2 manifest maintenance: stat ONLY data files the manifest has
-    not seen (O(delta) footer reads, never a full re-stat) and append
-    their rows. With the catalog reads' staleness rule
-    (``_manifest_stats``: files it does not know stay must-read) this
-    makes the lake-append protocol: append data -> append manifest; a crash
-    between the two only costs pruning on the new files (they are
-    must-read until statted), never correctness. Idempotent: re-running
-    with no new files appends nothing."""
-    known = {r.file for r in spark.read.parquet(manifest_path).select("file").distinct().collect()}
-    new_names = [n for n in _data_files(path) if n not in known]
-    if not new_names:
-        return
-    rows = []
-    for fs in file_stats(path, cols):
-        if fs["file"] not in set(new_names):
-            continue
-        for c in cols:
-            nc = fs["nulls"].get(c)
-            if c in fs["min"] and c in fs["max"]:
-                rows.append(
-                    (
-                        fs["file"],
-                        int(fs["rows"]),
-                        c,
-                        float(fs["min"][c]),
-                        float(fs["max"][c]),
-                        int(nc) if nc is not None else None,
-                    )
-                )
-            elif nc is not None and int(nc) == int(fs["rows"]) and fs["rows"] > 0:
-                rows.append((fs["file"], int(fs["rows"]), c, None, None, int(nc)))
-    if rows:
-        # mergeSchema on read keeps pre-round-11 manifests (no nulls
-        # column) appendable; their rows read as nulls=NULL = unknown
-        spark.createDataFrame(
-            rows, "file string, rows long, col string, lo double, hi double, nulls long"
-        ).coalesce(1).write.mode("append").parquet(manifest_path)
 
 
 # ---------------------------------------------------------------------------
@@ -1508,12 +1363,11 @@ def _stats_count(
     disjoint ``boxes`` (one box, or the point boxes of an integral
     ``IN``) with the string equalities ``str_eq``: files inside a box
     contribute ``rows`` minus their masked rows (``dv_rows``, by
-    relative name) unopened; every other file some box may touch —
-    boundary files, inside files of unknown row count — is read ONCE
-    through ``reader(names)`` and filtered with the exact predicate
-    string ``where``. A file inside one point box is provably disjoint
-    from the others, so its rows are never counted twice; one that is
-    not is read instead."""
+    relative name) unopened; every boundary file some box may touch is
+    read ONCE through ``reader(names)`` and filtered with the exact
+    predicate string ``where``. A file inside one point box is provably
+    disjoint from the others, so its rows are never counted twice; one
+    that is not is read instead."""
     inside: set[str] = set()
     boundary: set[str] = set()
     for box in boxes:
@@ -1521,7 +1375,6 @@ def _stats_count(
         inside.update(i)
         boundary.update(b)
     rows = {fs["file"]: fs["rows"] for fs in stats}
-    boundary |= {f for f in inside if rows[f] is None}
     inside -= boundary
     n = sum(int(rows[f]) - dv_rows.get(f, 0) for f in inside)
     if boundary:
@@ -1571,62 +1424,6 @@ def _stats_minmax(
                 read.add(f)
     df = _filtered(reader(sorted(read)), where)
     return df.agg(F.min(col).alias(f"min_{col}"), F.max(col).alias(f"max_{col}"))
-
-
-def compact_scan_manifest(spark: SparkSession, path: str, manifest_path: str) -> dict:
-    """Manifest GC (round 11): day-2 appends and file rewrites leave
-    rows whose data files VANISHED (harmless — readers ignore them —
-    but the manifest grows without bound under OPTIMIZE churn).
-    Rewrite the manifest keeping only rows for files still on disk.
-    Returns {rows_before, rows_after, files_dropped}. Atomic via
-    staging-dir swap, and idempotent."""
-    import shutil
-
-    on_disk = set(_data_files(path))
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
-    rows_before = mf.count()
-    known = {r.file for r in mf.select("file").distinct().collect()}
-    stale = known - on_disk
-    if not stale:
-        return {"rows_before": rows_before, "rows_after": rows_before, "files_dropped": 0}
-    # semi-join against the live listing, not an IN-list literal: a
-    # 100k-file lake would otherwise inline 100k strings into the plan
-    live = spark.createDataFrame([(n,) for n in sorted(on_disk)], "file string")
-    kept = mf.join(F.broadcast(live), "file", "left_semi")
-    staging = manifest_path.rstrip("/") + "__gc_tmp"
-    kept.coalesce(1).write.mode("overwrite").parquet(staging)
-    rows_after = spark.read.parquet(staging).count()
-    shutil.rmtree(manifest_path)
-    os.replace(staging, manifest_path)
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "files_dropped": len(stale),
-    }
-
-
-def verify_manifest(spark: SparkSession, path: str, manifest_path: str) -> dict:
-    """Manifest fsck — the consistency report an operator runs before
-    trusting metadata-heavy plans: which data files lack stats
-    (appended but never statted: pruning degrades to must-read), which
-    manifest rows point at vanished files (replay rewrites, compaction:
-    harmless, reclaimable), and the live coverage fraction. Pure
-    metadata (one listing + one manifest scan); repairs are the
-    existing day-2 legs (``append_scan_manifest`` for missing,
-    ``save_scan_manifest`` to rebuild)."""
-    on_disk = set(_data_files(path))
-    mf = spark.read.parquet(manifest_path)
-    known = {r.file for r in mf.select("file").distinct().collect()}
-    missing = sorted(on_disk - known)
-    stale = sorted(known - on_disk)
-    covered = len(on_disk & known)
-    return {
-        "files_on_disk": len(on_disk),
-        "files_covered": covered,
-        "coverage_frac": 0.0 if not on_disk else round(covered / len(on_disk), 4),
-        "unstatted_files": missing,
-        "stale_manifest_files": stale,
-    }
 
 
 def bloom_manifest_stats(spark: SparkSession, manifest_path: str) -> DataFrame:
@@ -1711,7 +1508,7 @@ def _join_kept(
             continue
         if col not in fs["min"] or col not in fs["max"]:
             nc = fs["nulls"].get(col)
-            if not (nc is not None and fs["rows"] is not None and int(nc) == int(fs["rows"])):
+            if not (nc is not None and int(nc) == int(fs["rows"])):
                 kept.append(n)  # unknown / unstatted: must read
             continue
         lo, hi = float(fs["min"][col]), float(fs["max"][col])
@@ -1732,8 +1529,8 @@ def _join_kept(
 # ---------------------------------------------------------------------------
 # NDV sketch manifest (round 11) — per-file Datasketches HLL sketches,
 # the Iceberg-puffin/theta pattern: distinct-count statistics that
-# MERGE across any file subset. The scan manifest answers COUNT/MIN/
-# MAX from metadata; this adds APPROX_COUNT_DISTINCT: interior files
+# MERGE across any file subset. The commit record's stats answer
+# COUNT/MIN/MAX from metadata; this adds APPROX_COUNT_DISTINCT: interior files
 # (all rows provably match) contribute their persisted sketch
 # unopened, boundary files sketch their qualifying rows live, and one
 # hll_union_agg folds the lot. Unioning adds no error over sketching
@@ -1770,7 +1567,7 @@ def append_ndv_manifest(
 ) -> None:
     """Day-2 leg: sketch ONLY live data files the manifest has not
     seen (O(delta) data read over the new files) and append their
-    rows — same contract as ``append_scan_manifest``."""
+    rows. Until then ``_stats_ndv`` sketches an unseen file live."""
     mf = spark.read.parquet(manifest_path)
     lg_k = int(mf.select(F.max("lg_k")).head()[0] or _NDV_LG_K)
     known = {r.file for r in mf.select("file").distinct().collect()}

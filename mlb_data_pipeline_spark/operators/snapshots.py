@@ -90,9 +90,9 @@ only record builder: a commit carries ``parent=`` the version its plan
 read, raises ``SnapshotConflictError`` when the ref's head moved, and
 inherits every record key it is not given. The refs differ only in
 data: only main has a head 0 (no commits yet — the plain parquet on
-disk, adopted by the first DML), and a branch's records carry the
-``fork_version`` of their v1 fork record. Losers resolve by commit
-shape, identically on every ref:
+disk, adopted by registration or the first DML, ``_adopt``), and a
+branch's records carry the ``fork_version`` of their v1 fork record.
+Losers resolve by commit shape, identically on every ref:
 
 * append-shaped commits (``lake_write`` append, ``lake_branch_append``,
   the streaming sink) re-read the new head's live set and re-union — a
@@ -1201,9 +1201,10 @@ def _read_files(
     total is under ``_DV_BROADCAST_CAP``, plain shuffle above. ``_keep_position_cols``
     keeps ``__file``/``__pos`` in the output (the DV writers' hook).
 
-    With no usable record (plain dirs, pre-round-12 logs, adopt
-    commits) this falls back to the mergeSchema read — the round-11
-    behavior, unchanged (DV masking still applies if present)."""
+    With no recorded schema (pre-round-12 logs, and ``_adopt``'s read
+    of the schema it records) this falls back to the mergeSchema read
+    — the round-11 behavior, unchanged (DV masking still applies if
+    present)."""
     if not names:
         # nothing to read: the record's schema is authoritative (round
         # 12) — on-disk leftovers may be vacuumed away entirely, or a
@@ -1360,8 +1361,8 @@ def _schema_commit(
     sj = info.get("schema")
     if not sj:
         raise ValueError(
-            "the head commit carries no recorded schema (pre-round-12 log or "
-            "adopt commit) — run lake_record_schema(spark, path) once first"
+            "the head commit carries no recorded schema (a log written before "
+            "the schema leg) — run lake_record_schema(spark, path) once first"
         )
     schema = StructType.fromJson(json.loads(sj))
     renames = {k: list(v) for k, v in (info.get("renames") or {}).items()}
@@ -1417,8 +1418,8 @@ def _alloc_phys(name: str, burned: set[str]) -> str:
 
 def lake_record_schema(spark: SparkSession, path: str) -> int:
     """Bootstrap the authoritative-schema leg on a log whose head
-    predates it (adopt commits, pre-round-12 logs): commit the current
-    file list unchanged with the resolved (merge-read) schema."""
+    predates it (pre-round-12 logs): commit the current file list
+    unchanged with the resolved (merge-read) schema."""
     head = current_version(path)
     if head is None:
         raise ValueError(f"{path!r} is not a snapshot lake (no commits)")
@@ -1723,8 +1724,8 @@ def _classify_for_delete(
     path: str, predicate: str, col_types: dict | None, info: dict
 ) -> tuple[list[str], list[str], list[str]]:
     """(drop, keep, rewrite) — the three-way classification of the
-    files of record ``info`` (a ref's head; ``{"files": [...]}`` for a
-    plain parquet dir) behind ``lake_delete``/``lake_update``/
+    files of commit record ``info`` (a ref's head) behind
+    ``lake_delete``/``lake_update``/
     ``lake_explain_delete``, decided from stats + partition values
     only. The stats are the record's per-file ``file_stats`` — zero
     footer opens, the difference between O(record) and O(open 100k
@@ -1775,11 +1776,34 @@ def _classify_for_delete(
     return drop, keep, rewrite
 
 
-def _dml_head(path: str, branch: str | None = None) -> tuple[int, dict]:
+def _adopt(spark: SparkSession, path: str) -> None:
+    """Bring a plain parquet directory into the snapshot log — the one
+    adoption path of registration, DML, OPTIMIZE and the streaming
+    sink (Delta's ``CONVERT TO DELTA``). A directory with no log
+    commits v1 = ``adopt`` over its data files (``stream_init`` when
+    it holds none), recording the schema the files read under; the
+    commit harvests each footer once (one distributed job above
+    ``_FOOTER_JOB_THRESHOLD`` files). A lake that already has a log
+    costs one listing. A concurrent adopter that committed first wins;
+    its v1 stands."""
+    if has_snapshots(path):
+        return
+    files = _data_files(path)
+    schema = _read_files(spark, path, files, None).schema.json() if files else None
+    try:
+        commit_snapshot(
+            path, files, "adopt" if files else "stream_init",
+            parent=0, schema_json=schema, spark=spark,
+        )
+    except SnapshotConflictError:
+        pass
+
+
+def _dml_head(spark: SparkSession, path: str, branch: str | None = None) -> tuple[int, dict]:
     """``_head`` for a DML op: the first DML on a plain parquet dir
-    (main's head 0) first ADOPTS it — commits v1 = the files as-is."""
-    if branch is None and not has_snapshots(path):
-        commit_snapshot(path, _data_files(path), "adopt", parent=0)
+    first adopts it (``_adopt``)."""
+    if branch is None:
+        _adopt(spark, path)
     return _head(path, branch)
 
 
@@ -1818,9 +1842,7 @@ def lake_delete(
     rows_deleted). ``rows_deleted`` is metadata arithmetic: the live
     rows (``file_rows`` minus masked rows) of the dropped and rewritten
     files minus the footer rows of the files the rewrite wrote — the
-    footers the commit reads anyway, each opened once. A registered
-    scan manifest is maintained by ``catalog.lake_delete_where``, not
-    here.
+    footers the commit reads anyway, each opened once.
 
     ``branch`` (round 13 — DML ON BRANCHES): run the same pruned
     delete against a WAP branch's head instead of main, committing on
@@ -1828,7 +1850,7 @@ def lake_delete(
     and audited BEFORE publish, instead of published-then-fixed. Main
     never sees the intermediate states; publish carries the branch's
     file changes (and DV deltas) through the usual protocol."""
-    head, head_info = _dml_head(path, branch)
+    head, head_info = _dml_head(spark, path, branch)
     live = sorted(head_info["files"])
     drop, keep, rewrite = _classify_for_delete(path, predicate, col_types, head_info)
     prev_rows = head_info.get("file_rows", {})
@@ -1981,12 +2003,11 @@ def lake_merge(
     range, not the table. Source must carry exactly the lake's columns
     (upsert replaces whole rows; schema drift is an error, not a
     guess). The key stats come from the head record (``file_stats``),
-    not the footers; a registered scan manifest is maintained by
-    ``catalog.lake_merge_into``. ``branch``: merge into a WAP branch's
-    head (see lake_delete)."""
+    not the footers. ``branch``: merge into a WAP branch's head (see
+    lake_delete)."""
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be 'update' or 'delete', got {when_matched!r}")
-    head, head_info = _dml_head(path, branch)
+    head, head_info = _dml_head(spark, path, branch)
     live = sorted(head_info["files"])
     # the CURRENT snapshot's merged schema — a whole-dir read could
     # adopt a dead pre-evolution footer's column set and false-flag
@@ -2327,12 +2348,11 @@ def lake_update(
     naturally (the rewrite writes through partitionBy).
 
     The classification reads the head record's per-file stats, as
-    ``lake_delete``'s does; a registered scan manifest is maintained by
-    ``catalog.lake_update_where``.
+    ``lake_delete``'s does.
 
     ``branch`` (round 13): apply the update on a WAP branch's head —
     same pruning, committed on the branch chain (see lake_delete)."""
-    head, head_info = _dml_head(path, branch)
+    head, head_info = _dml_head(spark, path, branch)
     allmatch, keep, boundary = _classify_for_delete(path, predicate, col_types, head_info)
     to_rewrite = sorted(set(allmatch) | set(boundary))
     new_files: list[str] = []

@@ -79,7 +79,6 @@ def pretraining_data_pipeline(
     per_source_quota: int | None = None,
     remove_dup_spans: bool = False,
     n_shuffle_shards: int | None = None,
-    stats_manifest_cols: list[str] | None = None,
     metrics_out: dict | None = None,
 ) -> DataFrame:
     """Run one day's delta through the full curation chain and write
@@ -334,18 +333,6 @@ def pretraining_data_pipeline(
     shard_manifest(spark, out_path).coalesce(1).write.mode("overwrite").parquet(
         out_path.rstrip("/") + "/_MANIFEST"
     )
-    if stats_manifest_cols:
-        # round 9: data-skipping manifest over the release (Y2) —
-        # downstream consumers register it with the release
-        # (register_lake_table(scan_manifest=)) and lake_scan /
-        # lake_count by token length, position, or any numeric release
-        # column without opening shard footers; _-prefixed so
-        # discovery ignores it
-        from ..operators.layout import save_scan_manifest
-
-        save_scan_manifest(
-            spark, out_path, stats_manifest_cols, out_path.rstrip("/") + "/_SCAN_MANIFEST"
-        )
     # 10. extend the corpus store with what was RELEASED
     append_signature_store(q, id_col, text_col, store_path)
     if exact_neardup_store is not None:

@@ -181,8 +181,9 @@ def q39_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q23 (ex-r49, rotated into the driver window round 10; round 11 adds
 #        the 'or' / 'date' / 'count' branches — VERDICT r10 asks #2,
 #        #5, #6) — the CATALOG-HOOK flagship (Y2): orders land as a
-#        z-ordered lake (plus a date-range-clustered twin), footer
-#        stats persist as manifest tables, and every branch plans its
+#        z-ordered lake (plus a date-range-clustered twin), registration
+#        adopts each into the snapshot log (footer stats in the commit
+#        record), and every branch plans its
 #        file list from a plain PREDICATE STRING through
 #        register_lake_table + lake_scan / lake_count — no
 #        caller-constructed box. The oracle runs the same predicates on
@@ -288,7 +289,7 @@ def q23_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
       a broken historical read each breaks the hash;
     * 'tt_box' — MANIFEST-PRUNED time travel (round 12, ex-r69's
       read shape + the new pruning): v1 read under a box predicate
-      through lake_scan(version=1) — per-file manifest stats are
+      through lake_scan(version=1) — per-file record stats are
       version-independent facts, so the historical file list
       intersects the same keep set head reads use (skip_frac > 0
       pinned in tests/test_time_travel_pruning.py);
@@ -300,8 +301,8 @@ def q23_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
       lost delete breaks the hash);
     * 'numjoin' — join-driven FILE pruning, numeric interval-probe
       form (round 12, ex-r71 rotated in; q45 keeps the string/Bloom
-      form): a distinct-key dim probes the z-ordered lake's manifest
-      through lake_join_scan before any fact read;
+      form): a distinct-key dim probes the z-ordered lake's record
+      stats through lake_join_scan before any fact read;
     * 'dv' / 'dv_tt' — DELETION VECTORS under the driver hash
       (round 13, ex-r78 rotated in): a pruned DV delete masks only
       can-match files (zero rewrite), 'dv' reads the masked head,
@@ -317,33 +318,30 @@ def q23_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..catalog import lake_count, lake_scan, register_lake_table
-    from ..operators.layout import save_scan_manifest, write_zordered, zorder_specs
+    from ..operators.layout import write_zordered, zorder_specs
 
     base = os.path.join(
         "/tmp/spark_graft_io", os.path.basename(sf_dir.rstrip("/")), "r49_lake"
     )
-    lake, manifest = os.path.join(base, "data"), os.path.join(base, "manifest")
+    lake = os.path.join(base, "data")
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").cast("long").alias("ck"),
         F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long").alias("pc"),
         F.col("o_orderdate").cast("date").alias("od"),
     )
     write_zordered(o, lake, zorder_specs(o, ["ck", "pc"]), bits=8, n_files=16)
-    save_scan_manifest(spark, lake, ["ck", "pc"], manifest)
-    register_lake_table(spark, "q23_orders_lake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "q23_orders_lake", lake)
 
     # date-clustered twin: range-partitioned on order date so temporal
     # predicates have files to skip
     dlake = os.path.join(base, "date_data")
-    dmanifest = os.path.join(base, "date_manifest")
     (
         o.repartitionByRange(8, "od")
         .sortWithinPartitions("od")
         .write.mode("overwrite")
         .parquet(dlake)
     )
-    save_scan_manifest(spark, dlake, ["od", "ck"], dmanifest)
-    register_lake_table(spark, "q23_orders_by_date", dlake, scan_manifest=dmanifest)
+    register_lake_table(spark, "q23_orders_by_date", dlake)
 
     schema = "part string, n_orders long, total_cents long, min_ck long, max_ck long"
 
@@ -382,7 +380,7 @@ def q23_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # snapshot-DML twin (round 11): delete + update + time travel,
     # all THROUGH the catalog (lake_*_where wire path, col_types); every
-    # read plans from the commit record's per-file stats, no manifest
+    # read plans from the commit record's per-file stats
     import shutil
 
     from ..catalog import lake_delete_where, lake_update_where
@@ -436,7 +434,7 @@ def q23_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # join-driven file pruning, numeric interval-probe form (round 12,
     # ex-r71): a distinct-key dim plans the z-ordered lake's read set
-    # through lake_join_scan — manifest probes before any fact read
+    # through lake_join_scan — record-stats probes before any fact read
     from ..catalog import lake_join_scan
 
     dim = o.select(F.col("ck").alias("dk")).distinct().filter(F.col("dk") % 97 == 0)
@@ -542,7 +540,7 @@ def r50_hilbert_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q45 (ex-r52, rotated into the driver window round 10) — Bloom-
 #        manifest pruned scan (Y4): equality-predicate
-#        file skipping for a STRING column, where the box manifest's
+#        file skipping for a STRING column, where the per-file
 #        min/max rule is useless by design. Lake hash-clusters on
 #        source, per-file Bloom bitmaps persist next to it, and the
 #        point lookup reads only files whose bitmap might contain the
@@ -578,22 +576,17 @@ def q45_bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..catalog import lake_scan, register_lake_table
-    from ..operators.layout import save_bloom_manifest, save_scan_manifest
+    from ..operators.layout import save_bloom_manifest
 
     base = os.path.join(
         "/tmp/spark_graft_io", os.path.basename(sf_dir.rstrip("/")), "r52_lake"
     )
     lake = os.path.join(base, "data")
-    box_m = os.path.join(base, "box_manifest")
     bloom_m = os.path.join(base, "bloom_manifest")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     docs.repartition(8, "source").write.mode("overwrite").parquet(lake)
-    save_scan_manifest(spark, lake, ["doc_id", "n_chars"], box_m)
     save_bloom_manifest(spark, lake, "source", bloom_m)
-    register_lake_table(
-        spark, "q45_docs_lake", lake, scan_manifest=box_m,
-        bloom_manifests={"source": bloom_m},
-    )
+    register_lake_table(spark, "q45_docs_lake", lake, bloom_manifests={"source": bloom_m})
     def agg(df: DataFrame, tag: str) -> DataFrame:
         return df.agg(
             F.count("*").alias("n_docs"),
@@ -719,20 +712,18 @@ def r68_lake_partition_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..catalog import lake_count, lake_min_max, lake_scan, register_lake_table
-    from ..operators.layout import save_scan_manifest
 
     base = os.path.join(
         "/tmp/spark_graft_io", os.path.basename(sf_dir.rstrip("/")), "r68_lake"
     )
-    lake, manifest = os.path.join(base, "data"), os.path.join(base, "manifest")
+    lake = os.path.join(base, "data")
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").cast("long").alias("ck"),
         F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long").alias("pc"),
         F.month("o_orderdate").alias("om"),
     )
     o.repartition(2).write.mode("overwrite").partitionBy("om").parquet(lake)
-    save_scan_manifest(spark, lake, ["ck", "pc"], manifest)
-    register_lake_table(spark, "r68_orders_by_month", lake, scan_manifest=manifest)
+    register_lake_table(spark, "r68_orders_by_month", lake)
 
     schema = "part string, n long, lo long, hi long"
     scan = (
@@ -907,7 +898,7 @@ def r70_lake_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # R71 — join-driven file pruning (round 11, catalog.lake_join_scan):
 #        the file-level form of dynamic partition pruning. A selective
 #        dim's distinct keys become per-key interval probes against the
-#        fact lake's scan manifest (plus partition-value and Bloom
+#        fact lake's per-file record stats (plus partition-value and Bloom
 #        rules) BEFORE any fact data is read — on a key-clustered
 #        100 TB fact table the read set is the dim's key range, not
 #        the table. The oracle replays the identical join relationally:
@@ -938,12 +929,11 @@ def r71_lake_join_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..catalog import lake_join_scan, register_lake_table
-    from ..operators.layout import save_scan_manifest
 
     base = os.path.join(
         "/tmp/spark_graft_io", os.path.basename(sf_dir.rstrip("/")), "r71_lake"
     )
-    lake, manifest = os.path.join(base, "data"), os.path.join(base, "manifest")
+    lake = os.path.join(base, "data")
     if os.path.exists(base):
         shutil.rmtree(base)
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -951,8 +941,7 @@ def r71_lake_join_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("l_extendedprice") * F.lit(100.0)).cast("long").alias("pc"),
     )
     li.repartitionByRange(8, "pk").write.parquet(lake)
-    save_scan_manifest(spark, lake, ["pk"], manifest)
-    register_lake_table(spark, "r71_lineitem_by_part", lake, scan_manifest=manifest)
+    register_lake_table(spark, "r71_lineitem_by_part", lake)
     dim = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_size") == 1)
@@ -1045,13 +1034,13 @@ def r73_lake_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..catalog import lake_approx_distinct, register_lake_table
-    from ..operators.layout import save_ndv_manifest, save_scan_manifest
+    from ..operators.layout import save_ndv_manifest
 
     base = os.path.join(
         "/tmp/spark_graft_io", os.path.basename(sf_dir.rstrip("/")), "r73_lake"
     )
     lake = os.path.join(base, "data")
-    scan_m, ndv_m = os.path.join(base, "scan_m"), os.path.join(base, "ndv_m")
+    ndv_m = os.path.join(base, "ndv_m")
     if os.path.exists(base):
         shutil.rmtree(base)
     o = load_table(spark, sf_dir, "orders").select(
@@ -1059,11 +1048,8 @@ def r73_lake_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").cast("long").alias("ck"),
     )
     o.repartitionByRange(8, "ok").write.parquet(lake)
-    save_scan_manifest(spark, lake, ["ok"], scan_m)
     save_ndv_manifest(spark, lake, ["ck"], ndv_m)
-    register_lake_table(
-        spark, "r73_orders_ndv", lake, scan_manifest=scan_m, ndv_manifest=ndv_m
-    )
+    register_lake_table(spark, "r73_orders_ndv", lake, ndv_manifest=ndv_m)
     hi = o.agg(F.max("ok")).head()[0]
     rows = [
         ("ndv_all", lake_approx_distinct(spark, "r73_orders_ndv", "ck")),
@@ -1460,7 +1446,7 @@ def r78_lake_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 #        all commit on the branch chain — then the audited result
 #        publishes atomically. Four reads under the oracle: the audit
 #        (through lake_scan(branch=), the catalog's branch read), a
-#        manifest-PRUNED branch band scan, main DURING the branch DML
+#        record-stats-PRUNED branch band scan, main DURING the branch DML
 #        (one leaked intermediate row breaks the hash — isolation is
 #        oracled, not just asserted), and main after publish (the
 #        branch's file changes AND its DV mask delta carried through).
@@ -1507,7 +1493,6 @@ def r79_lake_branch_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         lake_update_where,
         register_lake_table,
     )
-    from ..operators.layout import save_scan_manifest
     from ..operators.snapshots import (
         lake_branch_append,
         lake_branch_create,
@@ -1520,7 +1505,6 @@ def r79_lake_branch_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         "/tmp/spark_graft_io", os.path.basename(sf_dir.rstrip("/")), "r79_lake"
     )
     lake = os.path.join(base_dir, "data")
-    manifest = os.path.join(base_dir, "manifest")
     if os.path.exists(base_dir):
         shutil.rmtree(base_dir)
     o = load_table(spark, sf_dir, "orders").select(
@@ -1528,8 +1512,7 @@ def r79_lake_branch_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long").alias("pc"),
     )
     lake_write(spark, o.filter(F.col("ck") % 2 == 0).repartitionByRange(4, "ck"), lake)
-    save_scan_manifest(spark, lake, ["ck", "pc"], manifest)
-    register_lake_table(spark, "r79_lake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "r79_lake", lake)
     lake_branch_create(lake, "wap")
     lake_branch_append(
         spark, lake, "wap",

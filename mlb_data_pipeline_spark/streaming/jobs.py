@@ -590,7 +590,7 @@ def lake_snapshot_stream(
     therefore converge to exactly-once visible rows.
 
     Each commit records its files' row counts and column stats, so the
-    catalog plans reads from the record: no scan manifest to maintain.
+    catalog plans reads from the record.
 
     Maintenance cadence (round 11): every ``optimize_every`` committed
     batches an in-stream ``optimize_clustered`` (with
@@ -637,12 +637,11 @@ def lake_snapshot_stream(
     compaction the publish would ship that fragmentation straight to
     main (at 100 TB, a small-files problem on the PUBLISHED table)."""
     from ..operators.snapshots import (
+        _adopt,
         _commit_append,
         _ref_info,
         _versions,
         _write_new_files,
-        commit_snapshot,
-        has_snapshots,
         lake_branch_create,
         lake_branch_drop,
         lake_publish_branch,
@@ -740,24 +739,14 @@ def lake_snapshot_stream(
                     )
                     lake_branch_create(lake_path, branch)
             return
-        if not has_snapshots(lake_path):
-            # establish v1 BEFORE writing any batch file (round 12,
-            # ADVICE fix): pre-existing plain parquet adopts; an empty
-            # dir commits an empty init. Either way the first batch's
-            # files are written AFTER a snapshot exists, so a crash
-            # between write and commit leaves orphans the retry never
-            # adopts (the old code re-listed the dir and committed the
-            # first attempt's files PLUS the rewrite — duplicate rows).
-            from ..operators.layout import _data_files
-            from ..operators.snapshots import SnapshotConflictError
-
-            pre = _data_files(lake_path)
-            try:
-                commit_snapshot(
-                    lake_path, pre, "adopt" if pre else "stream_init", parent=0
-                )
-            except SnapshotConflictError:
-                pass  # another writer initialized first — fine
+        # establish v1 BEFORE writing any batch file (round 12, ADVICE
+        # fix): pre-existing plain parquet adopts; an empty dir commits
+        # an empty init. Either way the first batch's files are written
+        # AFTER a snapshot exists, so a crash between write and commit
+        # leaves orphans the retry never adopts (the old code re-listed
+        # the dir and committed the first attempt's files PLUS the
+        # rewrite — duplicate rows).
+        _adopt(spark, lake_path)
         # monotonic replay guard: stream batch ids only grow, so a
         # batch at or below the highest committed id is a
         # redelivery — robust to vacuum expiring OLD records; the

@@ -261,8 +261,7 @@ def test_branch_dml_conflict_on_concurrent_branch_write(spark, tmp_path):
 def test_branch_scan_prunes_and_explains(spark, tmp_path):
     """Round 13 (VERDICT r12 ask #6): lake_scan(branch=) prunes like
     a head read — from the branch record's per-file stats, so fork-shared
-    AND branch-staged files skip (the registered manifest is not read
-    on a snapshot lake) — and lake_explain(branch=)'s kept set equals
+    AND branch-staged files skip — and lake_explain(branch=)'s kept set equals
     the actual read set."""
     from mlb_data_pipeline_spark.catalog import (
         lake_explain,
@@ -270,15 +269,12 @@ def test_branch_scan_prunes_and_explains(spark, tmp_path):
         register_lake_table,
     )
     from mlb_data_pipeline_spark.operators.snapshots import snapshot_files
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "lake")
-    mf = str(tmp_path / "mf")
     lake_write(
         spark, _kv(spark, 0, 1000, "base").repartitionByRange(4, "k"), lake
     )  # v1
-    save_scan_manifest(spark, lake, ["k", "v"], mf)
-    register_lake_table(spark, "t_branch_scan", lake, scan_manifest=mf)
+    register_lake_table(spark, "t_branch_scan", lake)
     lake_branch_create(lake, "wap")
     lake_branch_append(
         spark, lake, "wap", _kv(spark, 2000, 2100, "staged").coalesce(1)
@@ -488,15 +484,12 @@ def test_publish_audit_gates(spark, tmp_path):
 def test_lake_count_on_branch(spark, tmp_path):
     """Round 13: lake_count(branch=) — bare counts from the branch
     record's metadata (mask-subtracting), predicated counts through
-    the manifest-assisted path with the branch inventory."""
+    the metadata fast path over the branch record's stats."""
     from mlb_data_pipeline_spark.catalog import lake_count, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "lake")
-    mf = str(tmp_path / "mf")
     lake_write(spark, _kv(spark, 0, 1000, "base").repartitionByRange(4, "k"), lake)
-    save_scan_manifest(spark, lake, ["k", "v"], mf)
-    register_lake_table(spark, "t_branch_count", lake, scan_manifest=mf)
+    register_lake_table(spark, "t_branch_count", lake)
     lake_branch_create(lake, "wap")
     lake_branch_append(spark, lake, "wap", _kv(spark, 2000, 2100, "staged").coalesce(1))
     lake_delete(
@@ -506,8 +499,8 @@ def test_lake_count_on_branch(spark, tmp_path):
     # bare: metadata sum, mask-subtracted; main unaffected
     assert lake_count(spark, "t_branch_count", branch="wap") == 1090
     assert lake_count(spark, "t_branch_count") == 1000
-    # predicated: fork files classify from the manifest, the staged
-    # file is boundary, masks apply
+    # predicated: fork files classify from the record's stats, the
+    # staged file is boundary, masks apply
     assert lake_count(spark, "t_branch_count", "k BETWEEN 0 AND 2049", branch="wap") == 1040
     assert lake_count(spark, "t_branch_count", "k BETWEEN 500 AND 800", branch="wap") == 301
 
@@ -584,14 +577,11 @@ def test_explain_delete_matches_classifier(spark, tmp_path):
         lake_explain_delete,
         register_lake_table,
     )
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
     from mlb_data_pipeline_spark.operators.snapshots import current_version
 
     lake = str(tmp_path / "lake")
-    mf = str(tmp_path / "mf")
     lake_write(spark, _kv(spark, 0, 1000, "base").repartitionByRange(4, "k"), lake)
-    save_scan_manifest(spark, lake, ["k", "v"], mf)
-    register_lake_table(spark, "t_explain_del", lake, scan_manifest=mf)
+    register_lake_table(spark, "t_explain_del", lake)
     pred = "k BETWEEN 0 AND 280"  # file 0 all-match, file 1 boundary
     plan = lake_explain_delete(spark, "t_explain_del", pred)
     assert plan["files_total"] == 4

@@ -1,14 +1,16 @@
-"""Catalog reads on a snapshot lake plan from the commit record and read
-through it (catalog.py ``_lake_info`` / ``_lake_stats`` / ``_reader``).
+"""Catalog reads plan from the commit record and read through it
+(catalog.py ``_lake_info``, ``snapshots._lake_file_stats`` and
+``snapshots._read_files``).
 
+Registration adopts a plain parquet lake into the snapshot log
+(``snapshots._adopt``), so every registered table is a snapshot lake.
 Every ``lake_*`` read resolves its ref (head, version, branch) to one
 record, prunes with the record's per-file stats under the one per-file
 rule (``layout._skip_rules`` / ``layout._all_rows_match``) and reads the
 kept files through ``snapshots._read_files``, so deletion-vector masks
-and column mapping hold on every read. On a snapshot lake the record is
-the stats source: the differential's ``diff_adopted`` lake registers a
-scan manifest saved while it was plain parquet, which its first DML
-(adopt) leaves stale, and its reads must not consult it."""
+and column mapping hold on every read. The differential's
+``diff_adopted`` lake starts as plain parquet that its first DML
+adopts."""
 
 from __future__ import annotations
 
@@ -29,7 +31,6 @@ from mlb_data_pipeline_spark.catalog import (
     register_lake_table,
 )
 from mlb_data_pipeline_spark.operators import snapshots as S
-from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 from mlb_data_pipeline_spark.operators.snapshots import (
     lake_branch_append,
     lake_branch_create,
@@ -158,35 +159,28 @@ def test_count_of_an_in_keeps_the_range_on_its_column(spark, tmp_path):
 @pytest.fixture(scope="module")
 def _lakes(spark, tmp_path_factory):
     """A flat and a partitioned snapshot lake and a flat plain parquet
-    lake registered with its scan manifest (``diff_adopted``, which its
-    first DML adopts as v1), each taken through a rewrite delete (v2), a
-    DV delete (v3), a rename v -> w and a branch ``b`` with an append.
-    The adopted log records its schema (``lake_record_schema``, v4)
-    before the rename, which needs one. Returns {table name: lake
-    path}."""
+    lake (``diff_adopted``, which its first DML adopts as v1, recording
+    its schema), each taken through a rewrite delete (v2), a DV delete
+    (v3), a rename v -> w and a branch ``b`` with an append. Returns
+    {table name: lake path}."""
     base = tmp_path_factory.mktemp("record_reads")
     out = {}
     for name, with_p in (("diff_flat", False), ("diff_part", True), ("diff_adopted", False)):
         lake = str(base / name)
         df = _rows(spark, 0, 600, with_p).repartitionByRange(4, "k")
-        manifest = None
         if name == "diff_adopted":
             df.write.parquet(lake)
-            manifest = str(base / "diff_adopted_manifest")
-            save_scan_manifest(spark, lake, ["k", "v"], manifest)
         else:
             lake_write(spark, df, lake, partition_by=["p"] if with_p else None)
         ct = {"k": "bigint", "v": "double"}
         lake_delete(spark, lake, "k BETWEEN 100 AND 160", col_types=ct)
         rep = lake_delete(spark, lake, "k BETWEEN 300 AND 330", col_types=ct, use_dv=True)
         assert rep["files_dv"] >= 1
-        if manifest is not None:
-            S.lake_record_schema(spark, lake)
         lake_rename_column(lake, "v", "w")
         lake_branch_create(lake, "b")
         add = _rows(spark, 600, 700, with_p).withColumnRenamed("v", "w")
         lake_branch_append(spark, lake, "b", add.coalesce(1))
-        register_lake_table(spark, name, lake, scan_manifest=manifest)
+        register_lake_table(spark, name, lake)
         out[name] = lake
     assert S.lake_history(out["diff_adopted"])[0]["op"] == "adopt"
     return out
@@ -295,13 +289,85 @@ def test_min_max_interior_files_need_null_free_box_columns(spark, tmp_path):
     """A file whose box-column range lies inside the box still holds
     rows the box excludes when that column has NULLs, so its range of
     the aggregated column cannot stand in for its matching rows: file a
-    holds (c NULL, x 0) and (c 5, x 100), file b holds (c 5, x 50)."""
-    lake = str(tmp_path / "lake")
+    holds (c NULL, x 0) and (c 5, x 100), file b holds (c 5, x 50).
+    The two files sit in the lake root, and again in the non-partition
+    subdirectories ``a/`` and ``b/``, which registration adopts like
+    any layout: ``lake_scan``, ``lake_count`` and ``lake_min_max``
+    equal the plain read of the same files under the predicate."""
+    from mlb_data_pipeline_spark.operators.layout import _data_files
+
     schema = "c bigint, x bigint"
-    spark.createDataFrame([(None, 0), (5, 100)], schema).coalesce(1).write.parquet(lake)
-    spark.createDataFrame([(5, 50)], schema).coalesce(1).write.mode("append").parquet(lake)
-    manifest = str(tmp_path / "manifest")
-    save_scan_manifest(spark, lake, ["c", "x"], manifest)
-    register_lake_table(spark, "t_minmax_nulls", lake, scan_manifest=manifest)
-    got = lake_min_max(spark, "t_minmax_nulls", "x", "c BETWEEN 0 AND 10").head()
-    assert (got["min_x"], got["max_x"]) == (50, 100)
+    pred = "c BETWEEN 0 AND 10"
+    for layout, subdirs in (("flat", ("", "")), ("subdirs", ("a", "b"))):
+        lake = str(tmp_path / layout)
+        spark.createDataFrame([(None, 0), (5, 100)], schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(os.path.join(lake, subdirs[0]))
+        spark.createDataFrame([(5, 50)], schema).coalesce(1).write.mode("append").parquet(
+            os.path.join(lake, subdirs[1])
+        )
+        name = f"t_minmax_nulls_{layout}"
+        register_lake_table(spark, name, lake)
+        files = _data_files(lake)
+        assert [os.path.dirname(n) for n in files] == list(subdirs)
+        want = S._read_files(spark, lake, files, None).filter(pred)
+        assert sorted(lake_scan(spark, name, pred).collect()) == sorted(want.collect()), layout
+        assert lake_count(spark, name, pred) == want.count() == 2, layout
+        got = lake_min_max(spark, name, "x", pred).head()
+        assert (got["min_x"], got["max_x"]) == (50, 100), layout
+
+
+def test_register_adopts_a_plain_lake_and_is_free_on_a_snapshot_lake(spark, tmp_path, monkeypatch):
+    """Registering a plain parquet lake commits v1 = ``adopt`` with its
+    files' row counts, stats and schema. Registering a lake that
+    already has a snapshot log opens no parquet footer, runs no Spark
+    job and commits nothing."""
+    lake = str(tmp_path / "lake")
+    _rows(spark, 0, 400).repartitionByRange(4, "k").write.parquet(lake)
+    register_lake_table(spark, "t_reg_plain", lake)
+    info = S.snapshot_info(lake)
+    assert [h["op"] for h in S.lake_history(lake)] == ["adopt"]
+    assert len(info["files"]) == 4 and sum(info["file_rows"].values()) == 400
+    assert set(info["file_stats"]) == set(info["files"]) and info.get("schema")
+
+    opened: list[str] = []
+    real = pq.ParquetFile
+
+    class Spy(real):
+        def __init__(self, source, *args, **kwargs):
+            opened.append(str(source))
+            super().__init__(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", Spy)
+    _, jobs = _jobs(spark, "register-snapshot-lake", lambda: register_lake_table(spark, "t_reg_again", lake))
+    assert opened == [] and jobs == 0
+    assert [h["op"] for h in S.lake_history(lake)] == ["adopt"]
+    assert lake_count(spark, "t_reg_again") == 400
+
+
+def test_register_raises_and_registers_nothing_when_the_log_cannot_be_written(
+    spark, tmp_path, monkeypatch
+):
+    """A lake directory the session cannot write: the adoption commit
+    fails, so registration raises and leaves no catalog entry. A
+    missing directory raises too, and is not created."""
+    from mlb_data_pipeline_spark.catalog import _LAKE_TABLES
+    from mlb_data_pipeline_spark.operators.logstore import PosixLogStore
+
+    missing = str(tmp_path / "no_such_lake")
+    with pytest.raises(ValueError, match="no lake directory"):
+        register_lake_table(spark, "t_reg_missing", missing)
+    assert not os.path.exists(missing)
+    assert (spark.sparkContext.applicationId, "t_reg_missing") not in _LAKE_TABLES
+
+    lake = str(tmp_path / "lake")
+    _rows(spark, 0, 100).coalesce(1).write.parquet(lake)
+
+    def denied(self, path, data):
+        raise PermissionError(13, "Permission denied", path)
+
+    monkeypatch.setattr(PosixLogStore, "put_exclusive", denied)
+    with pytest.raises(PermissionError):
+        register_lake_table(spark, "t_reg_denied", lake)
+    assert (spark.sparkContext.applicationId, "t_reg_denied") not in _LAKE_TABLES
+    assert not S.has_snapshots(lake)

@@ -33,7 +33,6 @@ from mlb_data_pipeline_spark.catalog import (
     lake_scan,
     register_lake_table,
 )
-from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 from mlb_data_pipeline_spark.operators.snapshots import (
     lake_branch_create,
     lake_delete,
@@ -90,13 +89,13 @@ def test_dml_and_type_freedom_across_reuse_boundary(spark, tmp_path):
 
 
 def test_catalog_stats_never_consult_the_dead_column(spark, tmp_path):
-    """The dead-stats trap: a scan manifest saved BEFORE the drop keys
-    rows under 'x' for the DEAD generation (range 0..99). After the
+    """The dead-stats trap: the record stats of files written BEFORE
+    the drop key 'x' for the DEAD generation (range 0..99). After the
     re-add (values 1000..1009) the metadata count and min/max must
     answer from the LIVE column — a fast path that looked stats up by
     the logical name would prune every old file as disjoint and keep
     the dead ranges."""
-    lake, mf = str(tmp_path / "lake"), str(tmp_path / "mf")
+    lake = str(tmp_path / "lake")
     lake_write(
         spark,
         spark.range(0, 100).select(
@@ -104,8 +103,7 @@ def test_catalog_stats_never_consult_the_dead_column(spark, tmp_path):
         ),
         lake,
     )
-    save_scan_manifest(spark, lake, ["x"], mf)
-    register_lake_table(spark, "t_cmap", lake, scan_manifest=mf)
+    register_lake_table(spark, "t_cmap", lake)
     lake_drop_column(lake, "x")
     lake_write(
         spark,
@@ -290,13 +288,13 @@ def test_mapped_partitioned_lake_appends_and_dml(spark, tmp_path):
 
 def test_explain_matches_scan_on_a_mapped_lake(spark, tmp_path):
     """The explainer consults the same physically-keyed stats as the
-    planner: on a lake whose manifest predates the drop (dead 'x'
-    stats cover 0..99), the explain for a live-x predicate must report
+    planner: on a lake whose older files' stats predate the drop (dead
+    'x' stats cover 0..99), the explain for a live-x predicate must report
     the exact kept set the scan reads — neither may prune from the
     dead ranges."""
     from mlb_data_pipeline_spark.catalog import lake_explain
 
-    lake, mf = str(tmp_path / "lake"), str(tmp_path / "mf")
+    lake = str(tmp_path / "lake")
     lake_write(
         spark,
         spark.range(0, 100).select(
@@ -304,8 +302,7 @@ def test_explain_matches_scan_on_a_mapped_lake(spark, tmp_path):
         ).repartitionByRange(4, "k"),
         lake,
     )
-    save_scan_manifest(spark, lake, ["x"], mf)
-    register_lake_table(spark, "t_cmap_ex", lake, scan_manifest=mf)
+    register_lake_table(spark, "t_cmap_ex", lake)
     lake_drop_column(lake, "x")
     lake_write(
         spark,

@@ -113,16 +113,13 @@ def test_dv_metadata_paths_degrade_correctly(spark, tmp_path):
         lake_scan,
         register_lake_table,
     )
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "lake")
-    mf = str(tmp_path / "mf")
     lake_write(spark, _kv(spark, 0, 1000).repartitionByRange(4, "k"), lake)
-    save_scan_manifest(spark, lake, ["k", "v"], mf)
-    register_lake_table(spark, "t_dv_meta", lake, scan_manifest=mf)
+    register_lake_table(spark, "t_dv_meta", lake)
     lake_delete(spark, lake, "k % 10 = 3", col_types={"k": "bigint"}, use_dv=True)
     assert lake_count(spark, "t_dv_meta") == 900
-    # an exact box that WOULD be answered from interior manifest row
+    # an exact box that WOULD be answered from interior record row
     # counts must not overcount the masked rows
     assert lake_count(spark, "t_dv_meta", "k BETWEEN 0 AND 499") == 450
     assert lake_scan(spark, "t_dv_meta", "k BETWEEN 0 AND 499").count() == 450
@@ -232,13 +229,10 @@ def test_dv_mask_aware_metadata_count_fast_path(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from mlb_data_pipeline_spark.catalog import lake_count, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "lake")
-    mf = str(tmp_path / "mf")
     lake_write(spark, _kv(spark, 0, 1000).repartitionByRange(4, "k"), lake)
-    save_scan_manifest(spark, lake, ["k", "v"], mf)
-    register_lake_table(spark, "t_dv_fast", lake, scan_manifest=mf)
+    register_lake_table(spark, "t_dv_fast", lake)
     lake_delete(spark, lake, "k % 10 = 3", col_types={"k": "bigint"}, use_dv=True)
 
     # per-file k-ranges from footers (classification's own source)

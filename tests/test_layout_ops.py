@@ -21,7 +21,8 @@ from mlb_data_pipeline_spark.operators.layout import (
     write_zordered,
     zorder_key,
 )
-from mlb_data_pipeline_spark.operators.snapshots import read_snapshot
+from mlb_data_pipeline_spark.catalog import register_lake_table
+from mlb_data_pipeline_spark.operators.snapshots import lake_write, read_snapshot
 
 
 def _py_interleave(cells: list[int], bits: int) -> int:
@@ -170,18 +171,9 @@ def test_file_stats_reads_real_footers(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Manifest-pruned catalog reads of a plain lake (Y2, round 9)
+# Catalog reads of a registered plain lake (Y2, round 9): registration
+# adopts it, and reads plan from the adoption record's per-file stats
 # ---------------------------------------------------------------------------
-
-
-def _registered(spark, name, lake, cols, manifest, **kw):
-    """Save ``lake``'s scan manifest over ``cols`` at ``manifest`` and
-    register the lake under ``name`` with it."""
-    from mlb_data_pipeline_spark.catalog import register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
-
-    save_scan_manifest(spark, lake, cols, manifest)
-    register_lake_table(spark, name, lake, scan_manifest=manifest, **kw)
 
 
 def test_lake_scan_skips_files_and_loses_no_rows(spark, tmp_path):
@@ -192,7 +184,7 @@ def test_lake_scan_skips_files_and_loses_no_rows(spark, tmp_path):
     )
     lake = str(tmp_path / "lake")
     write_zordered(grid, lake, [("x", 0, 199), ("y", 0, 199)], bits=8, n_files=16)
-    _registered(spark, "zgrid", lake, ["x", "y"], str(tmp_path / "manifest"))
+    register_lake_table(spark, "zgrid", lake)
 
     got = lake_scan(spark, "zgrid", "x BETWEEN 0 AND 49 AND y BETWEEN 0 AND 49")
     # superset guarantee: the exact predicate on top gives the full answer
@@ -212,7 +204,7 @@ def test_lake_scan_empty_box_returns_empty_with_schema(spark, tmp_path):
     )
     lake = str(tmp_path / "lake2")
     write_zordered(grid, lake, [("x", 0, 99), ("y", 0, 9)], bits=8, n_files=4)
-    _registered(spark, "zgrid2", lake, ["x", "y"], str(tmp_path / "manifest2"))
+    register_lake_table(spark, "zgrid2", lake)
     out = lake_scan(spark, "zgrid2", "x BETWEEN 10000 AND 20000")
     assert out.count() == 0
     assert out.inputFiles() == []  # every file skipped
@@ -222,27 +214,28 @@ def test_lake_scan_empty_box_returns_empty_with_schema(spark, tmp_path):
 def test_lake_scan_missing_stats_column_is_conservative(spark, tmp_path):
     from mlb_data_pipeline_spark.catalog import lake_scan
 
-    # string column -> no usable footer stats -> manifest has no rows
-    # for it -> a range on it must read EVERY file, never skip
+    # string column -> no usable footer stats -> the adoption record
+    # has no min/max for it -> a range on it must read EVERY file
+    from mlb_data_pipeline_spark.operators.snapshots import snapshot_info
+
     lake = str(tmp_path / "slake")
-    manifest = str(tmp_path / "smanifest")
     spark.createDataFrame([(i, "zzz") for i in range(100)], "n long, s string").repartition(
         4
     ).write.parquet(lake)
-    _registered(spark, "slake", lake, ["n", "s"], manifest)
-    assert spark.read.parquet(manifest).filter("col = 's'").count() == 0
+    register_lake_table(spark, "slake", lake)
+    stats = snapshot_info(lake)["file_stats"]
+    assert stats and not any("s" in st["min"] for st in stats.values())
     out = lake_scan(spark, "slake", "s BETWEEN 'aaa' AND 'zzzz'")
     assert out.count() == 100  # all rows reachable
     n_total = len(spark.read.parquet(lake).inputFiles())
     assert len(out.inputFiles()) == n_total
 
 
-def test_stale_manifest_files_are_read_and_counted(spark, tmp_path):
-    """Files appended AFTER the manifest was built have no stats rows;
-    they must be read unconditionally or pruning silently loses rows,
-    and counted from their rows, never from metadata. (The append
-    itself would normally be followed by a manifest rebuild — this
-    pins the safety net for the window in between.)"""
+def test_appended_files_are_read_and_counted(spark, tmp_path):
+    """Files appended through ``lake_write`` AFTER registration are
+    part of the table at once: reads find their rows and ``lake_count``
+    counts them exactly, an interior file from its record row count,
+    a boundary file by reading it."""
     from mlb_data_pipeline_spark.catalog import lake_count, lake_scan
 
     grid = spark.range(1000).select(
@@ -250,24 +243,21 @@ def test_stale_manifest_files_are_read_and_counted(spark, tmp_path):
     )
     lake = str(tmp_path / "lake3")
     write_zordered(grid, lake, [("x", 0, 99), ("y", 0, 9)], bits=8, n_files=4)
-    _registered(spark, "stale3", lake, ["x", "y"], str(tmp_path / "manifest3"))
-    # append rows INSIDE the box after the manifest snapshot
-    spark.createDataFrame([(5, 500), (6, 600)], "x long, y long").coalesce(1).write.mode(
-        "append"
-    ).parquet(lake)
+    register_lake_table(spark, "stale3", lake)
+    # append rows INSIDE the box after registration
+    lake_write(spark, spark.createDataFrame([(5, 500), (6, 600)], "x long, y long").coalesce(1), lake)
 
+    want = {(i % 100, i // 100) for i in range(1000) if i % 100 <= 10} | {(5, 500), (6, 600)}
     got = lake_scan(spark, "stale3", "x BETWEEN 0 AND 10")
-    direct = spark.read.parquet(lake).filter(F.col("x").between(0, 10))
-    assert got.count() == direct.count()
-    assert {(r.x, r.y) for r in got.collect()} == {(r.x, r.y) for r in direct.collect()}
-    assert lake_count(spark, "stale3", "x BETWEEN 0 AND 10") == direct.count()
+    assert sorted((r.x, r.y) for r in got.collect()) == sorted(want)
+    assert lake_count(spark, "stale3", "x BETWEEN 0 AND 10") == len(want) == 112
 
-    # a stale file the box cuts: x = 5 counts, x = 500 does not
+    # an appended file the box cuts: x = 5 counts, x = 500 does not
     lake2 = str(tmp_path / "clake2")
     spark.createDataFrame([(i,) for i in range(50)], "x long").coalesce(1).write.parquet(lake2)
-    _registered(spark, "stale_count", lake2, ["x"], str(tmp_path / "cmanifest2"))
-    spark.createDataFrame([(5,), (500,)], "x long").coalesce(1).write.mode("append").parquet(lake2)
-    assert lake_count(spark, "stale_count", "x BETWEEN 0 AND 10") == 12  # 11 + stale 5
+    register_lake_table(spark, "stale_count", lake2)
+    lake_write(spark, spark.createDataFrame([(5,), (500,)], "x long").coalesce(1), lake2)
+    assert lake_count(spark, "stale_count", "x BETWEEN 0 AND 10") == 12  # 11 + appended 5
 
 
 # ---------------------------------------------------------------------------
@@ -346,41 +336,30 @@ def test_write_hilbert_rejects_single_column(spark, tmp_path):
         write_hilbert(grid, str(tmp_path / "no"), [("x", 0, 9)], bits=4)
 
 
-def test_append_scan_manifest_incremental_and_idempotent(spark, tmp_path):
-    """Day-2 leg: after a lake append, append_scan_manifest stats only
-    the NEW files; pruning then skips them on provable misses again
-    (the staleness guard had them as must-read). Replays append
-    nothing."""
-    from mlb_data_pipeline_spark.catalog import lake_scan
-    from mlb_data_pipeline_spark.operators.layout import append_scan_manifest
+def test_lake_write_append_after_registration_prunes_at_once(spark, tmp_path):
+    """An append through ``lake_write`` commits its file's stats with
+    it, so a box the new file provably misses skips it with no upkeep
+    step; rows and ``lake_count`` stay exact."""
+    from mlb_data_pipeline_spark.catalog import lake_count, lake_scan
 
     grid = spark.range(1000).select(
         (F.col("id") % 100).alias("x"), (F.col("id") / 100).cast("long").alias("y")
     )
     lake = str(tmp_path / "lake4")
-    manifest = str(tmp_path / "manifest4")
     write_zordered(grid, lake, [("x", 0, 99), ("y", 0, 9)], bits=8, n_files=4)
-    _registered(spark, "day2", lake, ["x", "y"], manifest)
-    n0 = spark.read.parquet(manifest).count()
+    register_lake_table(spark, "day2", lake)
+    pre = lake_scan(spark, "day2", "x BETWEEN 0 AND 10")
+    n_pre = len(pre.inputFiles())
 
     # append a file far OUTSIDE the box
-    spark.createDataFrame([(900, 900), (950, 950)], "x long, y long").coalesce(1).write.mode(
-        "append"
-    ).parquet(lake)
-    # before the manifest append: staleness guard reads the new file
-    pre = lake_scan(spark, "day2", "x BETWEEN 0 AND 10")
-    n_total = len(spark.read.parquet(lake).inputFiles())
-    append_scan_manifest(spark, lake, ["x", "y"], manifest)
-    n1 = spark.read.parquet(manifest).count()
-    assert n1 == n0 + 2  # two stat rows (x, y) for the one new file
-    # after: the new file is provably outside the box -> skipped again
+    lake_write(spark, spark.createDataFrame([(900, 900), (950, 950)], "x long, y long").coalesce(1), lake)
     post = lake_scan(spark, "day2", "x BETWEEN 0 AND 10")
-    assert len(post.inputFiles()) < len(pre.inputFiles()) <= n_total
-    # rows identical either way
-    assert post.count() == pre.count()
-
-    append_scan_manifest(spark, lake, ["x", "y"], manifest)  # replay: no-op
-    assert spark.read.parquet(manifest).count() == n1
+    # the new file is provably outside the box -> skipped
+    assert len(post.inputFiles()) == n_pre
+    want = sorted((i % 100, i // 100) for i in range(1000) if i % 100 <= 10)
+    assert sorted((r.x, r.y) for r in post.collect()) == want
+    assert lake_count(spark, "day2", "x BETWEEN 0 AND 10") == len(want) == 110
+    assert lake_count(spark, "day2") == 1002
 
 
 # ---------------------------------------------------------------------------
@@ -402,9 +381,8 @@ def test_bloom_manifest_skips_files_no_false_negatives(spark, tmp_path):
     df.repartition(8, "source").write.parquet(lake)
     bloom_manifest = str(tmp_path / "bbloom")
     save_bloom_manifest(spark, lake, "source", bloom_manifest)
-    _registered(
-        spark, "blake", lake, ["id", "n"], str(tmp_path / "bbox"),
-        bloom_manifests={"source": bloom_manifest},
+    register_lake_table(
+        spark, "blake", lake, bloom_manifests={"source": bloom_manifest}
     )
 
     n_total = len(spark.read.parquet(lake).inputFiles())
@@ -457,18 +435,17 @@ def test_bloom_manifest_unknown_file_is_must_read(spark, tmp_path):
     df.coalesce(2).write.parquet(lake)
     bloom_manifest = str(tmp_path / "bbloom2")
     save_bloom_manifest(spark, lake, "source", bloom_manifest)
-    _registered(
-        spark, "blake2", lake, ["id"], str(tmp_path / "bbox2"),
-        bloom_manifests={"source": bloom_manifest},
+    register_lake_table(
+        spark, "blake2", lake, bloom_manifests={"source": bloom_manifest}
     )
 
-    # append a file with a NEW source value after both snapshots
-    spark.createDataFrame([(999, "omega")], "id long, source string").coalesce(1).write.mode(
-        "append"
-    ).parquet(lake)
+    # append a file with a NEW source value after the Bloom snapshot
+    lake_write(
+        spark, spark.createDataFrame([(999, "omega")], "id long, source string").coalesce(1), lake
+    )
 
     # bloom proves 'omega' absent from the ORIGINAL files; the appended
-    # file is unknown to both manifests -> must-read -> the row is found
+    # file is unknown to the Bloom manifest -> must-read -> the row is found
     out = lake_scan(spark, "blake2", "id BETWEEN 0 AND 1000000000 AND source = 'omega'")
     assert out.count() == 1
 
@@ -481,36 +458,6 @@ def test_bloom_manifest_unknown_file_is_must_read(spark, tmp_path):
     n_words = spark.read.parquet(bloom_manifest + "/words").count()
     append_bloom_manifest(spark, lake, bloom_manifest)
     assert spark.read.parquet(bloom_manifest + "/words").count() == n_words
-
-
-def test_verify_manifest_reports_missing_and_stale(spark, tmp_path):
-    import os as _os
-
-    from mlb_data_pipeline_spark.operators.layout import (
-        append_scan_manifest,
-        save_scan_manifest,
-        verify_manifest,
-    )
-
-    lake = str(tmp_path / "vlake")
-    manifest = str(tmp_path / "vmanifest")
-    spark.createDataFrame([(i,) for i in range(100)], "x long").coalesce(2).write.parquet(lake)
-    save_scan_manifest(spark, lake, ["x"], manifest)
-    rep = verify_manifest(spark, lake, manifest)
-    assert rep["coverage_frac"] == 1.0 and not rep["unstatted_files"] and not rep["stale_manifest_files"]
-
-    # append a file -> unstatted until the day-2 leg runs
-    spark.createDataFrame([(999,)], "x long").coalesce(1).write.mode("append").parquet(lake)
-    rep2 = verify_manifest(spark, lake, manifest)
-    assert len(rep2["unstatted_files"]) == 1 and rep2["coverage_frac"] < 1.0
-    append_scan_manifest(spark, lake, ["x"], manifest)
-    assert verify_manifest(spark, lake, manifest)["coverage_frac"] == 1.0
-
-    # delete a data file -> its manifest rows are stale
-    victim = [f for f in _os.listdir(lake) if f.endswith(".parquet")][0]
-    _os.remove(_os.path.join(lake, victim))
-    rep3 = verify_manifest(spark, lake, manifest)
-    assert victim in rep3["stale_manifest_files"]
 
 
 def test_bloom_manifest_stats_gauge(spark, tmp_path):
@@ -547,9 +494,8 @@ def test_bloom_pruning_in_list_semantics(spark, tmp_path):
     spark.createDataFrame(rows, "id long, source string").repartition(8, "source").write.parquet(lake)
     bloom_m = str(tmp_path / "inbloom")
     save_bloom_manifest(spark, lake, "source", bloom_m)
-    _registered(
-        spark, "inbloom", lake, ["id"], str(tmp_path / "inbox"),
-        bloom_manifests={"source": bloom_m},
+    register_lake_table(
+        spark, "inbloom", lake, bloom_manifests={"source": bloom_m}
     )
 
     got = lake_scan(
@@ -592,33 +538,29 @@ def test_bloom_manifest_numeric_column_probe_type_safe(spark, tmp_path):
     assert len(kept) <= 1  # at most the other file
 
 
-def test_scan_manifest_temporal_columns(spark, tmp_path):
+def test_record_stats_temporal_columns(spark, tmp_path):
     """ADVICE r9: date/timestamp logical columns ride INT32/INT64
     physical storage, so they pass the footer-stats gate but pyarrow
-    returns datetime objects — the manifest build used to crash on
+    returns datetime objects — the stats fold used to crash on
     float(). Temporal stats now fold as epoch days / epoch seconds, and
     the catalog folds date literals to the same units to prune."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
     from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
+    from mlb_data_pipeline_spark.operators.snapshots import snapshot_info
 
     lake = str(tmp_path / "tlake")
-    manifest = str(tmp_path / "tmanifest")
     d0 = dt.date(2024, 1, 1)
     rows1 = [(d0 + dt.timedelta(days=i), dt.datetime(2024, 1, 1, i), i) for i in range(10)]
     rows2 = [(d0 + dt.timedelta(days=100 + i), dt.datetime(2024, 6, 1, i), i) for i in range(10)]
     schema = "d date, ts timestamp, n long"
     spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(lake)
     spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(lake)
-    save_scan_manifest(spark, lake, ["d", "ts", "n"], manifest)  # used to raise TypeError
-    mf = spark.read.parquet(manifest)
-    assert mf.filter(F.col("col") == "d").count() == 2  # both files statted
+    register_lake_table(spark, "tlake", lake)
+    stats = snapshot_info(lake)["file_stats"]
+    assert len(stats) == 2 and all("d" in st["min"] for st in stats.values())  # both statted
     # the date range folds to EPOCH DAYS and covers only the first
     # file's range
-    register_lake_table(spark, "tlake", lake, scan_manifest=manifest)
     out = lake_scan(spark, "tlake", "d BETWEEN '2024-01-01' AND '2024-01-10'")
     assert out.count() == 10  # second file pruned, no rows lost
     assert len(out.inputFiles()) == 1
@@ -627,19 +569,17 @@ def test_scan_manifest_temporal_columns(spark, tmp_path):
 def test_lake_scan_prunes_with_no_caller_opt_in(spark, tmp_path):
     """Catalog hook (round 10, VERDICT ask #4): a registered lake table
     read through lake_scan with a plain predicate STRING scans only the
-    files the manifests keep — the caller never constructs a box or
+    files its record stats and Bloom manifest keep — the caller never constructs a box or
     bloom probe — and the result matches the whole-lake filter exactly."""
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
     from mlb_data_pipeline_spark.operators.layout import (
         save_bloom_manifest,
-        save_scan_manifest,
         write_zordered,
     )
 
     lake = str(tmp_path / "hook_lake")
-    box_m = str(tmp_path / "hook_box")
     bloom_m = str(tmp_path / "hook_bloom")
     df = spark.range(10_000).select(
         F.col("id").alias("k"),
@@ -647,11 +587,8 @@ def test_lake_scan_prunes_with_no_caller_opt_in(spark, tmp_path):
         (F.col("id") % 5).cast("string").alias("tag"),
     )
     write_zordered(df, lake, [("k", 0, 9_999), ("v", 0, 9_999)], bits=8, n_files=16)
-    save_scan_manifest(spark, lake, ["k", "v"], box_m)
     save_bloom_manifest(spark, lake, "tag", bloom_m)
-    register_lake_table(
-        spark, "hooked", lake, scan_manifest=box_m, bloom_manifests={"tag": bloom_m}
-    )
+    register_lake_table(spark, "hooked", lake, bloom_manifests={"tag": bloom_m})
     whole = spark.read.parquet(lake)
 
     pred = "k BETWEEN 100 AND 900 AND v >= 0"
@@ -816,7 +753,7 @@ def test_extract_skip_branches_single_branch_shapes():
 
 def test_extract_skip_branches_and_temporal_shapes():
     """Round 11 pins: per-OR-branch extraction (union pruning) and
-    date/timestamp literal folding into the manifest's epoch units."""
+    date/timestamp literal folding into the stats' epoch units."""
     from mlb_data_pipeline_spark.catalog import (
         _extract_exact_box as exact,
     )
@@ -1060,13 +997,12 @@ def test_optimize_clustered_crash_before_commit_keeps_head(spark, tmp_path, monk
 
 def test_lake_scan_partitioned_lake_keeps_partition_columns(spark, tmp_path):
     """The hook on a PARTITIONED lake: pruned files read with basePath
-    so directory-encoded columns survive, manifest pruning still
+    so directory-encoded columns survive, stats pruning still
     applies on file-level stats, and results match the whole-lake
     filter exactly."""
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "plake")
     df = spark.range(6_000).select(
@@ -1075,9 +1011,7 @@ def test_lake_scan_partitioned_lake_keeps_partition_columns(spark, tmp_path):
         (F.col("id") * 11 % 997).alias("v"),
     )
     df.repartitionByRange(4, "k").write.partitionBy("p").parquet(lake)
-    box_m = str(tmp_path / "pbox")
-    save_scan_manifest(spark, lake, ["k", "v"], box_m)
-    register_lake_table(spark, "plake", lake, scan_manifest=box_m)
+    register_lake_table(spark, "plake", lake)
     whole = spark.read.parquet(lake)
 
     pred = "k BETWEEN 0 AND 999"
@@ -1136,10 +1070,7 @@ def test_lake_scan_numeric_bloom_equality(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import (
-        save_bloom_manifest,
-        save_scan_manifest,
-    )
+    from mlb_data_pipeline_spark.operators.layout import save_bloom_manifest
 
     lake = str(tmp_path / "nblake")
     # two files with OVERLAPPING k ranges but disjoint k values
@@ -1149,11 +1080,9 @@ def test_lake_scan_numeric_bloom_equality(spark, tmp_path):
     spark.createDataFrame([(i,) for i in range(1, 1000, 2)], "k long").coalesce(
         1
     ).write.mode("append").parquet(lake)
-    box_m = str(tmp_path / "nbbox")
     bloom_m = str(tmp_path / "nbbloom")
-    save_scan_manifest(spark, lake, ["k"], box_m)
     save_bloom_manifest(spark, lake, "k", bloom_m, expected_per_file=512)
-    register_lake_table(spark, "nblake", lake, scan_manifest=box_m, bloom_manifests={"k": bloom_m})
+    register_lake_table(spark, "nblake", lake, bloom_manifests={"k": bloom_m})
     whole = spark.read.parquet(lake)
 
     got = lake_scan(spark, "nblake", "k = 500")  # even: lives in file 1 only
@@ -1171,7 +1100,6 @@ def test_lake_scan_literal_with_two_ands_cannot_lose_rows(spark, tmp_path):
     rows the REAL predicate matches. The planted row lives in a file
     the poisoned box would have skipped; it must come back."""
     from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "poison_lake")
     # file A: y in [100, 200); file B: y in [0, 10] and the matching note
@@ -1182,9 +1110,7 @@ def test_lake_scan_literal_with_two_ands_cannot_lose_rows(spark, tmp_path):
         [(int(i), "x AND y = 1 AND z = 2" if i == 5 else "other") for i in range(11)],
         "y long, note string",
     ).coalesce(1).write.mode("append").parquet(lake)
-    manifest = str(tmp_path / "poison_manifest")
-    save_scan_manifest(spark, lake, ["y"], manifest)
-    register_lake_table(spark, "poisoned", lake, scan_manifest=manifest)
+    register_lake_table(spark, "poisoned", lake)
 
     pred = "note = 'x AND y = 1 AND z = 2'"
     got = lake_scan(spark, "poisoned", pred)
@@ -1199,8 +1125,8 @@ def test_lake_scan_literal_with_two_ands_cannot_lose_rows(spark, tmp_path):
 
 def test_lake_scan_temporal_predicates_prune_files(spark, tmp_path):
     """Round 11 (VERDICT ask #2): date-range predicates — THE most
-    common lake predicate — prune through the catalog hook. The scan
-    manifest stores temporal stats as epoch numbers; the extractor
+    common lake predicate — prune through the catalog hook. The commit
+    record stores temporal stats as epoch numbers; the extractor
     folds ISO literals (bare and DATE '...') to the same units using
     the lake schema, so a date-partitioned-ish lake skips files with
     no caller opt-in. Rows always match the whole-lake filter."""
@@ -1209,7 +1135,6 @@ def test_lake_scan_temporal_predicates_prune_files(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "date_lake")
     d0 = dt.date(1997, 1, 1)
@@ -1222,9 +1147,7 @@ def test_lake_scan_temporal_predicates_prune_files(spark, tmp_path):
         spark.createDataFrame(rows, "o_date date, o_key long, amt double").coalesce(
             1
         ).write.mode("append").parquet(lake)
-    manifest = str(tmp_path / "date_manifest")
-    save_scan_manifest(spark, lake, ["o_date", "o_key"], manifest)
-    register_lake_table(spark, "datelake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "datelake", lake)
     whole = spark.read.parquet(lake)
 
     pred = "o_date >= '1997-03-01' AND o_date < DATE '1997-05-01'"
@@ -1251,7 +1174,6 @@ def test_lake_scan_timestamp_predicates_prune_files(spark, tmp_path):
     import datetime as dt
 
     from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "ts_lake")
     for h in range(4):
@@ -1261,9 +1183,7 @@ def test_lake_scan_timestamp_predicates_prune_files(spark, tmp_path):
         spark.createDataFrame(rows, "ts timestamp, n long").coalesce(1).write.mode(
             "append"
         ).parquet(lake)
-    manifest = str(tmp_path / "ts_manifest")
-    save_scan_manifest(spark, lake, ["ts"], manifest)
-    register_lake_table(spark, "tslake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "tslake", lake)
     whole = spark.read.parquet(lake)
 
     # strict < on a timestamp keeps the widened inclusive bound (sub-
@@ -1281,11 +1201,10 @@ def test_lake_scan_timestamp_predicates_prune_files(spark, tmp_path):
 
 
 def test_lake_scan_bloom_only_registration_degrades_gracefully(spark, tmp_path):
-    """ADVICE r10 (low): a table registered with Bloom manifests but NO
-    scan manifest used to raise on any equality predicate. Round 11:
-    the Blooms prune on their own (the on-disk listing is the file
-    inventory; unknown files stay must-read) — registering manifests
-    can only ever ADD skipping, never break a read."""
+    """ADVICE r10 (low): a table registered with a Bloom manifest on a
+    column its stats cannot prune (a string) prunes equalities from the
+    Bloom alone — registering manifests can only ever ADD skipping,
+    never break a read."""
     from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
     from mlb_data_pipeline_spark.operators.layout import save_bloom_manifest
 
@@ -1310,9 +1229,9 @@ def test_lake_scan_bloom_only_registration_degrades_gracefully(spark, tmp_path):
 
 def test_lake_count_metadata_fast_path_never_opens_interior_files(spark, tmp_path):
     """Round 11 (VERDICT ask #5): lake_count answers exact-box COUNTs
-    from the scan manifest (``layout._stats_count``): exact for boxes
-    aligned and unaligned with file boundaries. Plan-shape proof:
-    after the manifest is built, an INTERIOR file is overwritten with
+    from the commit record's stats (``layout._stats_count``): exact for
+    boxes aligned and unaligned with file boundaries. Plan-shape proof:
+    after registration, an INTERIOR file is overwritten with
     garbage bytes — a metadata count never opens it, so the answer is
     still correct and no read error fires; the same count through a
     full scan would crash."""
@@ -1321,19 +1240,14 @@ def test_lake_count_metadata_fast_path_never_opens_interior_files(spark, tmp_pat
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_count, lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import (
-        save_scan_manifest,
-        write_zordered,
-    )
+    from mlb_data_pipeline_spark.operators.layout import write_zordered
 
     lake = str(tmp_path / "cnt_lake")
     df = spark.range(20_000).select(
         (F.col("id") % 200).alias("x"), (F.col("id") / 200).cast("long").alias("y")
     )
     write_zordered(df, lake, [("x", 0, 199), ("y", 0, 199)], bits=8, n_files=16)
-    manifest = str(tmp_path / "cnt_manifest")
-    save_scan_manifest(spark, lake, ["x", "y"], manifest)
-    register_lake_table(spark, "cntlake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "cntlake", lake)
 
     for box in (
         "x BETWEEN 0 AND 199 AND y BETWEEN 0 AND 199",  # whole lake: pure metadata
@@ -1374,13 +1288,12 @@ def test_lake_count_metadata_fast_path_never_opens_interior_files(spark, tmp_pat
 
 def test_lake_count_null_rows_never_overcount(spark, tmp_path):
     """A file fully inside the box can still hold NULL rows the
-    predicate rejects: the manifest's null counts (round 11) force
+    predicate rejects: the record's null counts (round 11) force
     such files onto the read path, so the metadata count equals the
     exact count. Also covers the date-column exact path end to end."""
     import datetime as dt
 
     from mlb_data_pipeline_spark.catalog import lake_count, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "null_lake")
     rows = [(int(i), dt.date(1997, 1, 1 + i % 28)) for i in range(100)]
@@ -1389,9 +1302,7 @@ def test_lake_count_null_rows_never_overcount(spark, tmp_path):
     spark.createDataFrame(
         [(int(1000 + i), dt.date(1997, 6, 1)) for i in range(50)], "x long, d date"
     ).coalesce(1).write.mode("append").parquet(lake)
-    manifest = str(tmp_path / "null_manifest")
-    save_scan_manifest(spark, lake, ["x", "d"], manifest)
-    register_lake_table(spark, "nulllake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "nulllake", lake)
     whole = spark.read.parquet(lake)
 
     pred = "x BETWEEN 0 AND 2000"
@@ -1533,7 +1444,6 @@ def test_partition_value_pruning_through_the_hook(spark, tmp_path):
         lake_scan,
         register_lake_table,
     )
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "plake")
     df = spark.range(6_000).select(
@@ -1542,9 +1452,7 @@ def test_partition_value_pruning_through_the_hook(spark, tmp_path):
         (F.col("id") * 3 % 1000).alias("v"),
     )
     df.repartition(2).write.partitionBy("p").parquet(lake)
-    manifest = str(tmp_path / "pmanifest")
-    save_scan_manifest(spark, lake, ["k", "v"], manifest)
-    register_lake_table(spark, "plake2", lake, scan_manifest=manifest)
+    register_lake_table(spark, "plake2", lake)
     whole = spark.read.parquet(lake)
     n_all = len(whole.inputFiles())
 
@@ -1596,22 +1504,19 @@ def test_partition_value_pruning_through_the_hook(spark, tmp_path):
 def test_lake_min_max_reads_only_candidate_files(spark, tmp_path):
     """lake_min_max (round 11): MIN/MAX under a box opens
     only box-boundary files plus the argmin/argmax candidates — proven
-    by corrupting a mid-range interior file after the manifest is
-    built; values stay bit-identical to the full scan."""
+    by corrupting a mid-range interior file after registration;
+    values stay bit-identical to the full scan."""
     import os as _os
 
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_min_max, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "mmlake")
     # 8 range-clustered files over k in [0, 8000)
     df = spark.range(8_000).select(F.col("id").alias("k"), (F.col("id") * 7).alias("v"))
     df.repartitionByRange(8, "k").sortWithinPartitions("k").write.parquet(lake)
-    manifest = str(tmp_path / "mmmanifest")
-    save_scan_manifest(spark, lake, ["k", "v"], manifest)
-    register_lake_table(spark, "mmlake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "mmlake", lake)
     whole = spark.read.parquet(lake)
 
     row = lake_min_max(spark, "mmlake", "v", "k BETWEEN 0 AND 7999").head()
@@ -1635,50 +1540,6 @@ def test_lake_min_max_reads_only_candidate_files(spark, tmp_path):
         fh.write(b"garbage")
     row2 = lake_min_max(spark, "mmlake", "k").head()
     assert (row2.min_k, row2.max_k) == (0, 7_999)
-
-
-def test_compact_scan_manifest_drops_vanished_rows(spark, tmp_path):
-    """Manifest GC (round 11): OPTIMIZE churn leaves rows for vanished
-    files; compact_scan_manifest rewrites the manifest keeping only
-    live rows, idempotently, and pruning answers are unchanged."""
-    from pyspark.sql import functions as F
-
-    from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import (
-        compact_scan_manifest,
-        optimize_clustered,
-        save_scan_manifest,
-        write_zordered,
-    )
-
-    lake = str(tmp_path / "gclake")
-    df = spark.range(10_000).select(
-        (F.col("id") % 100).alias("x"), (F.col("id") / 100).cast("long").alias("y")
-    )
-    specs = [("x", 0, 99), ("y", 0, 99)]
-    write_zordered(df, lake, specs, bits=8, n_files=8)
-    manifest = str(tmp_path / "gcmanifest")
-    save_scan_manifest(spark, lake, ["x", "y"], manifest)
-    # degrade + optimize: old files vanish, manifest rows go stale
-    spark.range(2_000).select(
-        (F.col("id") * 37 % 100).alias("x"), (F.col("id") * 73 % 100).alias("y")
-    ).coalesce(1).write.mode("append").parquet(lake)
-    from mlb_data_pipeline_spark.operators.layout import append_scan_manifest
-
-    append_scan_manifest(spark, lake, ["x", "y"], manifest)
-    optimize_clustered(spark, lake, specs, bits=8)
-    register_lake_table(spark, "gclake", lake, scan_manifest=manifest)
-
-    pred = "x BETWEEN 0.0 AND 20.0"
-    before = lake_scan(spark, "gclake", pred).count()
-    rep = compact_scan_manifest(spark, lake, manifest)
-    assert rep["files_dropped"] > 0
-    assert rep["rows_after"] < rep["rows_before"]
-    after = lake_scan(spark, "gclake", pred).count()
-    assert before == after == read_snapshot(spark, lake).filter("x <= 20").count()
-    # idempotent
-    rep2 = compact_scan_manifest(spark, lake, manifest)
-    assert rep2["files_dropped"] == 0
 
 
 def test_exact_clauses_string_equality_and_inlist_pins():
@@ -1717,7 +1578,6 @@ def test_lake_count_string_partition_and_inlist_metadata(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_count, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "strlake")
     df = spark.range(3_000).select(
@@ -1725,9 +1585,7 @@ def test_lake_count_string_partition_and_inlist_metadata(spark, tmp_path):
         F.concat(F.lit("src"), (F.col("id") % 3).cast("string")).alias("source"),
     )
     df.repartition(1).write.partitionBy("source").parquet(lake)
-    manifest = str(tmp_path / "strmanifest")
-    save_scan_manifest(spark, lake, ["k"], manifest)
-    register_lake_table(spark, "strlake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "strlake", lake)
     whole = spark.read.parquet(lake)
 
     expect = whole.filter("source = 'src1'").count()
@@ -1752,14 +1610,11 @@ def test_lake_count_integral_inlist_sums_disjoint_points(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_count, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "inlake")
     df = spark.range(6_000).select(F.col("id").alias("k"), (F.col("id") % 12).alias("m"))
     df.repartition(2).write.partitionBy("m").parquet(lake)
-    manifest = str(tmp_path / "inmanifest")
-    save_scan_manifest(spark, lake, ["k"], manifest)
-    register_lake_table(spark, "inlake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "inlake", lake)
     whole = spark.read.parquet(lake)
 
     for pred in ["m IN (1, 6, 11)", "m IN (3, 3)", "m IN (2, 4) AND k <= 3000"]:
@@ -1767,7 +1622,7 @@ def test_lake_count_integral_inlist_sums_disjoint_points(spark, tmp_path):
 
 
 def test_lake_scan_null_predicates_prune(spark, tmp_path):
-    """IS NULL / IS NOT NULL pruning (round 11): the manifest's
+    """IS NULL / IS NOT NULL pruning (round 11): the record's
     per-file null counts skip null-free files for IS NULL and all-null
     files for IS NOT NULL; directory-encoded partition values are
     non-null by construction, so partition columns skip IS NULL
@@ -1775,7 +1630,6 @@ def test_lake_scan_null_predicates_prune(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "nullplake")
     # file A: v fully populated; file B: v all NULL; file C: mixed
@@ -1789,9 +1643,7 @@ def test_lake_scan_null_predicates_prune(spark, tmp_path):
         F.col("id").alias("k"),
         F.when(F.col("id") % 2 == 0, F.col("id")).alias("v"),
     ).coalesce(1).write.mode("append").parquet(lake)
-    manifest = str(tmp_path / "nullpmanifest")
-    save_scan_manifest(spark, lake, ["k", "v"], manifest)
-    register_lake_table(spark, "nullplake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "nullplake", lake)
     whole = spark.read.parquet(lake)
     n_all = len(whole.inputFiles())
     assert n_all == 3
@@ -1825,9 +1677,7 @@ def test_lake_scan_null_predicates_prune(spark, tmp_path):
     spark.range(600).select(F.col("id").alias("k"), (F.col("id") % 3).alias("p")).write.partitionBy(
         "p"
     ).parquet(plake)
-    pmanifest = str(tmp_path / "nullpartmanifest")
-    save_scan_manifest(spark, plake, ["k"], pmanifest)
-    register_lake_table(spark, "nullpart", plake, scan_manifest=pmanifest)
+    register_lake_table(spark, "nullpart", plake)
     got4 = lake_scan(spark, "nullpart", "p IS NULL")
     assert got4.count() == 0
     assert len(got4.inputFiles()) == 0  # every leaf provably non-null

@@ -23,7 +23,6 @@ from mlb_data_pipeline_spark.catalog import (
 from mlb_data_pipeline_spark.operators.layout import (
     file_stats,
     save_ndv_manifest,
-    save_scan_manifest,
 )
 from mlb_data_pipeline_spark.operators.snapshots import (
     lake_delete,
@@ -50,10 +49,9 @@ def test_minmax_exact_under_dv_with_unmasked_interior_garbled(spark, tmp_path):
     """Mask only the top-range file; the middle file (unmasked, not an
     extreme candidate) is garbled — the metadata path must answer the
     exact live extremes without opening it."""
-    lake, mf = str(tmp_path / "lake"), str(tmp_path / "mf")
+    lake = str(tmp_path / "lake")
     lake_write(spark, _kv(spark, 0, 400).repartitionByRange(4, "k"), lake)
-    save_scan_manifest(spark, lake, ["k"], mf)
-    register_lake_table(spark, "t_mm_dv", lake, scan_manifest=mf)
+    register_lake_table(spark, "t_mm_dv", lake)
     # mask the global max row (it lives in the top-range file)
     lake_delete(spark, lake, "k = 399", col_types={"k": "bigint"}, use_dv=True)
     assert snapshot_info(lake).get("dv_rows")
@@ -75,10 +73,9 @@ def test_minmax_masked_min_does_not_shadow_unmasked_candidates(spark, tmp_path):
     """The masked file holds the smallest footer lo, but its min row is
     masked — candidacy must come from UNMASKED stats so the true live
     min (in another file) is read, not skipped."""
-    lake, mf = str(tmp_path / "lake"), str(tmp_path / "mf")
+    lake = str(tmp_path / "lake")
     lake_write(spark, _kv(spark, 0, 200).repartitionByRange(2, "k"), lake)
-    save_scan_manifest(spark, lake, ["k"], mf)
-    register_lake_table(spark, "t_mm_dv2", lake, scan_manifest=mf)
+    register_lake_table(spark, "t_mm_dv2", lake)
     # mask the ENTIRE low half of the low file: its live min moves up
     lake_delete(spark, lake, "k < 50", col_types={"k": "bigint"}, use_dv=True)
     row = lake_min_max(spark, "t_mm_dv2", "k").head()
@@ -90,14 +87,11 @@ def test_ndv_exact_under_dv_with_unmasked_files_garbled(spark, tmp_path):
     to prove it); the masked file re-sketches its live rows, so values
     unique to masked rows drop out of the estimate."""
     lake = str(tmp_path / "lake")
-    scan_m, ndv_m = str(tmp_path / "scan_m"), str(tmp_path / "ndv_m")
+    ndv_m = str(tmp_path / "ndv_m")
     # v doubles k, so distinct v == live row count exactly
     lake_write(spark, _kv(spark, 0, 3000).repartitionByRange(3, "k"), lake)
-    save_scan_manifest(spark, lake, ["k"], scan_m)
     save_ndv_manifest(spark, lake, ["v"], ndv_m)
-    register_lake_table(
-        spark, "t_ndv_dv", lake, scan_manifest=scan_m, ndv_manifest=ndv_m
-    )
+    register_lake_table(spark, "t_ndv_dv", lake, ndv_manifest=ndv_m)
     # mask 100 rows confined to the top-range file
     lake_delete(
         spark, lake, "k BETWEEN 2900 AND 2999", col_types={"k": "bigint"}, use_dv=True

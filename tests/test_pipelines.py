@@ -754,15 +754,16 @@ def test_pretraining_pipeline_dup_chunk_gate(spark, tmp_path):
     assert metrics["quality"] == 2
 
 
-def test_pretraining_pipeline_stats_manifest_prunes_release(spark, tmp_path):
-    """Round-9 integration: the chain emits a data-skipping manifest
-    over the release (_SCAN_MANIFEST, skipped by discovery), and a
-    consumer that registers the release with it scans and counts over
-    a numeric column exactly without opening all shard footers."""
+def test_pretraining_release_registers_and_prunes(spark, tmp_path):
+    """Round-9 integration: a consumer registers the released shards
+    (registration adopts them into the snapshot log, each file's stats
+    in the adoption record), then scans and counts over a numeric
+    column exactly, reading only the files those stats keep."""
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_count, lake_scan, register_lake_table
     from mlb_data_pipeline_spark.operators.dedup import build_signature_store
+    from mlb_data_pipeline_spark.operators.snapshots import snapshot_info
     from mlb_data_pipeline_spark.pipelines import pretraining_data_pipeline
 
     corpus = spark.createDataFrame(
@@ -779,15 +780,17 @@ def test_pretraining_pipeline_stats_manifest_prunes_release(spark, tmp_path):
     out = str(tmp_path / "shards")
     pretraining_data_pipeline(
         spark, delta, bench, store, out, mix={"web": 1.0}, pack_budget=64,
-        stats_manifest_cols=["n_tok", "doc_id"],
     )
     release = spark.read.parquet(out)
     total = release.count()
     assert total > 0
-    register_lake_table(spark, "release", out, scan_manifest=out + "/_SCAN_MANIFEST")
+    register_lake_table(spark, "release", out)
     # pruning never loses rows, whole-range metadata count is exact
     assert lake_count(spark, "release", "n_tok BETWEEN 0 AND 1000000000") == total
-    want = release.filter(F.col("n_tok").between(20, 25)).count()
-    assert lake_scan(spark, "release", "n_tok BETWEEN 20 AND 25").count() == want
-    # the release read itself must not see the manifest's rows
-    assert "lo" not in release.columns
+    pred = F.col("n_tok").between(20, 25)
+    got = lake_scan(spark, "release", "n_tok BETWEEN 20 AND 25").select(*release.columns)
+    assert sorted(got.collect()) == sorted(release.filter(pred).collect())
+    # the read set is exactly the files whose recorded n_tok range meets [20, 25]
+    stats = snapshot_info(out)["file_stats"]
+    kept = [n for n, st in stats.items() if st["min"]["n_tok"] <= 25 and st["max"]["n_tok"] >= 20]
+    assert len(got.inputFiles()) == len(kept) < len(stats)

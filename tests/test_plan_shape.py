@@ -450,15 +450,12 @@ def test_lake_join_scan_broadcasts_the_dim(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import lake_join_scan, register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 
     lake = str(tmp_path / "jslake")
-    manifest = str(tmp_path / "jsmanifest")
     spark.range(2000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     ).repartitionByRange(4, "k").write.parquet(lake)
-    save_scan_manifest(spark, lake, ["k"], manifest)
-    register_lake_table(spark, "t_js_plan", lake, scan_manifest=manifest)
+    register_lake_table(spark, "t_js_plan", lake)
     dim = spark.createDataFrame([(5,), (1500,)], "dk long")
     df = lake_join_scan(spark, "t_js_plan", dim, "k", "dk")
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -302,14 +302,9 @@ def _hook_lake(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from mlb_data_pipeline_spark.catalog import register_lake_table
-    from mlb_data_pipeline_spark.operators.layout import (
-        save_scan_manifest,
-        write_zordered,
-    )
 
     base = tmp_path_factory.mktemp("hooklake")
     lake = str(base / "data")
-    manifest = str(base / "manifest")
     df = spark.range(4_000).select(
         F.col("id").alias("k"),
         # v is NULL on a stripe so IS [NOT] NULL shapes have real rows
@@ -318,8 +313,7 @@ def _hook_lake(spark, tmp_path_factory):
         F.concat(F.lit("t"), (F.col("id") % 5).cast("string")).alias("tag"),
     )
     df.write.partitionBy("p").parquet(lake)
-    save_scan_manifest(spark, lake, ["k", "v"], manifest)
-    register_lake_table(spark, "prop_hook_lake", lake, scan_manifest=manifest)
+    register_lake_table(spark, "prop_hook_lake", lake)
     return lake
 
 

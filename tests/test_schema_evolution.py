@@ -174,11 +174,30 @@ def test_merge_after_evolution(spark, tmp_path):
     assert cur.filter("k < 30").filter(F.col("w") != F.col("k") * 2).count() == 0
 
 
-def test_record_schema_bootstraps_adopted_lake(spark, tmp_path):
+def test_alter_after_adopt_reads_under_the_new_name(spark, tmp_path):
+    """The first DML on a plain parquet dir adopts it, and the adopt
+    commit records the schema, so an ALTER right after it commits and
+    reads under the new name equal the model."""
     lake = str(tmp_path / "lake")
     _df(spark, 0, 20).coalesce(1).write.parquet(lake)  # plain dir
-    # first DML adopts (no schema in the adopt commit)
-    lake_delete(spark, lake, "k < 5", col_types={"k": "int"})
+    lake_delete(spark, lake, "k < 5", col_types={"k": "int"})  # adopts
+    assert snapshot_info(lake, 1)["op"] == "adopt" and snapshot_info(lake, 1).get("schema")
+    lake_rename_column(lake, "v", "w")
+    cur = read_snapshot(spark, lake)
+    assert cur.columns == ["k", "w", "s"]
+    assert sorted(tuple(r) for r in cur.collect()) == [(i, i * 2, f"s{i}") for i in range(5, 20)]
+
+
+def test_record_schema_bootstraps_a_schemaless_log(spark, tmp_path):
+    """A log whose head carries no recorded schema (written before the
+    schema leg) refuses an ALTER until ``lake_record_schema`` commits
+    the resolved schema once."""
+    from mlb_data_pipeline_spark.operators.layout import _data_files
+    from mlb_data_pipeline_spark.operators.snapshots import commit_snapshot
+
+    lake = str(tmp_path / "lake")
+    _df(spark, 0, 20).coalesce(1).write.parquet(lake)
+    commit_snapshot(lake, _data_files(lake), "append", parent=0)  # no schema leg
     with pytest.raises(ValueError, match="record_schema"):
         lake_drop_column(lake, "s")
     v = lake_record_schema(spark, lake)

@@ -332,12 +332,13 @@ def test_col_types_cache_invalidated_on_evolution(spark, tmp_path):
     assert _lake_col_types(spark, ent).get("d") == "date"
 
 
-def test_stream_first_batch_crash_retry_no_duplicates(spark, tmp_path):
+def test_stream_first_batch_crash_retry_no_duplicates(spark, tmp_path, monkeypatch):
     """ADVICE #2: a crash between the FIRST batch's write and its
     commit must not duplicate rows on retry. With the round-12 fix the
     sink commits a stream_init/adopt snapshot BEFORE writing batch
     files, so the retry's live set comes from the log and never adopts
-    the first attempt's orphans."""
+    the first attempt's orphans. Two adopters racing on one plain dir
+    commit one ``adopt``: the loser's conflict is swallowed."""
     import shutil
 
     from mlb_data_pipeline_spark.streaming.jobs import lake_snapshot_stream
@@ -388,6 +389,24 @@ def test_stream_first_batch_crash_retry_no_duplicates(spark, tmp_path):
     assert [h["op"] for h in S.lake_history(lake3)][0] == "adopt"
     assert read_snapshot(spark, lake3).count() == 120
     shutil.rmtree(src_dir)
+
+    # racing adopters: the second saw no log, then lost the v1 commit
+    lake4 = str(tmp_path / "lake4")
+    _kv(spark, 0, 30).coalesce(1).write.parquet(lake4)
+    S._adopt(spark, lake4)
+    real, stale = S.has_snapshots, []
+
+    def has_snapshots_once_stale(path):
+        if not stale:
+            stale.append(path)
+            return False
+        return real(path)
+
+    monkeypatch.setattr(S, "has_snapshots", has_snapshots_once_stale)
+    S._adopt(spark, lake4)  # no error
+    assert stale == [lake4]
+    assert [h["op"] for h in S.lake_history(lake4)] == ["adopt"]
+    assert read_snapshot(spark, lake4).count() == 30
 
 
 def test_ivm_refresh_rebuilds_after_vacuum_expiry(spark, tmp_path):

@@ -18,10 +18,7 @@ from mlb_data_pipeline_spark.catalog import (
     lake_scan,
     register_lake_table,
 )
-from mlb_data_pipeline_spark.operators.layout import (
-    optimize_clustered,
-    save_scan_manifest,
-)
+from mlb_data_pipeline_spark.operators.layout import optimize_clustered
 from mlb_data_pipeline_spark.operators.snapshots import (
     SnapshotConflictError,
     commit_snapshot,
@@ -246,12 +243,10 @@ def test_rollback_then_vacuum_expires_unreferenced(spark, tmp_path):
 def test_catalog_reads_are_snapshot_aware(spark, tmp_path):
     """Dead files stay on disk after a delete — every catalog path
     (scan, filtered scan, count, metadata count) must not resurrect
-    them, even with a manifest built BEFORE the delete."""
+    them, even though the table was registered BEFORE the delete."""
     lake = str(tmp_path / "lake")
-    manifest = str(tmp_path / "manifest")
     lake_write(spark, _kv(spark, 0, 1000).repartitionByRange(4, "k"), lake)
-    save_scan_manifest(spark, lake, ["k", "v"], manifest)
-    register_lake_table(spark, "t_snap_cat", lake, scan_manifest=manifest)
+    register_lake_table(spark, "t_snap_cat", lake)
     lake_delete(spark, lake, "k < 250", col_types={"k": "bigint", "v": "bigint"})
     assert lake_scan(spark, "t_snap_cat").count() == 750
     assert lake_scan(spark, "t_snap_cat", "k < 500").count() == 250
@@ -462,10 +457,8 @@ def test_lake_join_scan_never_opens_keyless_files(spark, tmp_path):
     from mlb_data_pipeline_spark.operators.layout import file_stats
 
     lake = str(tmp_path / "lake")
-    manifest = str(tmp_path / "manifest")
     _kv(spark, 0, 1000).repartitionByRange(4, "k").write.parquet(lake)
-    save_scan_manifest(spark, lake, ["k"], manifest)
-    register_lake_table(spark, "t_join_fact", lake, scan_manifest=manifest)
+    register_lake_table(spark, "t_join_fact", lake)
     dim = spark.createDataFrame([(10, "a"), (20, "b"), (980, "c")], "dk long, tag string")
     # quartile files: keys 10/20 hit file 1, 980 hits file 4 — garble 2+3
     for fs in file_stats(lake, ["k"]):
@@ -491,10 +484,8 @@ def test_lake_join_scan_per_key_probe_beats_wide_box(spark, tmp_path):
     from mlb_data_pipeline_spark.operators.layout import file_stats
 
     lake = str(tmp_path / "lake")
-    manifest = str(tmp_path / "manifest")
     _kv(spark, 0, 1000).repartitionByRange(8, "k").write.parquet(lake)
-    save_scan_manifest(spark, lake, ["k"], manifest)
-    register_lake_table(spark, "t_join_sparse", lake, scan_manifest=manifest)
+    register_lake_table(spark, "t_join_sparse", lake)
     keys = [1, 999]
     dim = spark.createDataFrame([(k,) for k in keys], "dk long")
     read = lake_join_scan(spark, "t_join_sparse", dim, "k", "dk").inputFiles()
@@ -657,18 +648,14 @@ def test_lake_approx_distinct_interior_files_unopened(spark, tmp_path):
     )
 
     lake = str(tmp_path / "lake")
-    scan_m = str(tmp_path / "scan_m")
     ndv_m = str(tmp_path / "ndv_m")
     # v = k // 3 gives ~1667 distincts over 5000 rows, range-clustered
     df = spark.range(0, 5000).select(
         F.col("id").alias("k"), (F.col("id") / 3).cast("long").alias("v")
     )
     df.repartitionByRange(8, "k").write.parquet(lake)
-    save_scan_manifest(spark, lake, ["k"], scan_m)
     save_ndv_manifest(spark, lake, ["v"], ndv_m)
-    register_lake_table(
-        spark, "t_ndv", lake, scan_manifest=scan_m, ndv_manifest=ndv_m
-    )
+    register_lake_table(spark, "t_ndv", lake, ndv_manifest=ndv_m)
     # garble every strictly-interior file for the box [0, 2499]:
     # metadata answers, a live scan of them would crash
     stats = file_stats(lake, ["k"])
@@ -818,17 +805,14 @@ def test_tags_resolve_and_survive_vacuum(spark, tmp_path):
 
 
 def test_dml_counts_from_record_with_registered_manifest(spark, tmp_path):
-    """DML on a registered snapshot table with a scan manifest: the
-    catalog plans from the commit record, so the metadata count stays
-    exact right after a delete and an update with no manifest upkeep
-    (the manifest is neither read nor maintained)."""
+    """DML on a registered snapshot table: the catalog plans from the
+    commit record, so the metadata count stays exact right after a
+    delete and an update with no upkeep step."""
     from mlb_data_pipeline_spark.catalog import lake_delete_where, lake_update_where
 
     lake = str(tmp_path / "lake")
-    manifest = str(tmp_path / "manifest")
     lake_write(spark, _kv(spark, 0, 1000).repartitionByRange(4, "k"), lake)
-    save_scan_manifest(spark, lake, ["k", "v"], manifest)
-    register_lake_table(spark, "t_dml_m", lake, scan_manifest=manifest)
+    register_lake_table(spark, "t_dml_m", lake)
     lake_delete_where(spark, "t_dml_m", "k < 250")
     assert lake_count(spark, "t_dml_m", "k BETWEEN 300 AND 700") == 401
     lake_update_where(spark, "t_dml_m", {"v": "v + 7"}, "k >= 900")
@@ -996,7 +980,6 @@ def test_lake_explain_matches_lake_scan_read_set(spark, tmp_path):
     from mlb_data_pipeline_spark.operators.layout import save_bloom_manifest
 
     lake = str(tmp_path / "lake")
-    manifest = str(tmp_path / "manifest")
     bloom = str(tmp_path / "bloom")
     df = spark.range(2000).select(
         F.col("id").alias("k"),
@@ -1005,12 +988,8 @@ def test_lake_explain_matches_lake_scan_read_set(spark, tmp_path):
         F.concat(F.lit("u"), (F.col("id") % 50).cast("string")).alias("tag"),
     )
     df.repartitionByRange(4, "k").write.partitionBy("p").parquet(lake)
-    save_scan_manifest(spark, lake, ["k", "v"], manifest)
     save_bloom_manifest(spark, lake, "tag", bloom, expected_per_file=64)
-    register_lake_table(
-        spark, "t_explain", lake, scan_manifest=manifest,
-        bloom_manifests={"tag": bloom},
-    )
+    register_lake_table(spark, "t_explain", lake, bloom_manifests={"tag": bloom})
     preds = [
         "k BETWEEN 100 AND 300",
         "p = 2 AND k >= 500",

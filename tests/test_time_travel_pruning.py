@@ -1,9 +1,9 @@
-"""Round 12 — manifest-pruned TIME TRAVEL (VERDICT r11 ask #3).
+"""Round 12 — stats-pruned TIME TRAVEL (VERDICT r11 ask #3).
 
-A scan-manifest row (footer min/max, null count, row count) and a
+A file's recorded stats (footer min/max, null count, row count) and a
 Bloom bitmap are immutable facts about a FILE — true at every version
 that references it. Historical reads therefore prune through the SAME
-manifests as head reads: ``lake_scan(version=)`` intersects the
+stats as head reads: ``lake_scan(version=)`` intersects the
 version's file list with the keep set, ``lake_count(version=)`` /
 ``lake_min_max(version=)`` route through the metadata aggregates with
 the version's list as the inventory, and ``lake_explain(version=)``
@@ -24,7 +24,6 @@ from mlb_data_pipeline_spark.catalog import (
     lake_scan,
     register_lake_table,
 )
-from mlb_data_pipeline_spark.operators.layout import save_scan_manifest
 from mlb_data_pipeline_spark.operators.snapshots import (
     lake_delete,
     lake_write,
@@ -43,16 +42,14 @@ def _kv(spark, lo, hi):
 def tt_lake(spark, tmp_path):
     """k range-clustered over 8 files of 200 keys each; v1 = all 1600
     rows, v2 = pruned DELETE of k >= 1200 (the two top files drop
-    unopened). The manifest is saved at v1, covers every file, and is
-    NOT GC'd by the delete — exactly the 'compare to last quarter'
-    shape time travel exists for."""
+    unopened). The dropped files stay on disk, and v1's record keeps
+    their stats — exactly the 'compare to last quarter' shape time
+    travel exists for."""
     lake = str(tmp_path / "lake")
-    manifest = str(tmp_path / "manifest")
     lake_write(spark, _kv(spark, 0, 1600).repartitionByRange(8, "k"), lake)  # v1
-    save_scan_manifest(spark, lake, ["k", "v"], manifest)
     lake_delete(spark, lake, "k >= 1200", col_types={"k": "bigint", "v": "bigint"})  # v2
     name = f"tt_{os.path.basename(str(tmp_path))}"
-    register_lake_table(spark, name, lake, scan_manifest=manifest)
+    register_lake_table(spark, name, lake)
     return lake, name
 
 
@@ -98,7 +95,7 @@ def test_time_travel_scan_never_opens_skipped_files(spark, tt_lake):
         if spark.read.parquet(os.path.join(lake, n)).agg(F.min("k")).head()[0] == 400
     )
     # WHOLE-file corruption: the pruned historical scan never opens
-    # the file (not even its footer — stats come from the manifest),
+    # the file (not even its footer — stats come from the record),
     # while any read that touches it dies on the missing magic
     with open(os.path.join(lake, victim), "wb") as fh:
         fh.write(b"not parquet at all")
@@ -110,7 +107,7 @@ def test_time_travel_scan_never_opens_skipped_files(spark, tt_lake):
 
 def test_time_travel_count_interior_unopened(spark, tt_lake):
     """lake_count at a historical version counts interior files from
-    manifest row counts — garble EVERY interior file of the box and
+    record row counts — garble EVERY interior file of the box and
     the metadata count still answers."""
     lake, name = tt_lake
     pred = "k BETWEEN 0 AND 599"
@@ -120,7 +117,7 @@ def test_time_travel_count_interior_unopened(spark, tt_lake):
     assert lake_count(spark, name, "k >= 1000") == 200
     # destroy the three interior files ([0,199], [200,399], [400,599])
     # wholesale: the metadata count still answers, so they were counted
-    # from manifest row counts without a single open
+    # from record row counts without a single open
     for n in snapshot_files(lake, 1):
         lo = spark.read.parquet(os.path.join(lake, n)).agg(F.min("k")).head()[0]
         if lo in (0, 200, 400):
